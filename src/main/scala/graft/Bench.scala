@@ -1,8 +1,4 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every catalog query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup pass touches
@@ -30,9 +26,9 @@ import org.apache.spark.sql.SparkSession
   * LOAD-INSENSITIVE METRICS (r11): wall-clock on this shared host
   * swings ±22% on identical code (four r10 same-code full-catalog runs
   * spanned 120.8–188.1 s), wider than any plausible single-round code
-  * delta — so a [[org.apache.spark.scheduler.SparkListener]]
-  * additionally sums executor task run time and task CPU time per
-  * query (delta between drained-bus snapshots around each action).
+  * delta — so [[Harness.TaskMetrics]] additionally sums executor task
+  * run time and task CPU time per query (delta between drained-bus
+  * snapshots around each action).
   * Task CPU time counts only cycles the query's own tasks burned, so
   * external load waves that stretch wall-clock leave it nearly
   * untouched — it is the number to compare round over round. Task RUN
@@ -48,58 +44,74 @@ import org.apache.spark.sql.SparkSession
   * at 122 queries — tripling it would push the JSON head outside the
   * parse window again (the r5 "parsed": null failure). The one-line
   * driver contract is unchanged apart from two ~20-byte top-level
-  * totals (`task_sec`, `cpu_sec`).
+  * totals (`task_sec`, `cpu_sec`) and the `failed` list.
+  *
+  * FAILED QUERIES: a query that throws in any pass reports no time —
+  * `null` in `queries`, its name in `failed`, and no share of `value`,
+  * `task_sec` or `cpu_sec` — so a crash can never read as a speedup.
   */
 object Bench {
   private val Passes = 2
 
-  /** Sums executor task run/CPU time across every task that ends while
-    * registered. Deltas are attributed per query by draining the
-    * listener bus before each snapshot (see
-    * [[org.apache.spark.graft.ListenerDrain]]). */
-  private final class TaskTimeListener extends SparkListener {
-    val runMs = new AtomicLong // executorRunTime is reported in ms
-    val cpuNs = new AtomicLong // executorCpuTime is reported in ns
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        cpuNs.addAndGet(m.executorCpuTime)
-      }
+  /** Per query, the min across passes of each of wall, task_sec and
+    * cpu_sec — each metric has its own noise source (wall = host load;
+    * task/cpu = scheduler jitter and cache state), and min is the
+    * load-filtered estimate for each — or None if any pass failed. */
+  private[graft] def summarize(samples: Seq[(String, Option[Harness.Sample])])
+      : Seq[(String, Option[(Double, Double, Double)])] =
+    samples.map(_._1).distinct.map { name =>
+      val s = samples.collect { case (`name`, t) => t }
+      name -> (if (s.contains(None)) None else {
+        val ok = s.flatten
+        Some((ok.map(_.wallSec).min, ok.map(_.taskSec).min, ok.map(_.cpuSec).min))
+      })
     }
+
+  /** The stdout result line and the side file's per-query detail. */
+  private[graft] def report(results: Seq[(String, Option[(Double, Double, Double)])],
+                            sfDir: String): (String, String) = {
+    def r3(v: Double): String = "%.3f".format(v)
+    def names(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val ok = results.collect { case (k, Some(t)) => (k, t) }
+    val failed = results.collect { case (k, None) => k }
+    // keys are the unique qNN prefix: the line's reader keeps only a
+    // 2000-byte stdout TAIL, and 76 full query names put the line's
+    // head outside the window (r5's "parsed": null). qNN keeps the whole line
+    // ~1.7 KB at 122 queries incl. the task/cpu totals — ~22 more
+    // queries of headroom before the window clips the head again;
+    // re-measure `wc -c` when the catalog approaches 140.
+    def qnn(k: String) = k.takeWhile(_ != '_')
+    val qs = results.map { case (k, v) => "\"" + qnn(k) + "\":" + v.fold("null")(t => r3(t._1)) }
+      .mkString("{", ",", "}")
+    val total = ok.map(_._2._1).sum
+    val taskTotal = ok.map(_._2._2).sum
+    val cpuTotal = ok.map(_._2._3).sum
+    val line =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","task_sec":${r3(taskTotal)},"cpu_sec":${r3(cpuTotal)},"queries":$qs,"failed":${names(failed.map(qnn))},"sf":"$sfDir"}"""
+    // Full {wall, task_sec, cpu_sec} per query goes to a side file: at
+    // 122 queries the triple-per-query JSON is ~3× the 2000-byte stdout
+    // tail that is parsed, so it cannot ride the contract line. A
+    // failed query is only in `failed` there, so compare_bench.py lists
+    // it as present on one side instead of reading a null.
+    val detail = ok.map { case (k, (w, t, c)) =>
+      s""""$k":{"wall":${r3(w)},"task_sec":${r3(t)},"cpu_sec":${r3(c)}}"""
+    }.mkString(
+      s"""{"sf":"$sfDir","total_wall":${r3(total)},"total_task_sec":${r3(taskTotal)},"total_cpu_sec":${r3(cpuTotal)},"failed":${names(failed)},"queries":{""",
+      ",", "}}\n")
+    (line, detail)
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     // warmup: one scan per fixture table + one tiny aggregate
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings")
       .foreach(t => Tables.load(spark, sfDir, t).count())
     Tables.events(spark, sfDir).count()
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=q86,q88 times just those queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(o => o.contains(name) || o.contains(name.split("_").head)) }
-    val taskTimes = new TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
-    def drainedSnapshot(): (Long, Long) = {
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      (taskTimes.runMs.get(), taskTimes.cpuNs.get())
-    }
+      .filter { case (name, _) => Harness.selected(name) }
+    val metrics = Harness.metrics(spark)
     val samples = (1 to Passes).flatMap { _ =>
       // Each pass starts with an empty SQL cache. Queries share cached
       // sub-plans (q27's shingles, q29's signatures, q57's centroids —
@@ -114,57 +126,12 @@ object Bench {
       // accumulation across the 100+-query catalog on the 8 g heap.
       spark.catalog.clearCache()
       selected.map { case (name, fn) =>
-        // q72 memoizes its converged labels per (session, dataset) — the
-        // right artifact semantics for a dedup pipeline, but a bench pass
-        // must time the propagation BUILD, not the memo lookup, or a
-        // regression in the build becomes invisible. (q78, which composes
-        // q72's labels, still measures the memoized composition — its
-        // number stays attributable to the composition itself.)
-        if (name == "q72_dedup_components")
-          _root_.graft.queries.TextOps.clearLabelMemo()
-        val (runMs0, cpuNs0) = drainedSnapshot()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch {
-          case e: Throwable =>
-            // surface failures — a fast-failing query must not read as a speedup
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (runMs1, cpuNs1) = drainedSnapshot()
-        name -> (wall, (runMs1 - runMs0) / 1e3, (cpuNs1 - cpuNs0) / 1e9)
+        name -> Harness.time(metrics, spark, name)(fn(spark, sfDir).count())
       }
     }
-    // min across passes, per metric independently: each metric has its
-    // own noise source (wall = host load; task/cpu = scheduler jitter
-    // and cache state), and min is the load-filtered estimate for each
-    val results = selected.map { case (name, _) =>
-      val s = samples.collect { case (`name`, t) => t }
-      name -> ((s.map(_._1).min, s.map(_._2).min, s.map(_._3).min))
-    }
-    def r3(v: Double): String = "%.3f".format(v)
-    // keys are the unique qNN prefix: the driver keeps only a 2000-byte
-    // stdout TAIL, and 76 full query names put the line's head outside
-    // the window (r5's "parsed": null). qNN keeps the whole line
-    // ~1.7 KB at 122 queries incl. the task/cpu totals — ~22 more
-    // queries of headroom before the window clips the head again;
-    // re-measure `wc -c` when the catalog approaches 140.
-    val qs = results.map { case (k, v) => "\"" + k.split("_").head + "\":" + r3(v._1) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
-    val taskTotal = results.map(_._2._2).sum
-    val cpuTotal = results.map(_._2._3).sum
-    val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","task_sec":${r3(taskTotal)},"cpu_sec":${r3(cpuTotal)},"queries":$qs,"sf":"$sfDir"}"""
-    // Full {wall, task_sec, cpu_sec} per query goes to a side file: at
-    // 122 queries the triple-per-query JSON is ~3× the 2000-byte stdout
-    // tail the driver parses, so it cannot ride the contract line.
+    val (line, detail) = report(summarize(samples), sfDir)
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/bench_detail.json")
-    val detail = results.map { case (k, (w, t, c)) =>
-      s""""$k":{"wall":${r3(w)},"task_sec":${r3(t)},"cpu_sec":${r3(c)}}"""
-    }.mkString(
-      s"""{"sf":"$sfDir","total_wall":${r3(total)},"total_task_sec":${r3(taskTotal)},"total_cpu_sec":${r3(cpuTotal)},"queries":{""",
-      ",", "}}\n")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write to $detailPath failed: ${e.getMessage}")

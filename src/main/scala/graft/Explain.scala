@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of catalog queries.
   * Usage: runMain graft.Explain <sfDir> [queryName ...] (no names = all).
   */
@@ -10,16 +8,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Index-maintenance bench: measures the problem `IndexMaintenance.
@@ -72,22 +71,11 @@ object IndexBench {
       .sum
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Harness.sfDir
     val increments = sys.env.getOrElse("SPARK_GRAFT_INDEX_INCREMENTS", "30").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_INDEX_REPS", "7").toInt
     val tiles = sys.env.getOrElse("SPARK_GRAFT_INDEX_TILES", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // tiles > 1: the ScaleBench item-axis tiling (id-offset copies, same
     // geometry, tiles× the candidates), written through the same tiler

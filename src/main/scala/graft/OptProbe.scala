@@ -1,78 +1,37 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only stage-level attribution probe (optimization rounds): runs ONE
   * catalog query and prints every completed stage's cpu / run time and
   * shuffle volumes, so a query-level cpu regression can be pinned to the
-  * operator (stage names carry the call site). Not part of any bench or
-  * driver contract — numbers here are for diagnosis, never for artifacts.
+  * operator (each stage carries its call site's engine frame). Not part
+  * of any bench or output contract — numbers here are for diagnosis,
+  * never for artifacts.
   *
   * Usage: runMain graft.OptProbe <queryName> <dataDir> [passes]
   */
 object OptProbe {
-
-  private final case class StageRow(id: Int, name: String, tasks: Int,
-      cpuSec: Double, runSec: Double, shufReadMb: Double, shufWriteMb: Double,
-      inputMb: Double)
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: OptProbe <queryName> <dataDir> [passes]")
     val name = args(0)
     val dir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stages = ArrayBuffer.empty[StageRow]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        val graftFrame = si.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("OptProbe"))
-          .map(_.trim).getOrElse("")
-        stages.synchronized {
-          stages += StageRow(si.stageId, si.name + "  " + graftFrame,
-            si.numTasks,
-            m.executorCpuTime / 1e9, m.executorRunTime / 1e3,
-            m.shuffleReadMetrics.totalBytesRead / 1e6,
-            m.shuffleWriteMetrics.bytesWritten / 1e6,
-            m.inputMetrics.bytesRead / 1e6)
-        }
-      }
-    })
-
+    val spark = Harness.session()
+    val metrics = Harness.metrics(spark)
     val fn = SparkEntry.queries(name)
     (1 to passes).foreach { p =>
       spark.catalog.clearCache()
-      if (name == "q72_dedup_components")
-        _root_.graft.queries.TextOps.clearLabelMemo()
-      stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      val rows = fn(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      val snap = stages.synchronized(stages.toVector)
-      println(f"\n=== pass $p: $name rows=$rows wall=$wall%.2f s " +
-        f"cpu=${snap.map(_.cpuSec).sum}%.2f s stages=${snap.size} ===")
-      println(f"${"stage"}%6s ${"tasks"}%5s ${"cpu_s"}%8s ${"run_s"}%8s " +
-        f"${"sRd_MB"}%8s ${"sWr_MB"}%8s ${"in_MB"}%8s  name")
-      snap.sortBy(-_.cpuSec).take(40).foreach { s =>
-        println(f"${s.id}%6d ${s.tasks}%5d ${s.cpuSec}%8.2f ${s.runSec}%8.2f " +
-          f"${s.shufReadMb}%8.1f ${s.shufWriteMb}%8.1f ${s.inputMb}%8.1f  " +
-          s.name.take(180))
+      Harness.time(metrics, spark, name)(fn(spark, dir).count()).foreach { s =>
+        val stages = s.work.stages.toSeq
+        println(f"\n=== pass $p: $name rows=${s.rows} wall=${s.wallSec}%.2f s " +
+          f"cpu=${s.cpuSec}%.2f s stages=${stages.size} ===")
+        println(f"${"stage"}%6s ${"tasks"}%5s ${"cpu_s"}%8s ${"run_s"}%8s " +
+          f"${"sRd_MB"}%8s ${"sWr_MB"}%8s ${"in_MB"}%8s  name")
+        stages.sortBy(-_._2.cpuNs).take(40).foreach { case (id, st) =>
+          println(f"$id%6d ${st.tasks}%5d ${st.cpuNs / 1e9}%8.2f ${st.runMs / 1e3}%8.2f " +
+            f"${st.shuffleReadB / 1e6}%8.1f ${st.shuffleWriteB / 1e6}%8.1f " +
+            f"${st.inputB / 1e6}%8.1f  " + (st.name + "  " + st.site).take(180))
+        }
       }
     }
     spark.stop()

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -137,19 +134,9 @@ object ScaleBench {
     * queries are re-measured in fresh JVMs ([[ScaleProbe]]) and each
     * query also reports per-scale rows: OUTPUT growth is noise-free
     * and adjudicates any residual cpu discrepancy. */
-  private val DedupStage = Set(
-    "q72_dedup_components", "q28_minhash_sig",
-    "q29_minhash_pairs", "q131_minhash_pairs_bounded")
+  private val DedupStage = Harness.SigConsumers + "q28_minhash_sig"
 
   private val Passes = 2
-
-  private final class TaskTimeListener extends SparkListener {
-    val cpuNs = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
 
   /** Union of `scale` id-offset copies, written as `dst/<name>.parquet`.
     * Each key column is offset to (max value + 1) — derived from the
@@ -250,12 +237,11 @@ object ScaleBench {
   }
 
   /** One fresh-JVM [[ScaleProbe]] run: same classpath and --add-opens as
-    * this (forked) JVM, same heap cap, `SPARK_GRAFT_CPUS` passed
-    * through. Returns (cpu_sec, wall_sec, rows), or None if the child
+    * this (forked) JVM, same heap cap, same environment (so the same
+    * [[Harness.cpus]]). Returns (cpu_sec, wall_sec, rows), or None if the child
     * fails — a None leaves the in-bench flag standing (the honest
     * fallback: no clean number, no exoneration). */
-  private def cleanProbe(name: String, dir: String,
-                         cpus: String): Option[(Double, Double, Long)] = {
+  private def cleanProbe(name: String, dir: String): Option[(Double, Double, Long)] = {
     import scala.jdk.CollectionConverters._
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
@@ -274,7 +260,6 @@ object ScaleBench {
     val cmd = (Seq(javaBin) ++ keep ++
       Seq("-cp", cp, "graft.ScaleProbe", name, dir)).asJava
     val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
     // child stderr (Spark log noise) flows straight to ours: reading
     // only stdout while the stderr pipe fills would deadlock the child
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
@@ -298,8 +283,8 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
     // "4,10" (VERDICT r15 item 4: two points cannot distinguish linear
     // from n·log n from amortized overhead; three make a curve). A
     // single value keeps the r14 two-point behavior.
@@ -314,28 +299,13 @@ object ScaleBench {
       s"SPARK_GRAFT_SCALE_TILES=$tilesSpec needs at least one scale > 1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_REPS", "5").toInt
     val n = tileScales.max
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val base = java.nio.file.Files.createTempDirectory("graft-scale").toString
     val scales = 1 +: tileScales
     val dirs = scales.map(s => s -> buildTiledDir(spark, sfDir, base, s)).toMap
 
-    val taskTimes = new TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
-    def drainedCpuNs(): Long = {
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      taskTimes.cpuNs.get()
-    }
+    val metrics = Harness.metrics(spark)
 
     val selected = ScaleSet.map(q => q -> SparkEntry.queries(q))
 
@@ -353,33 +323,20 @@ object ScaleBench {
       val samples = (1 to Passes).flatMap { _ =>
         spark.catalog.clearCache()
         selected.map { case (name, fn) =>
-          // time the propagation BUILD, not the memo lookup (Bench's rule)
-          if (name == "q72_dedup_components")
-            _root_.graft.queries.TextOps.clearLabelMemo()
           // controlled cache state for the dedup stages (see [[DedupStage]])
           if (DedupStage(name)) {
             spark.catalog.clearCache()
-            if (name != "q28_minhash_sig")
-              SparkEntry.queries("q28_minhash_sig")(spark, dir).count()
+            Harness.warmSignatures(spark, name, dir)
           }
-          val cpu0 = drainedCpuNs()
-          val t0 = System.nanoTime()
-          val rowsOpt = try Some(fn(spark, dir).count()) catch {
-            case e: Throwable =>
-              System.err.println(s"[scalebench] $name FAILED: ${e.getMessage}")
-              None
-          }
-          val wall = (System.nanoTime() - t0) / 1e9
-          val cpu = (drainedCpuNs() - cpu0) / 1e9
-          name -> ((wall, cpu, rowsOpt))
+          name -> Harness.time(metrics, spark, name)(fn(spark, dir).count())
         }
       }
       val byQuery = selected.map { case (name, _) =>
         val s = samples.collect { case (`name`, t) => t }
-        val ok = s.collect { case (w, c, Some(r)) => (w, c, r) }
+        val ok = s.flatten
         name -> (if (ok.isEmpty) QAtScale(-1, -1, -1, s.size)
-                 else QAtScale(ok.map(_._1).min, ok.map(_._2).min,
-                   ok.map(_._3).max, s.size - ok.size))
+                 else QAtScale(ok.map(_.wallSec).min, ok.map(_.cpuSec).min,
+                   ok.map(_.rows).max, s.size - ok.size))
       }.toMap
       spark.catalog.clearCache()
       (byQuery, usedHeapMb())
@@ -457,7 +414,7 @@ object ScaleBench {
     // fresh JVM per scale; the headline flag list uses the clean ratio
     val cleanByQuery: Map[String, Map[Int, (Double, Double, Long)]] =
       inbenchFlagged.map { name =>
-        name -> scales.flatMap(s => cleanProbe(name, dirs(s), cpus).map(s -> _)).toMap
+        name -> scales.flatMap(s => cleanProbe(name, dirs(s)).map(s -> _)).toMap
       }.toMap
     // WORK-RATIO ADJUDICATION for the pair ENUMERATORS (VERDICT r15
     // item 2): q132's candidate volumes are exact integers — a

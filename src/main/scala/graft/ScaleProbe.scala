@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Fresh-JVM re-measure for one scale-set query (VERDICT r14 item 3):
   * ScaleBench's IN-BENCH cpu attribution for sub-second queries carries
   * 2–4× session-state inflation (late-pass JIT/code-cache state, q72's
@@ -12,76 +7,36 @@ import org.apache.spark.sql.SparkSession
   * `superlinear_flagged` list cries wolf and OUTPUT rows had to
   * adjudicate. This main is the clean instrument: ONE query against ONE
   * dataset dir in a brand-new JVM/session, warmed exactly as ScaleBench
-  * warms it (dedup-stage consumers get the shared MinHash signature
-  * table hot and untimed; q72's label memo is cleared so the BUILD is
-  * timed), run `passes` times, min cpu reported. ScaleBench spawns one
+  * warms it ([[Harness.warmSignatures]]; q72's label memo is cleared
+  * so the BUILD is timed), run `passes` times, min cpu reported. ScaleBench spawns one
   * of these per flagged query per scale and publishes `cpu_clean_{s}x`
   * beside the in-bench numbers, re-adjudicating the flag from clean cpu.
   *
   * Args: `<queryName> <dataDir> [passes]`. Prints ONE JSON line
-  * (marker-prefixed so the parent can find it among Spark log noise).
+  * (marker-prefixed so the parent can find it among Spark log noise);
+  * exits 1 without it if any pass fails.
   */
 object ScaleProbe {
-
-  private final class TaskTimeListener extends SparkListener {
-    val cpuNs = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
-
-  /** Queries sharing the memoized MinHash signature stage; mirror of
-    * ScaleBench.DedupStage (kept here too so the child JVM has no
-    * dependency on the parent's private state). */
-  private val SigConsumers = Set(
-    "q72_dedup_components", "q29_minhash_pairs", "q131_minhash_pairs_bounded")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleProbe <queryName> <dataDir> [passes]")
     val name = args(0)
     val dir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val listener = new TaskTimeListener
-    spark.sparkContext.addSparkListener(listener)
-    def drainedCpuNs(): Long = {
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      listener.cpuNs.get()
-    }
-
+    val spark = Harness.session()
+    val metrics = Harness.metrics(spark)
     val fn = SparkEntry.queries(name)
-    // the ScaleBench warm protocol, in a session that has run NOTHING
-    // else: signature consumers get the shared signature table hot
-    if (SigConsumers(name))
-      SparkEntry.queries("q28_minhash_sig")(spark, dir).count()
-    val samples = (1 to passes).map { _ =>
-      if (name == "q72_dedup_components")
-        _root_.graft.queries.TextOps.clearLabelMemo()
-      val cpu0 = drainedCpuNs()
-      val t0 = System.nanoTime()
-      val rows = fn(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      ((wall, (drainedCpuNs() - cpu0) / 1e9, rows))
-    }
+    // the ScaleBench warm protocol, in a session that has run NOTHING else
+    Harness.warmSignatures(spark, name, dir)
+    val samples = (1 to passes).flatMap(_ =>
+      Harness.time(metrics, spark, name)(fn(spark, dir).count()))
+    if (samples.size < passes) { spark.stop(); sys.exit(1) }
     def r3(v: Double) = "%.3f".format(v)
     // min over passes (pass 1 additionally pays JIT): the same
     // discipline as the in-bench number, minus the session history
     println(s"""SCALEPROBE_JSON {"query":"$name","dir":"$dir","passes":$passes,""" +
-      s""""cpu_sec":${r3(samples.map(_._2).min)},"wall_sec":${r3(samples.map(_._1).min)},""" +
-      s""""rows":${samples.map(_._3).max}}""")
+      s""""cpu_sec":${r3(samples.map(_.cpuSec).min)},"wall_sec":${r3(samples.map(_.wallSec).min)},""" +
+      s""""rows":${samples.map(_.rows).max}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.stream.{RatingEvent, StreamOps}
@@ -150,23 +150,12 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "45").toInt
     val rate = sys.env.getOrElse("SPARK_GRAFT_STREAM_RATE", "20000").toInt
     val rotate = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROTATE", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val baseItems = Tables.embeddings(spark, sfDir)

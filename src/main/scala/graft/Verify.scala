@@ -1,33 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE for cached plans: lets coalescePartitions size cached
-      // aggregation output by bytes instead of pinning it at
-      // shuffle.partitions (r21 optimization; see OPTIMIZATION_r21.md)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // Dev-only iteration filter (comma-separated name prefixes), like
-    // Bench's SPARK_GRAFT_BENCH_ONLY; the driver leaves it unset and
-    // gets the full catalog. The oracle json is filtered identically so
-    // check_oracle.py compares exactly what was dumped.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY narrows a dev loop (unset: the whole catalog);
+    // the oracle json is filtered identically so check_oracle.py
+    // compares exactly what was dumped.
+    SparkEntry.queries.filter(kv => Harness.selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -35,7 +18,7 @@ object Verify {
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracleJson(selected))
+      oracleJson(Harness.selected))
     spark.stop()
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.expr.GraftFunctions
-import graft.rec.{AlsPipeline, Ratings}
+import graft.rec.{AlsPipeline, Ratings, Sizing}
 
 /** Recommender-core catalog (SURVEY §2.10, §3.1–3.3) over the synthesized
   * ratings view (user = customer, item = part, rating ∈ {1..5}).
@@ -159,9 +159,8 @@ object Recommender {
         .join(broadcast(di), Seq("item_id"))
         .select(col("user_id"), col("item_id"),
           (lit(1.0) / sqrt(col("du") * col("di"))).as("w"))
-        // few fat partitions for the two broadcast-join propagation
-        // aggregations (no exchange left for AQE to coalesce)
-        .coalesce(math.max(2, s.sparkContext.defaultParallelism / 4))
+        // no exchange left for AQE to coalesce (see Sizing)
+        .coalesce(Sizing.factParts(r))
         .cache()
       // e0/eu broadcast: item-/user-dimension-sized embedding tables —
       // the edge fact stays unshuffled through both propagation joins

@@ -75,26 +75,6 @@ object GradientMF {
       val ck = df.localCheckpoint(true)
       ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
     }
-
-    /** [[checkpointLeaf]] with the partition count coalesced to
-      * ~defaultParallelism/4 first. The broadcast-join epoch pipeline
-      * has NO exchange, so the per-epoch error relation would inherit
-      * the fact table's full partition count — and its aggregation
-      * consumers then run one near-useless partial-agg hash map per
-      * partition (each partition already holds ~every user/item key, so
-      * partial aggregation reduces almost nothing while multiplying
-      * exchange rows by the partition count; measured 10× consumer-cpu
-      * on q86 at 32 vs 6 partitions). The old sort-merge plans got few,
-      * large partitions for free from AQE's post-shuffle coalescing
-      * (guide §2.2's 100 MB–1 GB rule); with the exchange gone this
-      * coalesce is where that sizing decision now lives. Derived from
-      * defaultParallelism, not a constant, so cluster-sized sessions
-      * keep proportional parallelism. */
-    def checkpointLeafCoalesced: DataFrame = {
-      val parts = math.max(2,
-        df.sparkSession.sparkContext.defaultParallelism / 4)
-      df.coalesce(parts).checkpointLeaf
-    }
   }
 
   private def h32(c: Column): Column =
@@ -130,15 +110,6 @@ object GradientMF {
   private def axpyUpdate(v: Column, g: Column, lr: Double, reg: Double): Column =
     zip_with(v, g, (x, gx) => x - lit(lr) * (gx + lit(reg) * x))
 
-  /** Scale-derived partition count for cached fact relations consumed by
-    * the broadcast-join epoch pipeline (same sizing rationale as
-    * [[CheckpointLeaf.checkpointLeafCoalesced]]: with no exchange left in
-    * the pipeline, AQE never coalesces, so the cache's own partition
-    * count decides how many near-useless per-partition partial-agg maps
-    * every downstream gradient aggregation builds). */
-  private def factParts(df: DataFrame): Int =
-    math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
-
   /** Train `epochs` full-batch GD epochs of rank-`rank` MF on
     * `ratings` (user_id, item_id, rating); returns the per-epoch RMSE
     * trajectory `(epoch, rmse)` — epochs+1 rows, epoch 0 = the loss at
@@ -149,7 +120,10 @@ object GradientMF {
     val res = ratings.crossJoin(broadcast(g))
       .select(col("user_id"), col("item_id"),
         (col("rating") - col("mu")).as("res"))
-    val resC = res.coalesce(factParts(res)).cache()
+    // the epoch pipeline has no exchange for AQE to coalesce: the fact's
+    // cache and every per-epoch checkpoint take this count (see Sizing)
+    val parts = Sizing.factParts(res)
+    val resC = res.coalesce(parts).cache()
 
     def init(kind: String, idCol: String): DataFrame =
       resC.select(col(idCol)).distinct()
@@ -183,7 +157,7 @@ object GradientMF {
     val losses = Seq.newBuilder[DataFrame]
     for (k <- 0 until epochs) {
       // p feeds the loss and BOTH gradients — checkpoint once per epoch
-      val p = predictions(u, v).checkpointLeafCoalesced
+      val p = predictions(u, v).coalesce(parts).checkpointLeaf
       losses += epochLoss(k, p)
       val gu = p.groupBy(col("user_id"))
         .agg(vecAgg(rank)(i => avg(col("err") * col("vv")(i))).as("grad"))
@@ -331,7 +305,8 @@ object GradientMF {
       reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit,
       itemBias: Boolean = false)
       : (DataFrame, DataFrame) = {
-    val tr = triples.coalesce(factParts(triples)).cache()
+    val parts = Sizing.factParts(triples)
+    val tr = triples.coalesce(parts).cache()
     val width = if (itemBias) rank + 1 else rank
 
     def init(kind: String, ids: DataFrame, idCol: String): DataFrame = {
@@ -377,7 +352,7 @@ object GradientMF {
         .unionAll(tr.select(col("neg_item").as("item_id"))).distinct(),
       "item_id").checkpointLeaf
     for (k <- 0 until epochs) {
-      val d = scores(u, v).checkpointLeafCoalesced
+      val d = scores(u, v).coalesce(parts).checkpointLeaf
       onEpoch(k, d)
       val s = d.withColumn("comp", lit(1.0) / (lit(1.0) + exp(col("d"))))
       // the head-tail derivation yields one (pos, neg) pair per user,
@@ -479,7 +454,8 @@ object GradientMF {
     val res0 = ratings.crossJoin(broadcast(g))
       .select(col("user_id"), col("item_id"),
         (col("rating") - col("mu")).as("res"))
-    val res = res0.coalesce(factParts(res0)).cache()
+    val parts = Sizing.factParts(res0)
+    val res = res0.coalesce(parts).cache()
     val du = res.groupBy(col("user_id")).agg(count(lit(1)).as("du"))
     val di = res.groupBy(col("item_id")).agg(count(lit(1)).as("di"))
     // du/di broadcast (id-dimension-sized degree tables, as q36's) so the
@@ -532,7 +508,7 @@ object GradientMF {
       // constant-size because u/v are checkpointed leaves
       val up = mix(u, v, "user_id", "item_id")
       val vp = mix(v, u, "item_id", "user_id")
-      val p = predictions(up, vp).checkpointLeafCoalesced
+      val p = predictions(up, vp).coalesce(parts).checkpointLeaf
       onEpoch(k, p)
       val gup = p.groupBy(col("user_id"))
         .agg(vecAgg(rank)(i => avg(col("err") * col("vv")(i))).as("val"))

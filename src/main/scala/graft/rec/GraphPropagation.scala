@@ -39,17 +39,13 @@ object GraphPropagation {
   def propagate(ratings: DataFrame, itemEmb0: DataFrame, layers: Int): DataFrame = {
     val du = ratings.groupBy(col("user_id")).agg(count(lit(1)).as("du"))
     val di = ratings.groupBy(col("item_id")).agg(count(lit(1)).as("di"))
-    // Coalesced to ~defaultParallelism/4 before caching: the broadcast
-    // half-layer joins leave no exchange for AQE to coalesce, so the
-    // cache's partition count decides how many near-useless partial-agg
-    // maps each layer aggregation builds (every partition holds ~all
-    // user/item keys — few fat partitions beat many thin ones here).
+    // Coalesced before caching: the broadcast half-layer joins leave no
+    // exchange for AQE to coalesce (see Sizing).
     val edges = ratings.join(broadcast(du), Seq("user_id"))
       .join(broadcast(di), Seq("item_id"))
       .select(col("user_id"), col("item_id"),
         (lit(1.0) / sqrt(col("du") * col("di"))).as("w"))
-      .coalesce(math.max(2,
-        ratings.sparkSession.sparkContext.defaultParallelism / 4))
+      .coalesce(Sizing.factParts(ratings))
       .cache()
     // cache each layer's |items|·dim-row output: layer k's plan embeds
     // layers 0..k-1 AND each layer is a union branch, so without caching

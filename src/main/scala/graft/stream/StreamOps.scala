@@ -129,39 +129,6 @@ object StreamOps {
       }
   }
 
-  /** ST5 on Spark 4's `transformWithState` (the successor API to
-    * `flatMapGroupsWithState`; requires the RocksDB state store provider):
-    * same F9 fold, state in a typed `ValueState`. Kept alongside the
-    * fMGWS version so both state APIs are exercised.
-    *
-    * `idleTimeout` is the event-time idle horizon, as on
-    * [[interestStream]]: [[InterestProcessor]] re-arms one event-time
-    * timer per user per batch and clears the state when the watermark
-    * passes it, so a returning user reads no state and re-initializes
-    * per F9 (see InterestProcessor's doc for why event-time, not a
-    * processing-time TTL). */
-  def interestStreamTws(enriched: Dataset[EnrichedEvent], dim: Int,
-                        lambda: Double = 0.05,
-                        idleTimeout: Option[java.time.Duration] = None): Dataset[UserInterest] = {
-    import enriched.sparkSession.implicits._
-    val timeMode =
-      if (idleTimeout.isDefined) org.apache.spark.sql.streaming.TimeMode.EventTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    val src = idleTimeout match {
-      case Some(_) =>
-        enriched.toDF()
-          .withColumn("eventTime", timestamp_millis(col("ts")))
-          .withWatermark("eventTime", "0 milliseconds")
-          .as[EnrichedEvent]
-      case None => enriched
-    }
-    src
-      .groupByKey(_.userId)
-      .transformWithState(new InterestProcessor(dim, lambda, idleTimeout),
-        timeMode,
-        OutputMode.Append())
-  }
-
   /** ST6: cosine top-N items for each user interest vector (used inside
     * `foreachBatch` on the interest stream, or standalone in batch).
     * Item side broadcasts; ranking is the bounded [[graft.expr.TopKPairs]]

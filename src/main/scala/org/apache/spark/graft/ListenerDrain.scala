@@ -2,7 +2,7 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Minimal `private[spark]` bridge for [[graft.Bench]]'s per-query
+/** Minimal `private[spark]` bridge for [[graft.Harness]]'s per-query
   * task-time attribution: the listener bus is asynchronous, so when an
   * action returns, `SparkListenerTaskEnd` events for its tasks may
   * still be queued — snapshotting a metrics accumulator right after the

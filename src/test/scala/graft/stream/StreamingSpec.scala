@@ -276,40 +276,6 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSeq == Seq((1, 1L), (3, 2L)))
   }
 
-  test("ST5 transformWithState variant matches the fMGWS recurrence") {
-    implicit val sc = spark.sqlContext
-    val lambda = 0.05
-    val features = Seq((1, Array(1.0, 0.0)), (2, Array(0.0, 1.0)))
-      .toDF("itemId", "features")
-    // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[String]
-    val interests = StreamOps.interestStreamTws(
-      StreamOps.enrich(StreamOps.parseEvents(in.toDF()), features),
-      dim = 2, lambda = lambda)
-    val q = interests.writeStream.outputMode("append")
-      .format("memory").queryName("interest_tws")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tws-ckpt").toString)
-      .start()
-    in.addData("7 1 4.0 100")
-    q.processAllAvailable()
-    in.addData("7 2 2.0 200")
-    q.processAllAvailable()
-    q.stop()
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    val expected = StreamOps.blend(
-      StreamOps.blend(Array(0.0, 0.0), Array(1.0, 0.0), 4.0, lambda),
-      Array(0.0, 1.0), 2.0, lambda)
-    val last = spark.table("interest_tws").as[UserInterest].collect()
-      .filter(_.userId == 7).maxBy(_.nEvents)
-    assert(last.nEvents == 2L)
-    last.interest.zip(expected).foreach { case (g, e) =>
-      assert(math.abs(g - e) < 1e-12)
-    }
-  }
-
   test("ST5 state survives a query restart from checkpoint") {
     implicit val sc = spark.sqlContext
     val lambda = 0.05
@@ -379,45 +345,6 @@ class StreamingSpec extends SparkSpec {
     // eviction emits no row (two touches → exactly two rows), and the
     // returning user folds from the ZERO vector — the F9 cold start —
     // not from the pre-eviction state (which would read nEvents == 2)
-    assert(rows7.length == 2)
-    assert(rows7.forall(_.nEvents == 1L),
-      "evicted user must re-initialize, not resume")
-    val expected = StreamOps.blend(Array(0.0, 0.0), Array(0.0, 1.0), 2.0, lambda)
-    val ret = rows7.find(_.interest(1) != 0.0).get
-    ret.interest.zip(expected).foreach { case (g, e) =>
-      assert(math.abs(g - e) < 1e-12)
-    }
-  }
-
-  test("ST5 transformWithState event-time timers evict idle state and re-admit per F9") {
-    implicit val sc = spark.sqlContext
-    val lambda = 0.05
-    val features = Seq((1, Array(1.0, 0.0)), (2, Array(0.0, 1.0)))
-      .toDF("itemId", "features")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[String]
-    val interests = StreamOps.interestStreamTws(
-      StreamOps.enrich(StreamOps.parseEvents(in.toDF()), features),
-      dim = 2, lambda = lambda,
-      idleTimeout = Some(java.time.Duration.ofMillis(200)))
-    val q = interests.writeStream.outputMode("append")
-      .format("memory").queryName("interest_tws_evict")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tws-evict-ckpt").toString)
-      .start()
-    in.addData("7 1 4.0 100") // timer armed at 300
-    q.processAllAvailable()
-    in.addData("8 2 1.0 600") // watermark moves past 300 → 7 evicted
-    q.processAllAvailable()
-    in.addData("7 2 2.0 700") // user 7 returns after eviction
-    q.processAllAvailable()
-    q.stop()
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    val rows7 = spark.table("interest_tws_evict").as[UserInterest].collect()
-      .filter(_.userId == 7)
-    // the expired timer cleared the state: nEvents restarts at 1 and
-    // the vector is the fresh F9 fold, not the resumed one
     assert(rows7.length == 2)
     assert(rows7.forall(_.nEvents == 1L),
       "evicted user must re-initialize, not resume")
