@@ -77,6 +77,45 @@ object SessionIds {
   }
 }
 
+/** Lineage truncation for iterative and write-many relations. */
+object Lineage {
+
+  /** Eager localCheckpoint re-rooted as a FRESH LogicalRDD leaf — the
+    * per-epoch materialization of the gradient-descent trainers
+    * (`rec.GradientMF`) and the table swap of the Cypher store.
+    *
+    * Spark 4's `localCheckpoint` rewrites the origin plan's statistics
+    * onto the checkpoint leaf (`LogicalRDD.rewriteStatsAndConstraints`),
+    * and size-only estimation multiplies children's `sizeInBytes`
+    * through every join — so an iterative trainer whose epoch-k tables
+    * are joins of epoch-(k−1) checkpoints compounds the stat doubly
+    * exponentially. The BigInt's DIGIT COUNT roughly doubles per epoch:
+    * by ~15 epochs it has ~10⁵ digits and the driver sits for minutes
+    * inside `BigInteger.multiply` under
+    * `SizeInBytesOnlyStatsPlanVisitor` (observed on the holdout spec:
+    * 12 epochs ≈ 2 min wall, 24 epochs > 30 min, 100% driver CPU, any
+    * data size — the cost is arithmetic on the stat itself, not the
+    * data). Re-wrapping the checkpointed RDD in `createDataFrame` makes
+    * a leaf whose stats are the CONSTANT `defaultSizeInBytes`, so
+    * planning cost stays flat in epochs (and in writes); AQE re-plans
+    * joins from real runtime shuffle sizes anyway, and every
+    * explicitly-broadcast side of the trainers is marked with
+    * `broadcast()`.
+    *
+    * Negative result, measured: re-wrapping the INTERNAL-row RDD
+    * instead (`internalCreateDataFrame(qe.toRdd, schema)` via an
+    * org.apache.spark.sql shim, to skip this path's external-Row round
+    * trip) benched ~30% SLOWER on the trainers (q86-q88/q106/q107:
+    * 61.6 s vs 47.1 s, same set, the slower run under LIGHTER host
+    * load) — the Row path deserializes through a codegen'd projection
+    * while the raw internal-row scan copies per row. The public API
+    * stays. */
+  private[graft] def checkpointLeaf(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint(true)
+    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+}
+
 /** Parquet fixture-table loaders (TESTDATA.md).
   *
   * All reads go through `spark.read.parquet` so Catalyst gets native

@@ -372,16 +372,14 @@ final class CypherGraph(
     * the previous cached table, so the reference's per-event-batch SET
     * pattern — `streaming_rec.py` issues one per user per batch — grew
     * cached copies AND lineage without bound in a long-lived driver).
-    * The new table is materialized eagerly by `localCheckpoint` and
-    * re-rooted through `createDataFrame` — a fresh leaf, so lineage
-    * depth and planning cost stay O(1) in the number of writes (the
-    * same truncation `rec.GradientMF.checkpointLeaf` uses, incl. its
-    * stats-blowup rationale); the prior table is unpersisted (no-op
-    * unless it was cached), and its checkpoint blocks are reclaimed by
-    * the ContextCleaner once the old plan is unreferenced. */
+    * The new table is materialized eagerly as a fresh checkpoint leaf
+    * ([[graft.Lineage.checkpointLeaf]]), so lineage depth and planning
+    * cost stay O(1) in the number of writes; the prior table is
+    * unpersisted (no-op unless it was cached), and its checkpoint
+    * blocks are reclaimed by the ContextCleaner once the old plan is
+    * unreferenced. */
   private def swapIn(old: DataFrame, updated: DataFrame): DataFrame = {
-    val ck = updated.localCheckpoint(true)
-    val fresh = spark.createDataFrame(ck.rdd, ck.schema)
+    val fresh = graft.Lineage.checkpointLeaf(updated)
     old.unpersist()
     fresh
   }

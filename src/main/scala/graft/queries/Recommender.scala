@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.expr.GraftFunctions
-import graft.rec.{AlsPipeline, Ratings, Sizing}
+import graft.rec.{AlsPipeline, Ratings}
 
 /** Recommender-core catalog (SURVEY §2.10, §3.1–3.3) over the synthesized
   * ratings view (user = customer, item = part, rating ∈ {1..5}).
@@ -151,27 +151,13 @@ object Recommender {
     "q36_graph_propagation",
     (s, d) => {
       val r = Ratings.view(s, d).cache()
-      val du = r.groupBy(col("user_id")).agg(count(lit(1)).as("du"))
-      val di = r.groupBy(col("item_id")).agg(count(lit(1)).as("di"))
-      val e0 = r.groupBy(col("item_id")).agg(
-        avg(col("rating")).as("f1"), count(lit(1)).cast("double").as("f2"))
-      val edges = r.join(broadcast(du), Seq("user_id"))
-        .join(broadcast(di), Seq("item_id"))
-        .select(col("user_id"), col("item_id"),
-          (lit(1.0) / sqrt(col("du") * col("di"))).as("w"))
-        // no exchange left for AQE to coalesce (see Sizing)
-        .coalesce(Sizing.factParts(r))
-        .cache()
-      // e0/eu broadcast: item-/user-dimension-sized embedding tables —
-      // the edge fact stays unshuffled through both propagation joins
-      val eu = edges.join(broadcast(e0), Seq("item_id"))
-        .groupBy(col("user_id"))
-        .agg(sum(col("f1") * col("w")).as("f1"), sum(col("f2") * col("w")).as("f2"))
-      val e1 = edges.join(broadcast(eu), Seq("user_id"))
-        .groupBy(col("item_id"))
-        .agg(round(sum(col("f1") * col("w")), 6).as("f1"),
-             round(sum(col("f2") * col("w")), 6).as("f2"))
-      e1.orderBy(col("item_id"))
+      val e0 = r.groupBy(col("item_id")).agg(array(
+        avg(col("rating")), count(lit(1)).cast("double")).as("val"))
+      graft.rec.GraphPropagation
+        .layer(graft.rec.GraphPropagation.edges(r), e0, width = 2)
+        .select(col("item_id"), round(col("val")(0), 6).as("f1"),
+          round(col("val")(1), 6).as("f2"))
+        .orderBy(col("item_id"))
     },
     Some(s"""WITH r AS ($rview),
             du AS (SELECT user_id, count(*) AS du FROM r GROUP BY 1),
@@ -200,14 +186,11 @@ object Recommender {
     "q65_graph_prop_k2",
     (s, d) => {
       val r = Ratings.view(s, d).cache()
-      val e0 = r.groupBy(col("item_id")).agg(
-        avg(col("rating")).as("f1"), count(lit(1)).cast("double").as("f2"))
-      val exploded = e0.select(col("item_id"),
-        posexplode(array(col("f1"), col("f2"))).as(Seq("pos", "v")))
-      graft.rec.GraphPropagation.propagate(r, exploded, layers = 2)
-        .groupBy(col("item_id"))
-        .agg(round(sum(when(col("pos") === 0, col("v"))), 6).as("f1"),
-             round(sum(when(col("pos") === 1, col("v"))), 6).as("f2"))
+      val e0 = r.groupBy(col("item_id")).agg(array(
+        avg(col("rating")), count(lit(1)).cast("double")).as("val"))
+      graft.rec.GraphPropagation.propagate(r, e0, width = 2, layers = 2)
+        .select(col("item_id"), round(col("val")(0), 6).as("f1"),
+          round(col("val")(1), 6).as("f2"))
         .orderBy(col("item_id"))
     },
     Some(s"""WITH r AS ($rview),
@@ -445,6 +428,11 @@ object Recommender {
             FROM tr""")
   )
 
+  /** Oracle twin of GradientMF's hash init: factor `f` of `idCol`'s
+    * long-format initial table, in [-0.5, 0.499]. */
+  private def h32init(kind: String, idCol: String): String =
+    s"(${OracleSql.h32(s"'$kind' || CAST($idCol AS VARCHAR) || '_' || CAST(f AS VARCHAR)")} % 1000 - 500) / 1000.0"
+
   private val GdRank = 4
   private val GdLr = 2.0
   private val GdReg = 0.02
@@ -467,8 +455,6 @@ object Recommender {
     (s, d) => graft.rec.GradientMF.trainTrajectory(
       Ratings.view(s, d), GdRank, GdLr, GdReg, GdEpochs),
     Some {
-      def h32init(kind: String, idCol: String): String =
-        s"(${OracleSql.h32(s"'$kind' || CAST($idCol AS VARCHAR) || '_' || CAST(f AS VARCHAR)")} % 1000 - 500) / 1000.0"
       val head = Seq(
         s"r0 AS MATERIALIZED ($rview)",
         "g AS MATERIALIZED (SELECT avg(rating) AS mu FROM r0)",
@@ -533,8 +519,6 @@ object Recommender {
     * `u$GdEpochs` / `v$GdEpochs`. */
   private def bprOracleCtes(rDef: String): Seq[String] = {
     val lr = 1.0
-    def h32init(kind: String, idCol: String): String =
-      s"(${OracleSql.h32(s"'$kind' || CAST($idCol AS VARCHAR) || '_' || CAST(f AS VARCHAR)")} % 1000 - 500) / 1000.0"
     val head = Seq(
       s"r AS MATERIALIZED ($rDef)",
       """pos AS MATERIALIZED (SELECT user_id, item_id AS pos_item, rating AS pos_r FROM (
@@ -632,8 +616,6 @@ object Recommender {
     * residuals in `r`. */
   private def lightgcnOracleCtes: Seq[String] = {
     val lr = 16.0
-    def h32init(kind: String, idCol: String): String =
-      s"(${OracleSql.h32(s"'$kind' || CAST($idCol AS VARCHAR) || '_' || CAST(f AS VARCHAR)")} % 1000 - 500) / 1000.0"
     val head = Seq(
       "g AS MATERIALIZED (SELECT avg(rating) AS mu FROM rin)",
       "r AS MATERIALIZED (SELECT user_id, item_id, rating - mu AS res FROM rin CROSS JOIN g)",

@@ -32,6 +32,10 @@ import org.apache.spark.sql.functions._
   * epoch, which is what every iterative trainer on Spark does (MLlib
   * ALS checkpoints the same way).
   *
+  * MF (q86), BPR (q87/q106) and LightGCN (q88/q107) share ONE epoch
+  * loop, [[GradientMF.descend]]: each trainer supplies only its forward
+  * relation and its two gradient tables.
+  *
   * Determinism: factors initialize from the shared md5-prefix hash
   * (exact integers → exact doubles in [−0.5, 0.499]), the global mean
   * is subtracted from ratings (the residual model), dot products fold
@@ -42,40 +46,7 @@ import org.apache.spark.sql.functions._
   * `(id, f, val)` relation, which DuckDB is happier unrolling).
   */
 object GradientMF {
-
-  /** Eager localCheckpoint re-rooted as a FRESH LogicalRDD leaf.
-    *
-    * Spark 4's `localCheckpoint` rewrites the origin plan's statistics
-    * onto the checkpoint leaf (`LogicalRDD.rewriteStatsAndConstraints`),
-    * and size-only estimation multiplies children's `sizeInBytes`
-    * through every join — so an iterative trainer whose epoch-k tables
-    * are joins of epoch-(k−1) checkpoints compounds the stat doubly
-    * exponentially. The BigInt's DIGIT COUNT roughly doubles per epoch:
-    * by ~15 epochs it has ~10⁵ digits and the driver sits for minutes
-    * inside `BigInteger.multiply` under
-    * `SizeInBytesOnlyStatsPlanVisitor` (observed on the holdout spec:
-    * 12 epochs ≈ 2 min wall, 24 epochs > 30 min, 100% driver CPU, any
-    * data size — the cost is arithmetic on the stat itself, not the
-    * data). Re-wrapping the checkpointed RDD in `createDataFrame` makes
-    * a leaf whose stats are the CONSTANT `defaultSizeInBytes`, so
-    * planning cost stays flat in epochs; AQE re-plans joins from real
-    * runtime shuffle sizes anyway, and every explicitly-broadcast side
-    * here is marked with `broadcast()`.
-    *
-    * Negative result, measured: re-wrapping the INTERNAL-row RDD
-    * instead (`internalCreateDataFrame(qe.toRdd, schema)` via an
-    * org.apache.spark.sql shim, to skip this path's external-Row round
-    * trip) benched ~30% SLOWER on the trainers (q86-q88/q106/q107:
-    * 61.6 s vs 47.1 s, same set, the slower run under LIGHTER host
-    * load) — the Row path deserializes through a codegen'd projection
-    * while the raw internal-row scan copies per row. The public API
-    * stays. */
-  private implicit class CheckpointLeaf(df: DataFrame) {
-    def checkpointLeaf: DataFrame = {
-      val ck = df.localCheckpoint(true)
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
-  }
+  import graft.Lineage.checkpointLeaf
 
   private def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
@@ -85,11 +56,19 @@ object GradientMF {
     ((h32(concat(lit(kind), id.cast("string"), lit("_"), f.cast("string")))
       % 1000) - 500).cast("double") / 1000.0
 
-  /** The rank-length hash-init vector for one id — element f is exactly
-    * the long-format `initVal(kind, id, f)`, so the array layout changes
-    * nothing about what is computed. */
-  private def initVec(kind: String, id: Column, rank: Int): Column =
-    array((0 until rank).map(f => initVal(kind, id, lit(f.toLong))): _*)
+  /** The hash-init factor table `(idCol, val)` over the distinct ids of
+    * `ids`: element f of each rank-length vector is exactly the
+    * long-format `initVal(kind, id, f)`, so the array layout changes
+    * nothing about what is computed; `bias` appends one constant
+    * coordinate (BPR's item-bias slot). */
+  private def init(kind: String, ids: DataFrame, idCol: String, rank: Int,
+                   bias: Option[Double] = None): DataFrame = {
+    val base = array((0 until rank).map(f =>
+      initVal(kind, col(idCol), lit(f.toLong))): _*)
+    ids.select(col(idCol)).distinct()
+      .select(col(idCol),
+        bias.fold(base)(b => concat(base, array(lit(b)))).as("val"))
+  }
 
   /** Fixed-order dot product (f ascending), statically expanded for
     * the known rank — bit-identical to the former
@@ -106,75 +85,119 @@ object GradientMF {
   private def vecAgg(rank: Int)(mk: Int => Column): Column =
     array((0 until rank).map(mk): _*)
 
-  /** `val ← val − lr·(grad + λ·val)`, elementwise. */
-  private def axpyUpdate(v: Column, g: Column, lr: Double, reg: Double): Column =
-    zip_with(v, g, (x, gx) => x - lit(lr) * (gx + lit(reg) * x))
+  /** `df` coalesced to its [[Sizing.factParts]] count and cached: the
+    * epoch pipeline has no exchange for AQE to coalesce, so the fact's
+    * cache and every per-epoch checkpoint take this count. */
+  private def cachedFact(df: DataFrame): (DataFrame, Int) = {
+    val parts = Sizing.factParts(df)
+    (df.coalesce(parts).cache(), parts)
+  }
+
+  /** `(user_id, item_id, res)`: ratings minus the mean in `g` (a 1-row
+    * `mu` table). */
+  private def centred(ratings: DataFrame, g: DataFrame): DataFrame =
+    ratings.crossJoin(broadcast(g))
+      .select(col("user_id"), col("item_id"),
+        (col("rating") - col("mu")).as("res"))
+
+  /** The residual model's training fact, cached (see [[cachedFact]]),
+    * with the train mean `g` and the partition count. */
+  private def residuals(ratings: DataFrame): (DataFrame, DataFrame, Int) = {
+    val g = ratings.agg(avg(col("rating")).as("mu"))
+    val (res, parts) = cachedFact(centred(ratings, g))
+    (res, g, parts)
+  }
+
+  /** Per-rating error rows, carrying both factor vectors so the two
+    * gradient aggregations read this one checkpointed relation
+    * without any further join. Factor sides are broadcast: they are
+    * id-dimension-sized (distinct users/items × rank doubles), while
+    * `res` is the ratings FACT — the unbounded side — which these
+    * hints keep unshuffled through every epoch (each checkpointLeaf
+    * carries defaultSizeInBytes stats, so without the hint the
+    * planner sort-merge-joins and re-shuffles the fact twice per
+    * epoch). */
+  private def predictions(res: DataFrame, u: DataFrame, v: DataFrame,
+                          rank: Int): DataFrame =
+    res
+      .join(broadcast(u.select(col("user_id"), col("val").as("uv"))),
+        Seq("user_id"))
+      .join(broadcast(v.select(col("item_id"), col("val").as("vv"))),
+        Seq("item_id"))
+      .select(col("user_id"), col("item_id"),
+        (dot(col("uv"), col("vv"), rank) - col("res")).as("err"),
+        col("uv"), col("vv"))
+
+  /** Per-example-mean squared-error gradient per `id`, from the error
+    * rows of [[predictions]]: `avg(err · other[i])`, `(id, val)`. */
+  private def meanGrad(p: DataFrame, id: String, other: String,
+                       rank: Int): DataFrame =
+    p.groupBy(col(id))
+      .agg(vecAgg(rank)(i => avg(col("err") * col(other)(i))).as("val"))
+
+  private def epochLoss(k: Int, p: DataFrame): DataFrame =
+    p.agg(round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
+      .select(lit(k).cast("long").as("epoch"), col("rmse"))
+
+  /** `fit` run with an epoch hook collecting `loss(k, ·)` of each
+    * epoch's relation — the `(epoch, …)` trajectory in epoch order. */
+  private def trajectory(loss: (Int, DataFrame) => DataFrame)(
+      fit: ((Int, DataFrame) => Unit) => Unit): DataFrame = {
+    val losses = Seq.newBuilder[DataFrame]
+    fit((k, d) => losses += loss(k, d))
+    losses.result().reduce(_ unionAll _).orderBy(col("epoch"))
+  }
+
+  /** `val ← pin(val − lr·(grad + λ·val))`, elementwise, joined 1:1 per
+    * id with the `(id, val)` gradient table. */
+  private def update(base: DataFrame, grad: DataFrame, id: String,
+                     lr: Double, reg: Double, pin: Column => Column)
+      : DataFrame =
+    base.join(broadcast(grad.select(col(id), col("val").as("grad"))),
+        Seq(id))
+      .select(col(id),
+        pin(zip_with(col("val"), col("grad"),
+          (x, gx) => x - lit(lr) * (gx + lit(reg) * x))).as("val"))
+
+  /** The ONE epoch loop of every trainer here. From the initial factor
+    * tables `(user_id, val)` / `(item_id, val)`, each epoch checkpoints
+    * `forward(u, v)` (coalesced to `parts`; it feeds the loss and both
+    * gradients), hands it to `onEpoch(k, ·)`, takes the two `(id, val)`
+    * gradient tables from `grads`, and checkpoints each side's update
+    * (`pinUser` re-shapes the user vector after its step). Returns the
+    * trained base tables; the loss at index `epochs` is the caller's. */
+  private def descend(u0: DataFrame, v0: DataFrame, epochs: Int, parts: Int,
+      lr: Double, reg: Double, onEpoch: (Int, DataFrame) => Unit,
+      pinUser: Column => Column = identity)(
+      forward: (DataFrame, DataFrame) => DataFrame,
+      grads: DataFrame => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
+    var u = checkpointLeaf(u0)
+    var v = checkpointLeaf(v0)
+    for (k <- 0 until epochs) {
+      val p = checkpointLeaf(forward(u, v).coalesce(parts))
+      onEpoch(k, p)
+      val (gu, gv) = grads(p)
+      u = checkpointLeaf(update(u, gu, "user_id", lr, reg, pinUser))
+      v = checkpointLeaf(update(v, gv, "item_id", lr, reg, identity))
+    }
+    (u, v)
+  }
 
   /** Train `epochs` full-batch GD epochs of rank-`rank` MF on
     * `ratings` (user_id, item_id, rating); returns the per-epoch RMSE
     * trajectory `(epoch, rmse)` — epochs+1 rows, epoch 0 = the loss at
     * initialization. */
   def trainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
-                      reg: Double, epochs: Int): DataFrame = {
-    val g = ratings.agg(avg(col("rating")).as("mu"))
-    val res = ratings.crossJoin(broadcast(g))
-      .select(col("user_id"), col("item_id"),
-        (col("rating") - col("mu")).as("res"))
-    // the epoch pipeline has no exchange for AQE to coalesce: the fact's
-    // cache and every per-epoch checkpoint take this count (see Sizing)
-    val parts = Sizing.factParts(res)
-    val resC = res.coalesce(parts).cache()
-
-    def init(kind: String, idCol: String): DataFrame =
-      resC.select(col(idCol)).distinct()
-        .select(col(idCol), initVec(kind, col(idCol), rank).as("val"))
-
-    /** Per-rating error rows, carrying both factor vectors so the two
-      * gradient aggregations read this one checkpointed relation
-      * without any further join. Factor sides are broadcast: they are
-      * id-dimension-sized (distinct users/items × rank doubles), while
-      * `res` is the ratings FACT — the unbounded side — which these
-      * hints keep unshuffled through every epoch (each checkpointLeaf
-      * carries defaultSizeInBytes stats, so without the hint the
-      * planner sort-merge-joins and re-shuffles the fact twice per
-      * epoch). */
-    def predictions(u: DataFrame, v: DataFrame): DataFrame =
-      resC
-        .join(broadcast(u.select(col("user_id"), col("val").as("uv"))),
-          Seq("user_id"))
-        .join(broadcast(v.select(col("item_id"), col("val").as("vv"))),
-          Seq("item_id"))
-        .select(col("user_id"), col("item_id"),
-          (dot(col("uv"), col("vv"), rank) - col("res")).as("err"),
-          col("uv"), col("vv"))
-
-    def epochLoss(k: Int, p: DataFrame): DataFrame =
-      p.agg(round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
-        .select(lit(k).cast("long").as("epoch"), col("rmse"))
-
-    var u = init("u", "user_id").checkpointLeaf
-    var v = init("i", "item_id").checkpointLeaf
-    val losses = Seq.newBuilder[DataFrame]
-    for (k <- 0 until epochs) {
-      // p feeds the loss and BOTH gradients — checkpoint once per epoch
-      val p = predictions(u, v).coalesce(parts).checkpointLeaf
-      losses += epochLoss(k, p)
-      val gu = p.groupBy(col("user_id"))
-        .agg(vecAgg(rank)(i => avg(col("err") * col("vv")(i))).as("grad"))
-      val gv = p.groupBy(col("item_id"))
-        .agg(vecAgg(rank)(i => avg(col("err") * col("uv")(i))).as("grad"))
-      u = u.join(broadcast(gu), Seq("user_id"))
-        .select(col("user_id"),
-          axpyUpdate(col("val"), col("grad"), lr, reg).as("val"))
-        .checkpointLeaf
-      v = v.join(broadcast(gv), Seq("item_id"))
-        .select(col("item_id"),
-          axpyUpdate(col("val"), col("grad"), lr, reg).as("val"))
-        .checkpointLeaf
+                      reg: Double, epochs: Int): DataFrame =
+    trajectory(epochLoss) { onEpoch =>
+      val (res, _, parts) = residuals(ratings)
+      val (u, v) = descend(init("u", res, "user_id", rank),
+          init("i", res, "item_id", rank), epochs, parts, lr, reg, onEpoch)(
+        predictions(res, _, _, rank),
+        p => (meanGrad(p, "user_id", "vv", rank),
+          meanGrad(p, "item_id", "uv", rank)))
+      onEpoch(epochs, predictions(res, u, v, rank))
     }
-    losses += epochLoss(epochs, predictions(u, v))
-    losses.result().reduce(_ unionAll _).orderBy(col("epoch"))
-  }
 
   /** Full-batch BPR gradient descent (Rendle et al. 2009 — the ref's
     * top-N training objective, `/root/reference/src/csv/train_topn.py:
@@ -188,12 +211,8 @@ object GradientMF {
     * share of correctly-ordered pairs rising is BPR learning, and both
     * are oracle-checked (q87). */
   def bprTrainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
-                         reg: Double, epochs: Int): DataFrame = {
-    val losses = Seq.newBuilder[DataFrame]
-    bprFit(ratings, rank, lr, reg, epochs,
-      (k, d) => losses += bprEpochLoss(k, d))
-    losses.result().reduce(_ unionAll _).orderBy(col("epoch"))
-  }
+                         reg: Double, epochs: Int): DataFrame =
+    trajectory(bprEpochLoss)(bprFit(ratings, rank, lr, reg, epochs, _))
 
   /** The trained BPR factor tables `(u, v)` — each `(id, val:
     * array<double>)` — for serving a top-N ranking from the pairwise
@@ -305,29 +324,13 @@ object GradientMF {
       reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit,
       itemBias: Boolean = false)
       : (DataFrame, DataFrame) = {
-    val parts = Sizing.factParts(triples)
-    val tr = triples.coalesce(parts).cache()
+    val (tr, parts) = cachedFact(triples)
     val width = if (itemBias) rank + 1 else rank
-
-    def init(kind: String, ids: DataFrame, idCol: String): DataFrame = {
-      val base = initVec(kind, col(idCol), rank)
-      val vec =
-        if (!itemBias) base
-        // user bias-slot carries the constant 1; item bias starts at 0
-        else if (kind == "u") concat(base, array(lit(1.0)))
-        else concat(base, array(lit(0.0)))
-      ids.select(col(idCol), vec.as("val"))
-    }
-
-    /** re-pin the user bias slot (updates move it; the model says 1). */
-    def pinUser(v: Column): Column =
-      if (!itemBias) v
-      else concat(slice(v, 1, rank), array(lit(1.0)))
 
     /** Per-pair score rows carrying all three factor vectors, so loss
       * and both gradients read one checkpointed relation. Factor sides
       * broadcast — id-dimension-sized vs the triple relation (see
-      * [[trainTrajectory]]'s predictions note). */
+      * [[predictions]]). */
     def scores(u: DataFrame, v: DataFrame): DataFrame =
       tr
         .join(broadcast(u.select(col("user_id"), col("val").as("uval"))),
@@ -345,15 +348,7 @@ object GradientMF {
             .foldLeft(lit(0.0d))(_ + _).as("d"),
           col("uval"), col("pval"), col("nval"))
 
-    var u = init("u", tr.select(col("user_id")).distinct(), "user_id")
-      .checkpointLeaf
-    var v = init("i",
-      tr.select(col("pos_item").as("item_id"))
-        .unionAll(tr.select(col("neg_item").as("item_id"))).distinct(),
-      "item_id").checkpointLeaf
-    for (k <- 0 until epochs) {
-      val d = scores(u, v).coalesce(parts).checkpointLeaf
-      onEpoch(k, d)
+    def grads(d: DataFrame): (DataFrame, DataFrame) = {
       val s = d.withColumn("comp", lit(1.0) / (lit(1.0) + exp(col("d"))))
       // the head-tail derivation yields one (pos, neg) pair per user,
       // all-positives yields many — aggregate symmetrically with gv so
@@ -363,22 +358,27 @@ object GradientMF {
           zip_with(col("pval"), col("nval"),
             (p, n) => -col("comp") * (p - n)).as("g"))
         .groupBy(col("user_id"))
-        .agg(vecAgg(width)(i => avg(col("g")(i))).as("grad"))
+        .agg(vecAgg(width)(i => avg(col("g")(i))).as("val"))
       val gv = s.select(col("pos_item").as("item_id"),
           transform(col("uval"), x => -col("comp") * x).as("c"))
         .unionAll(s.select(col("neg_item").as("item_id"),
           transform(col("uval"), x => col("comp") * x).as("c")))
         .groupBy(col("item_id"))
-        .agg(vecAgg(width)(i => avg(col("c")(i))).as("grad"))
-      u = u.join(broadcast(gu), Seq("user_id"))
-        .select(col("user_id"),
-          pinUser(axpyUpdate(col("val"), col("grad"), lr, reg)).as("val"))
-        .checkpointLeaf
-      v = v.join(broadcast(gv), Seq("item_id"))
-        .select(col("item_id"),
-          axpyUpdate(col("val"), col("grad"), lr, reg).as("val"))
-        .checkpointLeaf
+        .agg(vecAgg(width)(i => avg(col("c")(i))).as("val"))
+      (gu, gv)
     }
+
+    // the user bias slot carries the constant 1 (re-pinned after every
+    // update: the model says 1); the item bias starts at 0
+    val items = tr.select(col("pos_item").as("item_id"))
+      .unionAll(tr.select(col("neg_item").as("item_id")))
+    val (u, v) = descend(
+        init("u", tr, "user_id", rank, if (itemBias) Some(1.0) else None),
+        init("i", items, "item_id", rank, if (itemBias) Some(0.0) else None),
+        epochs, parts, lr, reg, onEpoch,
+        pinUser = w =>
+          if (itemBias) concat(slice(w, 1, rank), array(lit(1.0))) else w)(
+      scores, grads)
     onEpoch(epochs, scores(u, v))
     (u, v)
   }
@@ -389,8 +389,8 @@ object GradientMF {
     *
     *  - forward: propagated embeddings `U' = (U + ÃV)/2`,
     *    `V' = (V + ÃᵀU)/2` over the 1/√(d_u·d_i)-normalized bipartite
-    *    edges (q36's propagation), prediction `u'·v'` on mean-centered
-    *    ratings;
+    *    edges ([[GraphPropagation.edges]], q36's propagation),
+    *    prediction `u'·v'` on mean-centered ratings;
     *  - backward: because the propagation is LINEAR, backprop through
     *    it is the SAME edge-weighted aggregation applied to the
     *    gradient tables — `∂L/∂U = (G_U' + Ã G_V')/2` — so "gradients
@@ -406,12 +406,8 @@ object GradientMF {
     * backprop + updates) unrolls into SQL, so q88's oracle verifies
     * gradient flow through the graph. */
   def lightgcnTrainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
-                              reg: Double, epochs: Int): DataFrame = {
-    val losses = Seq.newBuilder[DataFrame]
-    lightgcnFit(ratings, rank, lr, reg, epochs,
-      (k, p) => losses += epochLoss(k, p))
-    losses.result().reduce(_ unionAll _).orderBy(col("epoch"))
-  }
+                              reg: Double, epochs: Int): DataFrame =
+    trajectory(epochLoss)(lightgcnFit(ratings, rank, lr, reg, epochs, _))
 
   /** Train on `train`, then score the held-out `test` with the final
     * PROPAGATED embeddings — the generalization face of q88's trainer
@@ -424,9 +420,7 @@ object GradientMF {
   def lightgcnHoldout(train: DataFrame, test: DataFrame, rank: Int,
                       lr: Double, reg: Double, epochs: Int): DataFrame = {
     val (up, vp, g) = lightgcnFit(train, rank, lr, reg, epochs, (_, _) => ())
-    test.crossJoin(broadcast(g))
-      .select(col("user_id"), col("item_id"),
-        (col("rating") - col("mu")).as("res"))
+    centred(test, g)
       .join(broadcast(up.select(col("user_id"), col("val").as("uv"))),
         Seq("user_id"))
       .join(broadcast(vp.select(col("item_id"), col("val").as("vv"))),
@@ -438,100 +432,43 @@ object GradientMF {
         round(sqrt(avg(col("err") * col("err"))), 6).as("test_rmse"))
   }
 
-  private def epochLoss(k: Int, p: DataFrame): DataFrame =
-    p.agg(round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
-      .select(lit(k).cast("long").as("epoch"), col("rmse"))
-
-  /** The shared training loop: runs `epochs` full-batch epochs on
-    * `ratings`, hands each epoch's checkpointed per-rating error
-    * relation (and the final one, at index `epochs`) to `onEpoch`, and
-    * returns the final propagated embeddings + the train mean — the
-    * artifacts a serving path needs. */
+  /** The LightGCN trainer: [[descend]] with the propagated forward and
+    * the backprop-through-Ã gradients; hands each epoch's checkpointed
+    * per-rating error relation (and the final one, at index `epochs`)
+    * to `onEpoch`, and returns the final propagated embeddings + the
+    * train mean — the artifacts a serving path needs. */
   private def lightgcnFit(ratings: DataFrame, rank: Int, lr: Double,
       reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit)
       : (DataFrame, DataFrame, DataFrame) = {
-    val g = ratings.agg(avg(col("rating")).as("mu"))
-    val res0 = ratings.crossJoin(broadcast(g))
-      .select(col("user_id"), col("item_id"),
-        (col("rating") - col("mu")).as("res"))
-    val parts = Sizing.factParts(res0)
-    val res = res0.coalesce(parts).cache()
-    val du = res.groupBy(col("user_id")).agg(count(lit(1)).as("du"))
-    val di = res.groupBy(col("item_id")).agg(count(lit(1)).as("di"))
-    // du/di broadcast (id-dimension-sized degree tables, as q36's) so the
-    // edge fact is derived without shuffling res; ed keeps res's coalesced
-    // partitioning through the cache.
-    val ed = res.join(broadcast(du), Seq("user_id"))
-      .join(broadcast(di), Seq("item_id"))
-      .select(col("user_id"), col("item_id"),
-        (lit(1.0) / sqrt(col("du") * col("di"))).as("w"))
-      .cache()
-
-    def init(kind: String, idCol: String): DataFrame =
-      res.select(col(idCol)).distinct()
-        .select(col(idCol), initVec(kind, col(idCol), rank).as("val"))
+    val (res, g, parts) = residuals(ratings)
+    // ed keeps res's coalesced partitioning through its cache
+    val ed = GraphPropagation.edges(res)
 
     /** (base + Σ_edge w·other)/2 — the forward half-layer; with a
-      * gradient table as `other` it is equally the backward pass. One
-      * edge join + one per-element weighted-sum agg, rows = edges. The
-      * factor side broadcasts (id-dimension-sized); the EDGE fact is
-      * never shuffled by the join — only its per-id partial aggregates
-      * cross the exchange. */
+      * gradient table as `other` it is equally the backward pass. */
     def mix(base: DataFrame, other: DataFrame, baseId: String,
-            otherId: String): DataFrame = {
-      val agg = ed.join(broadcast(
-          other.select(col(otherId), col("val").as("ov"))), Seq(otherId))
-        .groupBy(col(baseId))
-        .agg(vecAgg(rank)(i => sum(col("w") * col("ov")(i))).as("s"))
-      base.join(broadcast(agg), Seq(baseId))
+            otherId: String): DataFrame =
+      base.join(broadcast(GraphPropagation
+          .spread(ed, other, otherId, baseId, rank).toDF(baseId, "s")),
+          Seq(baseId))
         .select(col(baseId),
           zip_with(col("val"), col("s"), (a, b) => (a + b) / 2).as("val"))
-    }
 
-    def predictions(up: DataFrame, vp: DataFrame): DataFrame =
-      res
-        .join(broadcast(up.select(col("user_id"), col("val").as("uv"))),
-          Seq("user_id"))
-        .join(broadcast(vp.select(col("item_id"), col("val").as("vv"))),
-          Seq("item_id"))
-        .select(col("user_id"), col("item_id"),
-          (dot(col("uv"), col("vv"), rank) - col("res")).as("err"),
-          col("uv"), col("vv"))
-
-    var u = init("u", "user_id").checkpointLeaf
-    var v = init("i", "item_id").checkpointLeaf
-    for (k <- 0 until epochs) {
-      // up/vp feed ONLY predictions (the gradient mixes read p's embedded
-      // uv/vv columns), and p is checkpointed right here — materializing
-      // them separately was two wasted jobs per epoch; as plain plans
-      // they evaluate exactly once inside p's checkpoint, and plans stay
-      // constant-size because u/v are checkpointed leaves
-      val up = mix(u, v, "user_id", "item_id")
-      val vp = mix(v, u, "item_id", "user_id")
-      val p = predictions(up, vp).coalesce(parts).checkpointLeaf
-      onEpoch(k, p)
-      val gup = p.groupBy(col("user_id"))
-        .agg(vecAgg(rank)(i => avg(col("err") * col("vv")(i))).as("val"))
-        .cache()
-      val gvp = p.groupBy(col("item_id"))
-        .agg(vecAgg(rank)(i => avg(col("err") * col("uv")(i))).as("val"))
-        .cache()
-      val gu = mix(gup, gvp, "user_id", "item_id")
-      val gv = mix(gvp, gup, "item_id", "user_id")
-      u = u.join(broadcast(gu.select(col("user_id"), col("val").as("grad"))),
-          Seq("user_id"))
-        .select(col("user_id"),
-          axpyUpdate(col("val"), col("grad"), lr, reg).as("val"))
-        .checkpointLeaf
-      v = v.join(broadcast(gv.select(col("item_id"), col("val").as("grad"))),
-          Seq("item_id"))
-        .select(col("item_id"),
-          axpyUpdate(col("val"), col("grad"), lr, reg).as("val"))
-        .checkpointLeaf
-    }
-    val upF = mix(u, v, "user_id", "item_id").checkpointLeaf
-    val vpF = mix(v, u, "item_id", "user_id").checkpointLeaf
-    onEpoch(epochs, predictions(upF, vpF))
+    val (u, v) = descend(init("u", res, "user_id", rank),
+        init("i", res, "item_id", rank), epochs, parts, lr, reg, onEpoch)(
+      // the propagated tables feed ONLY predictions (the gradients read
+      // p's embedded uv/vv columns), so as plain plans they evaluate
+      // exactly once inside p's checkpoint
+      (u, v) => predictions(res, mix(u, v, "user_id", "item_id"),
+        mix(v, u, "item_id", "user_id"), rank),
+      p => {
+        val gup = meanGrad(p, "user_id", "vv", rank).cache()
+        val gvp = meanGrad(p, "item_id", "uv", rank).cache()
+        (mix(gup, gvp, "user_id", "item_id"), mix(gvp, gup, "item_id", "user_id"))
+      })
+    val upF = checkpointLeaf(mix(u, v, "user_id", "item_id"))
+    val vpF = checkpointLeaf(mix(v, u, "item_id", "user_id"))
+    onEpoch(epochs, predictions(res, upF, vpF, rank))
     (upF, vpF, g)
   }
 }

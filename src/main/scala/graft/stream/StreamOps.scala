@@ -313,8 +313,8 @@ object StreamOps {
   /** ANN-accelerated per-batch serve (r14): the ceiling sweep measured
     * the SERVE stage — [[topNForUsers]] scoring every touched user
     * against the whole catalog — as the full loop's bottleneck
-    * (STREAMBENCH_r14_sweep: state path sustains 1.28M ev/s, full loop
-    * plateaus ~670k). This variant prunes with the IVF quantizer from
+    * (STREAMBENCH_r14_sweep, in git history: state path sustains
+    * 1.28M ev/s, full loop plateaus ~670k). This variant prunes with the IVF quantizer from
     * [[buildServeIndex]]: each user's interest vector is scored against
     * the K broadcast centroids, its `nprobe` nearest cells selected,
     * and cosine runs only over those cells' items — scored pairs drop

@@ -251,6 +251,86 @@ class GdMfSpec extends SparkSpec {
     }
   }
 
+  test("LightGCN training run equals a hand-rolled in-memory reference") {
+    val rank = 3
+    val lr = 0.5
+    val reg = 0.1
+    val epochs = 2
+    val rows = Seq(
+      (1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
+      (2L, 10L, 5.0), (2L, 12L, 1.0),
+      (3L, 11L, 4.0), (3L, 12L, 5.0))
+
+    val got = GradientMF.lightgcnTrainTrajectory(
+        rows.toDF("user_id", "item_id", "rating"), rank, lr, reg, epochs)
+      .as[(Long, Double)].collect().sortBy(_._1).map(_._2)
+
+    // independent reference: same hash init, same math, plain Scala
+    def h32(s: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 8), 16)
+    }
+    def init(kind: String, id: Long, f: Int): Double =
+      ((h32(s"$kind${id}_$f") % 1000) - 500).toDouble / 1000.0
+    type Vecs = Map[Long, Array[Double]]
+    val mu = rows.map(_._3).sum / rows.size
+    val res = rows.map { case (u, i, r) => (u, i, r - mu) }
+    val du = res.groupBy(_._1).map { case (u, rs) => u -> rs.size }
+    val di = res.groupBy(_._2).map { case (i, rs) => i -> rs.size }
+    // normalized edges (user, item, 1/√(d_u·d_i))
+    val ed = res.map { case (u, i, _) =>
+      (u, i, 1.0 / math.sqrt(du(u).toDouble * di(i))) }
+    // Ã·other: per user Σ_i w·other(i) (toUser) or per item Σ_u w·other(u)
+    def spread(other: Vecs, toUser: Boolean): Vecs =
+      ed.groupBy(e => if (toUser) e._1 else e._2).map { case (id, es) =>
+        id -> Array.tabulate(rank)(f => es.map { case (u, i, w) =>
+          w * other(if (toUser) i else u)(f) }.sum)
+      }
+    def half(base: Vecs, s: Vecs): Vecs =
+      base.map { case (id, b) => id -> b.zip(s(id)).map { case (x, y) =>
+        (x + y) / 2 } }
+    // forward: U' = (U + ÃV)/2, V' = (V + ÃᵀU)/2
+    def forward(u: Vecs, v: Vecs): (Vecs, Vecs) =
+      (half(u, spread(v, toUser = true)), half(v, spread(u, toUser = false)))
+    def errs(up: Vecs, vp: Vecs): Seq[(Long, Long, Double)] =
+      res.map { case (u, i, rr) =>
+        (u, i, up(u).zip(vp(i)).map { case (a, b) => a * b }.sum - rr) }
+    def rmse(e: Seq[(Long, Long, Double)]): Double =
+      math.sqrt(e.map(t => t._3 * t._3).sum / e.size)
+    def step(base: Vecs, g: Vecs): Vecs =
+      base.map { case (id, fv) => id -> fv.zipWithIndex.map {
+        case (v0, f) => v0 - lr * (g(id)(f) + reg * v0) } }
+    var uF: Vecs = res.map(_._1).distinct
+      .map(u => u -> Array.tabulate(rank)(f => init("u", u, f))).toMap
+    var vF: Vecs = res.map(_._2).distinct
+      .map(i => i -> Array.tabulate(rank)(f => init("i", i, f))).toMap
+    val want = Seq.newBuilder[Double]
+    for (_ <- 0 until epochs) {
+      val (up, vp) = forward(uF, vF)
+      val e = errs(up, vp)
+      want += rmse(e)
+      // gradients w.r.t. the propagated tables: per-example means
+      val gup: Vecs = e.groupBy(_._1).map { case (u, es) =>
+        u -> Array.tabulate(rank)(f =>
+          es.map { case (_, i, err) => err * vp(i)(f) }.sum / es.size) }
+      val gvp: Vecs = e.groupBy(_._2).map { case (i, es) =>
+        i -> Array.tabulate(rank)(f =>
+          es.map { case (u, _, err) => err * up(u)(f) }.sum / es.size) }
+      // backprop through Ã: ∂L/∂U = (G_U' + Ã G_V')/2, likewise for V
+      val gu = half(gup, spread(gvp, toUser = true))
+      val gv = half(gvp, spread(gup, toUser = false))
+      uF = step(uF, gu)
+      vF = step(vF, gv)
+    }
+    want += rmse((errs _).tupled(forward(uF, vF)))
+    val ref = want.result()
+    assert(got.length == ref.length)
+    got.zip(ref).foreach { case (g, w) =>
+      assert(math.abs(g - w) < 1.1e-6, s"got=${got.toSeq} want=$ref")
+    }
+  }
+
   test("training run equals a hand-rolled in-memory reference") {
     val rank = 3
     val lr = 0.5

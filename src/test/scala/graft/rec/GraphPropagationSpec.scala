@@ -11,9 +11,9 @@ class GraphPropagationSpec extends SparkSpec {
     // bipartite graph: u1–{i1,i2}, u2–{i2}; d_u1=2, d_u2=1, d_i1=1, d_i2=2
     val ratings = Seq((1, 1, 1.0), (1, 2, 1.0), (2, 2, 1.0))
       .toDF("user_id", "item_id", "rating")
-    val e0 = Seq((1, 0, 1.0), (2, 0, 3.0)).toDF("item_id", "pos", "v")
-    val got = GraphPropagation.propagate(ratings, e0, layers = 1)
-      .orderBy("item_id").as[(Int, Int, Double)].collect()
+    val e0 = Seq((1, Seq(1.0)), (2, Seq(3.0))).toDF("item_id", "val")
+    val got = GraphPropagation.propagate(ratings, e0, width = 1, layers = 1)
+      .orderBy("item_id").as[(Int, Seq[Double])].collect()
 
     // w(u1,i1)=1/√2, w(u1,i2)=1/2, w(u2,i2)=1/√2
     val w11 = 1 / math.sqrt(2); val w12 = 0.5; val w22 = 1 / math.sqrt(2)
@@ -22,22 +22,21 @@ class GraphPropagationSpec extends SparkSpec {
     val i1l1 = w11 * u1                 // items after user→item
     val i2l1 = w12 * u1 + w22 * u2
     val expected = Map(1 -> (1.0 + i1l1) / 2, 2 -> (3.0 + i2l1) / 2)
-    got.foreach { case (item, pos, v) =>
-      assert(pos == 0)
-      assert(math.abs(v - expected(item)) < 1e-12, s"item $item: $v")
+    got.foreach { case (item, vs) =>
+      assert(vs.length == 1)
+      assert(math.abs(vs.head - expected(item)) < 1e-12, s"item $item: $vs")
     }
   }
 
   test("K layers run on fixture ratings and keep all items and dimensions") {
     val r = Ratings.view(spark, "/root/testdata/sf0.001").cache()
     val e0 = r.groupBy(col("item_id"))
-      .agg(avg(col("rating")).as("f1"), count(lit(1)).cast("double").as("f2"))
-      .select(col("item_id"),
-        posexplode(array(col("f1"), col("f2"))).as(Seq("pos", "v")))
-    val out = GraphPropagation.propagate(r, e0, layers = 2).cache()
+      .agg(array(avg(col("rating")), count(lit(1)).cast("double")).as("val"))
+    val out = GraphPropagation.propagate(r, e0, width = 2, layers = 2).cache()
     val nItems = r.select("item_id").distinct().count()
     assert(out.select("item_id").distinct().count() == nItems)
-    assert(out.groupBy("item_id").count().agg(max("count")).head().getLong(0) == 2)
-    assert(out.where(col("v").isNull || isnan(col("v"))).isEmpty)
+    assert(out.agg(min(size(col("val"))), max(size(col("val")))).head() ==
+      org.apache.spark.sql.Row(2, 2))
+    assert(out.where(exists(col("val"), v => v.isNull || isnan(v))).isEmpty)
   }
 }
