@@ -132,6 +132,24 @@ object Harness {
     def cpuSec: Double = work.cpuNs / 1e9
   }
 
+  /** Wall milliseconds of one evaluation of `body`. */
+  def elapsedMs(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e6
+  }
+
+  /** One untimed warm-up evaluation of `body` (JIT, model reads), then
+    * the true median of `reps` timed ones in ms — the mean of the middle
+    * two at an even count. Medians, because a shared host's load waves
+    * would dominate a single sample. */
+  def medianMs(reps: Int)(body: => Any): Double = {
+    body
+    val xs = Vector.fill(reps)(elapsedMs(body)).sorted
+    if (reps % 2 == 1) xs(reps / 2)
+    else (xs(reps / 2 - 1) + xs(reps / 2)) / 2.0
+  }
+
   /** Queries that read the shared MinHash signature table (q28's). */
   val SigConsumers: Set[String] = Set(
     "q72_dedup_components", "q29_minhash_pairs", "q131_minhash_pairs_bounded")

@@ -50,16 +50,15 @@ import org.apache.spark.sql.functions._
   * that lifecycle. The `cos_*` keys run the same protocol (day-0 build
   * on the first slice, N frozen `appendLarge` increments, probe /
   * compact / probe) with probes served through the cosine serve itself
-  * (`StreamOps.topNForUsersAnnPartitioned`, nprobe=2, top-3). Day-0
+  * (`StreamOps.topNForUsersAnn` over the partitioned cells, nprobe=2,
+  * top-3). Day-0
   * K matches the Euclidean arm's 16 so the two arms price the same
   * fragmentation story — quantizer SIZING policy is the retrain/resize
   * arms' question, answered above.
   *
-  * Prints ONE JSON line. Probe latency is the median of `reps` full
-  * probe executions (assign → pruned cell scan → per-probe top-k,
-  * collect()ed), after one untimed warmup pass; medians because a
-  * shared host's load waves would dominate a single sample (the
-  * Bench.scala lesson).
+  * Prints ONE JSON line. Probe latency is [[Harness.medianMs]] of `reps`
+  * full probe executions (assign → pruned cell scan → per-probe top-k,
+  * collect()ed).
   */
 object IndexBench {
 
@@ -112,25 +111,16 @@ object IndexBench {
         col("vec_id") < (i + 1) * sliceRows), dir))
 
     val probes = e.where(col("vec_id") < 10)
-    def probeMedianMs(idxDir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.rec.IvfIndex.probe(spark, idxDir, probes, nprobe = 2, topK = 3)
-          .collect()
-        (System.nanoTime() - t0) / 1e6
-      }
-      once() // warmup: JIT + centroid read
-      val xs = Vector.fill(reps)(once()).sorted
-      // true median for even rep counts too (the env knob allows them)
-      if (reps % 2 == 1) xs(reps / 2)
-      else (xs(reps / 2 - 1) + xs(reps / 2)) / 2.0
-    }
+    def probeMedianMs(idxDir: String): Double = Harness.medianMs(reps)(
+      graft.rec.IvfIndex.probe(spark, idxDir, probes, nprobe = 2, topK = 3)
+        .collect())
 
     val filesBefore = dataFiles(cells)
     val msBefore = probeMedianMs(dir)
-    val t0 = System.nanoTime()
-    val stats = graft.rec.IvfIndex.compact(spark, dir, maxFilesPerCell = 4)
-    val compactMs = (System.nanoTime() - t0) / 1e6
+    var stats: graft.rec.CompactStats = null
+    val compactMs = Harness.elapsedMs {
+      stats = graft.rec.IvfIndex.compact(spark, dir, maxFilesPerCell = 4)
+    }
     val filesAfter = dataFiles(cells)
     val msAfter = probeMedianMs(dir)
 
@@ -138,9 +128,8 @@ object IndexBench {
     // rebuilt from scratch — the alternative growth policy to
     // compact-under-a-frozen-quantizer
     val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-rebuild").toString
-    val t1 = System.nanoTime()
-    graft.rec.IvfIndex.build(e, dir2, k = 16, iters = euclidBuildIters)
-    val rebuildMs = (System.nanoTime() - t1) / 1e6
+    val rebuildMs = Harness.elapsedMs(
+      graft.rec.IvfIndex.build(e, dir2, k = 16, iters = euclidBuildIters))
     val msRetrained = probeMedianMs(dir2)
     val gain = msAfter - msRetrained
     val breakeven = if (gain > 0) math.round(rebuildMs / gain) else -1L
@@ -155,9 +144,8 @@ object IndexBench {
     // the number the growth policy rests on.
     val resizedK = math.max(16, math.ceil(math.sqrt(total.toDouble)).toInt)
     val dir3 = java.nio.file.Files.createTempDirectory("graft-ivf-resize").toString
-    val t1b = System.nanoTime()
-    graft.rec.IvfIndex.build(e, dir3, k = resizedK, iters = euclidBuildIters)
-    val rebuildResizedMs = (System.nanoTime() - t1b) / 1e6
+    val rebuildResizedMs = Harness.elapsedMs(
+      graft.rec.IvfIndex.build(e, dir3, k = resizedK, iters = euclidBuildIters))
     val msResized = probeMedianMs(dir3)
     val gainResized = msAfter - msResized
     val breakevenResized =
@@ -177,28 +165,18 @@ object IndexBench {
     (1 to increments).foreach(i => graft.rec.IvfPqIndex.append(
       spark, e.where(col("vec_id") >= i * sliceRows &&
         col("vec_id") < (i + 1) * sliceRows), pqDir))
-    def pqProbeMedianMs(idxDir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.rec.IvfPqIndex.probe(spark, idxDir, probes, e).collect()
-        (System.nanoTime() - t0) / 1e6
-      }
-      once()
-      val xs = Vector.fill(reps)(once()).sorted
-      if (reps % 2 == 1) xs(reps / 2)
-      else (xs(reps / 2 - 1) + xs(reps / 2)) / 2.0
-    }
+    def pqProbeMedianMs(idxDir: String): Double = Harness.medianMs(reps)(
+      graft.rec.IvfPqIndex.probe(spark, idxDir, probes, e).collect())
     val pqFilesBefore = dataFiles(pqCells)
     val pqMsBefore = pqProbeMedianMs(pqDir)
-    val t2 = System.nanoTime()
-    val pqStats = graft.rec.IvfPqIndex.compact(spark, pqDir, maxFilesPerCell = 4)
-    val pqCompactMs = (System.nanoTime() - t2) / 1e6
+    var pqStats: graft.rec.CompactStats = null
+    val pqCompactMs = Harness.elapsedMs {
+      pqStats = graft.rec.IvfPqIndex.compact(spark, pqDir, maxFilesPerCell = 4)
+    }
     val pqFilesAfter = dataFiles(pqCells)
     val pqMsAfter = pqProbeMedianMs(pqDir)
     val pqDir2 = java.nio.file.Files.createTempDirectory("graft-ivfpq-rebuild").toString
-    val t3 = System.nanoTime()
-    graft.rec.IvfPqIndex.build(e, pqDir2)
-    val pqRebuildMs = (System.nanoTime() - t3) / 1e6
+    val pqRebuildMs = Harness.elapsedMs(graft.rec.IvfPqIndex.build(e, pqDir2))
     val pqMsRetrained = pqProbeMedianMs(pqDir2)
     val pqGain = pqMsAfter - pqMsRetrained
     val pqBreakeven = if (pqGain > 0) math.round(pqRebuildMs / pqGain) else -1L
@@ -207,9 +185,8 @@ object IndexBench {
     // growth); the per-subspace codebooks stay at their fixed 256-code
     // budget, which corpus size does not change
     val pqDir3 = java.nio.file.Files.createTempDirectory("graft-ivfpq-resize").toString
-    val t3b = System.nanoTime()
-    graft.rec.IvfPqIndex.build(e, pqDir3, ivfK = resizedK)
-    val pqRebuildResizedMs = (System.nanoTime() - t3b) / 1e6
+    val pqRebuildResizedMs = Harness.elapsedMs(
+      graft.rec.IvfPqIndex.build(e, pqDir3, ivfK = resizedK))
     val pqMsResized = pqProbeMedianMs(pqDir3)
     val pqGainResized = pqMsAfter - pqMsResized
     val pqBreakevenResized =
@@ -230,10 +207,8 @@ object IndexBench {
     val cosBuildIters = 20
     val cosDir = java.nio.file.Files.createTempDirectory("graft-cos-bench").toString
     val cosCells = new java.io.File(s"$cosDir/cells")
-    val t4 = System.nanoTime()
-    graft.rec.IvfIndex.buildLarge(
-      e.where(col("vec_id") < sliceRows), cosDir, k = 16, iters = cosBuildIters)
-    val cosBuildMs = (System.nanoTime() - t4) / 1e6
+    val cosBuildMs = Harness.elapsedMs(graft.rec.IvfIndex.buildLarge(
+      e.where(col("vec_id") < sliceRows), cosDir, k = 16, iters = cosBuildIters))
     (1 to increments).foreach(i => graft.rec.IvfIndex.appendLarge(
       spark, e.where(col("vec_id") >= i * sliceRows &&
         col("vec_id") < (i + 1) * sliceRows), cosDir))
@@ -243,24 +218,15 @@ object IndexBench {
       .select(col("vec_id").cast("int").as("userId"), col("emb").as("interest"))
       .cache()
     cosProbes.count()
-    def cosProbeMedianMs(): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.stream.StreamOps.topNForUsersAnnPartitioned(cosProbes, cosCent,
-          graft.stream.StreamOps.readServeCells(spark, cosDir), n = 3)
-          .collect()
-        (System.nanoTime() - t0) / 1e6
-      }
-      once()
-      val xs = Vector.fill(reps)(once()).sorted
-      if (reps % 2 == 1) xs(reps / 2)
-      else (xs(reps / 2 - 1) + xs(reps / 2)) / 2.0
-    }
+    def cosProbeMedianMs(): Double = Harness.medianMs(reps)(
+      graft.stream.StreamOps.topNForUsersAnn(cosProbes, cosCent,
+        graft.stream.StreamOps.readServeCells(spark, cosDir), n = 3).collect())
     val cosFilesBefore = dataFiles(cosCells)
     val cosMsBefore = cosProbeMedianMs()
-    val t5 = System.nanoTime()
-    val cosStats = graft.rec.IvfIndex.compact(spark, cosDir, maxFilesPerCell = 4)
-    val cosCompactMs = (System.nanoTime() - t5) / 1e6
+    var cosStats: graft.rec.CompactStats = null
+    val cosCompactMs = Harness.elapsedMs {
+      cosStats = graft.rec.IvfIndex.compact(spark, cosDir, maxFilesPerCell = 4)
+    }
     val cosFilesAfter = dataFiles(cosCells)
     val cosMsAfter = cosProbeMedianMs()
 

@@ -351,33 +351,19 @@ object ScaleBench {
         .cache()
       e.count()
       val probes = e.where(col("vec_id") < 10)
-      def medianMs(probe: () => DataFrame): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          probe().collect()
-          (System.nanoTime() - t0) / 1e6
-        }
-        once() // warmup: JIT + quantizer read
-        val xs = Vector.fill(reps)(once()).sorted
-        if (reps % 2 == 1) xs(reps / 2)
-        else (xs(reps / 2 - 1) + xs(reps / 2)) / 2.0
-      }
-      def timedBuild(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
-      }
       val out = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
       val ivfDir = java.nio.file.Files.createTempDirectory("graft-sc-ivf").toString
-      val bIvf = timedBuild(graft.rec.IvfIndex.build(e, ivfDir))
-      out += "ivf" -> ((bIvf, medianMs(() =>
-        graft.rec.IvfIndex.probe(spark, ivfDir, probes))))
+      val bIvf = Harness.elapsedMs(graft.rec.IvfIndex.build(e, ivfDir))
+      out += "ivf" -> ((bIvf, Harness.medianMs(reps)(
+        graft.rec.IvfIndex.probe(spark, ivfDir, probes).collect())))
       val pqDir = java.nio.file.Files.createTempDirectory("graft-sc-pq").toString
-      val bPq = timedBuild(graft.rec.PqIndex.build(e, pqDir))
-      out += "pq" -> ((bPq, medianMs(() =>
-        graft.rec.PqIndex.probe(spark, pqDir, probes, e))))
+      val bPq = Harness.elapsedMs(graft.rec.PqIndex.build(e, pqDir))
+      out += "pq" -> ((bPq, Harness.medianMs(reps)(
+        graft.rec.PqIndex.probe(spark, pqDir, probes, e).collect())))
       val ipqDir = java.nio.file.Files.createTempDirectory("graft-sc-ivfpq").toString
-      val bIpq = timedBuild(graft.rec.IvfPqIndex.build(e, ipqDir))
-      out += "ivfpq" -> ((bIpq, medianMs(() =>
-        graft.rec.IvfPqIndex.probe(spark, ipqDir, probes, e))))
+      val bIpq = Harness.elapsedMs(graft.rec.IvfPqIndex.build(e, ipqDir))
+      out += "ivfpq" -> ((bIpq, Harness.medianMs(reps)(
+        graft.rec.IvfPqIndex.probe(spark, ipqDir, probes, e).collect())))
       e.unpersist()
       out.toMap
     }

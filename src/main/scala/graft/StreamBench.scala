@@ -68,16 +68,19 @@ import graft.stream.{RatingEvent, StreamOps}
   * tracking its 12.5% scan fraction; the committed preopt artifacts
   * keep that trail).
   *
-  * DPP MODE (r16, VERDICT r15 item 1): `SPARK_GRAFT_STREAM_DPP=1` with
-  * a catalog spec swaps each group's config pair to broadcast-ANN vs
-  * the cid-PARTITIONED serve ([[StreamOps.topNForUsersAnnPartitioned]]
-  * — `serve_dpp_evict@iN@rR` keys): the catalog lives as partitioned
-  * parquet, each batch reads only the touched cells, nothing
-  * catalog-sized is ever broadcast or cached. This is the arm that
-  * answers "what survives a 2M-item catalog": the broadcast-ANN serve
-  * re-broadcasts ~1 GB of cells per micro-batch there, the partitioned
-  * serve moves only routed users and probed cells. Both index builds
-  * are timed per group (`ann_iN` / `dpp_iN` in `index_build_ms`).
+  * DPP MODE (r16): `SPARK_GRAFT_STREAM_DPP=1` with a catalog spec
+  * swaps each group's config pair to the one ANN serve,
+  * [[StreamOps.topNForUsersAnn]], over its two cells sources:
+  * `serve_ann_evict` reads the cached cells of
+  * [[StreamOps.buildServeIndex]] (relational Lloyd quantizer,
+  * [[StreamOps.serveCells]] K), `serve_dpp_evict` the cid-PARTITIONED
+  * parquet of [[StreamOps.buildServeIndexPartitioned]] (sampled MLlib
+  * quantizer, [[StreamOps.serveCellsPartitioned]] K), where each batch
+  * reads only the touched cells and nothing catalog-sized is ever
+  * cached. Both index builds are timed per group (`ann_iN` / `dpp_iN`
+  * in `index_build_ms`). Catalog groups are capped at 4M items: the
+  * 20M-item serve campaign, which needed a hot-item event space and a
+  * lifted cell cap, is retired.
   *
   * PQ MODE (r19, VERDICT r18 item 1): `SPARK_GRAFT_STREAM_PQ=1` on top
   * of DPP mode adds, per catalog group, the IVFADC serve pair over the
@@ -202,18 +205,11 @@ object StreamBench {
         .as[RatingEvent]
     }
 
-    /** `eventSpace` is the modulus of the generated event itemIds — equal
-      * to the catalog size except in the huge-catalog DPP groups, where
-      * events reference only the HotItemCap head while the serve index
-      * covers the whole catalog (ADVICE r17: the JSON's "items" must
-      * report the true serve-catalog size, not the event modulus, which
-      * gets its own "event_space" field). */
     def run(label: String, idle: Option[java.time.Duration],
             serveFn: Option[DataFrame => DataFrame], rate: Int,
-            items: DataFrame, nItems: Long, eventSpace: Long = -1L): String = {
-      val evSpace = if (eventSpace > 0) eventSpace else nItems
+            items: DataFrame, nItems: Long): String = {
       val interests = StreamOps.interestStream(
-        StreamOps.enrich(events(rate, evSpace), items), dim, idleTimeout = idle)
+        StreamOps.enrich(events(rate, nItems), items), dim, idleTimeout = idle)
       val writer = serveFn match {
         case Some(f) =>
           interests.writeStream.outputMode("append")
@@ -254,7 +250,7 @@ object StreamBench {
       def p50 = if (sorted.isEmpty) 0L else sorted(sorted.size / 2)
       val st = progress.lastOption.flatMap(_.stateOperators.headOption)
       def r1(v: Double) = "%.1f".format(v)
-      s""""$label":{"offered":$rate,"items":$nItems,"event_space":$evSpace,""" +
+      s""""$label":{"offered":$rate,"items":$nItems,"event_space":$nItems,""" +
         s""""events_per_sec":${r1(eps)},""" +
         s""""sustained":${isSteady && eps >= 0.9 * rate},"steady":$isSteady,""" +
         s""""batches":${steady.size},""" +
@@ -277,20 +273,12 @@ object StreamBench {
     // default mode is the r11-compatible three-config single-rate run
     val sweep = sys.env.get("SPARK_GRAFT_STREAM_RATES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-
-    def timedMs(f: => Unit): Long = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1000000
-    }
+    catalog.toSeq.flatten.foreach { case (t, _) => require(t * nBaseItems <= 4000000L,
+      s"catalog group $t x $nBaseItems items is over 4M: the 20M-item serve campaign is retired") }
 
     val buildMsParts = scala.collection.mutable.LinkedHashMap[String, Long]()
     // cell counts per built index — context for the scan-fraction claim:
-    // past ~8.4M items serveCellsPartitioned CAPS K (default 4096; the
-    // law says √(nprobe·N), e.g. 6325 at 20M), so the artifact must
-    // state the K the p50s were measured under (VERDICT r17
-    // what's-wrong 4). SPARK_GRAFT_STREAM_KCAP lifts the cap (r20,
-    // VERDICT r19 item 2 — scored pairs per batch ∝ N/K once the cap
-    // binds, so the kcap arm prices the pair-volume lever directly).
-    val kcap = sys.env.getOrElse("SPARK_GRAFT_STREAM_KCAP", "4096").toInt
+    // the artifact states the K the p50s were measured under
     val serveKParts = scala.collection.mutable.LinkedHashMap[String, Int]()
     // measured per built partitioned index (r20, VERDICT r19 item 1):
     // non-empty cell count (K_eff — the directory count the quantizer
@@ -301,14 +289,11 @@ object StreamBench {
     // field exists to catch).
     val kEffParts = scala.collection.mutable.LinkedHashMap[String, Int]()
     val bytesParts = scala.collection.mutable.LinkedHashMap[String, Long]()
-    // DPP mode (r16, VERDICT r15 item 1): per catalog group, run the
-    // broadcast-ANN serve against the cid-PARTITIONED serve — the arm
-    // that never broadcasts the catalog. Past ~1M items the broadcast
-    // form re-collects and re-broadcasts ~1 GB of cells EVERY
-    // micro-batch (foreachBatch re-plans per trigger); the partitioned
-    // form reads only the touched cells' parquet partitions. Exact
-    // serve is omitted here — the r15 catalog sweep already measured it
-    // dead an order of magnitude below these catalog sizes.
+    // DPP mode (r16): per catalog group, the ANN serve over the cached
+    // cells against the same serve over the cid-PARTITIONED cells, which
+    // reads only the touched cells' parquet partitions. Exact serve is
+    // omitted here — the r15 catalog sweep already measured it dead an
+    // order of magnitude below these catalog sizes.
     val dppMode = sys.env.get("SPARK_GRAFT_STREAM_DPP").contains("1")
     // PQ mode (r19): IVFADC serve pair on top of each DPP group. Only
     // meaningful inside catalog+DPP mode — say so loudly rather than
@@ -318,43 +303,25 @@ object StreamBench {
       System.err.println("WARNING: SPARK_GRAFT_STREAM_PQ=1 has no effect " +
         "without SPARK_GRAFT_STREAM_DPP=1 and SPARK_GRAFT_STREAM_CATALOG " +
         "— no serve_pq_evict/serve_pqadc_evict configs will run")
-    // r17 (VERDICT r16 item 3): the catalog axis's next decade (20M
-    // items) outruns TWO broadcast regimes at once — the broadcast-ANN
-    // serve measured dead at 2M, and the stream-static ENRICH join's
-    // broadcast of the full item-feature table (~10 GB at 20M × dim 64)
-    // against Spark's 8 GB broadcast cap. The serve index is the axis
-    // under test, not the enrich dimension, so groups beyond
-    // BroadcastArmCap (a) run the partitioned serve only and (b) bound
-    // the EVENT/ENRICH item space to the first HotItemCap items: a
-    // head-heavy event distribution over a catalog-sized serve index —
-    // the realistic 100-TB shape, where events reference a
-    // broadcastable hot set while the index serves the whole catalog.
-    val BroadcastArmCap = 4000000L
-    val HotItemCap = 2000000L
     val parts = (catalog, sweep) match {
       case (Some(groups), _) =>
         groups.flatMap { case (t, rs) =>
           val (items, nItems) = tileItems(t)
           if (dppMode) {
-            val huge = nItems > BroadcastArmCap
-            val enrichItems =
-              if (huge) items.where(col("itemId") < HotItemCap) else items
-            val eventSpace = if (huge) HotItemCap else nItems
             var annIdx: (DataFrame, DataFrame) = null
-            if (!huge) buildMsParts(s"ann_i$nItems") = timedMs {
+            buildMsParts(s"ann_i$nItems") = math.round(Harness.elapsedMs {
               annIdx = StreamOps.buildServeIndex(items,
                 k = StreamOps.serveCells(nItems), iters = 8)
-            }
-            if (!huge) serveKParts(s"ann_i$nItems") = StreamOps.serveCells(nItems)
-            serveKParts(s"dpp_i$nItems") =
-              StreamOps.serveCellsPartitioned(nItems, cap = kcap)
+            })
+            serveKParts(s"ann_i$nItems") = StreamOps.serveCells(nItems)
+            serveKParts(s"dpp_i$nItems") = StreamOps.serveCellsPartitioned(nItems)
             val dppDir = java.nio.file.Files
               .createTempDirectory(s"graft-sb-dpp-$nItems").toString
             var dppIdx: (DataFrame, DataFrame) = null
-            buildMsParts(s"dpp_i$nItems") = timedMs {
+            buildMsParts(s"dpp_i$nItems") = math.round(Harness.elapsedMs {
               dppIdx = StreamOps.buildServeIndexPartitioned(items, dppDir,
-                k = StreamOps.serveCellsPartitioned(nItems, cap = kcap))
-            }
+                k = StreamOps.serveCellsPartitioned(nItems))
+            })
             // K_eff = populated cell directories; bytes = the tree the
             // touched-cell scans actually read
             kEffParts(s"dpp_i$nItems") = {
@@ -367,33 +334,32 @@ object StreamBench {
             bytesParts(s"dpp_i$nItems") = dirBytes(s"$dppDir/cells")
             var pqIdx: (DataFrame, Seq[Seq[Array[Double]]]) = null
             if (pqMode) {
-              buildMsParts(s"pqenc_i$nItems") = timedMs {
+              buildMsParts(s"pqenc_i$nItems") = math.round(Harness.elapsedMs {
                 pqIdx = StreamOps.encodeServeIndexPq(spark, dppDir)
-              }
+              })
               bytesParts(s"pq_i$nItems") = dirBytes(s"$dppDir/pq_cells")
             }
             val out = rs.flatMap { r =>
-              (if (huge) Seq.empty[String] else Seq(
+              Seq(
                 run(s"serve_ann_evict@i$nItems@r$r", idle,
                   Some(df => StreamOps.topNForUsersAnn(df, annIdx._1, annIdx._2, 10)),
-                  r, enrichItems, nItems, eventSpace))) ++
-              Seq(run(s"serve_dpp_evict@i$nItems@r$r", idle,
-                Some(df => StreamOps.topNForUsersAnnPartitioned(
-                  df, dppIdx._1, dppIdx._2, 10)),
-                r, enrichItems, nItems, eventSpace)) ++
+                  r, items, nItems),
+                run(s"serve_dpp_evict@i$nItems@r$r", idle,
+                  Some(df => StreamOps.topNForUsersAnn(df, dppIdx._1, dppIdx._2, 10)),
+                  r, items, nItems)) ++
               (if (!pqMode) Seq.empty[String] else Seq(
                 run(s"serve_pq_evict@i$nItems@r$r", idle,
                   Some(df => StreamOps.topNForUsersAnnPartitionedPq(
                     df, dppIdx._1, pqIdx._1, pqIdx._2, dppIdx._2, 10,
                     shortlist = 64)),
-                  r, enrichItems, nItems, eventSpace),
+                  r, items, nItems),
                 run(s"serve_pqadc_evict@i$nItems@r$r", idle,
                   Some(df => StreamOps.topNForUsersAnnPartitionedPq(
                     df, dppIdx._1, pqIdx._1, pqIdx._2, dppIdx._2, 10,
                     shortlist = 0)),
-                  r, enrichItems, nItems, eventSpace)))
+                  r, items, nItems)))
             }
-            if (!huge) { annIdx._1.unpersist(); annIdx._2.unpersist() }
+            annIdx._1.unpersist(); annIdx._2.unpersist()
             dppIdx._1.unpersist()
             if (t != 1) items.unpersist()
             out
@@ -409,10 +375,10 @@ object StreamBench {
             // 0.974 at 8, AnnServeSpec many-topic corpus); training runs
             // on the bounded sample, so the extra rounds don't scale
             // with the catalog
-            buildMsParts(s"i$nItems") = timedMs {
+            buildMsParts(s"i$nItems") = math.round(Harness.elapsedMs {
               idx = StreamOps.buildServeIndex(items,
                 k = StreamOps.serveCells(nItems), iters = 8)
-            }
+            })
             val out = rs.flatMap { r => Seq(
               run(s"serve_evict@i$nItems@r$r", idle,
                 Some(df => StreamOps.topNForUsers(df, items, 10)),
@@ -453,7 +419,7 @@ object StreamBench {
         case (k, v) => s""""$k":$v"""
       }.mkString("{", ",", "}")}${
         if (serveKParts.isEmpty) ""
-        else s""","kcap":$kcap,"serve_k":${serveKParts.map {
+        else s""","serve_k":${serveKParts.map {
           case (k, v) => s""""$k":$v"""
         }.mkString("{", ",", "}")}"""}${
         if (kEffParts.isEmpty) ""

@@ -11,21 +11,17 @@ import org.apache.spark.sql.types._
   * expression (score desc, cid asc; a degenerate cosine — zero vector,
   * length mismatch, or a NaN input element — ranks as −1.0, i.e. worst).
   *
-  * This is the K-beyond-literal-size sibling of the K-struct literal
-  * routing projection (`StreamOps.nearestCellsCol`): that form folds
-  * each centroid in as a separate struct literal and sorts K scored
-  * structs per row, which caps K at expression-size limits (~64). Here
-  * the centroids live as ONE plan-carried object (`Array[Array[Double]]`,
+  * The centroids live as ONE plan-carried object (`Array[Array[Double]]`,
   * ≤ 4096 × dim doubles ≈ 2 MB at the serve's cap) referenced from
   * generated code via `addReferenceObj`, and the per-row work is a tight
   * JIT-compiled argmax loop — no join, no shuffle, no aggregate, and no
-  * N×K row materialization anywhere.
+  * N×K row materialization anywhere, at any K.
   *
-  * Two call sites make it load-bearing at scale (VERDICT r16 items 1+2):
+  * It is the IVF serve's one cosine router, in two roles:
   *
-  *  - the partitioned serve-index BUILD assigns every catalog item to
-  *    its cell in one streaming scan — O(N·K·d) flops but O(N) rows,
-  *    replacing the r16 build's materialized |catalog|×K cross join +
+  *  - the serve-index BUILDS (cached and partitioned) assign every
+  *    catalog item to its cell in one streaming scan — O(N·K·d) flops
+  *    but O(N) rows, replacing the r16 build's materialized |catalog|×K cross join +
   *    two-pass argmax (4 billion scored rows at 2M items × K=2000, plus
   *    a catalog-sized `best` broadcast that Spark's broadcast limits
   *    would kill long before 100 TB);

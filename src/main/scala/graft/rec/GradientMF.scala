@@ -454,6 +454,10 @@ object GradientMF {
         .select(col(baseId),
           zip_with(col("val"), col("s"), (a, b) => (a + b) / 2).as("val"))
 
+    // each epoch's two cached gradient tables, released once the update
+    // checkpoints that read them have materialized: at the next epoch's
+    // gradient step, or after the last epoch
+    var held = Seq.empty[DataFrame]
     val (u, v) = descend(init("u", res, "user_id", rank),
         init("i", res, "item_id", rank), epochs, parts, lr, reg, onEpoch)(
       // the propagated tables feed ONLY predictions (the gradients read
@@ -462,10 +466,13 @@ object GradientMF {
       (u, v) => predictions(res, mix(u, v, "user_id", "item_id"),
         mix(v, u, "item_id", "user_id"), rank),
       p => {
+        held.foreach(_.unpersist())
         val gup = meanGrad(p, "user_id", "vv", rank).cache()
         val gvp = meanGrad(p, "item_id", "uv", rank).cache()
+        held = Seq(gup, gvp)
         (mix(gup, gvp, "user_id", "item_id"), mix(gvp, gup, "item_id", "user_id"))
       })
+    held.foreach(_.unpersist())
     val upF = checkpointLeaf(mix(u, v, "user_id", "item_id"))
     val vpF = checkpointLeaf(mix(v, u, "item_id", "user_id"))
     onEpoch(epochs, predictions(res, upF, vpF, rank))

@@ -39,12 +39,31 @@ object IvfIndex {
     cent.write.mode("overwrite").parquet(s"$dir/centroids")
   }
 
-  /** Training-set cap for [[buildLarge]]'s sampled quantizer: the
+  /** Training-set cap of every sampled quantizer ([[buildLarge]],
+    * [[encodePqLarge]]'s codebooks, `StreamOps.buildServeIndex`): the
     * lloydKMeans scaladoc's 100-TB prescription ("fit the quantizer on a
-    * sample and assign the full collection") — a few thousand cells need
-    * a few thousand points per... the 16 384-vector sample measured flat
-    * build cost across catalog sizes in the r15/r16 serve sweeps. */
+    * sample and assign the full collection"); the 16 384-vector sample
+    * measured flat build cost across catalog sizes in the r15/r16 serve
+    * sweeps. */
   val LargeSampleCap = 16384
+
+  /** Deterministic bounded sample of RAW (vec_id, emb) rows for
+    * quantizer training — all of them up to [[LargeSampleCap]], else a
+    * hash-ordered [[LargeSampleCap]] of them. The hash pre-filter
+    * bounds the sort input to ~4× the cap — an orderBy().limit(16384)
+    * over the full corpus exceeds the top-K sort fallback threshold and
+    * plans a FULL sort of N rows. Normalize only the survivors (the
+    * normalize is an interpreted higher-order expression). */
+  private[graft] def boundedSample(vectors: DataFrame, nRows: Long): DataFrame = {
+    val raw = vectors.select(col("vec_id"), col("emb"))
+    if (nRows <= LargeSampleCap) raw
+    else {
+      val mod = math.max(1L, nRows / (4L * LargeSampleCap))
+      raw.where(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
+        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+        .limit(LargeSampleCap)
+    }
+  }
 
   /** Large-corpus COSINE build — the streaming serve's regime and the
     * shared writer behind `StreamOps.buildServeIndexPartitioned`
@@ -77,7 +96,7 @@ object IvfIndex {
     *    the same expression the serve routes users with, so an item's
     *    own cell is by construction its probe's top-1 (self-retrieval).
     *    Probe a buildLarge index with the cosine serve
-    *    (`StreamOps.topNForUsersAnnPartitioned`); [[probe]]'s Euclidean
+    *    (`StreamOps.topNForUsersAnn`); [[probe]]'s Euclidean
     *    routing matches the [[build]] quantizer.
     *
     * Layout is [[build]]'s exactly — `$dir/cells` cid-partitioned (one
@@ -85,23 +104,6 @@ object IvfIndex {
     * `$dir/centroids` alongside — so [[append]]-accumulated fragments
     * [[compact]] identically (AnnServeSpec asserts probe equality over
     * a compacted serve index). */
-  /** Deterministic bounded sample of RAW (vec_id, emb) rows for
-    * quantizer training: the hash pre-filter bounds the sort input to
-    * ~4× the cap — an orderBy().limit(16384) over the full corpus
-    * exceeds the top-K sort fallback threshold and plans a FULL sort
-    * of N rows. Normalize only the survivors (the normalize is an
-    * interpreted higher-order expression). */
-  private def boundedSample(vectors: DataFrame, nRows: Long): DataFrame = {
-    val raw = vectors.select(col("vec_id"), col("emb"))
-    if (nRows <= LargeSampleCap) raw
-    else {
-      val mod = math.max(1L, nRows / (4L * LargeSampleCap))
-      raw.where(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
-        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-        .limit(LargeSampleCap)
-    }
-  }
-
   def buildLarge(vectors: DataFrame, dir: String, k: Int,
                  iters: Int = 20): Unit = {
     val spark = vectors.sparkSession
@@ -133,6 +135,13 @@ object IvfIndex {
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/cells")
   }
 
+  /** A `(cid, c)` centroid table as the driver-side model the cosine
+    * router ([[graft.expr.NearestCells]]) carries, sorted by cid: K rows,
+    * so collecting them is reading a model, not moving data. */
+  private[graft] def centroids(cent: DataFrame): Seq[(Int, Array[Double])] =
+    cent.select(col("cid").cast("int"), col("c")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
+
   /** Append NEW vectors to an existing index with the STORED quantizer
     * kept FROZEN — the production maintenance regime for a corpus that
     * grows daily: assignment is one broadcast-scored scan of the
@@ -160,9 +169,7 @@ object IvfIndex {
     * points sharing one layout and one [[compact]] path. */
   def appendLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
     GraftFunctions.register(spark)
-    val centSeq = spark.read.parquet(s"$dir/centroids")
-      .select(col("cid").cast("int"), col("c")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
+    val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     vectors
       .withColumn("cid",
         element_at(GraftFunctions.nearestCells(col("emb"), centSeq, 1), 1))
@@ -239,9 +246,7 @@ object IvfIndex {
     * drifts with the same distribution shift cell geometry does. */
   def appendPqLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
     GraftFunctions.register(spark)
-    val centSeq = spark.read.parquet(s"$dir/centroids")
-      .select(col("cid").cast("int"), col("c")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
+    val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     val cbs = readPqCodebooks(spark, dir)
     vectors
       .withColumn("cid",

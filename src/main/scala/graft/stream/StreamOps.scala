@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -175,96 +175,35 @@ object StreamOps {
         col("pair._1").as("score"))
   }
 
-  /** Build the static serve-side IVF for [[topNForUsersAnn]] — paid once
-    * at stream start, like loading a model: the item catalog is
-    * Lloyd-quantized (the q57 relational k-means) and each item assigned
-    * to its cell. Both outputs are cached and materialized here so no
-    * micro-batch ever pays the build. At a 100-TB catalog the cells side
-    * would be the cid-partitioned parquet of [[graft.rec.IvfIndex]]
-    * (probed via dynamic partition pruning) instead of a broadcast. */
-  /** L2-normalize a vector column — the serve ranks by COSINE, so the
-    * quantizer must cluster on the unit sphere (see
-    * [[GraftFunctions.l2Normalize]] for the measured why and the
-    * bind-the-norm-once shape). */
-  private def l2normalize(v: Column): Column = GraftFunctions.l2Normalize(v)
-
-  /** Quantizer training-set cap: above this many items the serve
-    * quantizer trains on a deterministic hash-ordered sample — the
-    * lloydKMeans scaladoc's own 100-TB prescription ("fit the quantizer
-    * on a sample and assign the full collection"). 16 cells need a few
-    * thousand points to converge; the r15 catalog sweep measured the
-    * full-corpus build at 9.2 min for a 200k-item catalog (training cost
-    * is linear in corpus size), while the sampled build is flat in
-    * |catalog| with only the one-pass full assignment growing. */
-  private val QuantizerSampleCap = 16384
-
-  private def collectCentroids(cent: DataFrame): Seq[(Long, Array[Double])] =
-    cent.select(col("cid").cast("long"), col("c")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
-
-  /** The `nprobe` nearest cell ids for a RAW vector, by cosine against
-    * the K LITERAL centroids (desc, cid-asc tiebreak; a null cosine —
-    * zero vector — ranks worst), as ONE scan-local projection: K is
-    * small (a model, not a table), so folding the centroids into the
-    * expression replaces the join + per-row aggregation/window
-    * cell-routing shape with an `array_sort` over K scored structs —
-    * no join, no shuffle, no window, which matters twice: the
-    * full-catalog cell assignment becomes a single pass, and the
-    * per-micro-batch user routing stops paying a shuffle per batch.
-    * The vector needs NO normalization here — cosine is scale
-    * invariant, and [[GraftFunctions.cosineSimilarity]] is the native
-    * codegen expression (the l2-normalize-then-compare form would drag
-    * an interpreted higher-order normalize into every row; the unit
-    * sphere only matters where EUCLIDEAN math runs, i.e. quantizer
-    * training). */
-  private def nearestCellsCol(v: Column,
-                              centroids: Seq[(Long, Array[Double])],
-                              nprobe: Int): Column = {
-    val scored = centroids.map { case (cid, c) =>
-      struct(
-        (-coalesce(GraftFunctions.cosineSimilarity(v, typedLit(c)), lit(-1.0)))
-          .as("negCos"),
-        lit(cid).as("cid"))
-    }
-    transform(slice(array_sort(array(scored: _*)), 1, nprobe),
-      s => s.getField("cid"))
-  }
-
   /** Serve-quantizer cell count for a catalog of `nItems`: the standard
     * IVF sizing guideline (nlist ≈ √N — FAISS's published rule, Jégou
     * et al.'s IVFADC regime) balances per-probe routing work (K cosines
-    * against the literal centroids) against cell-scan work
-    * (≈ nprobe/K × N items scored); the optimum of K·d + (nprobe/K)·N·d
-    * is K = √(nprobe·N). Floor 16 (tiny catalogs gain nothing from
-    * finer cells), cap 64: [[nearestCellsCol]] folds all K centroids
-    * into ONE projection expression (K structs × d literal doubles), so
-    * K bounds the expression size — and at the fixed cap the
-    * quantizer-training and assignment cost stays flat across catalog
-    * sizes, which is what keeps serve-index builds off the stream-start
-    * critical path (§8.10's measured property). With the r14 default
-    * (K=16, nprobe=2) the ANN serve scanned 12.5% of the catalog no
-    * matter how large it grew; at the cap it scans 3.1% — the r15
-    * catalog sweep measured the 200k-item serve ceiling moving with
-    * exactly this fraction. Deep-recall behavior under the finer
-    * partitioning is pinned in AnnServeSpec's many-topic corpus (recall
-    * ≈ 1 when cells are no coarser than the corpus's natural topics —
-    * the regime a real item catalog is in; a corpus whose topics are
-    * LARGER than 1/K of the space needs nprobe raised to match, the
-    * standard IVF recall/latency dial).
+    * against the centroids) against cell-scan work (≈ nprobe/K × N items
+    * scored); the optimum of K·d + (nprobe/K)·N·d is K = √(nprobe·N).
+    * Floor 16 (tiny catalogs gain nothing from finer cells), cap 64: the
+    * relational Lloyd quantizer of [[buildServeIndex]] pays K·dim
+    * aggregate cells per round, so at the fixed cap quantizer training
+    * and assignment stay flat across catalog sizes, which is what keeps
+    * serve-index builds off the stream-start critical path (§8.10's
+    * measured property). With the r14 default (K=16, nprobe=2) the ANN
+    * serve scanned 12.5% of the catalog no matter how large it grew; at
+    * the cap it scans 3.1% — the r15 catalog sweep measured the
+    * 200k-item serve ceiling moving with exactly this fraction.
+    * Deep-recall behavior under the finer partitioning is pinned in
+    * AnnServeSpec's many-topic corpus (recall ≈ 1 when cells are no
+    * coarser than the corpus's natural topics — the regime a real item
+    * catalog is in; a corpus whose topics are LARGER than 1/K of the
+    * space needs nprobe raised to match, the standard IVF
+    * recall/latency dial).
     *
-    * SMALL-CATALOG REGIME (r16, VERDICT r15 item 5): below
-    * [[SmallCatalogCap]] items the law is overruled and K stays at the
-    * 16 floor. The √ optimum minimizes PER-EVENT work, but a small
-    * catalog's scan term is trivial either way (nprobe/16 of ≤ 8k items
-    * = ≤ 1k cosines per touched user), while the K-struct literal
-    * routing projection carries a fixed per-BATCH cost (expression
-    * planning + codegen scale with K·dim literals) that per-event math
-    * never sees — the r15 catalog sweep measured it as +0.5–1 s of p50
-    * at the 2k-item catalog under low offered rates (K=64 vs K=16, the
-    * §8.10 documented tax). The law therefore only engages once the
-    * scan term can actually hurt; at 20k and 200k items the cell count
-    * is unchanged (the cap), so the measured 200k ceiling is
-    * untouched — AnnServeSpec pins recall in both regimes. */
+    * SMALL-CATALOG REGIME: below [[SmallCatalogCap]] items the law is
+    * overruled and K stays at the 16 floor. The √ optimum minimizes
+    * per-event work, but a small catalog's scan term is trivial either
+    * way (nprobe/16 of ≤ 8k items = ≤ 1k cosines per touched user), so
+    * finer cells buy nothing there. The K values are the ones the r15
+    * and r16 catalog sweeps measured and AnnServeSpec pins recall in
+    * (both regimes); keeping them keeps every cell assignment, and so
+    * every served list, unchanged. */
   def serveCells(nItems: Long, nprobe: Int = 2): Int =
     if (nItems <= SmallCatalogCap) 16
     else math.max(16, math.min(64,
@@ -276,126 +215,78 @@ object StreamOps {
     * floor. */
   val SmallCatalogCap: Long = 8192L
 
+  /** Build the static serve-side IVF for [[topNForUsersAnn]] — paid once
+    * at stream start, like loading a model: the item catalog is
+    * Lloyd-quantized (the q57 relational k-means) and each item assigned
+    * to its cell. Both outputs are cached and materialized here so no
+    * micro-batch ever pays the build. A catalog too large to cache is
+    * served from the cid-partitioned parquet of
+    * [[buildServeIndexPartitioned]] instead; [[topNForUsersAnn]] serves
+    * either cells table.
+    *
+    * The quantizer trains on the unit sphere (the serve ranks by
+    * cosine; see [[GraftFunctions.l2Normalize]]) over
+    * [[graft.rec.IvfIndex.boundedSample]]: the whole catalog up to
+    * [[graft.rec.IvfIndex.LargeSampleCap]] items, a deterministic
+    * hash-ordered sample above it — the lloydKMeans scaladoc's own
+    * 100-TB prescription. The r15 catalog sweep measured the
+    * full-corpus build at 9.2 min for a 200k-item catalog; the sampled
+    * build is flat in |catalog| with only the one-pass assignment
+    * growing. */
   def buildServeIndex(itemFeatures: DataFrame, k: Int = 16,
                       iters: Int = 3): (DataFrame, DataFrame) = {
     GraftFunctions.register(itemFeatures.sparkSession)
-    // train on the whole catalog up to the cap, else on a deterministic
-    // hash-ordered sample (vec_id tiebreak keeps it total-ordered);
-    // sample the RAW rows first and normalize only the survivors — the
-    // normalize is an interpreted higher-order expression, and folding
-    // it under the sample's sort evaluates it per catalog row
-    val raw = itemFeatures.select(col("itemId").as("vec_id"), col("features"))
-    val sampledRaw =
-      if (itemFeatures.count() <= QuantizerSampleCap) raw
-      else raw.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-        .limit(QuantizerSampleCap)
-    val train = sampledRaw
-      .select(col("vec_id"), l2normalize(col("features")).as("emb"))
-    val trainC = train.cache()
-    val cent = graft.rec.Clustering.lloydKMeans(trainC, k, iters).cache()
+    val train = graft.rec.IvfIndex.boundedSample(
+        itemFeatures.select(col("itemId").as("vec_id"), col("features").as("emb")),
+        itemFeatures.count())
+      .select(col("vec_id"), GraftFunctions.l2Normalize(col("emb")).as("emb"))
+      .cache()
+    val cent = graft.rec.Clustering.lloydKMeans(train, k, iters).cache()
     cent.count()
-    trainC.unpersist()
+    train.unpersist()
     // cells carry the RAW features for scoring (cosine is scale-invariant,
     // but emitting the caller's own vectors keeps scores bit-comparable
     // with the exact serve); only the cid comes from the normalized
-    // space. Assignment is the literal-centroid projection — one
-    // shuffle-free pass over the catalog, not a join + aggregation.
+    // space. Assignment is the serve's own router — one shuffle-free
+    // pass over the catalog, not a join + aggregation.
     val cells = itemFeatures
-      .withColumn("cid",
-        nearestCellsCol(col("features"), collectCentroids(cent), 1)
-          .getItem(0))
+      .withColumn("cid", element_at(GraftFunctions.nearestCells(
+        col("features"), graft.rec.IvfIndex.centroids(cent), 1), 1))
       .select(col("cid"), col("itemId"), col("features"))
       .cache()
     cells.count()
     (cent, cells)
   }
 
-  /** ANN-accelerated per-batch serve (r14): the ceiling sweep measured
-    * the SERVE stage — [[topNForUsers]] scoring every touched user
-    * against the whole catalog — as the full loop's bottleneck
-    * (STREAMBENCH_r14_sweep, in git history: state path sustains
-    * 1.28M ev/s, full loop plateaus ~670k). This variant prunes with the IVF quantizer from
-    * [[buildServeIndex]]: each user's interest vector is scored against
-    * the K broadcast centroids, its `nprobe` nearest cells selected,
-    * and cosine runs only over those cells' items — scored pairs drop
-    * from users × |catalog| to ~users × |catalog| × nprobe/K. Same
-    * per-user top-N shape; approximate like every IVF regime, with
-    * recall vs the exact serve pinned in AnnServeSpec. */
-  def topNForUsersAnn(interests: DataFrame, centroids: DataFrame,
-                      cellItems: DataFrame, n: Int,
-                      nprobe: Int = 2): DataFrame = {
-    GraftFunctions.register(interests.sparkSession)
-    // routing = the same literal-centroid projection the cell build
-    // used (identical scoring and tiebreaks, so an item's own cell is
-    // by construction its probe's top-1 — the self-retrieval property
-    // AnnServeSpec pins); collecting K centroid rows is reading a
-    // model, not moving data
-    val userCells = interests
-      .select(col("userId"), col("interest"))
-      .withColumn("cid",
-        explode(nearestCellsCol(col("interest"),
-          collectCentroids(centroids), nprobe)))
-    // cells partition the catalog, so a (user, item) pair scores at most
-    // once even at nprobe > 1; the per-user aggregate merges the user's
-    // nprobe cell slices exactly as the window's partitionBy did
-    val scored = userCells.join(broadcast(cellItems), Seq("cid"))
-      .withColumn("score",
-        GraftFunctions.cosineSimilarity(col("interest"), col("features")))
-      .where(col("score").isNotNull)
-    topNByUser(scored, n, cellItems.schema("itemId").dataType)
-  }
-
-  // ------------------------------------------------------------------
-  // Partitioned serve arm (r16, VERDICT r15 item 1): past the broadcast
-  // regime. [[topNForUsersAnn]] ships the WHOLE cell table to the join
-  // as a broadcast — a model-sized move at the fixture scales, but a
-  // catalog of 2M × dim-64 items is ~1 GB and foreachBatch re-plans
-  // every micro-batch, so every batch re-collects and re-broadcasts the
-  // gigabyte: the next thing that dies on the catalog growth axis. This
-  // arm is the 100-TB shape the buildServeIndex scaladoc promised: the
-  // cells live as a cid-PARTITIONED parquet table (graft.rec.IvfIndex's
-  // layout), each batch routes its touched users to cells, and the scan
-  // reads ONLY the probed cells' partitions — the catalog is never
-  // broadcast, never cached, never collected; per-batch I/O is bounded
-  // by touched-cells/K of the catalog no matter how large it grows.
-  // ------------------------------------------------------------------
-
   /** Cell count for the PARTITIONED serve index: the same √(nprobe·N)
-    * law as [[serveCells]], but the 64 cap is gone — routing here is a
-    * broadcast join against the K-row centroid table, not a K-literal
-    * projection, so K is bounded by quantizer-training and layout cost,
-    * not expression size. Floor 64 (below the broadcast arm's cap the
-    * broadcast arm is simply better — a catalog that small fits in one
-    * broadcast); the default cap 4096 bounds the centroid broadcast
-    * (K × dim doubles ≈ 2 MB at the cap) and the partition-directory
-    * count a single index writes. At 2M items the law gives 2000
-    * cells: ~1000 items per cell, per-event scan nprobe/K = 0.1% of
-    * the catalog. `cap` is a parameter since r20 (VERDICT r19 item 2):
-    * past ~8.4M items the cap binds and scored pairs per batch grow as
-    * users × nprobe × N/cap — the 20M-regime bound — so the bench can
-    * price lifting it to the law's uncapped √(nprobe·N) (6325 at 20M;
-    * build cost is the N·K assignment flops, the trade the
-    * STREAMBENCH_r20 kcap arm measures). */
-  def serveCellsPartitioned(nItems: Long, nprobe: Int = 2,
-                            cap: Int = 4096): Int =
-    math.max(64, math.min(cap,
+    * law as [[serveCells]] with floor 64 (below it the cached cells of
+    * [[buildServeIndex]] are simply better — a catalog that small fits
+    * in memory) and cap 4096, which bounds the centroid model the
+    * router carries (K × dim doubles ≈ 2 MB at the cap) and the
+    * partition-directory count a single index writes. At 2M items the
+    * law gives 2000 cells: ~1000 items per cell, per-event scan
+    * nprobe/K = 0.1% of the catalog. */
+  def serveCellsPartitioned(nItems: Long, nprobe: Int = 2): Int =
+    math.max(64, math.min(PartitionedCellCap,
       math.ceil(math.sqrt(nprobe.toDouble * nItems)).toInt))
+
+  private val PartitionedCellCap = 4096
 
   /** Build the cid-partitioned serve index under `dir` — a thin adapter
     * over the SHARED large-corpus builder [[graft.rec.IvfIndex.buildLarge]]
-    * (VERDICT r16 item 4: one quantizer lifecycle — sampled seeded MLlib
-    * fit, one-pass [[graft.expr.NearestCells]] cosine assignment,
-    * cid-partitioned write, [[graft.rec.IvfIndex.compact]]-able layout —
-    * consumed by both the batch index and this serve, instead of two
-    * build paths telling the maintenance story twice). Column adaption
-    * only: the serve speaks (itemId, features), the index layout stores
+    * (one quantizer lifecycle — sampled seeded MLlib fit, one-pass
+    * [[graft.expr.NearestCells]] cosine assignment, cid-partitioned
+    * write, [[graft.rec.IvfIndex.compact]]-able layout — consumed by
+    * both the batch index and this serve). Column adaption only: the
+    * serve speaks (itemId, features), the index layout stores
     * (vec_id, emb).
     *
     * Returns the cached K-row centroid table and the partitioned cells
-    * SCAN — deliberately un-cached: not materializing the catalog is
-    * this arm's point, and reading it once up front also builds the
-    * file index one time so micro-batches never re-list the partition
-    * tree. */
+    * SCAN — deliberately un-cached: the catalog is never broadcast,
+    * cached or collected, and per-batch I/O is bounded by touched
+    * cells/K of the catalog no matter how large it grows. Reading it
+    * once up front also builds the file index one time so micro-batches
+    * never re-list the partition tree. */
   def buildServeIndexPartitioned(itemFeatures: DataFrame, dir: String,
                                  k: Int, iters: Int = 20)
       : (DataFrame, DataFrame) = {
@@ -421,18 +312,20 @@ object StreamOps {
   /** Route each interest vector to its `nprobe` cosine-nearest cells as
     * a PURE PROJECTION: the K-row centroid table rides inside the
     * native [[graft.expr.NearestCells]] expression (one plan-carried
-    * matrix, norms precomputed, tight codegen'd argmax loop — the
-    * K-beyond-literal-size sibling of [[nearestCellsCol]]). Output:
-    * (userId, interest, cid int), `nprobe` rows per user.
+    * matrix, norms precomputed, tight codegen'd argmax loop) — the same
+    * expression that assigns every item to its cell, so an item's own
+    * cell is by construction its probe's top-1 (the self-retrieval
+    * property AnnServeSpec pins). Output: (userId, interest, cid int),
+    * `nprobe` rows per user.
     *
     * The r16 form was a crossJoin against the broadcast centroid table
     * folded back by a `first(interest)` + TopKPairs aggregate — users×K
     * intermediate rows and NON-PRIMITIVE aggregate buffers, the exact
-    * SortAggregate/ObjectHashAggregate fan-out trap §8.12 documents
-    * (VERDICT r16 item 1). This form has no join, no shuffle and no
-    * aggregate at all: users rows in, users × nprobe rows out, K·d
-    * flops per user inside whole-stage codegen. AnnServeSpec pins the
-    * plan (no Exchange, no Aggregate, no Sort). */
+    * SortAggregate/ObjectHashAggregate fan-out trap §8.12 documents.
+    * This form has no join, no shuffle and no aggregate at all: users
+    * rows in, users × nprobe rows out, K·d flops per user inside
+    * whole-stage codegen. AnnServeSpec pins the plan (no Exchange, no
+    * Aggregate, no Sort). */
   private[stream] def routeCells(interests: DataFrame,
                                  centroids: Seq[(Int, Array[Double])],
                                  nprobe: Int): DataFrame = {
@@ -442,47 +335,62 @@ object StreamOps {
         .as("cid"))
   }
 
-  /** Per-batch serve against the PARTITIONED index: route the batch's
-    * users to cells, fold the touched cell ids — a model-sized driver
-    * list, ≤ users × nprobe ints — into the scan as a LITERAL partition
-    * filter, and join the pruned scan against the broadcast routing
-    * table. The literal `isin` prunes at PLAN time, deterministically:
-    * the scan's PartitionFilters carry the touched cids (pinned in
-    * AnnServeSpec) with no reliance on the optimizer's dynamic-pruning
-    * heuristics — a micro-batch plan is rebuilt every trigger anyway,
-    * so plan-time literals are exactly as fresh as a runtime subquery,
-    * and the broadcast equi-join on the partition column still lets DPP
-    * fire on top where Catalyst elects to.
+  /** One micro-batch's routing, materialized ONCE on the driver: the
+    * batch's users routed by [[routeCells]], collected (users × nprobe
+    * rows — the model-sized end of the batch, and the side the serve
+    * join broadcasts anyway) and handed back as a local relation, with
+    * its rows and the sorted touched cids as a LITERAL `cid IN (…)`
+    * filter. The literal prunes a partitioned cells scan at PLAN time,
+    * deterministically (no reliance on the optimizer's dynamic-pruning
+    * heuristics — a micro-batch plan is rebuilt every trigger anyway),
+    * and is an ordinary in-memory filter over cached cells.
     *
-    * The routed table is materialized ONCE per batch, on the DRIVER
-    * (users × nprobe rows — the model-sized end of the batch, and the
-    * side the join broadcasts anyway, so the driver already had to hold
-    * it): the r16 form re-evaluated the routing sub-plan twice, once
-    * collected for the filter and once inside the join, re-running the
-    * batch's whole upstream (state-store read included) both times
-    * (VERDICT r16 item 1); r17's `localCheckpoint` fixed that but left
-    * per-batch storage blocks waiting on the ContextCleaner — a slow
-    * leak under an idle driver GC (ADVICE r17). The local-relation form
-    * has NOTHING to clean (no blocks, no eager checkpoint job, and the
-    * touched-cid fold becomes a driver-local scan instead of a second
-    * Spark job). Ranking is the shared [[topNByUser]] tail, so ordering
-    * and schema match the exact and broadcast-ANN serves row for row. */
-  def topNForUsersAnnPartitioned(interests: DataFrame, centroids: DataFrame,
-                                 cells: DataFrame, n: Int,
-                                 nprobe: Int = 2): DataFrame = {
-    val spark = interests.sparkSession
-    GraftFunctions.register(spark)
-    val centSeq = collectCentroids(centroids)
-      .map { case (cid, c) => (cid.toInt, c) }
-    val routedPlan = routeCells(
-      interests.select(col("userId"), col("interest")), centSeq, nprobe)
-    val routedRows = routedPlan.collect()
-    val routed = spark.createDataFrame(
-      java.util.Arrays.asList(routedRows: _*), routedPlan.schema)
-    val cidIdx = routedPlan.schema.fieldIndex("cid")
-    val touched = routedRows.map(_.getInt(cidIdx)).distinct.sorted
-    val pruned = cells.where(col("cid").isin(touched.toIndexedSeq.map(Int.box): _*))
-    val scored = pruned.join(broadcast(routed), Seq("cid"))
+    * Collecting once means the batch's upstream (state-store read
+    * included) runs once, not once for the filter and again inside the
+    * join; and a local relation leaves no storage blocks for the
+    * ContextCleaner (a per-batch `localCheckpoint` does — a slow leak
+    * under an idle driver GC), while the touched-cid fold is a
+    * driver-local scan, not a second Spark job. */
+  private def routeBatch(interests: DataFrame,
+                         centroids: Seq[(Int, Array[Double])],
+                         nprobe: Int): (DataFrame, Array[Row], Column) = {
+    val plan = routeCells(
+      interests.select(col("userId"), col("interest")), centroids, nprobe)
+    val rows = plan.collect()
+    val cid = plan.schema.fieldIndex("cid")
+    val touched = rows.map(_.getInt(cid)).distinct.sorted
+    (interests.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), plan.schema),
+      rows, col("cid").isin(touched.toIndexedSeq.map(Int.box): _*))
+  }
+
+  /** ANN-accelerated per-batch serve (r14): the ceiling sweep measured
+    * the SERVE stage — [[topNForUsers]] scoring every touched user
+    * against the whole catalog — as the full loop's bottleneck
+    * (STREAMBENCH_r14_sweep, in git history: state path sustains
+    * 1.28M ev/s, full loop plateaus ~670k). This serve prunes with an
+    * IVF quantizer: [[routeBatch]] routes each user's interest vector
+    * to its `nprobe` nearest cells, the touched cids filter `cells`,
+    * and cosine runs only over those cells' items joined against the
+    * broadcast routed users — scored pairs drop from users × |catalog|
+    * to ~users × |catalog| × nprobe/K. Same per-user top-N shape;
+    * approximate like every IVF regime, with recall vs the exact serve
+    * pinned in AnnServeSpec.
+    *
+    * `cells` is any (cid, itemId, features) table: the cached cells of
+    * [[buildServeIndex]], or the cid-partitioned scan of
+    * [[buildServeIndexPartitioned]] / [[readServeCells]], whose scan
+    * then reads ONLY the touched cells' partitions (the literal filter
+    * lands in its PartitionFilters, pinned in AnnServeSpec). Cells
+    * partition the catalog, so a (user, item) pair scores at most once
+    * even at nprobe > 1, and ranking is the shared [[topNByUser]] tail:
+    * ordering and schema match the exact serve row for row. */
+  def topNForUsersAnn(interests: DataFrame, centroids: DataFrame,
+                      cells: DataFrame, n: Int,
+                      nprobe: Int = 2): DataFrame = {
+    val (routed, _, inTouched) =
+      routeBatch(interests, graft.rec.IvfIndex.centroids(centroids), nprobe)
+    val scored = cells.where(inTouched).join(broadcast(routed), Seq("cid"))
       .withColumn("score",
         GraftFunctions.cosineSimilarity(col("interest"), col("features")))
       .where(col("score").isNotNull)
@@ -490,17 +398,16 @@ object StreamOps {
   }
 
   // ------------------------------------------------------------------
-  // PQ-coded serve arm (r19, VERDICT r18 item 1): past the raw-vector
-  // DECODE bound. The r18 20M-item measurement diagnosed the
-  // partitioned serve's plateau as per-batch touched-cell raw-vector
-  // I/O — ~2000 of 4096 cells touched by 1000 rotating users at
-  // nprobe=2, ≈ 5 GB of array<double> decoded per micro-batch, with
-  // the scoring flops trivial beside it. The IVFADC answer (Jégou et
-  // al. 2011 §V; FAISS IndexIVFPQ): scan the touched cells' 4-int PQ
-  // CODES instead (~25× fewer scan bytes at dim 64), rank by the
-  // plan-carried-codebook [[graft.expr.AdcCosine]], and touch raw
-  // vectors only for a per-user shortlist — the q111/q116 batch shape
-  // applied per micro-batch.
+  // PQ-coded serve arm (r19): past the raw-vector DECODE bound. The r18
+  // 20M-item measurement diagnosed the partitioned serve's plateau as
+  // per-batch touched-cell raw-vector I/O — ~2000 of 4096 cells touched
+  // by 1000 rotating users at nprobe=2, ≈ 5 GB of array<double> decoded
+  // per micro-batch, with the scoring flops trivial beside it. The
+  // IVFADC answer (Jégou et al. 2011 §V; FAISS IndexIVFPQ): scan the
+  // touched cells' 4-int PQ CODES instead (~25× fewer scan bytes at
+  // dim 64), rank by the plan-carried-codebook [[graft.expr.AdcCosine]],
+  // and touch raw vectors only for a per-user shortlist — the q111/q116
+  // batch shape applied per micro-batch.
   // ------------------------------------------------------------------
 
   /** PQ-encode an existing [[buildServeIndexPartitioned]] index (one
@@ -527,14 +434,12 @@ object StreamOps {
     (pq, graft.rec.IvfIndex.readPqCodebooks(spark, dir))
   }
 
-  /** Per-batch PQ-coded serve: route exactly as
-    * [[topNForUsersAnnPartitioned]] (same [[graft.expr.NearestCells]]
-    * projection, same driver-local routed relation, same literal cid
-    * partition filter — pq_cells mirrors the raw cells' cid layout row
-    * for row, so the candidate set per user is IDENTICAL), but the
-    * pruned scan reads the 4-int CODES and ranks by
+  /** Per-batch PQ-coded serve: route exactly as [[topNForUsersAnn]]
+    * (the same [[routeBatch]] step — pq_cells mirrors the raw cells'
+    * cid layout row for row, so the candidate set per user is
+    * IDENTICAL), but the pruned scan reads the 4-int CODES and ranks by
     * [[graft.expr.AdcCosine]] — the touched-cell scan payload drops
-    * ~25× at dim 64, which is the whole fight at the 20M-item regime.
+    * ~25× at dim 64.
     *
     * `shortlist` picks the serving mode:
     *
@@ -543,17 +448,17 @@ object StreamOps {
     *    shortlist — driver-materialized, ≤ users × shortlist rows, the
     *    model-sized end of the batch — is reranked by EXACT cosine
     *    against the raw cells. With `shortlist` ≥ the probed cells'
-    *    population this is row-for-row the raw partitioned serve
-    *    (AnnServeSpec pins it), which is how the serve keeps the
-    *    reference's top-10 semantics (`streaming_rec.py:106-114`)
-    *    exactly on small catalogs. HONEST I/O NOTE: the rerank FETCH is
-    *    a point-lookup workload (≤ users × shortlist random ids), and
-    *    columnar storage has no point lookup — the fetch join decodes
-    *    the touched cells' raw vectors again, so this mode's per-batch
-    *    I/O stays the raw serve's (only the COSINE work shrinks to the
-    *    shortlist). A cluster partitions that fetch exactly as it
-    *    partitions the raw serve's scan; a latency-critical deployment
-    *    fronts it with a row store or serves ADC-only.
+    *    population this is row-for-row the raw serve (AnnServeSpec pins
+    *    it), which is how the serve keeps the reference's top-10
+    *    semantics (`streaming_rec.py:106-114`) exactly on small
+    *    catalogs. HONEST I/O NOTE: the rerank FETCH is a point-lookup
+    *    workload (≤ users × shortlist random ids), and columnar storage
+    *    has no point lookup — the fetch join decodes the touched cells'
+    *    raw vectors again, so this mode's per-batch I/O stays the raw
+    *    serve's (only the COSINE work shrinks to the shortlist). A
+    *    cluster partitions that fetch exactly as it partitions the raw
+    *    serve's scan; a latency-critical deployment fronts it with a row
+    *    store or serves ADC-only.
     *  - `shortlist <= 0` — rank by ADC directly (FAISS IndexIVFPQ's
     *    default regime, no refine): raw vectors are never touched, the
     *    batch's scan I/O is the codes alone — the mode that realizes
@@ -562,7 +467,7 @@ object StreamOps {
     *
     * Ranking tail and schema are [[topNByUser]]'s in both modes, so
     * ordering (score desc, itemId asc) and output shape match the
-    * exact, broadcast-ANN and raw partitioned serves row for row. */
+    * exact and raw ANN serves row for row. */
   def topNForUsersAnnPartitionedPq(interests: DataFrame, centroids: DataFrame,
                                    pqCells: DataFrame,
                                    codebooks: Seq[Seq[Array[Double]]],
@@ -570,20 +475,10 @@ object StreamOps {
                                    nprobe: Int = 2,
                                    shortlist: Int = 64): DataFrame = {
     val spark = interests.sparkSession
-    GraftFunctions.register(spark)
     val itemType = pqCells.schema("itemId").dataType
-    val centSeq = collectCentroids(centroids)
-      .map { case (cid, c) => (cid.toInt, c) }
-    val routedPlan = routeCells(
-      interests.select(col("userId"), col("interest")), centSeq, nprobe)
-    val routedRows = routedPlan.collect()
-    val routed = spark.createDataFrame(
-      java.util.Arrays.asList(routedRows: _*), routedPlan.schema)
-    val cidIdx = routedPlan.schema.fieldIndex("cid")
-    val touched = routedRows.map(_.getInt(cidIdx)).distinct.sorted
-    val prunedPq = pqCells.where(
-      col("cid").isin(touched.toIndexedSeq.map(Int.box): _*))
-    val adcScored = prunedPq.join(broadcast(routed), Seq("cid"))
+    val centSeq = graft.rec.IvfIndex.centroids(centroids)
+    val (routed, routedRows, inTouched) = routeBatch(interests, centSeq, nprobe)
+    val adcScored = pqCells.where(inTouched).join(broadcast(routed), Seq("cid"))
       .withColumn("score",
         GraftFunctions.adcCosine(col("interest"), col("codes"), codebooks))
       .where(col("score").isNotNull)
@@ -600,13 +495,12 @@ object StreamOps {
     // precondition instead (routed = users × routes-per-user rows
     // exactly when userIds are unique; routes per user is
     // min(nprobe, K), NearestCells' contract when an index has fewer
-    // cells than probes — ADVICE r19). Checked HERE, before the ADC
-    // shortlist collect below pays a second job on a batch that would
-    // only fail afterwards.
-    val uIdx = routedPlan.schema.fieldIndex("userId")
+    // cells than probes). Checked HERE, before the ADC shortlist
+    // collect below pays a second job on a batch that would only fail
+    // afterwards.
+    val uIdx = routed.schema.fieldIndex("userId")
     val userRows = routedRows.groupBy(_.get(uIdx)).map(_._2.head).toArray
-      .map(r => org.apache.spark.sql.Row(r.get(uIdx),
-        r.get(routedPlan.schema.fieldIndex("interest"))))
+      .map(r => Row(r.get(uIdx), r.get(routed.schema.fieldIndex("interest"))))
     val routesPerUser = math.min(nprobe, centSeq.length)
     require(userRows.length.toLong * routesPerUser == routedRows.length ||
         routedRows.isEmpty,
@@ -628,25 +522,24 @@ object StreamOps {
     val userVecs = spark.createDataFrame(
       java.util.Arrays.asList(userRows: _*),
       org.apache.spark.sql.types.StructType(Seq(
-        routedPlan.schema("userId"), routedPlan.schema("interest"))))
+        routed.schema("userId"), routed.schema("interest"))))
     // The fetch deliberately carries NO per-itemId literal predicate
-    // (r20, VERDICT r19 item 4 — tried and MEASURED OUT): pushing the
-    // shortlist's ~users×shortlist ids as a literal In looked free
-    // (the ids already sit on the driver, and cells are vec_id-sorted
-    // within each file since the r20 buildLarge write), but at 2M items
-    // it multiplied rerank-mode p50 4.3× (60.3 s vs 13.9 s,
-    // STREAMBENCH_r20 probe vs the r19 pair) — a predicate with tens
-    // of thousands of literal children is quadratic-ish in the
-    // optimizer (constraint propagation walks it per rule, per
-    // micro-batch replan), while buying no scan pruning here: parquet's
-    // In pushdown degrades to a full-range min/max above the 10-value
-    // threshold, and a ~1000-row cell file is a single row group /
-    // page anyway, so every touched cell is decoded whole regardless.
-    // The broadcast semi-join below does the same row filtering at
-    // hash-lookup cost. The honest mitigations stay as documented: a
-    // row store in front of latency-critical rerank, or ADC-only mode.
-    val fetched = rawCells
-      .where(col("cid").isin(touched.toIndexedSeq.map(Int.box): _*))
+    // (r20 — tried and MEASURED OUT): pushing the shortlist's
+    // ~users×shortlist ids as a literal In looked free (the ids already
+    // sit on the driver, and cells are vec_id-sorted within each file
+    // since the r20 buildLarge write), but at 2M items it multiplied
+    // rerank-mode p50 4.3× (60.3 s vs 13.9 s, STREAMBENCH_r20 probe vs
+    // the r19 pair) — a predicate with tens of thousands of literal
+    // children is quadratic-ish in the optimizer (constraint
+    // propagation walks it per rule, per micro-batch replan), while
+    // buying no scan pruning here: parquet's In pushdown degrades to a
+    // full-range min/max above the 10-value threshold, and a ~1000-row
+    // cell file is a single row group / page anyway, so every touched
+    // cell is decoded whole regardless. The broadcast semi-join below
+    // does the same row filtering at hash-lookup cost. The honest
+    // mitigations stay as documented: a row store in front of
+    // latency-critical rerank, or ADC-only mode.
+    val fetched = rawCells.where(inTouched)
       .join(broadcast(sl), Seq("itemId"))
       .join(broadcast(userVecs), Seq("userId"))
     val reranked = fetched.withColumn("score",

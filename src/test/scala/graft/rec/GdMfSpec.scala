@@ -47,6 +47,32 @@ class GdMfSpec extends SparkSpec {
     }
   }
 
+  test("LightGCN leaves the same cached relations behind at any epoch count") {
+    // the trainer caches each epoch's two gradient tables; once the
+    // update checkpoints that read them exist they must be released, or
+    // a long-lived caller keeps every epoch's tables until clearCache().
+    // Counted as persisted RDDs that are not (local) checkpoints, so the
+    // trajectory's own checkpointed epochs do not count.
+    val r = Seq((1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
+      (2L, 10L, 5.0), (2L, 12L, 1.0), (3L, 11L, 4.0), (3L, 12L, 5.0))
+      .toDF("user_id", "item_id", "rating")
+    val sc = spark.sparkContext
+    def cached(): Int = {
+      System.gc()
+      sc.getPersistentRDDs.values.count(!_.isCheckpointed)
+    }
+    def leftBy(epochs: Int): Int = {
+      spark.catalog.clearCache()
+      val before = cached()
+      GradientMF.lightgcnTrainTrajectory(r, rank = 3, lr = 0.5,
+        reg = 0.1, epochs = epochs).collect()
+      cached() - before
+    }
+    val (two, six) = (leftBy(2), leftBy(6))
+    spark.catalog.clearCache()
+    assert(six == two, s"cached relations grow with epochs: 2 -> $two, 6 -> $six")
+  }
+
   test("LightGCN training GENERALIZES at the ml-100k fixture shape") {
     // The quality face of q88's trainer, anchored to the reference's
     // PUBLISHED LightGCN quality: test RMSE 0.9097 on ml-100k at dim

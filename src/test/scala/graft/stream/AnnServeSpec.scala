@@ -124,12 +124,13 @@ class AnnServeSpec extends SparkSpec {
 
   test("ANN serve plan: shuffle-free routing, one aggregate exchange, no window") {
     // The §8.10 scaling claims rest on this shape: user→cell routing is
-    // a literal-centroid projection (NO join, so no shuffle per
-    // micro-batch), the cell slice arrives by broadcast (the catalog is
-    // a model, not a table), and the only hash exchange in the whole
-    // serve is the per-user bounded top-N aggregate — never a Window
-    // (the r14 exact serve's ranking already moved to TopKPairs; this
-    // pins the ANN path to the same discipline).
+    // a projection collected once per micro-batch (NO join, so no
+    // shuffle), the routed users reach the cells by broadcast of that
+    // driver-local relation, the cells are cut to the touched cids by a
+    // literal filter, and the only hash exchange in the whole serve is
+    // the per-user bounded top-N aggregate — never a Window (the r14
+    // exact serve's ranking already moved to TopKPairs; this pins the
+    // ANN path to the same discipline).
     val items = spark.range(500).select(
       col("id").cast("int").as("itemId"),
       expr("""transform(sequence(0, 15), j ->
@@ -144,16 +145,41 @@ class AnnServeSpec extends SparkSpec {
       org.apache.spark.sql.execution.FormattedMode)
     assert(!p.contains("Window"), s"ANN serve plans a window:\n$p")
     assert(p.contains("BroadcastHashJoin"),
-      s"cell slice is not broadcast-joined:\n$p")
+      s"routed users are not broadcast-joined to the cells:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"ANN serve shuffles or degrades a join:\n$p")
     // exactly one shuffle node (the top-N aggregate's), and it hashes
-    // on the user key; BroadcastExchange nodes are the model side
+    // on the user key; the BroadcastExchange carries the routed users
     val exchanges = """\(\d+\) Exchange\b""".r.findAllMatchIn(p).size
     assert(exchanges == 1,
       s"expected exactly one shuffle (the top-N aggregate), got $exchanges:\n$p")
     assert(p.contains("hashpartitioning(userId"),
       s"the one exchange does not hash on userId:\n$p")
+  }
+
+  test("one ANN serve, any cells source: cached cells == their cid-partitioned scan") {
+    // topNForUsersAnn takes the cells as a table: the cached cells of
+    // buildServeIndex, or the same cells written in IvfIndex's
+    // cid-partitioned layout and scanned back, must serve the same rows
+    val items = spark.range(2000).select(
+      col("id").cast("int").as("itemId"),
+      expr("""transform(sequence(0, 63), j ->
+                sin(CAST((id % 16) * 97 + j AS DOUBLE)) +
+                0.1 * sin(CAST(id * 31 + j * 7 AS DOUBLE)))""").as("features"))
+      .cache()
+    val (cent, cached) = StreamOps.buildServeIndex(items, k = 16)
+    val dir = java.nio.file.Files.createTempDirectory("graft-any-cells").toString
+    cached.select(col("itemId").as("vec_id"), col("features").as("emb"), col("cid"))
+      .write.partitionBy("cid").parquet(s"$dir/cells")
+    val scanned = StreamOps.readServeCells(spark, dir)
+    val interests = items.where(col("itemId") % 7 === 0)
+      .select(col("itemId").as("userId"), col("features").as("interest"))
+    val fromCache = StreamOps.topNForUsersAnn(interests, cent, cached, n).collect()
+    val fromScan = StreamOps.topNForUsersAnn(interests, cent, scanned, n).collect()
+    assert(fromCache.length == interests.count() * n)
+    assert(fromScan.toSet == fromCache.toSet,
+      s"cells source changed the served rows " +
+        s"(${(fromScan.toSet -- fromCache).take(3)} vs ${(fromCache.toSet -- fromScan).take(3)})")
   }
 
   test("serveCellsPartitioned: uncapped √(nprobe·N) law, floor 64, cap 4096") {
@@ -182,7 +208,7 @@ class AnnServeSpec extends SparkSpec {
     val users = interests.count()
     val exact = StreamOps.topNForUsers(interests, items, n)
       .select(col("userId"), col("itemId"))
-    val part = StreamOps.topNForUsersAnnPartitioned(interests, cent, cells, n)
+    val part = StreamOps.topNForUsersAnn(interests, cent, cells, n)
     val hits = exact.intersect(part.select(col("userId"), col("itemId"))).count()
     val recall = hits.toDouble / (users * n)
     val selfHits = part.where(col("userId") === col("itemId")).count()
@@ -258,7 +284,7 @@ class AnnServeSpec extends SparkSpec {
       .select(col("itemId").as("userId"), col("features").as("interest"))
     val blocksBefore = spark.sparkContext.getRDDStorageInfo.length
     (1 to 5).foreach { _ =>
-      StreamOps.topNForUsersAnnPartitioned(interests, cent, cells, n).collect()
+      StreamOps.topNForUsersAnn(interests, cent, cells, n).collect()
     }
     val blocksAfter = spark.sparkContext.getRDDStorageInfo.length
     assert(blocksAfter == blocksBefore,
@@ -290,12 +316,12 @@ class AnnServeSpec extends SparkSpec {
     val cells = StreamOps.readServeCells(spark, dir)
     val interests = items.where(col("itemId") % 17 === 0)
       .select(col("itemId").as("userId"), col("features").as("interest"))
-    val before = StreamOps.topNForUsersAnnPartitioned(interests, cent, cells, n)
+    val before = StreamOps.topNForUsersAnn(interests, cent, cells, n)
       .collect().toSet
     val stats = graft.rec.IvfIndex.compact(spark, dir, maxFilesPerCell = 1)
     assert(stats.files_after < stats.files_before,
       s"compaction rewrote nothing: $stats")
-    val after = StreamOps.topNForUsersAnnPartitioned(interests, cent,
+    val after = StreamOps.topNForUsersAnn(interests, cent,
       StreamOps.readServeCells(spark, dir), n).collect().toSet
     assert(after == before, "serve results changed across compaction")
   }
@@ -324,7 +350,7 @@ class AnnServeSpec extends SparkSpec {
       .select(col("itemId").as("userId"), col("features").as("interest"))
       .cache()
     val users = interests.count()
-    val raw = StreamOps.topNForUsersAnnPartitioned(interests, cent, cells, n)
+    val raw = StreamOps.topNForUsersAnn(interests, cent, cells, n)
       .collect().toSet
     val pqFull = StreamOps.topNForUsersAnnPartitionedPq(interests, cent,
       pqCells, cbs, cells, n, shortlist = 2000).collect().toSet
