@@ -98,6 +98,15 @@ object GraftFunctions {
       typedLit(centroids.map(_._2.toSeq)),
       lit(nprobe))
 
+  /** Each vector's exact cosine top-`n` `(_1: score, _2: id)` pairs
+    * against the `(id, row)` catalog (see [[CosineTopN]] — score desc,
+    * NaN largest, id asc; degenerate pairs dropped). The catalog rides the
+    * expression as a driver-side object, not a literal. */
+  def cosineTopN(v: Column, ids: Array[Long], rows: Array[Array[Double]],
+                 n: Int): Column =
+    org.apache.spark.sql.graft.ExpressionColumn(v)(
+      CosineTopN(_, CosineMatrix(ids, rows), n))
+
   /** SQL-surface constants of [[NearestCells]] must be foldable: the
     * cid list and the centroid matrix are a MODEL, not data, and the
     * expression precomputes centroid norms once per instance. */

@@ -33,9 +33,10 @@ import org.apache.spark.sql.types._
   * Scoring is [[CosineSimilarity]]'s math verbatim (dot/(|v|·|c|),
   * double accumulation in index order) with the same null semantics
   * mapped to −1.0, so an item's own cell is by construction its probe's
-  * top-1 — the self-retrieval contract AnnServeSpec pins. Centroid
-  * norms are precomputed once per expression instance, so each row pays
-  * K·d multiply-adds for the dots only.
+  * top-1 — the self-retrieval contract AnnServeSpec pins. The loop is
+  * [[CosineMatrix]]'s, the kernel the exact serve ([[CosineTopN]]) runs
+  * too; centroid norms are precomputed once per expression instance, so
+  * each row pays K·d multiply-adds for the dots only.
   *
   * Reference anchor: the reference scores ALL movies per event
   * (`/root/reference/src/streaming/streaming_rec.py:106-114`); this
@@ -68,62 +69,24 @@ case class NearestCells(child: Expression,
 
   @transient private lazy val elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  @transient private lazy val cids: Array[Int] = centroids.map(_._1).toArray
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.map(_._2).toArray
-  @transient private lazy val centNorms: Array[Double] =
-    cents.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
+  @transient private lazy val matrix: CosineMatrix = CosineMatrix(
+    centroids.map(_._1.toLong).toArray, centroids.map(_._2).toArray)
 
   /** Shared by interpreted eval and generated code, so the two paths are
     * the same machine code: top-`nprobe` selection by (cos desc, cid asc)
-    * over the carried centroids. A NaN cosine (a NaN element in the input
-    * vector makes every dot NaN) is mapped to the same −1.0 sentinel as
-    * zero norms and length mismatches BEFORE insertion — left as NaN it
-    * would never displace a slot (NaN comparisons are false) and an
-    * under-filled slot array would return the Array[Int] default 0,
-    * i.e. phantom routes to a real cell 0 (ADVICE r17). With every
-    * score −1.0 the result is the `nprobe` lowest cids, deterministic. */
+    * over the carried centroids, in [[CosineMatrix]]'s kernel under its
+    * −1.0 policy. A NaN cosine (a NaN element in the input vector makes
+    * every dot NaN) is mapped to the same −1.0 sentinel as a degenerate
+    * pair BEFORE insertion, so every slot fills with a real cid. With
+    * every score −1.0 the result is the `nprobe` lowest cids,
+    * deterministic. */
   def nearest(input: ArrayData): ArrayData = {
-    val n = input.numElements()
-    var vn = 0.0
-    val v = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val x = if (elemIsFloat) input.getFloat(i).toDouble else input.getDouble(i)
-      v(i) = x; vn += x * x; i += 1
-    }
-    vn = math.sqrt(vn)
-    val np = math.min(nprobe, cents.length)
-    val topS = Array.fill(np)(Double.NegativeInfinity)
-    val topC = new Array[Int](np)
-    var k = 0
-    while (k < cents.length) {
-      val c = cents(k)
-      val cosRaw =
-        if (c.length != n || vn == 0.0 || centNorms(k) == 0.0) -1.0
-        else {
-          var dot = 0.0; var j = 0
-          while (j < n) { dot += v(j) * c(j); j += 1 }
-          dot / (vn * centNorms(k))
-        }
-      val cos = if (java.lang.Double.isNaN(cosRaw)) -1.0 else cosRaw
-      val cid = cids(k)
-      // insertion into the bounded (score desc, cid asc) slots
-      var p = np
-      while (p > 0 && (cos > topS(p - 1) ||
-        (cos == topS(p - 1) && cid < topC(p - 1)))) p -= 1
-      if (p < np) {
-        var q = np - 1
-        while (q > p) { topS(q) = topS(q - 1); topC(q) = topC(q - 1); q -= 1 }
-        topS(p) = cos; topC(p) = cid
-      }
-      k += 1
-    }
-    new GenericArrayData(topC)
+    val np = math.min(nprobe, matrix.size)
+    val topS = new Array[Double](np)
+    val topI = new Array[Int](np)
+    matrix.top(CosineMatrix.read(input, elemIsFloat), np,
+      worstDegenerate = true, topS, topI)
+    new GenericArrayData(topI.map(i => matrix.ids(i).toInt))
   }
 
   override def nullSafeEval(input: Any): Any =
@@ -132,7 +95,7 @@ case class NearestCells(child: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // the whole expression instance (matrix + norms + nprobe) rides the
     // references array; per row the generated code makes one virtual
-    // call into the JIT-compiled argmax loop above — the codegen span
+    // call into the JIT-compiled kernel loop — the codegen span
     // around it (scan, downstream projections) is preserved
     val selfRef = ctx.addReferenceObj("nearestCells", this, classOf[NearestCells].getName)
     nullSafeCodeGen(ctx, ev, v =>

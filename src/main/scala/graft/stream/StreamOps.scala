@@ -130,49 +130,86 @@ object StreamOps {
   }
 
   /** ST6: cosine top-N items for each user interest vector (used inside
-    * `foreachBatch` on the interest stream, or standalone in batch).
-    * Item side broadcasts; ranking is the bounded [[graft.expr.TopKPairs]]
-    * aggregate (q95's no-window pattern), not a `row_number` window: the
-    * window form shuffles and SORTS every scored (user, item) row —
-    * users × |catalog| rows per micro-batch, the term that buried the
-    * serve once the r15 catalog sweep grew |catalog| past the fixture's
-    * 2k — while the aggregate holds ≤ n pairs per user per map
-    * partition and ships only those to the shuffle. Identical ordering
-    * contract (score desc, itemId asc; NaN largest on both forms), so
-    * the ranked output is row-for-row the window's. */
+    * `foreachBatch` on the interest stream, or standalone in batch), as
+    * (userId, itemId, rank, score) rows, score desc then itemId asc.
+    *
+    * Up to [[PlanMatrixCap]] items the catalog is collected once per call
+    * (a bounded `limit(cap + 1)`, re-read each call as the stream-static
+    * join re-reads its static side) and carried inside the
+    * [[graft.expr.CosineTopN]] expression: the serve is one narrow
+    * projection over the users — `posexplode` of each vector's top-n
+    * array — with no join, no exchange and no aggregate. A larger catalog
+    * keeps the users × catalog cross join (item side broadcast) ranked by
+    * the bounded [[graft.expr.TopKPairs]] aggregate of [[topNByUser]].
+    * Both forms keep one contract, row for row: scores are
+    * `cosine_similarity`'s, a NULL cosine (length mismatch, zero norm,
+    * null vector or features) yields no pair, NaN ranks largest, and
+    * `n` past the catalog returns every scored item. Each `userId` is
+    * expected once in `interests` (the stream emits one state row per
+    * touched user): the projection ranks each row's vector on its own. */
   def topNForUsers(interests: DataFrame, itemFeatures: DataFrame, n: Int): DataFrame = {
-    GraftFunctions.register(interests.sparkSession)
-    val scored = interests.crossJoin(broadcast(itemFeatures))
-      .withColumn("score",
-        GraftFunctions.cosineSimilarity(col("interest"), col("features")))
-      .where(col("score").isNotNull)
-    topNByUser(scored, n, itemFeatures.schema("itemId").dataType)
+    val itemType = itemFeatures.schema("itemId").dataType
+    requireIntegralIds(itemType)
+    val catalog = itemFeatures
+      .select(col("itemId").cast("long"), col("features").cast("array<double>"))
+      .limit(PlanMatrixCap + 1).collect()
+    if (catalog.length > PlanMatrixCap) {
+      GraftFunctions.register(interests.sparkSession)
+      val scored = interests.crossJoin(broadcast(itemFeatures))
+        .withColumn("score",
+          GraftFunctions.cosineSimilarity(col("interest"), col("features")))
+        .where(col("score").isNotNull)
+      topNByUser(scored, n, itemType)
+    } else {
+      // a null features value can never score: an empty row is
+      // degenerate against every vector (length mismatch or zero norm)
+      val rows = catalog.map(r =>
+        if (r.isNullAt(1)) Array.emptyDoubleArray else r.getSeq[Double](1).toArray)
+      explodeRanked(interests.select(col("userId"),
+        GraftFunctions.cosineTopN(col("interest"), catalog.map(_.getLong(0)),
+          rows, n).as("top")), itemType)
+    }
   }
 
-  /** Shared ranking tail of the exact and ANN serves: per-user bounded
-    * top-n via [[graft.expr.TopKPairs]], exploded back to the
-    * (userId, itemId, rank, score) row shape the window form emitted —
-    * itemId cast back to the catalog's own id type so callers see the
-    * schema they handed in. */
+  /** Largest row matrix a serve carries in its plan: the catalog of
+    * [[topNForUsers]]'s projection, and the centroid model of the
+    * partitioned index's router ([[serveCellsPartitioned]]'s cap) —
+    * 4096 × dim doubles, ≈ 2 MB at dim 64. */
+  final val PlanMatrixCap = 4096
+
+  /** Shared ranking tail of the over-cap exact and the ANN serves:
+    * per-user bounded top-n via [[graft.expr.TopKPairs]]. */
   private def topNByUser(scored: DataFrame, n: Int,
                          itemType: org.apache.spark.sql.types.DataType): DataFrame = {
-    // the bounded aggregate carries itemId as long, so the id round-trip
-    // is only lossless for integral catalogs — assert it rather than let
-    // the cast null out a string-keyed caller's ids silently (ADVICE r15)
-    import org.apache.spark.sql.types._
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(itemType),
-      s"serve ranking requires an integral itemId (got $itemType): " +
-        "TopKPairs carries ids as long and the round-trip would null out " +
-        "non-integral ids")
+    requireIntegralIds(itemType)
     val topk = graft.expr.TopKPairs.agg(n)
-    scored
+    explodeRanked(scored
       .groupBy(col("userId"))
-      .agg(topk(col("score"), col("itemId").cast("long")).as("top"))
+      .agg(topk(col("score"), col("itemId").cast("long")).as("top")), itemType)
+  }
+
+  /** Each user's ranked `top` array of `(_1: score, _2: itemId)` pairs,
+    * exploded back to the (userId, itemId, rank, score) row shape —
+    * itemId cast back to the catalog's own id type so callers see the
+    * schema they handed in. */
+  private def explodeRanked(withTop: DataFrame,
+                            itemType: org.apache.spark.sql.types.DataType): DataFrame =
+    withTop
       .select(col("userId"), posexplode(col("top")).as(Seq("pos", "pair")))
       .select(col("userId"),
         col("pair._2").cast(itemType).as("itemId"),
         (col("pos") + 1).cast("long").as("rank"),
         col("pair._1").as("score"))
+
+  /** Both rankings carry itemId as long, so the id round-trip is only
+    * lossless for integral catalogs — assert it rather than let the cast
+    * null out a string-keyed caller's ids silently (ADVICE r15). */
+  private def requireIntegralIds(itemType: org.apache.spark.sql.types.DataType): Unit = {
+    import org.apache.spark.sql.types._
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(itemType),
+      s"serve ranking requires an integral itemId (got $itemType): " +
+        "the ranking carries ids as long and the round-trip would null out " +
+        "non-integral ids")
   }
 
   /** Serve-quantizer cell count for a catalog of `nItems`: the standard
@@ -267,10 +304,8 @@ object StreamOps {
     * law gives 2000 cells: ~1000 items per cell, per-event scan
     * nprobe/K = 0.1% of the catalog. */
   def serveCellsPartitioned(nItems: Long, nprobe: Int = 2): Int =
-    math.max(64, math.min(PartitionedCellCap,
+    math.max(64, math.min(PlanMatrixCap,
       math.ceil(math.sqrt(nprobe.toDouble * nItems)).toInt))
-
-  private val PartitionedCellCap = 4096
 
   /** Build the cid-partitioned serve index under `dir` — a thin adapter
     * over the SHARED large-corpus builder [[graft.rec.IvfIndex.buildLarge]]
