@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 /** The engine's one top-k-by-cosine kernel: a driver-side row matrix
   * (ids, rows, precomputed row norms) carried inside a plan by
   * [[NearestCells]] (the IVF router, K centroid rows) and [[CosineTopN]]
-  * (the exact serve, the item catalog up to its cap).
+  * (the exact serve, the item catalog up to its byte budget).
   *
   * Scoring is [[CosineSimilarity]]'s arithmetic: `dot / (√nv·√nr)` with
   * dot and squared norms accumulated in double in index order, and a

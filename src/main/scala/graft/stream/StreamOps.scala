@@ -133,51 +133,77 @@ object StreamOps {
     * `foreachBatch` on the interest stream, or standalone in batch), as
     * (userId, itemId, rank, score) rows, score desc then itemId asc.
     *
-    * Up to [[PlanMatrixCap]] items the catalog is collected once per call
-    * (a bounded `limit(cap + 1)`, re-read each call as the stream-static
-    * join re-reads its static side) and carried inside the
+    * A catalog whose features fit in [[PlanMatrixBytes]] is collected
+    * when this is called (see [[collectWithin]]) and carried inside the
     * [[graft.expr.CosineTopN]] expression: the serve is one narrow
     * projection over the users — `posexplode` of each vector's top-n
-    * array — with no join, no exchange and no aggregate. A larger catalog
-    * keeps the users × catalog cross join (item side broadcast) ranked by
-    * the bounded [[graft.expr.TopKPairs]] aggregate of [[topNByUser]].
-    * Both forms keep one contract, row for row: scores are
-    * `cosine_similarity`'s, a NULL cosine (length mismatch, zero norm,
-    * null vector or features) yields no pair, NaN ranks largest, and
-    * `n` past the catalog returns every scored item. Each `userId` is
-    * expected once in `interests` (the stream emits one state row per
-    * touched user): the projection ranks each row's vector on its own. */
-  def topNForUsers(interests: DataFrame, itemFeatures: DataFrame, n: Int): DataFrame = {
+    * array — with no join, no exchange and no aggregate. The returned
+    * DataFrame keeps that snapshot of the catalog; a stream calls this
+    * once per micro-batch, so each batch re-reads its static side, as
+    * the stream-static join does. A larger catalog keeps the users ×
+    * catalog cross join (item side broadcast) ranked by the bounded
+    * [[graft.expr.TopKPairs]] aggregate of [[topNByUser]], which reads
+    * the catalog when the result runs.
+    *
+    * Both forms keep one contract, row for row, for `interests` with one
+    * row per `userId` (the interest stream emits one per touched user):
+    * scores are `cosine_similarity`'s, a NULL cosine (length mismatch,
+    * zero norm, null vector or features) yields no pair, NaN ranks
+    * largest, and `n` past the catalog returns every scored item. A
+    * repeated `userId` is outside that contract: the projection ranks
+    * each row on its own, the cross join ranks the user's rows as one. */
+  def topNForUsers(interests: DataFrame, itemFeatures: DataFrame, n: Int): DataFrame =
+    topNForUsers(interests, itemFeatures, n, PlanMatrixBytes)
+
+  /** [[topNForUsers]] under a given carried-matrix budget in bytes. */
+  private[stream] def topNForUsers(interests: DataFrame, itemFeatures: DataFrame,
+                                   n: Int, budget: Long): DataFrame = {
     val itemType = itemFeatures.schema("itemId").dataType
     requireIntegralIds(itemType)
-    val catalog = itemFeatures
-      .select(col("itemId").cast("long"), col("features").cast("array<double>"))
-      .limit(PlanMatrixCap + 1).collect()
-    if (catalog.length > PlanMatrixCap) {
-      GraftFunctions.register(interests.sparkSession)
-      val scored = interests.crossJoin(broadcast(itemFeatures))
-        .withColumn("score",
-          GraftFunctions.cosineSimilarity(col("interest"), col("features")))
-        .where(col("score").isNotNull)
-      topNByUser(scored, n, itemType)
-    } else {
-      // a null features value can never score: an empty row is
-      // degenerate against every vector (length mismatch or zero norm)
-      val rows = catalog.map(r =>
-        if (r.isNullAt(1)) Array.emptyDoubleArray else r.getSeq[Double](1).toArray)
-      explodeRanked(interests.select(col("userId"),
-        GraftFunctions.cosineTopN(col("interest"), catalog.map(_.getLong(0)),
-          rows, n).as("top")), itemType)
+    collectWithin(itemFeatures.select(col("itemId").cast("long"),
+        col("features").cast("array<double>")), budget) match {
+      case Some(catalog) =>
+        explodeRanked(interests.select(col("userId"),
+          GraftFunctions.cosineTopN(col("interest"), catalog.map(_._1),
+            catalog.map(_._2), n).as("top")), itemType)
+      case None =>
+        GraftFunctions.register(interests.sparkSession)
+        val scored = interests.crossJoin(broadcast(itemFeatures))
+          .withColumn("score",
+            GraftFunctions.cosineSimilarity(col("interest"), col("features")))
+          .where(col("score").isNotNull)
+        topNByUser(scored, n, itemType)
     }
   }
 
-  /** Largest row matrix a serve carries in its plan: the catalog of
-    * [[topNForUsers]]'s projection, and the centroid model of the
-    * partitioned index's router ([[serveCellsPartitioned]]'s cap) —
-    * 4096 × dim doubles, ≈ 2 MB at dim 64. */
-  final val PlanMatrixCap = 4096
+  /** Largest catalog [[topNForUsers]] carries in its plan, in bytes of
+    * ids and features (8 per id, 8 per element): 20 MiB, 40,000 items at
+    * dim 64. StreamBench's catalog mode (dim 64, 20,000 events/s)
+    * measured the projection ahead of the cross join at every catalog
+    * it ran, 2,000 to 40,000 items; no crossover was reached, so the
+    * budget sits at the largest measured catalog rather than past it —
+    * the matrix is copied on the driver and deserialized by every task
+    * of the serve, a cost that grows with its bytes. */
+  final val PlanMatrixBytes: Long = 20L << 20
 
-  /** Shared ranking tail of the over-cap exact and the ANN serves:
+  /** The `(itemId, features)` rows of `items` (`itemId: long, features:
+    * array<double>`) if they fit in `budget` bytes, else None: one job
+    * sums the bytes where the rows are, and only a catalog that fits is
+    * collected, by a second, so an over-budget one moves no rows to the
+    * driver. A null features value comes back empty, which is
+    * degenerate against every vector (length mismatch or zero norm), so
+    * it never scores. */
+  private def collectWithin(items: DataFrame,
+                            budget: Long): Option[Array[(Long, Array[Double])]] = {
+    val rows = items.queryExecution.toRdd
+    val bytes = rows.map(r =>
+      8L * (1 + (if (r.isNullAt(1)) 0 else r.getArray(1).numElements()))).fold(0L)(_ + _)
+    if (bytes > budget) None
+    else Some(rows.map(r => (r.getLong(0),
+      if (r.isNullAt(1)) Array.emptyDoubleArray else r.getArray(1).toDoubleArray())).collect())
+  }
+
+  /** Shared ranking tail of the over-budget exact and the ANN serves:
     * per-user bounded top-n via [[graft.expr.TopKPairs]]. */
   private def topNByUser(scored: DataFrame, n: Int,
                          itemType: org.apache.spark.sql.types.DataType): DataFrame = {
@@ -304,8 +330,10 @@ object StreamOps {
     * law gives 2000 cells: ~1000 items per cell, per-event scan
     * nprobe/K = 0.1% of the catalog. */
   def serveCellsPartitioned(nItems: Long, nprobe: Int = 2): Int =
-    math.max(64, math.min(PlanMatrixCap,
+    math.max(64, math.min(PartitionedCellCap,
       math.ceil(math.sqrt(nprobe.toDouble * nItems)).toInt))
+
+  private val PartitionedCellCap = 4096
 
   /** Build the cid-partitioned serve index under `dir` — a thin adapter
     * over the SHARED large-corpus builder [[graft.rec.IvfIndex.buildLarge]]

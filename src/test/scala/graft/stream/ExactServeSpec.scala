@@ -11,8 +11,8 @@ import graft.expr.{GraftFunctions, TopKPairs}
   * every case must return the rows, scores equal bit for bit, of the
   * users × catalog cross join ranked by the bounded [[TopKPairs]]
   * aggregate (the form the plan-carried [[graft.expr.CosineTopN]]
-  * projection replaces under [[StreamOps.PlanMatrixCap]] and keeps above
-  * it), copied here as the reference. */
+  * projection replaces under [[StreamOps.PlanMatrixBytes]] and keeps
+  * above it), copied here as the reference. */
 class ExactServeSpec extends SparkSpec {
 
   /** The cross-join + TopKPairs ranking, as the serve ran it before the
@@ -127,28 +127,52 @@ class ExactServeSpec extends SparkSpec {
       == LongType)
   }
 
-  test("a catalog past the cap takes the cross join; at the cap, the projection") {
-    def corpus(nItems: Int) = spark.range(nItems).select(
-      col("id").cast("int").as("itemId"),
-      expr("""transform(sequence(0, 15), j ->
-                sin(CAST((id % 16) * 97 + j AS DOUBLE)) +
-                0.1 * sin(CAST(id * 31 + j * 7 AS DOUBLE)))""").as("features"))
-    val users = spark.range(0, 4097, 97).select(col("id").cast("int").as("userId"),
-      expr("transform(sequence(0, 15), j -> sin(CAST(id + j AS DOUBLE)))")
-        .as("interest"))
-    def aggregates(df: DataFrame) =
-      df.queryExecution.executedPlan.toString.contains("Aggregate")
-    val over = StreamOps.PlanMatrixCap + 1
-    val at = StreamOps.PlanMatrixCap
-    assertSameServe(users, corpus(over), 10)
-    assert(aggregates(StreamOps.topNForUsers(users, corpus(over), 10)),
-      s"a $over-item catalog did not take the cross-join path")
-    assertSameServe(users, corpus(at), 10)
-    assert(!aggregates(StreamOps.topNForUsers(users, corpus(at), 10)),
-      s"a $at-item catalog did not take the projection")
+  private def aggregates(df: DataFrame) =
+    df.queryExecution.executedPlan.toString.contains("Aggregate")
+
+  private def corpus(nItems: Int) = spark.range(nItems).select(
+    col("id").cast("int").as("itemId"),
+    expr("""transform(sequence(0, 15), j ->
+              sin(CAST((id % 16) * 97 + j AS DOUBLE)) +
+              0.1 * sin(CAST(id * 31 + j * 7 AS DOUBLE)))""").as("features"))
+
+  private val corpusUsers = spark.range(0, 4097, 97).select(
+    col("id").cast("int").as("userId"),
+    expr("transform(sequence(0, 15), j -> sin(CAST(id + j AS DOUBLE)))")
+      .as("interest"))
+
+  test("a catalog past the byte budget takes the cross join; at it, the projection") {
+    // 8 bytes per id and per element: 4,097 items × (1 + 16) × 8
+    val items = corpus(4097).repartition(4)
+    val fits = 4097L * 17 * 8
+    assert(keyed(StreamOps.topNForUsers(corpusUsers, items, 10, fits - 1)) ==
+      assertSameServe(corpusUsers, items, 10))
+    assert(aggregates(StreamOps.topNForUsers(corpusUsers, items, 10, fits - 1)),
+      "a catalog one byte over its budget did not take the cross-join path")
+    assert(keyed(StreamOps.topNForUsers(corpusUsers, items, 10, fits)) ==
+      keyed(crossJoinServe(corpusUsers, items, 10)))
+    assert(!aggregates(StreamOps.topNForUsers(corpusUsers, items, 10, fits)),
+      "a catalog at its budget did not take the projection")
+    assert(!aggregates(StreamOps.topNForUsers(corpusUsers, items, 10)),
+      "a 4,097-item catalog at dim 16 is under PlanMatrixBytes")
   }
 
-  test("under the cap the serve plans no exchange, join or aggregate") {
+  test("a repeated userId: ranked per row under the budget, as one user over it") {
+    // outside the one-row-per-user contract the two forms differ; pin both
+    val users = vectors(Seq(10 -> Array(1.0, 0.0, 0.0),
+      10 -> Array(0.0, 1.0, 1.0), 11 -> Array(0.2, 0.7, 0.1)), "userId", "interest")
+    def served(df: DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    def alone(r: Row) = served(StreamOps.topNForUsers(
+      spark.createDataFrame(java.util.Arrays.asList(r), users.schema), catalog, 2))
+    assert(served(StreamOps.topNForUsers(users, catalog, 2)) ==
+      users.collect().toSeq.flatMap(alone).sorted)
+    assert(served(StreamOps.topNForUsers(users, catalog, 2, 0L)) ==
+      served(crossJoinServe(users, catalog, 2)))
+    assert(served(crossJoinServe(users, catalog, 2)).count(_._1 == 10) == 2)
+  }
+
+  test("under the budget the serve plans no exchange, join or aggregate") {
     val users = spark.range(0, 500, 7).select(col("id").cast("int").as("userId"),
       expr("transform(sequence(0, 2), j -> sin(CAST(id + j AS DOUBLE)))")
         .as("interest"))
