@@ -52,7 +52,7 @@ written for). Rows the baseline held cleanly in every run keep the
 gate regardless of where they sit. Single-rate families (the classic
 configs) have no headroom evidence and always keep the gate. The
 missing-metric exemption is likewise restricted to batch_ms_p50 (the
-one metric a non-steady run legitimately drops); a missing
+one metric a non-steady run legitimately drops); a missing or null
 events_per_sec means the config never ran and always flags.
 
 Exit 1 if anything flagged, 2 on unusable input, else 0.
@@ -79,6 +79,10 @@ def metrics(doc):
     out, ctx = {}, []
     if kind == "stream_bench":
         for cfg, d in doc.get("configs", {}).items():
+            # a null rate: no batch completed in the window, the config
+            # never ran (main() flags it); it has no metric to compare
+            if d["events_per_sec"] is None:
+                continue
             out[f"{cfg}.events_per_sec"] = (float(d["events_per_sec"]), True)
             # past a config's ceiling (`steady: false`, r15+) p50 is the
             # size of whatever backlog batch happened to complete, not a
@@ -184,6 +188,8 @@ def main(argv):
         if d.get("metric") != "stream_bench":
             continue
         for cfg, c in d.get("configs", {}).items():
+            if c["events_per_sec"] is None:
+                continue
             fam = re.sub(r"@r?\d+$", "", cfg)
             off = float(c.get("offered", 0))
             eps = float(c["events_per_sec"])
@@ -224,9 +230,17 @@ def main(argv):
             print(f"CEIL missing {m}: at-ceiling row's p50, not gated")
         else:
             flagged.append(f"missing:{m}")
+    # a stream config with a null rate never ran, in either side's runs
+    for p, d in base + cand:
+        if d.get("metric") == "stream_bench":
+            flagged += [f"never_ran[{p}]:{cfg}"
+                        for cfg, c in d.get("configs", {}).items()
+                        if c["events_per_sec"] is None]
     if not names:
         print("no comparable metrics")
-        return 2
+        if flagged:
+            print(f"FLAGGED ({len(flagged)}): {', '.join(flagged)}")
+        return 1 if flagged else 2
 
     for n in names:
         hib = bm[0][1][0][n][1]

@@ -239,22 +239,25 @@ object StreamBench {
       // then read as events/s 0.0, a coin-flip artifact the r15 catalog
       // pair flagged on its own past-ceiling probe. Fall back to every
       // completed batch and say so (`"steady":false`): a bring-up-
-      // inclusive plateau beats a fabricated zero.
+      // inclusive plateau beats a fabricated zero. With no completed
+      // batch at all there is nothing to report: rate and latencies are
+      // null, `"batches":0`.
       val steadySet = completed.drop(3)
       val steady = if (steadySet.nonEmpty) steadySet else completed
       val isSteady = steadySet.nonEmpty
       val trigMs = steady.map(_.durationMs.get("triggerExecution").toLong)
       val rows = steady.map(_.numInputRows).sum
-      val eps = rows.toDouble * 1000 / math.max(trigMs.sum, 1L)
+      val eps = Option.when(trigMs.nonEmpty)(rows.toDouble * 1000 / math.max(trigMs.sum, 1L))
       val sorted = trigMs.sorted
-      def p50 = if (sorted.isEmpty) 0L else sorted(sorted.size / 2)
+      val p50 = sorted.lift(sorted.size / 2)
       val st = progress.lastOption.flatMap(_.stateOperators.headOption)
       def r1(v: Double) = "%.1f".format(v)
+      def orNull[A](v: Option[A]) = v.map(_.toString).getOrElse("null")
       s""""$label":{"offered":$rate,"items":$nItems,"event_space":$nItems,""" +
-        s""""events_per_sec":${r1(eps)},""" +
-        s""""sustained":${isSteady && eps >= 0.9 * rate},"steady":$isSteady,""" +
+        s""""events_per_sec":${orNull(eps.map(r1))},""" +
+        s""""sustained":${isSteady && eps.exists(_ >= 0.9 * rate)},"steady":$isSteady,""" +
         s""""batches":${steady.size},""" +
-        s""""batch_ms_p50":$p50,"batch_ms_max":${sorted.lastOption.getOrElse(0L)},""" +
+        s""""batch_ms_p50":${orNull(p50)},"batch_ms_max":${orNull(sorted.lastOption)},""" +
         s""""state_rows_final":${st.map(_.numRowsTotal).getOrElse(-1L)},""" +
         s""""state_mem_mb":${r1(st.map(_.memoryUsedBytes).getOrElse(0L) / 1048576.0)},""" +
         s""""rows_removed_total":${progress.map(_.stateOperators.headOption.map(_.numRowsRemoved).getOrElse(0L)).sum}}"""

@@ -355,7 +355,6 @@ final class CypherGraph(
   import CypherCompat._
 
   private[cypher] def node(label: String): (String, DataFrame) = nodes(label)
-  private[cypher] def edgeTypes: Map[String, (String, String, DataFrame)] = edges
 
   /** current edge table for `tpe` (empty, schema-bearing when absent). */
   private def edgeDf(tpe: String, props: Seq[String]): DataFrame =

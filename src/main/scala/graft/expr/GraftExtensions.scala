@@ -2,45 +2,21 @@ package graft.expr
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** `SparkSessionExtensions` entry point: makes the engine's native
   * expressions first-class SQL functions in any session built with
   * `--conf spark.sql.extensions=graft.expr.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`), with no per-session
-  * `register()` call. The imperative `GraftFunctions.register` remains
-  * for sessions the engine doesn't construct.
+  * `register()` call. It injects the same [[GraftFunctions.sqlFunctions]]
+  * table that the imperative `GraftFunctions.register` fills a session
+  * the engine doesn't construct from.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("nearest_cells"),
-      new ExpressionInfo(classOf[NearestCells].getName, "nearest_cells"),
-      (exprs: Seq[Expression]) => NearestCells(exprs.head,
-        GraftFunctions.centroidTable(exprs(1), exprs(2)),
-        GraftFunctions.constInt(exprs(3), "nprobe"))))
-    e.injectFunction((
-      FunctionIdentifier("char_shingles"),
-      new ExpressionInfo(classOf[CharShingles].getName, "char_shingles"),
-      (exprs: Seq[Expression]) =>
-        CharShingles(exprs.head, GraftFunctions.shingleWidth(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("nearest_codes"),
-      new ExpressionInfo(classOf[NearestCodes].getName, "nearest_codes"),
-      (exprs: Seq[Expression]) => NearestCodes(
-        GraftFunctions.arity(exprs, 2, "nearest_codes(v, codebooks)").head,
-        GraftFunctions.codebookTable(exprs(1), "nearest_codes(v, codebooks)"))))
-    e.injectFunction((
-      FunctionIdentifier("adc_cosine"),
-      new ExpressionInfo(classOf[AdcCosine].getName, "adc_cosine"),
-      (exprs: Seq[Expression]) => AdcCosine(
-        GraftFunctions.arity(exprs, 3, "adc_cosine(q, codes, codebooks)")(0),
-        exprs(1),
-        GraftFunctions.codebookTable(exprs(2), "adc_cosine(q, codes, codebooks)"))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

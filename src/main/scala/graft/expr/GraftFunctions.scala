@@ -1,76 +1,75 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
 
 /** Column-level function surface of the engine (SURVEY §2.8).
   *
   * Everything here is either a composition of codegen'd built-ins or a
-  * native Catalyst expression registered on the session — never a Scala
-  * closure UDF, so whole-stage codegen spans are preserved.
+  * native Catalyst expression — never a Scala closure UDF, so
+  * whole-stage codegen spans are preserved. The Column builders
+  * construct their expression node directly ([[ExpressionColumn]]), with
+  * the model (centroids, codebooks, an item matrix) passed as an object;
+  * the function registry serves only SQL text, filled by [[register]] or
+  * [[GraftExtensions]] from the one [[sqlFunctions]] table.
   */
 object GraftFunctions {
 
-  /** Idempotent per-session registration of native expressions, enabling
-    * both SQL (`SELECT cosine_similarity(a,b)`) and `call_function` use.
-    */
+  /** The native expressions on the SQL surface: name, expression class,
+    * and the builder from SQL arguments, whose model arguments must be
+    * foldable literals. Read by both fillers of the registry. */
+  private[expr] val sqlFunctions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("cosine_similarity", classOf[CosineSimilarity],
+      e => CosineSimilarity(e(0), e(1))),
+    ("char_shingles", classOf[CharShingles],
+      e => CharShingles(e.head, shingleWidth(e(1)))),
+    ("nearest_cells", classOf[NearestCells],
+      e => NearestCells(e.head, centroidTable(e(1), e(2)), constInt(e(3), "nprobe"))),
+    ("nearest_codes", classOf[NearestCodes],
+      e => NearestCodes(arity(e, 2, "nearest_codes(v, codebooks)").head,
+        codebookTable(e(1), "nearest_codes(v, codebooks)"))),
+    ("adc_cosine", classOf[AdcCosine],
+      e => AdcCosine(arity(e, 3, "adc_cosine(q, codes, codebooks)")(0), e(1),
+        codebookTable(e(2), "adc_cosine(q, codes, codebooks)"))))
+
+  /** The typed aggregates on the SQL surface, at their catalog
+    * parameterizations: q33's RMSE, the bounded-state synopses of q77 /
+    * q95, the frequency / membership synopses of q98 / q99 (both take a
+    * pre-hashed array<bigint> of positions, so the hash family stays a
+    * shared relational expression) and q108's distinct-count registers
+    * (the pre-encoded bucket*32+rho slot). A def: the encoders are built
+    * only by [[register]], not whenever a Column builder is first used. */
+  private def sqlAggregates: Seq[(String, UserDefinedFunction)] = Seq(
+    "rmse_agg" -> RmseAggregator.agg,
+    "kmin_distinct64" -> KMinDistinct.agg(64),
+    "top3_pairs" -> TopKPairs.agg(3),
+    "cms_4x256" -> CountMinSketch.agg(4, 256),
+    "bloom_2048" -> BloomBits.agg(2048),
+    "hll_64" -> HllRegisters.agg(64))
+
+  /** Puts the SQL surface (`SELECT cosine_similarity(a, b)`) on a session
+    * the engine does not build with [[GraftExtensions]]. Engine code never
+    * needs it: its Column builders reach no registry. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_shingles",
-      exprs => CharShingles(exprs.head, shingleWidth(exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cells",
-      exprs => NearestCells(exprs.head,
-        centroidTable(exprs(1), exprs(2)), constInt(exprs(3), "nprobe")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_codes",
-      exprs => NearestCodes(arity(exprs, 2, "nearest_codes(v, codebooks)").head,
-        codebookTable(exprs(1), "nearest_codes(v, codebooks)")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_cosine",
-      exprs => AdcCosine(arity(exprs, 3, "adc_cosine(q, codes, codebooks)")(0),
-        exprs(1),
-        codebookTable(exprs(2), "adc_cosine(q, codes, codebooks)")),
-      "built-in")
-    spark.udf.register("rmse_agg",
-      udaf(RmseAggregator, Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)))
-    // the bounded-state synopsis aggregates (q77 / q95) on the SQL
-    // surface, at their catalog parameterizations
-    spark.udf.register("kmin_distinct64",
-      udaf(new KMinDistinct(64), Encoders.scalaLong))
-    spark.udf.register("top3_pairs",
-      udaf(new TopKPairs(3),
-        Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)))
-    // frequency / membership synopses (q98 / q99) at their catalog
-    // parameterizations; both take a pre-hashed array<bigint> of
-    // positions, so the hash family stays a shared relational expression
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    spark.udf.register("cms_4x256",
-      udaf(new CountMinSketch(4, 256), ExpressionEncoder[Array[Long]]()))
-    spark.udf.register("bloom_2048",
-      udaf(new BloomBits(2048), ExpressionEncoder[Array[Long]]()))
-    // distinct-count registers (q108); takes the pre-encoded
-    // bucket*32+rho slot, so bucketing/rank stay shared relational
-    // expressions like the CMS/Bloom hash families
-    spark.udf.register("hll_64",
-      udaf(new HllRegisters(64), Encoders.scalaLong))
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "built-in")
+    }
+    sqlAggregates.foreach { case (name, f) => spark.udf.register(name, f) }
   }
 
-  /** One-pass character k-gram shingling (see [[CharShingles]]); requires
-    * [[register]] on the session first. */
+  /** One-pass character k-gram shingling (see [[CharShingles]]). */
   def charShingles(text: Column, k: Int): Column =
-    call_function("char_shingles", text, lit(k))
+    ExpressionColumn(text)(e => CharShingles(e(0), k))
 
   /** The k argument of char_shingles must be a foldable integer literal;
     * fail with a message naming the contract instead of a bare cast error.
     */
-  private[expr] def shingleWidth(e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
+  private def shingleWidth(e: Expression): Int = {
     val v = try e.eval() catch {
       case t: Throwable => throw new IllegalArgumentException(
         "char_shingles(text, k): k must be a constant integer literal", t)
@@ -82,37 +81,28 @@ object GraftFunctions {
     }
   }
 
-  /** Native cosine similarity (see [[CosineSimilarity]]); requires
-    * [[register]] on the session first. */
+  /** Native cosine similarity (see [[CosineSimilarity]]). */
   def cosineSimilarity(a: Column, b: Column): Column =
-    call_function("cosine_similarity", a, b)
+    ExpressionColumn(a, b)(e => CosineSimilarity(e(0), e(1)))
 
   /** The `nprobe` cosine-nearest centroid ids for a vector column (see
     * [[NearestCells]] — score desc, cid asc; the model-sized centroid
-    * table rides the expression as a constant). Requires [[register]]
-    * on the session first. */
+    * table rides the expression as a constant). */
   def nearestCells(v: Column, centroids: Seq[(Int, Array[Double])],
                    nprobe: Int): Column =
-    call_function("nearest_cells", v,
-      typedLit(centroids.map(_._1)),
-      typedLit(centroids.map(_._2.toSeq)),
-      lit(nprobe))
+    ExpressionColumn(v)(e => NearestCells(e(0), centroids, nprobe))
 
   /** Each vector's exact cosine top-`n` `(_1: score, _2: id)` pairs
     * against the `(id, row)` catalog (see [[CosineTopN]] — score desc,
-    * NaN largest, id asc; degenerate pairs dropped). The catalog rides the
-    * expression as a driver-side object, not a literal. */
+    * NaN largest, id asc; degenerate pairs dropped). */
   def cosineTopN(v: Column, ids: Array[Long], rows: Array[Array[Double]],
                  n: Int): Column =
-    org.apache.spark.sql.graft.ExpressionColumn(v)(
-      CosineTopN(_, CosineMatrix(ids, rows), n))
+    ExpressionColumn(v)(e => CosineTopN(e(0), CosineMatrix(ids, rows), n))
 
   /** SQL-surface constants of [[NearestCells]] must be foldable: the
     * cid list and the centroid matrix are a MODEL, not data, and the
     * expression precomputes centroid norms once per instance. */
-  private[expr] def centroidTable(
-      cidsE: org.apache.spark.sql.catalyst.expressions.Expression,
-      centsE: org.apache.spark.sql.catalyst.expressions.Expression)
+  private def centroidTable(cidsE: Expression, centsE: Expression)
       : Seq[(Int, Array[Double])] = {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -134,27 +124,22 @@ object GraftFunctions {
 
   /** The per-subspace PQ code words for a vector column (see
     * [[NearestCodes]] — Euclidean argmin per subspace over the carried
-    * codebooks, code id = codebook index, internal normalization).
-    * Requires [[register]] on the session first. */
+    * codebooks, code id = codebook index, internal normalization). */
   def nearestCodes(v: Column, codebooks: Seq[Seq[Array[Double]]]): Column =
-    call_function("nearest_codes", v,
-      typedLit(codebooks.map(_.map(_.toSeq))))
+    ExpressionColumn(v)(e => NearestCodes(e(0), codebooks))
 
   /** ADC cosine approximation of a raw query against a PQ-coded
     * candidate (see [[AdcCosine]] — score ≈ cosine, null semantics
-    * matching [[CosineSimilarity]]). Requires [[register]] first. */
+    * matching [[CosineSimilarity]]). */
   def adcCosine(q: Column, codes: Column,
                 codebooks: Seq[Seq[Array[Double]]]): Column =
-    call_function("adc_cosine", q, codes,
-      typedLit(codebooks.map(_.map(_.toSeq))))
+    ExpressionColumn(q, codes)(e => AdcCosine(e(0), e(1), codebooks))
 
   /** Arity gate for SQL-surface builders: a wrong-arity call must fail
     * at analysis naming the function's signature, not with a bare
     * IndexOutOfBoundsException from `exprs(2)`. */
-  private[expr] def arity(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      n: Int, signature: String)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+  private def arity(exprs: Seq[Expression], n: Int, signature: String)
+      : Seq[Expression] = {
     require(exprs.length == n,
       s"$signature takes $n arguments, got ${exprs.length}")
     exprs
@@ -165,9 +150,7 @@ object GraftFunctions {
     * literal. `signature` is the calling function's own signature, so a
     * malformed `adc_cosine` literal reports `adc_cosine`'s shape, not
     * `nearest_codes`'s (ADVICE r18). */
-  private[expr] def codebookTable(
-      cbE: org.apache.spark.sql.catalyst.expressions.Expression,
-      signature: String)
+  private def codebookTable(cbE: Expression, signature: String)
       : Seq[Seq[Array[Double]]] = {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -185,9 +168,7 @@ object GraftFunctions {
     }
   }
 
-  private[expr] def constInt(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      name: String): Int = {
+  private def constInt(e: Expression, name: String): Int = {
     val v = try e.eval() catch {
       case t: Throwable => throw new IllegalArgumentException(
         s"nearest_cells: $name must be a constant integer literal", t)

@@ -1,7 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 
 /** RMSE as a typed `Aggregator` (SURVEY §4.3): input (prediction, label),
   * buffer (sum of squared error, count), output sqrt(sse/n).
@@ -31,4 +31,8 @@ object RmseAggregator
     Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)
 
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+
+  /** Column-ready form: `df.agg(RmseAggregator.agg(pred, label))`. */
+  val agg: UserDefinedFunction = org.apache.spark.sql.functions.udaf(this,
+    Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble))
 }

@@ -5,11 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** One decoded media item: opaque binary payload + typed metadata.
-  * `pixels` is the decoded feature payload (stubbed — see [[Multimodal]]).
-  */
-case class MediaItem(media_id: Long, kind: String, n_bytes: Long,
-    width: Int, height: Int)
+/** One decoded media item: typed metadata plus `pixels`, the decoded
+  * feature payload (stubbed — see [[Multimodal]]). */
 case class DecodedMedia(media_id: Long, kind: String, width: Int, height: Int,
     pixels: Array[Float])
 /** Parsed RIFF/WAVE header fields (all from the byte payload). */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
-import graft.expr.GraftFunctions
+import graft.expr.RmseAggregator
 import graft.rec.{AlsPipeline, Ratings}
 
 /** Recommender-core catalog (SURVEY §2.10, §3.1–3.3) over the synthesized
@@ -69,13 +69,12 @@ object Recommender {
   val rmseBaseline = Q(
     "q33_rmse_baseline",
     (s, d) => {
-      GraftFunctions.register(s)
       val r = Ratings.view(s, d)
       val itemAvg = r.groupBy(col("item_id")).agg(avg(col("rating")).as("pred"))
       // item-dimension-sized predictor table: broadcast so the ratings
       // fact is not shuffled for the join
       r.join(broadcast(itemAvg), Seq("item_id"))
-        .agg(round(call_function("rmse_agg", col("pred"), col("rating")), 6)
+        .agg(round(RmseAggregator.agg(col("pred"), col("rating")), 6)
           .as("rmse"))
     },
     Some(s"""WITH r AS ($rview),

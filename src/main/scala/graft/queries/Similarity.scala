@@ -5,6 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
 
 import graft.{Q, SessionIds, Tables}
 import graft.expr.GraftFunctions
@@ -41,18 +42,9 @@ object Similarity {
     Array.fill(NPlanes)(Array.fill(Dim)(rnd.nextGaussian()))
   }
 
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bands",
-      exprs => graft.expr.HyperplaneBands(exprs.head, planes, Bands, RowsPerBand),
-      "built-in")
-    Tables.embeddings(s, d)
-  }
-
   /** All band buckets in one pass (see [[graft.expr.HyperplaneBands]]). */
   private def bandBuckets(e: Column): Column =
-    call_function("hyperplane_bands", e)
+    ExpressionColumn(e)(x => graft.expr.HyperplaneBands(x(0), planes, Bands, RowsPerBand))
 
   /** Brute-force cosine top-5 neighbors for probes vec_id<10 (SURVEY-brief
     * ANN baseline). Probe side broadcasts; candidate scan streams once —
@@ -61,7 +53,7 @@ object Similarity {
   val annTopk = Q(
     "q20_ann_topk",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val cands = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
@@ -110,7 +102,7 @@ object Similarity {
   val embeddingNeardup = Q(
     "q21_embedding_neardup",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
       val n = rowCountCache.getOrElseUpdate(d, e.count())
       require(n <= ExactNeardupMaxRows,
         s"q21_embedding_neardup is the exact all-pairs correctness anchor " +
@@ -148,7 +140,7 @@ object Similarity {
   val lshNeardup = Q(
     "q22_lsh_neardup",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
       val sig = e.select(
         col("vec_id"), col("embedding"), bandBuckets(col("embedding")).as("bks"))
       val exploded = sig.select(
@@ -252,7 +244,7 @@ object Similarity {
     "q57_ivf_ann",
     (s, d) => {
       import graft.rec.Clustering
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           col("embedding").cast("array<double>").as("emb"))
       val cent = Clustering.lloydKMeans(
@@ -334,7 +326,7 @@ object Similarity {
   val ivfRecall = Q(
     "q67_ivf_recall",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val cands = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
@@ -477,7 +469,7 @@ object Similarity {
   val ivfIndexProbe = Q(
     "q83_ivf_index_probe",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val dir = indexDir(s, d, "ivf")(
         graft.rec.IvfIndex.build(e, _, IvfK, IvfIters))
@@ -507,7 +499,7 @@ object Similarity {
     "q101_cluster_neardup",
     (s, d) => {
       import graft.rec.Clustering
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           col("embedding").cast("array<double>").as("emb"))
       val cent = Clustering.lloydKMeans(
@@ -584,7 +576,7 @@ object Similarity {
   val pqAnn = Q(
     "q109_pq_ann",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val probes = defaultProbes(e)
       val (enc, ptab) = pqEncode(e, probes)
@@ -686,7 +678,7 @@ object Similarity {
   val pqRecall = Q(
     "q110_pq_recall",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
@@ -741,7 +733,7 @@ object Similarity {
   val pqIndexProbe = Q(
     "q114_pq_index_probe",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val dir = indexDir(s, d, "pq")(
         graft.rec.PqIndex.build(e, _, PqS, PqSub, PqK, PqIters))
@@ -768,7 +760,7 @@ object Similarity {
     "q111_ivfpq_ann",
     (s, d) => {
       import graft.rec.Clustering
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val ev = e.select(col("vec_id"), col("emb"))
       val probes = defaultProbes(e)
@@ -826,7 +818,7 @@ object Similarity {
   val ivfPqRecall = Q(
     "q112_ivfpq_recall",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
@@ -903,7 +895,7 @@ object Similarity {
   val ivfPqIndexProbe = Q(
     "q116_ivfpq_index_probe",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val dir = indexDir(s, d, "ivfpq")(
         graft.rec.IvfPqIndex.build(e, _, IvfK, IvfIters,
@@ -934,7 +926,7 @@ object Similarity {
   val sq8Ann = Q(
     "q119_sq8_ann",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val stats = e
         .select(posexplode(col("emb")).as(Seq("pos", "v")))
@@ -1003,7 +995,7 @@ object Similarity {
   val sq8Recall = Q(
     "q120_sq8_recall",
     (s, d) => {
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
@@ -1087,7 +1079,7 @@ object Similarity {
     (s, d) => {
       import graft.rec.Clustering
       val k = 5
-      val e = emb(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val cent = Clustering.lloydKMeans(e, IvfK, IvfIters).cache()
       val topk = graft.expr.TopKPairs.agg(k)
@@ -1145,7 +1137,7 @@ object Similarity {
   val adcRerank = Q(
     "q133_adc_rerank",
     (s, d) => {
-      val eraw = emb(s, d)
+      val eraw = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val vhat = eraw.select(col("vec_id"),
         GraftFunctions.l2Normalize(col("emb")).as("emb"))

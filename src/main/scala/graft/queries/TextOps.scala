@@ -3,8 +3,10 @@ package graft.queries
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
 
 import graft.{Q, SessionIds, Tables}
 
@@ -58,7 +60,6 @@ object TextOps {
   /** All char-4-gram shingle occurrences (multiset — no shuffle; one-pass
     * via the char_shingles expression). */
   private def rawShingles(docs: DataFrame): DataFrame = {
-    graft.expr.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       explode(graft.expr.GraftFunctions.charShingles(col("text"), 4)).as("s"))
   }
@@ -239,15 +240,10 @@ object TextOps {
     Array.fill(K)((rnd.nextInt(1000000).toLong + 1, rnd.nextInt(1000000).toLong + 1))
   }
 
-  /** Registers the one-pass signature expression (see [[graft.expr.MinHashSig]])
+  /** The one-pass signature expression (see [[graft.expr.MinHashSig]])
     * with THIS catalog's seeded coefficients. */
-  private def minhashSigCol(s: SparkSession, text: Column): Column = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => graft.expr.MinHashSig(exprs.head, 4, minhashCoef, P),
-      "built-in")
-    call_function("minhash_sig", text)
-  }
+  private def minhashSigCol(text: Column): Column =
+    ExpressionColumn(text)(e => graft.expr.MinHashSig(e(0), 4, minhashCoef, P))
 
   // -- shared faces for the streaming near-dup operator ---------------
   // (graft.stream.DedupStream MUST band and sign exactly as the batch
@@ -256,8 +252,7 @@ object TextOps {
   // functions rather than restating the formulas.)
   private[graft] def lshSigLen: Int = K
   private[graft] def lshBucketCapShared: Int = LshBucketCap
-  private[graft] def sigColShared(s: SparkSession, text: Column): Column =
-    minhashSigCol(s, text)
+  private[graft] def sigColShared(text: Column): Column = minhashSigCol(text)
   /** [[bandedOf]] keeping the signature column alongside each banded
     * row — the stream's per-bucket state stores it for the pair's
     * est_jaccard. */
@@ -297,7 +292,7 @@ object TextOps {
   private def signatures(s: SparkSession, d: String): DataFrame =
     sigCache.getOrElseUpdate((graft.SessionIds.of(s), d), {
       Tables.documents(s, d)
-        .select(col("doc_id"), minhashSigCol(s, col("text")).as("sig"))
+        .select(col("doc_id"), minhashSigCol(col("text")).as("sig"))
         .where(col("sig").isNotNull)
     }).cache()
 
@@ -1114,7 +1109,8 @@ object TextOps {
       val isSet = (p: Column) => {
         val word = element_at(col("bits"),
           (((p - pmod(p, lit(32L))) / 32) + 1).cast("int"))
-        (call_function("shiftright", word, pmod(p, lit(32L)).cast("int"))
+        // functions.shiftright takes a constant shift; this one varies per row
+        (ExpressionColumn(word, pmod(p, lit(32L)).cast("int"))(e => ShiftRight(e(0), e(1)))
           % 2) === 1
       }
       gd.crossJoin(broadcast(bloom))

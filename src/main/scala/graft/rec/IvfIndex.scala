@@ -120,7 +120,6 @@ object IvfIndex {
   def buildLarge(vectors: DataFrame, dir: String, k: Int,
                  iters: Int = 20): Unit = {
     val spark = vectors.sparkSession
-    GraftFunctions.register(spark)
     import spark.implicits._
     val nRows = vectors.count()
     val train = fitOrder(boundedSample(vectors, nRows))
@@ -181,7 +180,6 @@ object IvfIndex {
     * self-retrieval contract, so the two metrics keep twin entry
     * points sharing one layout and one [[compact]] path. */
   def appendLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
-    GraftFunctions.register(spark)
     val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     vectors
       .withColumn("cid",
@@ -214,7 +212,6 @@ object IvfIndex {
   def encodePqLarge(spark: SparkSession, dir: String, s: Int = 4,
                     subDim: Int = 16, k: Int = 256,
                     iters: Int = 20): Unit = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cells = spark.read.parquet(s"$dir/cells")
     val nRows = cells.count()
@@ -258,7 +255,6 @@ object IvfIndex {
     * [[encodePqLarge]] after a rebuild) — per-subspace code geometry
     * drifts with the same distribution shift cell geometry does. */
   def appendPqLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
-    GraftFunctions.register(spark)
     val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     val cbs = readPqCodebooks(spark, dir)
     vectors
@@ -309,7 +305,6 @@ object IvfIndex {
     * pruning — and rank candidates by exact cosine. */
   def probe(spark: SparkSession, dir: String, probes: DataFrame,
             nprobe: Int = 2, topK: Int = 3): DataFrame = {
-    GraftFunctions.register(spark)
     val cent = spark.read.parquet(s"$dir/centroids")
     val pc = Clustering.assignCells(probes, cent, nprobe)
       .select(col("vec_id").as("probe_id"), col("emb").as("pe"),

@@ -115,7 +115,7 @@ object DedupStream {
       else docs.select(col("doc_id"), col("text"), lit(0L).as("ts"))
     val signed = withTs
       .select(col("doc_id"),
-        TextOps.sigColShared(s, col("text")).as("sig"), col("ts"))
+        TextOps.sigColShared(col("text")).as("sig"), col("ts"))
       .where(col("sig").isNotNull)
     val bandedDf = TextOps.bandedKeepSig(signed)
       .select(col("band"), col("bucket"), col("doc_id"), col("sig"), col("ts"))

@@ -167,7 +167,6 @@ object StreamOps {
           GraftFunctions.cosineTopN(col("interest"), catalog.map(_._1),
             catalog.map(_._2), n).as("top")), itemType)
       case None =>
-        GraftFunctions.register(interests.sparkSession)
         val scored = interests.crossJoin(broadcast(itemFeatures))
           .withColumn("score",
             GraftFunctions.cosineSimilarity(col("interest"), col("features")))
@@ -298,7 +297,6 @@ object StreamOps {
     * growing. */
   def buildServeIndex(itemFeatures: DataFrame, k: Int = 16,
                       iters: Int = 3): (DataFrame, DataFrame) = {
-    GraftFunctions.register(itemFeatures.sparkSession)
     val train = graft.rec.IvfIndex.boundedSample(
         itemFeatures.select(col("itemId").as("vec_id"), col("features").as("emb")),
         itemFeatures.count())
@@ -392,7 +390,6 @@ object StreamOps {
   private[stream] def routeCells(interests: DataFrame,
                                  centroids: Seq[(Int, Array[Double])],
                                  nprobe: Int): DataFrame = {
-    GraftFunctions.register(interests.sparkSession)
     interests.select(col("userId"), col("interest"),
       explode(GraftFunctions.nearestCells(col("interest"), centroids, nprobe))
         .as("cid"))

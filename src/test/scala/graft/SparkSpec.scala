@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -25,4 +25,16 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Rows as sorted text lines, doubles as their raw bits: equal lines
+    * mean bit-identical rows. */
+  protected def bitLines(df: DataFrame): Seq[String] = {
+    def text(v: Any): String = v match {
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+      case s: scala.collection.Seq[_] => s.map(text).mkString("[", ",", "]")
+      case r: Row => r.toSeq.map(text).mkString("(", ",", ")")
+      case other => String.valueOf(other)
+    }
+    df.collect().map(_.toSeq.map(text).mkString("|")).sorted.toSeq
+  }
 }

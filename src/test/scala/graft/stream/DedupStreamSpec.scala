@@ -51,7 +51,7 @@ class DedupStreamSpec extends SparkSpec {
   private def bandedRows(): Array[(Long, Seq[Long], Int, String)] =
     TextOps.bandedKeepSig(
       graft.Tables.documents(spark, sfDir)
-        .select($"doc_id", TextOps.sigColShared(spark, $"text").as("sig"))
+        .select($"doc_id", TextOps.sigColShared($"text").as("sig"))
         .where($"sig".isNotNull))
       .as[(Long, Seq[Long], Int, String)].collect()
 
@@ -214,6 +214,52 @@ class DedupStreamSpec extends SparkSpec {
         Seq((9L, text, 15000L)),   // within horizon: pairs with 1
         Seq((11L, text, 19000L)))) // still within: pairs with 1 and 9
     assert(pairs == List((1L, 9L), (1L, 11L), (9L, 11L)), s"got $pairs")
+  }
+
+  // --- recovery: a restart from the checkpoint changes no output -------
+
+  /** The fixture corpus as 4 micro-batches of (doc_id, text, ts) in
+    * doc_id order, ts rising 10 ms per doc, through the operator on one
+    * checkpoint directory; with `restartAfter = Some(b)` the query is
+    * stopped after b batches and a new instance resumes from the same
+    * checkpoint. Returns each batch's distinct pairs by batch id. */
+  private def checkpointedPairs(horizon: Option[java.time.Duration],
+                                restartAfter: Option[Int])
+      : Map[Long, Seq[(Long, Long, Double)]] = {
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select($"doc_id", $"text").as[(Long, String)]
+      .collect().sortBy(_._1).map { case (id, t) => (id, t, 10000L + id * 10) }
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("dedup-ckpt").toString
+    val in = MemoryStream[(Long, String, Long)]
+    val out = mutable.Map.empty[Long, Seq[(Long, Long, Double)]]
+    def start() = DedupStream.nearDupPairs(
+        in.toDF().toDF("doc_id", "text", "ts"), idleHorizon = horizon)
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[NearDupPair], id: Long) =>
+        val rows = b.dropDuplicates("a_id", "b_id").collect()
+          .map(p => (p.a_id, p.b_id, p.est_jaccard)).sorted.toSeq
+        out.synchronized { out(id) = rows }; ()
+      }
+      .start()
+    val batches = docs.grouped(math.ceil(docs.length / 4.0).toInt).toSeq
+    var q = start()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      if (restartAfter.contains(i)) { q.stop(); q = start() }
+      in.addData(b.toIndexedSeq); q.processAllAvailable()
+    } finally q.stop()
+    out.toMap
+  }
+
+  test("a restart from the checkpoint emits the pairs of an uninterrupted run") {
+    Seq(None, Some(java.time.Duration.ofMillis(2000))).foreach { horizon =>
+      val whole = checkpointedPairs(horizon, restartAfter = None)
+      val resumed = checkpointedPairs(horizon, restartAfter = Some(2))
+      assert(whole.values.exists(_.nonEmpty), s"horizon $horizon: no pair emitted")
+      assert(resumed == whole,
+        s"horizon $horizon: restarted run's pairs differ from an uninterrupted run")
+    }
   }
 
   test("the (cap+1)-th member tombstones its bucket and emits nothing") {
