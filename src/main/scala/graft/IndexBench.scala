@@ -212,8 +212,7 @@ object IndexBench {
     (1 to increments).foreach(i => graft.rec.IvfIndex.appendLarge(
       spark, e.where(col("vec_id") >= i * sliceRows &&
         col("vec_id") < (i + 1) * sliceRows), cosDir))
-    val cosCent = spark.read.parquet(s"$cosDir/centroids").cache()
-    cosCent.count()
+    val cosCent = graft.rec.IvfIndex.centroids(spark, cosDir)
     val cosProbes = probes
       .select(col("vec_id").cast("int").as("userId"), col("emb").as("interest"))
       .cache()

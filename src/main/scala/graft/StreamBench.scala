@@ -72,10 +72,11 @@ import graft.stream.{RatingEvent, StreamOps}
   * swaps each group's config pair to the one ANN serve,
   * [[StreamOps.topNForUsersAnn]], over its two cells sources:
   * `serve_ann_evict` reads the cached cells of
-  * [[StreamOps.buildServeIndex]] (relational Lloyd quantizer,
-  * [[StreamOps.serveCells]] K), `serve_dpp_evict` the cid-PARTITIONED
-  * parquet of [[StreamOps.buildServeIndexPartitioned]] (sampled MLlib
-  * quantizer, [[StreamOps.serveCellsPartitioned]] K), where each batch
+  * [[StreamOps.buildServeIndex]] ([[StreamOps.serveCells]] K),
+  * `serve_dpp_evict` the cid-PARTITIONED parquet of
+  * [[StreamOps.buildServeIndexPartitioned]]
+  * ([[StreamOps.serveCellsPartitioned]] K) — one sampled seeded MLlib
+  * quantizer, two cell counts — where each batch
   * reads only the touched cells and nothing catalog-sized is ever
   * cached. Both index builds are timed per group (`ann_iN` / `dpp_iN`
   * in `index_build_ms`). Catalog groups are capped at 4M items: the
@@ -311,7 +312,7 @@ object StreamBench {
         groups.flatMap { case (t, rs) =>
           val (items, nItems) = tileItems(t)
           if (dppMode) {
-            var annIdx: (DataFrame, DataFrame) = null
+            var annIdx: (Seq[(Int, Array[Double])], DataFrame) = null
             buildMsParts(s"ann_i$nItems") = math.round(Harness.elapsedMs {
               annIdx = StreamOps.buildServeIndex(items,
                 k = StreamOps.serveCells(nItems), iters = 8)
@@ -320,7 +321,7 @@ object StreamBench {
             serveKParts(s"dpp_i$nItems") = StreamOps.serveCellsPartitioned(nItems)
             val dppDir = java.nio.file.Files
               .createTempDirectory(s"graft-sb-dpp-$nItems").toString
-            var dppIdx: (DataFrame, DataFrame) = null
+            var dppIdx: (Seq[(Int, Array[Double])], DataFrame) = null
             buildMsParts(s"dpp_i$nItems") = math.round(Harness.elapsedMs {
               dppIdx = StreamOps.buildServeIndexPartitioned(items, dppDir,
                 k = StreamOps.serveCellsPartitioned(nItems))
@@ -362,22 +363,22 @@ object StreamBench {
                     shortlist = 0)),
                   r, items, nItems)))
             }
-            annIdx._1.unpersist(); annIdx._2.unpersist()
-            dppIdx._1.unpersist()
+            annIdx._2.unpersist()
             if (t != 1) items.unpersist()
             out
           } else {
             // eager, timed build — no micro-batch (and no first-run skew
             // between the exact and ANN configs) ever pays the k-means
-            var idx: (DataFrame, DataFrame) = null
+            var idx: (Seq[(Int, Array[Double])], DataFrame) = null
             // cell count scales with the catalog (serveCells: nlist ≈ √N,
             // capped) — the r15 preopt sweep ran the r14 fixed K=16 and
             // measured the ANN ceiling tracking its 12.5% scan fraction
-            // iters = 8: Lloyd at the K=64 cap converges slower than the
-            // r14 K=16 default (measured recall 0.936 at 3 rounds vs
-            // 0.974 at 8, AnnServeSpec many-topic corpus); training runs
-            // on the bounded sample, so the extra rounds don't scale
-            // with the catalog
+            // iters = 8: the rounds AnnServeSpec pins recall at the K=64
+            // cap with (many-topic corpus, both id layouts; the 3-round
+            // default was measured short of the pin there when the
+            // quantizer was a relational Lloyd: 0.936 vs 0.974 at 8);
+            // training runs on the bounded sample, so the extra rounds
+            // don't scale with the catalog
             buildMsParts(s"i$nItems") = math.round(Harness.elapsedMs {
               idx = StreamOps.buildServeIndex(items,
                 k = StreamOps.serveCells(nItems), iters = 8)
@@ -390,7 +391,7 @@ object StreamBench {
                 Some(df => StreamOps.topNForUsersAnn(df, idx._1, idx._2, 10)),
                 r, items, nItems))
             }
-            idx._1.unpersist(); idx._2.unpersist()
+            idx._2.unpersist()
             if (t != 1) items.unpersist()
             out
           }

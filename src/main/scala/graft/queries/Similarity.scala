@@ -271,8 +271,8 @@ object Similarity {
         .select(col("probe_id"), col("neighbor_id"), col("rank"),
           round(col("score"), 6).as("score"))
         .orderBy(col("probe_id"), col("rank"))
-        // 30-row result, cached so q67 reuses it (and the quantizer
-        // rounds underneath are themselves cached in lloydKMeans)
+        // 30-row result, cached so q67 reuses it (the quantizer
+        // underneath is itself cached by lloydKMeans)
         .cache()
     },
     Some(s"""$ivfCtes

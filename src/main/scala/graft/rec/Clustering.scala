@@ -1,32 +1,17 @@
 package graft.rec
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
-/** Embedding clustering (semantic-dedup / IVF-quantizer building block):
-  * seeded MLlib k-means over the embeddings table, plus a fully
-  * relational Lloyd's k-means whose every step is a DataFrame transform —
-  * the coarse quantizer q57's IVF index is built from (and, because it is
-  * deterministic and plan-only, the one the DuckDB oracle can mirror).
+/** Relational Lloyd's k-means, whose every step is a DataFrame
+  * transform: the Euclidean coarse quantizer of q57's IVF index, the
+  * IVF/PQ catalog queries and [[IvfIndex.build]], deterministic and
+  * plan-only, so the DuckDB oracle can mirror it. The cosine quantizer
+  * of the large-corpus index and the streaming serve is
+  * [[IvfIndex.fitCosine]] (seeded MLlib k-means on the unit sphere).
   */
 object Clustering {
-
-  def clusterEmbeddings(s: SparkSession, d: String, k: Int = 10,
-                        seed: Long = 42L): DataFrame = {
-    val df = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        array_to_vector(col("embedding")).as("features"))
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(df)
-    model.transform(df)
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        col("prediction").cast("long").as("cluster"))
-      .orderBy(col("vec_id"))
-  }
 
   /** Euclidean distance of a vector column to a centroid column, folded
     * sequentially in index order (bit-identical to a scalar loop over the
@@ -86,7 +71,7 @@ object Clustering {
     * 6dp-rounded argmin (which also absorbs the aggregation-order ulp
     * differences a fused groupBy can introduce — the same tolerance the
     * cross-engine oracle already relies on). Input `(grp, vec_id, emb)`;
-    * output `(grp, cid, c)`, cached like [[lloydKMeans]]'s rounds. */
+    * output `(grp, cid, c)`, in [[lloydKMeans]]'s [[rounds]]. */
   def lloydKMeansGrouped(vectors: DataFrame, k: Int,
                          iters: Int): DataFrame = {
     // per-group k LOWEST ACTUAL ids (ADVICE r14): `vec_id < k` only
@@ -100,7 +85,7 @@ object Clustering {
       .withColumn("__seed_rn", row_number().over(seedW))
       .where(col("__seed_rn") <= k)
       .select(col("grp"), col("vec_id").as("cid"), col("emb").as("c"))
-    (1 to iters).foldLeft(init) { (cent, _) =>
+    rounds(init, iters) { cent =>
       assignCellsGrouped(vectors, cent)
         .select(col("grp"), col("cid"),
           posexplode(col("emb")).as(Seq("pos", "v")))
@@ -110,13 +95,27 @@ object Clustering {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("va")))),
           x => x.getField("va")).as("c"))
-        .cache()
     }
   }
 
-  /** Lloyd's k-means as a pure relational plan: deterministic init (the K
-    * lowest vec_ids), a fixed number of unrolled assign/update rounds, no
-    * driver-side action anywhere. Returns (cid, c: array<double>).
+  /** `iters` Lloyd rounds from `init`, each reading the last one's K-row
+    * table as a collected local relation, so every scan runs once and
+    * the plan text (printed by every action) stays flat: nesting the
+    * rounds doubled it per round, 23k chars at 2 rounds and 8.3M at 10
+    * (400 dim-8 vectors, K=4). The last round is returned cached. */
+  private def rounds(init: DataFrame, iters: Int)(
+      round: DataFrame => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init) { (cent, i) =>
+      val next = round(cent)
+      if (i == iters) next.cache()
+      else cent.sparkSession.createDataFrame(
+        java.util.Arrays.asList(next.collect(): _*), next.schema)
+    }
+
+  /** Lloyd's k-means as a relational plan: deterministic init (the K
+    * lowest vec_ids), a fixed number of unrolled assign/update rounds,
+    * each round's K-row result read back as a leaf ([[rounds]]).
+    * Returns (cid, c: array<double>).
     *
     * Each round is one broadcast assignment pass plus one groupBy over
     * (cid, pos) exploded elements — K·dim cells, trivially small — so the
@@ -136,11 +135,7 @@ object Clustering {
     // cross-engine oracles (SQL spelling `vec_id < k`) are unaffected.
     val init = vectors.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cid"), col("emb").as("c"))
-    (1 to iters).foldLeft(init) { (cent, _) =>
-      // Each round's K-row centroid table is cached: without it the
-      // foldLeft lineage makes round i re-execute rounds 1..i-1's full
-      // assignment scans (O(n·iters²) total); with it each round's scan
-      // runs once and later rounds read K rows from memory.
+    rounds(init, iters) { cent =>
       assignCells(vectors, cent, nprobe = 1)
         .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
         .groupBy(col("cid"), col("pos"))
@@ -149,7 +144,6 @@ object Clustering {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("va")))),
           x => x.getField("va")).as("c"))
-        .cache()
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.rec
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,7 +54,7 @@ object IvfIndex {
     * over the full corpus exceeds the top-K sort fallback threshold and
     * plans a FULL sort of N rows. Normalize only the survivors (the
     * normalize is an interpreted higher-order expression). */
-  private[graft] def boundedSample(vectors: DataFrame, nRows: Long): DataFrame = {
+  private def boundedSample(vectors: DataFrame, nRows: Long): DataFrame = {
     val raw = vectors.select(col("vec_id"), col("emb"))
     if (nRows <= LargeSampleCap) raw
     else {
@@ -65,8 +65,8 @@ object IvfIndex {
     }
   }
 
-  /** The input of every seeded MLlib quantizer fit ([[buildLarge]],
-    * [[encodePqLarge]]): the sample hash-partitioned by `vec_id` into a
+  /** The input of every seeded MLlib quantizer fit ([[cosineSample]]):
+    * the sample hash-partitioned by `vec_id` into a
     * fixed [[FitPartitions]] and sorted by `vec_id` inside each, so the
     * fit's random init and its per-partition sums see the same rows in
     * the same order on every run and every host. Under the sample cap
@@ -78,6 +78,38 @@ object IvfIndex {
 
   private val FitPartitions = 4
 
+  /** The training set of every cosine fit: the [[boundedSample]] of
+    * `(vec_id, emb)` rows in [[fitOrder]], on the unit sphere (where
+    * Euclidean k-means is cosine clustering). */
+  private def cosineSample(vectors: DataFrame): DataFrame =
+    fitOrder(boundedSample(vectors, vectors.count()))
+      .select(GraftFunctions.l2Normalize(col("emb")).as("emb"))
+
+  /** The one trainer of the cosine quantizer and the PQ codebooks:
+    * seeded MLlib k-means over an `emb` column, random init (k-means||
+    * init is a driver-local k-means++, minutes at K in the thousands).
+    * Returns the `(cid, centroid)` model in MLlib's center order. */
+  private def kMeans(train: DataFrame, k: Int, iters: Int,
+                     seed: Long): Seq[(Int, Array[Double])] =
+    new KMeans()
+      .setK(k).setSeed(seed).setMaxIter(iters).setInitMode("random")
+      .fit(train.select(array_to_vector(col("emb")).as("features")))
+      .clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq
+
+  /** The cosine IVF quantizer of `(vec_id, emb)` rows. [[buildLarge]]
+    * and `StreamOps.buildServeIndex` both train through it, so their
+    * models for one catalog are equal bit for bit. */
+  private[graft] def fitCosine(vectors: DataFrame, k: Int,
+                               iters: Int): Seq[(Int, Array[Double])] =
+    kMeans(cosineSample(vectors), k, iters, seed = 42L)
+
+  /** The cell of each `emb` under a cosine quantizer `model`: the
+    * top-1 of the serve's own router ([[graft.expr.NearestCells]]), so
+    * an item's cell is by construction its own probe's nearest. */
+  private[graft] def cellOf(emb: Column,
+                            model: Seq[(Int, Array[Double])]): Column =
+    element_at(GraftFunctions.nearestCells(emb, model, 1), 1)
+
   /** Large-corpus COSINE build — the streaming serve's regime and the
     * shared writer behind `StreamOps.buildServeIndexPartitioned`
     * (VERDICT r16 item 4: one quantizer lifecycle for the batch index
@@ -85,16 +117,9 @@ object IvfIndex {
     *
     * Differences from the small-corpus [[build]], each forced by scale:
     *
-    *  - quantizer fit on a bounded NORMALIZED sample (deterministic
-    *    hash-ordered, fed in [[fitOrder]]; Euclidean k-means on the unit
-    *    sphere is cosine clustering) with seeded MLlib k-means, `initMode=random`:
-    *    k-means|| init runs a driver-local k-means++ over ~k·log n
-    *    candidates — minutes at K in the thousands — while seeded
-    *    random init plus the full Lloyd budget partitions cells just as
-    *    well (recall is spec-gated either way). [[build]]'s relational
-    *    lloydKMeans stays the ORACLE-mirrorable path for small corpora;
-    *    at K in the thousands its per-round interpreted assignment is
-    *    minutes where MLlib's native train is seconds.
+    *  - quantizer fit by [[fitCosine]] on a bounded NORMALIZED sample;
+    *    at K in the thousands [[build]]'s relational lloydKMeans (the
+    *    ORACLE-mirrorable path) is minutes where MLlib's is seconds.
     *  - assignment is ONE streaming codegen scan via the native
     *    [[graft.expr.NearestCells]] expression — O(N) rows, K·d flops
     *    per row against the plan-carried centroid matrix. The r16 form
@@ -116,20 +141,14 @@ object IvfIndex {
     * file per cell: repartitioned by cid before the partitioned write),
     * `$dir/centroids` alongside — so [[append]]-accumulated fragments
     * [[compact]] identically (AnnServeSpec asserts probe equality over
-    * a compacted serve index). */
+    * a compacted serve index). Returns the fitted model, which a serve
+    * on the index carries. */
   def buildLarge(vectors: DataFrame, dir: String, k: Int,
-                 iters: Int = 20): Unit = {
+                 iters: Int = 20): Seq[(Int, Array[Double])] = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val nRows = vectors.count()
-    val train = fitOrder(boundedSample(vectors, nRows))
-      .select(GraftFunctions.l2Normalize(col("emb")).as("emb"))
-    val model = new KMeans()
-      .setK(k).setSeed(42L).setMaxIter(iters).setInitMode("random")
-      .fit(train.select(array_to_vector(col("emb")).as("features")))
-    val centSeq = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq
-    centSeq.toDF("cid", "c").write.mode("overwrite")
+    val model = fitCosine(vectors, k, iters)
+    model.toDF("cid", "c").write.mode("overwrite")
       .parquet(s"$dir/centroids")
     // one streaming pass: no join, no aggregate, no shuffle but the
     // final repartition-by-cid that makes each cell one file. Rows are
@@ -139,19 +158,22 @@ object IvfIndex {
     // monotone vec_id row-group/page statistics for the PQ serve's
     // rerank point-fetch, and delta-encodes the id column tighter.
     vectors
-      .withColumn("cid",
-        element_at(GraftFunctions.nearestCells(col("emb"), centSeq, 1), 1))
+      .withColumn("cid", cellOf(col("emb"), model))
       .select(col("vec_id"), col("emb"), col("cid"))
       .repartition(col("cid"))
       .sortWithinPartitions(col("cid"), col("vec_id"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/cells")
+    model
   }
 
-  /** A `(cid, c)` centroid table as the driver-side model the cosine
-    * router ([[graft.expr.NearestCells]]) carries, sorted by cid: K rows,
-    * so collecting them is reading a model, not moving data. */
-  private[graft] def centroids(cent: DataFrame): Seq[(Int, Array[Double])] =
-    cent.select(col("cid").cast("int"), col("c")).collect()
+  /** The stored centroids of the index under `dir` as the driver-side
+    * model the cosine router ([[graft.expr.NearestCells]]) carries,
+    * sorted by cid: K rows, so collecting them is reading a model, not
+    * moving data. */
+  private[graft] def centroids(spark: SparkSession,
+                               dir: String): Seq[(Int, Array[Double])] =
+    spark.read.parquet(s"$dir/centroids")
+      .select(col("cid").cast("int"), col("c")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
 
   /** Append NEW vectors to an existing index with the STORED quantizer
@@ -180,20 +202,18 @@ object IvfIndex {
     * self-retrieval contract, so the two metrics keep twin entry
     * points sharing one layout and one [[compact]] path. */
   def appendLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
-    val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     vectors
-      .withColumn("cid",
-        element_at(GraftFunctions.nearestCells(col("emb"), centSeq, 1), 1))
+      .withColumn("cid", cellOf(col("emb"), centroids(spark, dir)))
       .select(col("vec_id"), col("emb"), col("cid"))
       .write.mode("append").partitionBy("cid").parquet(s"$dir/cells")
   }
 
   /** PQ-encode an existing [[buildLarge]] index into its IVFADC serving
     * twin (Jégou et al. 2011 §V; FAISS IndexIVFPQ): per-subspace
-    * codebooks fit on the SAME bounded normalized sample discipline as
-    * the coarse quantizer (seeded MLlib k-means per subspace — the
-    * large-corpus regime's trainer; `PqIndex.trainCodebooks` stays the
-    * oracle-mirrorable path), then ONE streaming
+    * codebooks fit on the coarse quantizer's own training set
+    * ([[cosineSample]]) by its own trainer ([[kMeans]], seeded per
+    * subspace; `PqIndex.trainCodebooks` stays the oracle-mirrorable
+    * path), then ONE streaming
     * [[graft.expr.NearestCodes]] scan encodes the full corpus — O(N)
     * rows, s·k·subDim flops per row, no join/shuffle/aggregate (the
     * relational encoder's fan-out join + `first(emb)`/`min_by`
@@ -214,20 +234,11 @@ object IvfIndex {
                     iters: Int = 20): Unit = {
     import spark.implicits._
     val cells = spark.read.parquet(s"$dir/cells")
-    val nRows = cells.count()
-    val train = fitOrder(boundedSample(cells.select(col("vec_id"), col("emb")), nRows))
-      .select(GraftFunctions.l2Normalize(col("emb")).as("emb"))
-      .cache()
-    val nTrain = train.count()
+    val train = cosineSample(cells).cache()
+    val kSub = math.min(k.toLong, train.count()).toInt
     val codebooks: Seq[Seq[Array[Double]]] = (0 until s).map { sub =>
-      val slices = train.select(
-        array_to_vector(slice(col("emb"), sub * subDim + 1, subDim))
-          .as("features"))
-      val kSub = math.min(k, nTrain.toInt)
-      val model = new KMeans()
-        .setK(kSub).setSeed(42L + sub).setMaxIter(iters).setInitMode("random")
-        .fit(slices)
-      model.clusterCenters.map(_.toArray).toSeq
+      kMeans(train.select(slice(col("emb"), sub * subDim + 1, subDim).as("emb")),
+        kSub, iters, seed = 42L + sub).map(_._2)
     }
     train.unpersist()
     codebooks.zipWithIndex.flatMap { case (cb, sub) =>
@@ -255,11 +266,9 @@ object IvfIndex {
     * [[encodePqLarge]] after a rebuild) — per-subspace code geometry
     * drifts with the same distribution shift cell geometry does. */
   def appendPqLarge(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
-    val centSeq = centroids(spark.read.parquet(s"$dir/centroids"))
     val cbs = readPqCodebooks(spark, dir)
     vectors
-      .withColumn("cid",
-        element_at(GraftFunctions.nearestCells(col("emb"), centSeq, 1), 1))
+      .withColumn("cid", cellOf(col("emb"), centroids(spark, dir)))
       .withColumn("codes", GraftFunctions.nearestCodes(col("emb"), cbs))
       .select(col("vec_id"), col("codes"), col("cid"))
       .write.mode("append").partitionBy("cid").parquet(s"$dir/pq_cells")

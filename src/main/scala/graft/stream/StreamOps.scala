@@ -242,21 +242,19 @@ object StreamOps {
     * et al.'s IVFADC regime) balances per-probe routing work (K cosines
     * against the centroids) against cell-scan work (≈ nprobe/K × N items
     * scored); the optimum of K·d + (nprobe/K)·N·d is K = √(nprobe·N).
-    * Floor 16 (tiny catalogs gain nothing from finer cells), cap 64: the
-    * relational Lloyd quantizer of [[buildServeIndex]] pays K·dim
-    * aggregate cells per round, so at the fixed cap quantizer training
-    * and assignment stay flat across catalog sizes, which is what keeps
-    * serve-index builds off the stream-start critical path (§8.10's
-    * measured property). With the r14 default (K=16, nprobe=2) the ANN
-    * serve scanned 12.5% of the catalog no matter how large it grew; at
-    * the cap it scans 3.1% — the r15 catalog sweep measured the
-    * 200k-item serve ceiling moving with exactly this fraction.
-    * Deep-recall behavior under the finer partitioning is pinned in
-    * AnnServeSpec's many-topic corpus (recall ≈ 1 when cells are no
-    * coarser than the corpus's natural topics — the regime a real item
-    * catalog is in; a corpus whose topics are LARGER than 1/K of the
-    * space needs nprobe raised to match, the standard IVF
-    * recall/latency dial).
+    * Floor 16 (tiny catalogs gain nothing from finer cells), cap 64:
+    * the partitioning the serve was measured and pinned at. With the
+    * r14 default (K=16, nprobe=2) the ANN serve scanned 12.5% of the
+    * catalog no matter how large it grew; at the cap it scans 3.1% —
+    * the r15 catalog sweep measured the 200k-item serve ceiling moving
+    * with exactly this fraction, with the build flat across catalog
+    * sizes (training runs on the bounded sample, so K and the rounds,
+    * not |catalog|, set its cost). Deep recall at the cap is pinned in
+    * AnnServeSpec's many-topic corpus, under both id layouts (recall
+    * ≥ 0.95 at K=64, nprobe 2, 8 rounds, when cells are no coarser than
+    * the corpus's natural topics — the regime a real item catalog is
+    * in; a corpus whose topics are LARGER than 1/K of the space needs
+    * nprobe raised to match, the standard IVF recall/latency dial).
     *
     * SMALL-CATALOG REGIME: below [[SmallCatalogCap]] items the law is
     * overruled and K stays at the 16 floor. The √ optimum minimizes
@@ -279,44 +277,34 @@ object StreamOps {
 
   /** Build the static serve-side IVF for [[topNForUsersAnn]] — paid once
     * at stream start, like loading a model: the item catalog is
-    * Lloyd-quantized (the q57 relational k-means) and each item assigned
-    * to its cell. Both outputs are cached and materialized here so no
+    * quantized by the one cosine trainer of the partitioned index
+    * ([[graft.rec.IvfIndex.fitCosine]]: seeded MLlib k-means on the
+    * unit sphere, over the whole catalog up to
+    * [[graft.rec.IvfIndex.LargeSampleCap]] items and a deterministic
+    * hash-ordered sample above it, so training is flat in |catalog|)
+    * and each item assigned to its cell. Returns the driver-side
+    * centroid model and the cells, cached and materialized here so no
     * micro-batch ever pays the build. A catalog too large to cache is
     * served from the cid-partitioned parquet of
-    * [[buildServeIndexPartitioned]] instead; [[topNForUsersAnn]] serves
-    * either cells table.
-    *
-    * The quantizer trains on the unit sphere (the serve ranks by
-    * cosine; see [[GraftFunctions.l2Normalize]]) over
-    * [[graft.rec.IvfIndex.boundedSample]]: the whole catalog up to
-    * [[graft.rec.IvfIndex.LargeSampleCap]] items, a deterministic
-    * hash-ordered sample above it — the lloydKMeans scaladoc's own
-    * 100-TB prescription. The r15 catalog sweep measured the
-    * full-corpus build at 9.2 min for a 200k-item catalog; the sampled
-    * build is flat in |catalog| with only the one-pass assignment
-    * growing. */
-  def buildServeIndex(itemFeatures: DataFrame, k: Int = 16,
-                      iters: Int = 3): (DataFrame, DataFrame) = {
-    val train = graft.rec.IvfIndex.boundedSample(
-        itemFeatures.select(col("itemId").as("vec_id"), col("features").as("emb")),
-        itemFeatures.count())
-      .select(col("vec_id"), GraftFunctions.l2Normalize(col("emb")).as("emb"))
-      .cache()
-    val cent = graft.rec.Clustering.lloydKMeans(train, k, iters).cache()
-    cent.count()
-    train.unpersist()
+    * [[buildServeIndexPartitioned]] instead, whose model for the same
+    * catalog, K and rounds is this one bit for bit;
+    * [[topNForUsersAnn]] serves either cells table. */
+  def buildServeIndex(itemFeatures: DataFrame, k: Int = 16, iters: Int = 3)
+      : (Seq[(Int, Array[Double])], DataFrame) = {
+    val model = graft.rec.IvfIndex.fitCosine(
+      itemFeatures.select(col("itemId").as("vec_id"), col("features").as("emb")),
+      k, iters)
     // cells carry the RAW features for scoring (cosine is scale-invariant,
     // but emitting the caller's own vectors keeps scores bit-comparable
     // with the exact serve); only the cid comes from the normalized
     // space. Assignment is the serve's own router — one shuffle-free
     // pass over the catalog, not a join + aggregation.
     val cells = itemFeatures
-      .withColumn("cid", element_at(GraftFunctions.nearestCells(
-        col("features"), graft.rec.IvfIndex.centroids(cent), 1), 1))
+      .withColumn("cid", graft.rec.IvfIndex.cellOf(col("features"), model))
       .select(col("cid"), col("itemId"), col("features"))
       .cache()
     cells.count()
-    (cent, cells)
+    (model, cells)
   }
 
   /** Cell count for the PARTITIONED serve index: the same √(nprobe·N)
@@ -342,23 +330,20 @@ object StreamOps {
     * serve speaks (itemId, features), the index layout stores
     * (vec_id, emb).
     *
-    * Returns the cached K-row centroid table and the partitioned cells
-    * SCAN — deliberately un-cached: the catalog is never broadcast,
-    * cached or collected, and per-batch I/O is bounded by touched
-    * cells/K of the catalog no matter how large it grows. Reading it
-    * once up front also builds the file index one time so micro-batches
-    * never re-list the partition tree. */
+    * Returns the centroid model [[graft.rec.IvfIndex.buildLarge]]
+    * fitted and the partitioned cells SCAN — deliberately un-cached:
+    * the catalog is never broadcast, cached or collected, and per-batch
+    * I/O is bounded by touched cells/K of the catalog no matter how
+    * large it grows. Reading it once up front also builds the file
+    * index one time so micro-batches never re-list the partition tree. */
   def buildServeIndexPartitioned(itemFeatures: DataFrame, dir: String,
                                  k: Int, iters: Int = 20)
-      : (DataFrame, DataFrame) = {
-    val spark = itemFeatures.sparkSession
-    graft.rec.IvfIndex.buildLarge(
+      : (Seq[(Int, Array[Double])], DataFrame) = {
+    val model = graft.rec.IvfIndex.buildLarge(
       itemFeatures.select(col("itemId").as("vec_id"),
         col("features").as("emb")),
       dir, k, iters)
-    val centLoaded = spark.read.parquet(s"$dir/centroids").cache()
-    centLoaded.count()
-    (centLoaded, readServeCells(spark, dir))
+    (model, readServeCells(itemFeatures.sparkSession, dir))
   }
 
   /** The partitioned cells table of a [[buildServeIndexPartitioned]] /
@@ -371,7 +356,7 @@ object StreamOps {
         col("cid"))
 
   /** Route each interest vector to its `nprobe` cosine-nearest cells as
-    * a PURE PROJECTION: the K-row centroid table rides inside the
+    * a PURE PROJECTION: the K-row centroid model rides inside the
     * native [[graft.expr.NearestCells]] expression (one plan-carried
     * matrix, norms precomputed, tight codegen'd argmax loop) — the same
     * expression that assigns every item to its cell, so an item's own
@@ -444,12 +429,16 @@ object StreamOps {
     * lands in its PartitionFilters, pinned in AnnServeSpec). Cells
     * partition the catalog, so a (user, item) pair scores at most once
     * even at nprobe > 1, and ranking is the shared [[topNByUser]] tail:
-    * ordering and schema match the exact serve row for row. */
-  def topNForUsersAnn(interests: DataFrame, centroids: DataFrame,
+    * ordering and schema match the exact serve row for row.
+    *
+    * `centroids` is the index's driver-side model, as its build
+    * returned it, so the only job a call runs before its caller's
+    * action is the routing collect. */
+  def topNForUsersAnn(interests: DataFrame,
+                      centroids: Seq[(Int, Array[Double])],
                       cells: DataFrame, n: Int,
                       nprobe: Int = 2): DataFrame = {
-    val (routed, _, inTouched) =
-      routeBatch(interests, graft.rec.IvfIndex.centroids(centroids), nprobe)
+    val (routed, _, inTouched) = routeBatch(interests, centroids, nprobe)
     val scored = cells.where(inTouched).join(broadcast(routed), Seq("cid"))
       .withColumn("score",
         GraftFunctions.cosineSimilarity(col("interest"), col("features")))
@@ -528,7 +517,8 @@ object StreamOps {
     * Ranking tail and schema are [[topNByUser]]'s in both modes, so
     * ordering (score desc, itemId asc) and output shape match the
     * exact and raw ANN serves row for row. */
-  def topNForUsersAnnPartitionedPq(interests: DataFrame, centroids: DataFrame,
+  def topNForUsersAnnPartitionedPq(interests: DataFrame,
+                                   centroids: Seq[(Int, Array[Double])],
                                    pqCells: DataFrame,
                                    codebooks: Seq[Seq[Array[Double]]],
                                    rawCells: DataFrame, n: Int,
@@ -536,8 +526,7 @@ object StreamOps {
                                    shortlist: Int = 64): DataFrame = {
     val spark = interests.sparkSession
     val itemType = pqCells.schema("itemId").dataType
-    val centSeq = graft.rec.IvfIndex.centroids(centroids)
-    val (routed, routedRows, inTouched) = routeBatch(interests, centSeq, nprobe)
+    val (routed, routedRows, inTouched) = routeBatch(interests, centroids, nprobe)
     val adcScored = pqCells.where(inTouched).join(broadcast(routed), Seq("cid"))
       .withColumn("score",
         GraftFunctions.adcCosine(col("interest"), col("codes"), codebooks))
@@ -561,13 +550,13 @@ object StreamOps {
     val uIdx = routed.schema.fieldIndex("userId")
     val userRows = routedRows.groupBy(_.get(uIdx)).map(_._2.head).toArray
       .map(r => Row(r.get(uIdx), r.get(routed.schema.fieldIndex("interest"))))
-    val routesPerUser = math.min(nprobe, centSeq.length)
+    val routesPerUser = math.min(nprobe, centroids.length)
     require(userRows.length.toLong * routesPerUser == routedRows.length ||
         routedRows.isEmpty,
       s"topNForUsersAnnPartitionedPq requires one interest row per " +
         s"userId (got ${routedRows.length} routed rows for " +
         s"${userRows.length} users at min(nprobe=$nprobe, K=" +
-        s"${centSeq.length})=$routesPerUser routes/user): the " +
+        s"${centroids.length})=$routesPerUser routes/user): the " +
         "shortlist rerank pairs each user with a single vector")
     // bounded per-user ADC top-`shortlist`, collected to a driver-local
     // relation (the routed-table discipline: it is the fetch join's

@@ -50,6 +50,31 @@ class IoSpec extends SparkSpec {
     assert(hot(MovieLens.genreVocab.indexOf("Western")) == 0)
   }
 
+  test("S9 ::-separated users.dat and tags.dat parse with declared schema; empty fields are null") {
+    val users = MovieLens.readUsersDat(spark, tmpFile("users.dat",
+      "1::F::1::10::48067",
+      "2::M::56::16::70072",
+      "3::::25::::"))
+    assert(users.schema.map(f => (f.name, f.dataType)) ==
+      MovieLens.userSchema.map(f => (f.name, f.dataType)))
+    val u = users.as[(Int, Option[String], Option[Int], Option[Int], Option[String])]
+      .collect().sortBy(_._1).toSeq
+    assert(u == Seq((1, Some("F"), Some(1), Some(10), Some("48067")),
+      (2, Some("M"), Some(56), Some(16), Some("70072")),
+      (3, None, Some(25), None, None)))
+
+    val tags = MovieLens.readTagsDat(spark, tmpFile("tags.dat",
+      "15::4973::excellent!::1215184630",
+      "20::1747::politics::1188263867",
+      "20::2424::::1188263880"))
+    assert(tags.schema.map(f => (f.name, f.dataType)) ==
+      MovieLens.tagSchema.map(f => (f.name, f.dataType)))
+    val t = tags.as[(Int, Int, Option[String], Long)].collect().sortBy(_._2).toSeq
+    assert(t == Seq((20, 1747, Some("politics"), 1188263867L),
+      (20, 2424, None, 1188263880L),
+      (15, 4973, Some("excellent!"), 1215184630L)))
+  }
+
   test("S10 crawler ::-CSV with header parses") {
     val df = MovieLens.readCrawlerCsv(spark,
       tmpFile("scores.csv", "people::movie_name::score",

@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Relational Lloyd's k-means: correctness of the unrolled rounds and —
-  * the round-5 verdict fix — that each round's K-row centroid table is
-  * cached, so round i's plan reads round i-1 from memory instead of
-  * re-executing rounds 1..i-1 (which would make the build O(n·iters²)).
+/** Relational Lloyd's k-means: correctness of the unrolled rounds, and
+  * that round i reads round i-1's K-row centroid table as a leaf
+  * instead of re-executing rounds 1..i-1 (which would make the build
+  * O(n·iters²)) or nesting their plans (which doubles the plan text
+  * each round).
   */
 class ClusteringSpec extends SparkSpec {
   import spark.implicits._
@@ -77,14 +78,33 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("each round reads the previous round's cached centroids (O(n·iters), not O(n·iters²))") {
-    // iters=10: without per-round caching this plan re-executes round i-1
-    // inside round i (quadratic re-scan); with it, the final round's plan
-    // must read centroids from an InMemoryTableScan.
+    // iters=10: without per-round materialization this plan re-executes
+    // round i-1 inside round i (quadratic re-scan); the final round is
+    // cached, so its plan must read centroids from an InMemoryTableScan.
     val cent = Clustering.lloydKMeans(blobs, k = 2, iters = 10)
     assert(cent.count() == 2)
     val p = cent.queryExecution.executedPlan.toString
     assert(p.contains("InMemoryTableScan"),
       s"round-10 plan does not read cached centroids:\n$p")
+  }
+
+  test("the plan stays the same size in rounds: each round reads the last as a leaf") {
+    // a round whose plan nests every earlier round's doubles the plan
+    // text each round; every action prints that text, and at K=64 and
+    // 20 rounds the string alone exhausts the driver heap
+    val vectors = spark.range(400).select(col("id").as("vec_id"),
+      expr("transform(sequence(0, 7), j -> sin(CAST(id * 13 + j AS DOUBLE)))")
+        .as("emb"))
+    /** The plan text an action on the centroid table prints, once run. */
+    def planChars(iters: Int): Int = {
+      val cent = Clustering.lloydKMeans(vectors, k = 4, iters)
+      assert(cent.count() == 4)
+      cent.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+        .length
+    }
+    val (two, ten) = (planChars(2), planChars(10))
+    info(s"plan text: $two chars at 2 rounds, $ten chars at 10 rounds")
+    assert(ten <= 2 * two, s"plan text grows with rounds: $two -> $ten chars")
   }
 
   test("assignCells nprobe=1 and nprobe=2 agree on the nearest cell") {

@@ -91,16 +91,6 @@ class MiscRecSpec extends SparkSpec {
     assert(math.abs(q71 - viaMllib) < 1e-6, s"q71=$q71 vs evaluator=$viaMllib")
   }
 
-  test("k-means clusters embeddings deterministically under a seed") {
-    val a = Clustering.clusterEmbeddings(spark, sfDir, k = 8)
-      .as[(Long, Long, Long)].collect()
-    assert(a.length == 500)
-    assert(a.map(_._3).distinct.length == 8)
-    val b = Clustering.clusterEmbeddings(spark, sfDir, k = 8)
-      .as[(Long, Long, Long)].collect()
-    assert(a.toSeq == b.toSeq)
-  }
-
   test("M7 ALS model persistence round trip preserves predictions") {
     val r = Ratings.view(spark, sfDir).cache()
     val model = AlsPipeline.fit(r, rank = 4, maxIter = 2)

@@ -47,8 +47,9 @@ class AnnServeSpec extends SparkSpec {
   test("structured corpus: ANN serve recovers the exact top-10 at 12% scan") {
     // 16 deterministic clusters: centroid dims sin(c*97+j) (near-orthogonal
     // across clusters), items = centroid + 10% deterministic perturbation.
-    // itemIds 0..15 land one per cluster, so the seeded Lloyd init starts
-    // with one vector in each true cluster.
+    // itemIds 0..15 land one per cluster (the seeded random init of the
+    // quantizer samples its starting centroids, so it need not start
+    // with one vector in each true cluster).
     val items = spark.range(2000).select(
       col("id").cast("int").as("itemId"),
       expr("""transform(sequence(0, 63), j ->
@@ -120,6 +121,67 @@ class AnnServeSpec extends SparkSpec {
     info(f"many-topic small-regime recall@10 = $recall%.3f at ${2.0 / k}%.3f scan")
     assert(recall >= 0.95, f"small-regime recall collapsed: $recall%.3f")
     assert(selfHits == users, s"self-retrieval lost: $selfHits of $users")
+  }
+
+  test("many-topic corpus, ids permuted: recall holds when the lowest ids share topics") {
+    // the many-topic corpus with its item ids permuted by
+    // (id·7919 + 13) mod 2000 (7919 is prime to 2000, so a bijection):
+    // the K lowest ids no longer land on K distinct topics, so the
+    // recall read here is the quantizer's, not the id layout's
+    val items = spark.range(2000).select(
+      ((col("id") * 7919 + 13) % 2000).cast("int").as("itemId"),
+      expr("""transform(sequence(0, 63), j ->
+                sin(CAST((id % 200) * 97 + j AS DOUBLE)) +
+                0.1 * sin(CAST(id * 31 + j * 7 AS DOUBLE)))""").as("features"))
+      .cache()
+    val k = 64
+    val (recall, selfHits, users) = recallOf(items, nprobe = 2, k = k, iters = 8)
+    info(f"many-topic permuted-ids recall@10 = $recall%.3f at ${2.0 / k}%.3f scan")
+    assert(recall >= 0.95, f"permuted-ids recall collapsed: $recall%.3f")
+    assert(selfHits == users, s"self-retrieval lost: $selfHits of $users")
+  }
+
+  test("an ANN serve call runs one Spark job before its first action: the routing collect") {
+    // the centroids travel from build to serve as a driver-side model,
+    // so building a batch's serve DataFrame collects only the routed
+    // users (one job), for the raw serve and for the ADC-only PQ serve
+    val items = spark.range(800).select(
+      col("id").cast("int").as("itemId"),
+      expr("""transform(sequence(0, 15), j ->
+                sin(CAST((id % 8) * 97 + j AS DOUBLE)) +
+                0.1 * sin(CAST(id * 31 + j * 7 AS DOUBLE)))""").as("features"))
+      .cache()
+    val interests = items.where(col("itemId") % 13 === 0)
+      .select(col("itemId").as("userId"), col("features").as("interest"))
+      .cache()
+    interests.count()
+    val (cent, cells) = StreamOps.buildServeIndex(items, k = 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-jobs").toString
+    val (pCent, pCells) = StreamOps.buildServeIndexPartitioned(items, dir, k = 8)
+    val (pqCells, cbs) = StreamOps.encodeServeIndexPq(spark, dir,
+      s = 4, subDim = 4, k = 32, iters = 5)
+    def jobsWhile(body: => Any): Int = {
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+        started.get
+      } finally sc.removeSparkListener(listener)
+    }
+    val raw = jobsWhile(StreamOps.topNForUsersAnn(interests, cent, cells, n))
+    val pq = jobsWhile(StreamOps.topNForUsersAnnPartitionedPq(interests, pCent,
+      pqCells, cbs, pCells, n, shortlist = 0))
+    info(s"jobs while building the serve DataFrame: raw $raw, PQ ADC-only $pq")
+    assert(raw == 1, s"raw ANN serve ran $raw jobs before an action")
+    assert(pq == 1, s"ADC-only PQ serve ran $pq jobs before an action")
   }
 
   test("ANN serve plan: shuffle-free routing, one aggregate exchange, no window") {
@@ -271,8 +333,8 @@ class AnnServeSpec extends SparkSpec {
     // r17's per-batch localCheckpoint parked routed-table blocks on the
     // ContextCleaner — a slow leak under an idle driver GC. The r18
     // driver-local-relation form has NOTHING to clean: after N serve
-    // calls the only cached RDDs are the index's own (centroid cache),
-    // none added per batch.
+    // calls the only cached RDDs are the ones there before (the
+    // centroid model lives on the driver), none added per batch.
     val items = spark.range(800).select(
       col("id").cast("int").as("itemId"),
       expr("""transform(sequence(0, 15), j ->

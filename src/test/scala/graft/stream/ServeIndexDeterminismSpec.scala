@@ -9,7 +9,8 @@ import graft.SparkSpec
   * serve index and its PQ encoding ([[graft.rec.IvfIndex.buildLarge]],
   * [[graft.rec.IvfIndex.encodePqLarge]]) must give byte-identical
   * centroids, codebooks and cells, whatever order the seeded MLlib fits
-  * happen to read their sample in. */
+  * happen to read their sample in; and the cached serve index, trained
+  * by the same fit, carries the partitioned index's model bit for bit. */
 class ServeIndexDeterminismSpec extends SparkSpec {
 
   /** The structured 2,000-item, dim-64 corpus of AnnServeSpec. */
@@ -37,12 +38,19 @@ class ServeIndexDeterminismSpec extends SparkSpec {
     }
   }
 
+  /** A centroid model as sorted text lines, doubles as their raw bits. */
+  private def modelBits(model: Seq[(Int, Array[Double])]): Seq[String] =
+    model.map { case (cid, c) =>
+      cid + "|" + c.map(d => java.lang.Long.toHexString(
+        java.lang.Double.doubleToRawLongBits(d))).mkString("[", ",", "]")
+    }.sorted
+
   test("cached serve index: same centroids and cells whatever the catalog's " +
       "partitioning and row order") {
     val items = structured().cache()
     def build(catalog: DataFrame): Seq[Seq[String]] = {
       val (cent, cells) = StreamOps.buildServeIndex(catalog, k = 16)
-      Seq(cent, cells).map(bitLines)
+      Seq(modelBits(cent), bitLines(cells))
     }
     val inOrder = build(items.repartition(1))
     val reversed = build(items.orderBy(col("itemId").desc).repartition(7))
@@ -52,5 +60,18 @@ class ServeIndexDeterminismSpec extends SparkSpec {
       val same = a.nonEmpty && a.length == b.length && differing == 0
       assert(same, s"$t: $differing of ${a.length} rows differ between orders")
     }
+  }
+
+  test("one quantizer: the cached and the partitioned serve index carry " +
+      "the same model") {
+    val items = structured().cache()
+    val (k, iters) = (16, 8)
+    val (cached, _) = StreamOps.buildServeIndex(items, k, iters)
+    val dir = java.nio.file.Files.createTempDirectory("graft-det-model").toString
+    val (partitioned, _) = StreamOps.buildServeIndexPartitioned(items, dir, k, iters)
+    val (a, b) = (modelBits(cached), modelBits(partitioned))
+    val differing = a.zip(b).count { case (x, y) => x != y }
+    assert(a.length == k && a.length == b.length && differing == 0,
+      s"$differing of ${a.length} centroids differ between the two builds")
   }
 }
