@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A named engine query: a Spark DataFrame pipeline over the fixture
   * tables in `sfDir`, plus (when SQL-expressible) an equivalent ANSI SQL
@@ -81,14 +82,16 @@ object SessionIds {
 object Lineage {
 
   /** Eager localCheckpoint re-rooted as a FRESH LogicalRDD leaf — the
-    * per-epoch materialization of the gradient-descent trainers
-    * (`rec.GradientMF`) and the table swap of the Cypher store.
+    * table swap of the Cypher store (`cypher.CypherCompat`), whose every
+    * write re-roots the table it rewrote. (The gradient-descent trainers
+    * used it once per epoch until they carried their factor tables as a
+    * driver-side model; the measurements below are theirs.)
     *
     * Spark 4's `localCheckpoint` rewrites the origin plan's statistics
     * onto the checkpoint leaf (`LogicalRDD.rewriteStatsAndConstraints`),
     * and size-only estimation multiplies children's `sizeInBytes`
-    * through every join — so an iterative trainer whose epoch-k tables
-    * are joins of epoch-(k−1) checkpoints compounds the stat doubly
+    * through every join — so an iterative relation whose round-k tables
+    * are joins of round-(k−1) checkpoints compounds the stat doubly
     * exponentially. The BigInt's DIGIT COUNT roughly doubles per epoch:
     * by ~15 epochs it has ~10⁵ digits and the driver sits for minutes
     * inside `BigInteger.multiply` under
@@ -98,9 +101,7 @@ object Lineage {
     * data). Re-wrapping the checkpointed RDD in `createDataFrame` makes
     * a leaf whose stats are the CONSTANT `defaultSizeInBytes`, so
     * planning cost stays flat in epochs (and in writes); AQE re-plans
-    * joins from real runtime shuffle sizes anyway, and every
-    * explicitly-broadcast side of the trainers is marked with
-    * `broadcast()`.
+    * joins from real runtime shuffle sizes anyway.
     *
     * Negative result, measured: re-wrapping the INTERNAL-row RDD
     * instead (`internalCreateDataFrame(qe.toRdd, schema)` via an
@@ -123,8 +124,48 @@ object Lineage {
   * these would be partitioned tables and the same code applies.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred schemas by (table path, the session's parquet settings),
+    * each with the data-file listing `(path, length, modification time)`
+    * it was inferred from. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** The parquet table `dir/name.parquet`, read with its memoized schema:
+    * Spark infers a parquet schema with a Spark job (footer reads), even
+    * for one file, and every catalog query loads its tables afresh. The
+    * memo is keyed on the path, every file under it (path, length,
+    * modification time) and the session's `spark.sql.parquet.*` /
+    * `spark.sql.legacy.parquet.*` settings, which change what is inferred
+    * ([[events]] flips `nanosAsLong`), so a rewritten table or a changed
+    * setting infers afresh. A missing path reads as before, with Spark's
+    * own error. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val listing = files.result().sorted
+      val settings = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      val key = (path, settings)
+      val schema = Option(schemas.get(key)).filter(_._1 == listing)
+        .map(_._2).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, (listing, inferred))
+          inferred
+        }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

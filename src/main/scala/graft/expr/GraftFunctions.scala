@@ -99,6 +99,11 @@ object GraftFunctions {
                  n: Int): Column =
     ExpressionColumn(v)(e => CosineTopN(e(0), CosineMatrix(ids, rows), n))
 
+  /** Each id's vector in the factor `table` (see [[FactorLookup]]; NULL
+    * for an id the table lacks). */
+  def factorLookup(id: Column, table: FactorTable): Column =
+    ExpressionColumn(id)(e => FactorLookup(e(0), table))
+
   /** SQL-surface constants of [[NearestCells]] must be foldable: the
     * cid list and the centroid matrix are a MODEL, not data, and the
     * expression precomputes centroid norms once per instance. */

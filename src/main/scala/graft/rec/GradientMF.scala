@@ -1,52 +1,78 @@
 package graft.rec
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Full-batch gradient-descent matrix factorization, expressed entirely
-  * as joins + aggregations (M5's training semantics, relationally): the
-  * reference trains its embeddings by gradient descent on rating error
-  * (`/root/reference/src/csv/train_rmse.py:121-141`; MF-GD per Koren et
-  * al. 2009), and this is that loop with factor tables holding ONE
-  * rank-length vector per id — `(id, val: array<double>)` — the layout
-  * every production trainer materializes (MLlib ALS's factor tables are
-  * the same shape), because it is the one that scales: each epoch's
-  * shuffles carry row counts INDEPENDENT of rank (a long `(id, f, val)`
-  * layout ships rank× the rows through every edge-keyed join — 64× at a
-  * realistic rank-64), and the dot product needs no groupBy at all:
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+
+import graft.expr.{FactorTable, GraftFunctions}
+
+/** Full-batch gradient-descent matrix factorization over a ratings fact
+  * (M5's training semantics: the reference trains its embeddings by
+  * gradient descent on rating error,
+  * `/root/reference/src/csv/train_rmse.py:121-141`; MF-GD per Koren et
+  * al. 2009), with ONE rank-length vector per id — the layout every
+  * production trainer materializes (MLlib ALS's factor tables are the
+  * same shape):
   *
-  *  - predict: ratings ⋈ U ⋈ V on the id keys alone (both factor sides
-  *    are broadcastable dimension tables), error per rating row as a
-  *    map-side fixed-order `zip_with`/`aggregate` fold — no shuffle;
-  *  - gradient: one narrow groupBy per side over the rating rows,
-  *    per-element `avg(err · otherVec[i])` — per-example-normalized so
-  *    step size is degree-independent (a power user's gradient is the
-  *    mean over their ratings, not the sum);
-  *  - update: `val ← val − lr·(grad + λ·val)`, a 1:1 join + `zip_with`.
+  *  - predict: each rating row reads its user and item vectors with
+  *    [[graft.expr.FactorLookup]] (no join), error per rating row as a
+  *    fixed-order fold;
+  *  - gradient: per-element `avg(err · otherVec[i])` per id —
+  *    per-example-normalized so step size is degree-independent (a power
+  *    user's gradient is the mean over their ratings, not the sum);
+  *  - update: `val ← val − lr·(grad + λ·val)`.
   *
-  * Each epoch's factor tables are eagerly `localCheckpoint`ed — the
-  * update references its input twice (gradient + update term), so as
-  * with q72's pointer jumping, lineage truncation per round is what
-  * keeps the Catalyst plan constant-size across epochs. At cluster
-  * scale the checkpoint becomes a factor-table materialization per
-  * epoch, which is what every iterative trainer on Spark does (MLlib
-  * ALS checkpoints the same way).
+  * The model — both factor tables — is carried between epochs on the
+  * driver. An epoch is ONE Spark query over the cached fact: every rating
+  * row's forward is evaluated once, its contributions to both sides and
+  * its loss terms go through one `groupBy(side, id)`, the update is
+  * applied to the aggregate, and the collected result is the next model
+  * (two Spark jobs: the shuffle map stage and the collect). An epoch
+  * checkpoints, caches and broadcasts nothing, and its plan is the same
+  * size at every epoch. The initial model and the train mean come from
+  * one more query of that shape ([[init]]), and the trained model's own
+  * loss from one more epoch query whose update is dropped.
   *
-  * MF (q86), BPR (q87/q106) and LightGCN (q88/q107) share ONE epoch
-  * loop, [[GradientMF.descend]]: each trainer supplies only its forward
-  * relation and its two gradient tables.
+  * Generated code: every epoch's query compiles to the same classes as
+  * the one before (a [[graft.expr.FactorTable]] hashes by its shape, so
+  * a new model does not reorder the plan's common subexpressions), and
+  * no update runs through an interpreted `zip_with`. Spark's cache of
+  * generated classes holds 100 entries per JVM, keyed per class loader
+  * (a driver copy and an executor copy of each stage); a run of queries
+  * that overflows it compiles again and re-warms the JIT every round,
+  * so a trainer keeps the number of distinct classes it makes small.
+  *
+  * Scale ceiling: the model is held on the driver and, inside each
+  * query's plan, deserialized by every task — (users + items) × width
+  * doubles, ≈ 0.8 GB at 10 M ids × rank 10, and one table must stay
+  * below a 2 GiB array. Broadcasting the factor tables, as each epoch did
+  * before, collected them to the driver as well (four times an MF epoch),
+  * so the ceiling is not lower than it was; past it the factors have to
+  * stay distributed (MLlib ALS's blocked tables).
+  *
+  * MF (q86), BPR (q87/q106) and LightGCN (q88/q107) share the loop,
+  * [[GradientMF.descend]], and the one epoch query, [[collectSides]]:
+  * each trainer supplies its per-row contributions and loss terms.
   *
   * Determinism: factors initialize from the shared md5-prefix hash
   * (exact integers → exact doubles in [−0.5, 0.499]), the global mean
   * is subtracted from ratings (the residual model), dot products fold
-  * f = 0..rank−1 in fixed order, and the whole loop is pure
-  * joins/aggs — so the identical computation is expressible as unrolled
-  * SQL CTEs and the TRAINING ITSELF is oracle-checkable
+  * f = 0..rank−1 in fixed order, and the whole loop is joins/aggs over
+  * the same arithmetic — so the identical computation is expressible as
+  * unrolled SQL CTEs and the TRAINING ITSELF is oracle-checkable
   * (q86_mf_gd_training; the oracle spells the same math over a long
   * `(id, f, val)` relation, which DuckDB is happier unrolling).
   */
 object GradientMF {
-  import graft.Lineage.checkpointLeaf
+
+  /** Both factor tables of a model: user vectors (side 0) and item
+    * vectors (side 1). */
+  private final case class Model(users: FactorTable, items: FactorTable)
+
+  private val UserSide = 0
+  private val ItemSide = 1
 
   private def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
@@ -56,19 +82,58 @@ object GradientMF {
     ((h32(concat(lit(kind), id.cast("string"), lit("_"), f.cast("string")))
       % 1000) - 500).cast("double") / 1000.0
 
-  /** The hash-init factor table `(idCol, val)` over the distinct ids of
-    * `ids`: element f of each rank-length vector is exactly the
-    * long-format `initVal(kind, id, f)`, so the array layout changes
-    * nothing about what is computed; `bias` appends one constant
-    * coordinate (BPR's item-bias slot). */
-  private def init(kind: String, ids: DataFrame, idCol: String, rank: Int,
-                   bias: Option[Double] = None): DataFrame = {
-    val base = array((0 until rank).map(f =>
-      initVal(kind, col(idCol), lit(f.toLong))): _*)
-    ids.select(col(idCol)).distinct()
-      .select(col(idCol),
-        bias.fold(base)(b => concat(base, array(lit(b)))).as("val"))
+  /** The hash-init model over the ids of `df` named by `sides` (side,
+    * id column), and the sums `(n, Σl0, …)` of the `loss` terms over
+    * `df`'s rows, collected in one query: [[collectSides]] over
+    * [[perSide]] rows that contribute nothing, so its groups are the
+    * ids. Element f of each id's rank-length vector is
+    * `initVal("u" | "i", id, f)`; `bias` appends one constant coordinate
+    * per side (BPR's item-bias slot). */
+  private def init(df: DataFrame, sides: Seq[(Int, Column)], rank: Int,
+                   bias: Option[(Double, Double)] = None,
+                   loss: Seq[Column] = Nil): (Model, Seq[Double]) = {
+    def vec(kind: String, b: Option[Double]): Column = {
+      val base = array((0 until rank).map(f =>
+        initVal(kind, col("id"), lit(f.toLong))): _*)
+      b.fold(base)(x => concat(base, array(lit(x))))
+    }
+    collectSides(
+      perSide(df, sides.map { case (s, id) => (s, id, lit(0.0)) }, loss),
+      rank + bias.size, lit(0.0),
+      _ => when(col("side") === UserSide, vec("u", bias.map(_._1)))
+        .otherwise(vec("i", bias.map(_._2))),
+      loss.size)
   }
+
+  /** Collected `(side, id, val, …)` rows as a model of `width`. */
+  private def model(rows: Array[Row], width: Int): Model = {
+    def side(s: Int): FactorTable = {
+      val rs = rows.filter(_.getInt(0) == s)
+      FactorTable(rs.map(_.getLong(1)), rs.map(_.getSeq[Double](2).toArray),
+        width)
+    }
+    Model(side(UserSide), side(ItemSide))
+  }
+
+  /** `id`'s vector in `t` (NULL if `t` lacks it). */
+  private def lookup(id: Column, t: FactorTable): Column =
+    GraftFunctions.factorLookup(id, t)
+
+  /** The vector in `m` of the current row's `id` on its `side`. */
+  private def sideVal(m: Model): Column =
+    when(col("side") === UserSide, lookup(col("id"), m.users))
+      .otherwise(lookup(col("id"), m.items))
+
+  /** A side's table as a local relation `(idCol, val)`, ids ascending. */
+  private def relation(spark: SparkSession, t: FactorTable,
+                       idCol: String): DataFrame =
+    spark.createDataFrame(
+      (0 until t.size).map(r => Row(t.ids(r), t.vector(r).toSeq)).asJava,
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+        StructField("val", FactorTable.vectorType, nullable = false))))
+
+  private def relations(spark: SparkSession, m: Model): (DataFrame, DataFrame) =
+    (relation(spark, m.users, "user_id"), relation(spark, m.items, "item_id"))
 
   /** Fixed-order dot product (f ascending), statically expanded for
     * the known rank — bit-identical to the former
@@ -77,7 +142,7 @@ object GradientMF {
     * ([[graft.expr.GraftFunctions.dotProductFixed]]): this runs once
     * per rating row per epoch, the trainers' hottest expression. */
   private def dot(a: Column, b: Column, width: Int): Column =
-    graft.expr.GraftFunctions.dotProductFixed(a, b, width)
+    GraftFunctions.dotProductFixed(a, b, width)
 
   /** One aggregated rank-length vector: element i is `mk(i)` (an
     * aggregate expression), assembled with `array` so a whole gradient
@@ -85,126 +150,162 @@ object GradientMF {
   private def vecAgg(rank: Int)(mk: Int => Column): Column =
     array((0 until rank).map(mk): _*)
 
-  /** `df` coalesced to its [[Sizing.factParts]] count and cached: the
-    * epoch pipeline has no exchange for AQE to coalesce, so the fact's
-    * cache and every per-epoch checkpoint take this count. */
-  private def cachedFact(df: DataFrame): (DataFrame, Int) = {
-    val parts = Sizing.factParts(df)
-    (df.coalesce(parts).cache(), parts)
+  /** `e · v[i]` for i < width, as one array column (statically
+    * expanded, so it is codegen'd rather than an interpreted
+    * `transform`). */
+  private def scaled(e: Column, v: Column, width: Int): Column =
+    array((0 until width).map(i => e * v(i)): _*)
+
+  /** `df` coalesced to its [[Sizing.factParts]] count and cached: every
+    * epoch query scans it, and its map stage runs one task per
+    * partition. */
+  private def cachedFact(df: DataFrame): DataFrame =
+    df.coalesce(Sizing.factParts(df)).cache()
+
+  /** `(user_id, item_id, res)`: ratings minus the mean `mu`. */
+  private def centred(ratings: DataFrame, mu: Double): DataFrame =
+    ratings.select(col("user_id"), col("item_id"),
+      (col("rating") - lit(mu)).as("res"))
+
+  /** The residual model's training fact — the ratings cached (see
+    * [[cachedFact]]) and centred on their mean μ in each query that
+    * reads them — with its hash-init model and μ, both from the one
+    * [[init]] query (μ is the sum of the ratings over their count). */
+  private def residuals(ratings: DataFrame, rank: Int)
+      : (DataFrame, Model, Double) = {
+    val fact = cachedFact(
+      ratings.select(col("user_id"), col("item_id"), col("rating")))
+    val (m0, Seq(n, total)) = init(fact,
+      Seq(UserSide -> col("user_id"), ItemSide -> col("item_id")), rank,
+      loss = Seq(col("rating")))
+    val mu = total / n
+    (centred(fact, mu), m0, mu)
   }
 
-  /** `(user_id, item_id, res)`: ratings minus the mean in `g` (a 1-row
-    * `mu` table). */
-  private def centred(ratings: DataFrame, g: DataFrame): DataFrame =
-    ratings.crossJoin(broadcast(g))
-      .select(col("user_id"), col("item_id"),
-        (col("rating") - col("mu")).as("res"))
-
-  /** The residual model's training fact, cached (see [[cachedFact]]),
-    * with the train mean `g` and the partition count. */
-  private def residuals(ratings: DataFrame): (DataFrame, DataFrame, Int) = {
-    val g = ratings.agg(avg(col("rating")).as("mu"))
-    val (res, parts) = cachedFact(centred(ratings, g))
-    (res, g, parts)
-  }
-
-  /** Per-rating error rows, carrying both factor vectors so the two
-    * gradient aggregations read this one checkpointed relation
-    * without any further join. Factor sides are broadcast: they are
-    * id-dimension-sized (distinct users/items × rank doubles), while
-    * `res` is the ratings FACT — the unbounded side — which these
-    * hints keep unshuffled through every epoch (each checkpointLeaf
-    * carries defaultSizeInBytes stats, so without the hint the
-    * planner sort-merge-joins and re-shuffles the fact twice per
-    * epoch). */
-  private def predictions(res: DataFrame, u: DataFrame, v: DataFrame,
-                          rank: Int): DataFrame =
-    res
-      .join(broadcast(u.select(col("user_id"), col("val").as("uv"))),
-        Seq("user_id"))
-      .join(broadcast(v.select(col("item_id"), col("val").as("vv"))),
-        Seq("item_id"))
+  /** Per-rating error rows `(user_id, item_id, err, uv, vv)` of model
+    * `m` over the residual fact `res`, both vectors attached by lookup. */
+  private def predictions(res: DataFrame, m: Model, rank: Int): DataFrame =
+    res.select(col("user_id"), col("item_id"), col("res"),
+        lookup(col("user_id"), m.users).as("uv"),
+        lookup(col("item_id"), m.items).as("vv"))
       .select(col("user_id"), col("item_id"),
         (dot(col("uv"), col("vv"), rank) - col("res")).as("err"),
         col("uv"), col("vv"))
 
-  /** Per-example-mean squared-error gradient per `id`, from the error
-    * rows of [[predictions]]: `avg(err · other[i])`, `(id, val)`. */
-  private def meanGrad(p: DataFrame, id: String, other: String,
-                       rank: Int): DataFrame =
-    p.groupBy(col(id))
-      .agg(vecAgg(rank)(i => avg(col("err") * col(other)(i))).as("val"))
+  /** The squared-error loss term of [[predictions]]' rows. */
+  private val squaredErr: Seq[Column] = Seq(col("err") * col("err"))
 
-  private def epochLoss(k: Int, p: DataFrame): DataFrame =
-    p.agg(round(sqrt(avg(col("err") * col("err"))), 6).as("rmse"))
-      .select(lit(k).cast("long").as("epoch"), col("rmse"))
+  /** [[predictions]]' rows as [[perSide]] contributions: `err · vv` to
+    * the user's gradient, `err · uv` to the item's, `err²` as the loss
+    * term. */
+  private def errRows(p: DataFrame, rank: Int): DataFrame =
+    perSide(p, Seq(
+        (UserSide, col("user_id"), scaled(col("err"), col("vv"), rank)),
+        (ItemSide, col("item_id"), scaled(col("err"), col("uv"), rank))),
+      squaredErr)
 
-  /** `fit` run with an epoch hook collecting `loss(k, ·)` of each
-    * epoch's relation — the `(epoch, …)` trajectory in epoch order. */
-  private def trajectory(loss: (Int, DataFrame) => DataFrame)(
-      fit: ((Int, DataFrame) => Unit) => Unit): DataFrame = {
-    val losses = Seq.newBuilder[DataFrame]
-    fit((k, d) => losses += loss(k, d))
-    losses.result().reduce(_ unionAll _).orderBy(col("epoch"))
+  /** One row per fact row and side: `inline` of the `(side, id, c)`
+    * structs of `sides`, so each fact row's forward is evaluated once.
+    * The loss terms ride the first side's rows as `l0, l1, …` (once per
+    * fact row) and are NULL on the others. */
+  private def perSide(df: DataFrame, sides: Seq[(Int, Column, Column)],
+                      loss: Seq[Column] = Nil): DataFrame =
+    df.select(inline(array(sides.zipWithIndex.map { case ((s, id, c), k) =>
+      struct(Seq(lit(s).as("side"), id.cast("long").as("id"), c.as("c")) ++
+        loss.zipWithIndex.map { case (l, j) =>
+          (if (k == 0) l else lit(null).cast("double")).as(s"l$j") }: _*)
+    }: _*)))
+
+  /** `c`'s elementwise mean over a [[perSide]] group, as one vector. */
+  private def avgs(width: Int): Column = vecAgg(width)(i => avg(col("c")(i)))
+
+  /** `c`'s elementwise sum over a [[perSide]] group, as one vector. */
+  private def sums(width: Int): Column = vecAgg(width)(i => sum(col("c")(i)))
+
+  /** The ONE query shape of every trainer here: the [[perSide]] rows go
+    * through one `groupBy(side, id)` that folds them with `fold` (e.g.
+    * [[avgs]]) and sums each of `nLoss` loss terms (with their count);
+    * `post` maps the folded value (`col("agg")`, with `side` and `id` in
+    * scope) to the id's next vector of `width`. Collected: the next
+    * model, and the loss sums `(n, Σl0, Σl1, …)` over the fact rows. */
+  private def collectSides(rows: DataFrame, width: Int, fold: Column,
+      post: Column => Column, nLoss: Int = 0): (Model, Seq[Double]) = {
+    val loss = if (nLoss == 0) Nil
+      else count(col("l0")).cast("double") +:
+        (0 until nLoss).map(j => sum(col(s"l$j")))
+    val out = rows.groupBy(col("side"), col("id"))
+      .agg(fold.as("agg"),
+        loss.zipWithIndex.map { case (l, j) => l.as(s"s$j") }: _*)
+      .select(Seq(col("side"), col("id"), post(col("agg")).as("val")) ++
+        loss.indices.map(j => col(s"s$j")): _*)
+      .collect()
+    (model(out, width), loss.indices.map(j =>
+      out.iterator.filterNot(_.isNullAt(3 + j)).map(_.getDouble(3 + j)).sum))
   }
 
-  /** `val ← pin(val − lr·(grad + λ·val))`, elementwise, joined 1:1 per
-    * id with the `(id, val)` gradient table. */
-  private def update(base: DataFrame, grad: DataFrame, id: String,
-                     lr: Double, reg: Double, pin: Column => Column)
-      : DataFrame =
-    base.join(broadcast(grad.select(col(id), col("val").as("grad"))),
-        Seq(id))
-      .select(col(id),
-        pin(zip_with(col("val"), col("grad"),
-          (x, gx) => x - lit(lr) * (gx + lit(reg) * x))).as("val"))
+  /** The per-epoch loss sums as a local relation in epoch order (no
+    * job): epoch k's `(n, s0, s1, …)` mapped by `out`. An epoch over no
+    * rows has a NULL loss, as an `avg` over no rows. */
+  private def trajectory(spark: SparkSession, sums: Seq[Seq[Double]],
+                         out: Column*): DataFrame = {
+    val schema = StructType(StructField("epoch", LongType, nullable = false) +:
+      ("n" +: (1 until sums.head.size).map(j => s"s${j - 1}"))
+        .map(StructField(_, DoubleType)))
+    val rows = sums.zipWithIndex.map { case (s, k) =>
+      Row.fromSeq(k.toLong +: (if (s.head == 0) s.map(_ => null) else s)) }
+    spark.createDataFrame(rows.asJava, schema).select(col("epoch") +: out: _*)
+  }
 
-  /** The ONE epoch loop of every trainer here. From the initial factor
-    * tables `(user_id, val)` / `(item_id, val)`, each epoch checkpoints
-    * `forward(u, v)` (coalesced to `parts`; it feeds the loss and both
-    * gradients), hands it to `onEpoch(k, ·)`, takes the two `(id, val)`
-    * gradient tables from `grads`, and checkpoints each side's update
-    * (`pinUser` re-shapes the user vector after its step). Returns the
-    * trained base tables; the loss at index `epochs` is the caller's. */
-  private def descend(u0: DataFrame, v0: DataFrame, epochs: Int, parts: Int,
-      lr: Double, reg: Double, onEpoch: (Int, DataFrame) => Unit,
-      pinUser: Column => Column = identity)(
-      forward: (DataFrame, DataFrame) => DataFrame,
-      grads: DataFrame => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    var u = checkpointLeaf(u0)
-    var v = checkpointLeaf(v0)
-    for (k <- 0 until epochs) {
-      val p = checkpointLeaf(forward(u, v).coalesce(parts))
-      onEpoch(k, p)
-      val (gu, gv) = grads(p)
-      u = checkpointLeaf(update(u, gu, "user_id", lr, reg, pinUser))
-      v = checkpointLeaf(update(v, gv, "item_id", lr, reg, identity))
+  /** `val ← pin(val − lr·(grad + λ·val))`, elementwise against the row's
+    * vector in the current model `m` (statically expanded over the
+    * `width` elements, as [[scaled]]: a `zip_with` lambda is evaluated
+    * interpreted, and takes its aggregate out of whole-stage codegen);
+    * `pinUser` re-shapes a user vector after its step. */
+  private def gdStep(m: Model, width: Int, lr: Double, reg: Double,
+                     pinUser: Option[Column => Column] = None)(grad: Column)
+      : Column = {
+    val x = sideVal(m)
+    val next = array((0 until width).map(i =>
+      x(i) - lit(lr) * (grad(i) + lit(reg) * x(i))): _*)
+    pinUser.fold(next)(pin =>
+      when(col("side") === UserSide, pin(next)).otherwise(next))
+  }
+
+  /** The ONE epoch loop of every trainer here: `epochs` steps from
+    * `m0`, each returning the next model and the loss sums of the model
+    * it started from. Returns the trained model and the per-epoch sums;
+    * the trained model's own loss is the caller's: one more `step`,
+    * its update dropped, so it runs the epochs' own plan. */
+  private def descend(m0: Model, epochs: Int)(
+      step: Model => (Model, Seq[Double])): (Model, Seq[Seq[Double]]) =
+    (0 until epochs).foldLeft((m0, Seq.empty[Seq[Double]])) {
+      case ((m, sums), _) =>
+        val (next, s) = step(m)
+        (next, sums :+ s)
     }
-    (u, v)
-  }
+
+  private def rmse: Column = round(sqrt(col("s0") / col("n")), 6).as("rmse")
 
   /** Train `epochs` full-batch GD epochs of rank-`rank` MF on
     * `ratings` (user_id, item_id, rating); returns the per-epoch RMSE
     * trajectory `(epoch, rmse)` — epochs+1 rows, epoch 0 = the loss at
     * initialization. */
   def trainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
-                      reg: Double, epochs: Int): DataFrame =
-    trajectory(epochLoss) { onEpoch =>
-      val (res, _, parts) = residuals(ratings)
-      val (u, v) = descend(init("u", res, "user_id", rank),
-          init("i", res, "item_id", rank), epochs, parts, lr, reg, onEpoch)(
-        predictions(res, _, _, rank),
-        p => (meanGrad(p, "user_id", "vv", rank),
-          meanGrad(p, "item_id", "uv", rank)))
-      onEpoch(epochs, predictions(res, u, v, rank))
-    }
+                      reg: Double, epochs: Int): DataFrame = {
+    val (res, m0, _) = residuals(ratings, rank)
+    def step(m: Model) =
+      collectSides(errRows(predictions(res, m, rank), rank), rank,
+        avgs(rank), gdStep(m, rank, lr, reg), nLoss = 1)
+    val (m, losses) = descend(m0, epochs)(step)
+    trajectory(res.sparkSession, losses :+ step(m)._2, rmse)
+  }
 
   /** Full-batch BPR gradient descent (Rendle et al. 2009 — the ref's
     * top-N training objective, `/root/reference/src/csv/train_topn.py:
     * 98-109`) over the deterministic per-user (pos, neg) item pair
     * (q82's triple rule: top-rated vs bottom-rated, kept where the
     * ratings strictly differ). Same vector factors, hash init and
-    * per-epoch checkpointing as [[trainTrajectory]]; the pairwise score
+    * carried model as [[trainTrajectory]]; the pairwise score
     * is d = u·(v_pos − v_neg), the loss ln(1+e^−d), and the gradients
     * ride the closed form dL/dd = −1/(1+e^d). Returns the per-epoch
     * `(epoch, bpr_loss, pair_acc)` trajectory — loss falling and the
@@ -212,14 +313,19 @@ object GradientMF {
     * are oracle-checked (q87). */
   def bprTrainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
                          reg: Double, epochs: Int): DataFrame =
-    trajectory(bprEpochLoss)(bprFit(ratings, rank, lr, reg, epochs, _))
+    trajectory(ratings.sparkSession,
+      bprFit(ratings, rank, lr, reg, epochs, finalLoss = true)._2,
+      round(col("s0") / col("n"), 6).as("bpr_loss"),
+      round(col("s1") / col("n"), 6).as("pair_acc"))
 
   /** The trained BPR factor tables `(u, v)` — each `(id, val:
-    * array<double>)` — for serving a top-N ranking from the pairwise
-    * objective (q106 composes these with the precision/recall metric). */
+    * array<double>)`, a local relation of the final model — for serving
+    * a top-N ranking from the pairwise objective (q106 composes these
+    * with the precision/recall metric). */
   def bprTrainedFactors(ratings: DataFrame, rank: Int, lr: Double,
                         reg: Double, epochs: Int): (DataFrame, DataFrame) =
-    bprFit(ratings, rank, lr, reg, epochs, (_, _) => ())
+    relations(ratings.sparkSession,
+      bprFit(ratings, rank, lr, reg, epochs, finalLoss = false)._1)
 
   /** ALL-positives BPR triples — the reference's actual training regime
     * (`/root/reference/src/csv/train_topn.py:98-109` pairs every
@@ -258,28 +364,21 @@ object GradientMF {
   /** [[bprTrainedFactors]] trained over [[bprAllPosTriples]] instead of
     * the one-per-user head-tail rule, with Rendle's item-bias term —
     * the configuration the top-N quality anchor runs at the ml-100k
-    * fixture shape (GdMfSpec): same epoch loop, gradients, hash init
-    * and checkpointing; what differs is the triple derivation and the
-    * bias coordinate. `posMin = 1.0` (every interaction is a positive)
+    * fixture shape (GdMfSpec): same epoch loop, gradients and hash
+    * init; what differs is the triple derivation and the bias
+    * coordinate. `posMin = 1.0` (every interaction is a positive)
     * is the reference's own regime — `train_topn.py` trains on ALL
     * train edges as implicit feedback, no rating threshold. */
   def bprTrainedFactorsAllPos(ratings: DataFrame, rank: Int, lr: Double,
                               reg: Double, epochs: Int,
                               posMin: Double = 1.0): (DataFrame, DataFrame) =
-    bprFitTriples(bprAllPosTriples(ratings, posMin), rank, lr, reg, epochs,
-      (_, _) => (), itemBias = true)
-
-  private def bprEpochLoss(k: Int, d: DataFrame): DataFrame =
-    d.agg(
-        round(avg(log(lit(1.0) + exp(-col("d")))), 6).as("bpr_loss"),
-        round(sum(when(round(col("d"), 6) > 0, 1L).otherwise(0L))
-          .cast("double") / count(lit(1)), 6).as("pair_acc"))
-      .select(lit(k).cast("long").as("epoch"), col("bpr_loss"),
-        col("pair_acc"))
+    relations(ratings.sparkSession,
+      bprFitTriples(bprAllPosTriples(ratings, posMin), rank, lr, reg, epochs,
+        finalLoss = false, itemBias = true)._1)
 
   private def bprFit(ratings: DataFrame, rank: Int, lr: Double,
-      reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit)
-      : (DataFrame, DataFrame) = {
+      reg: Double, epochs: Int, finalLoss: Boolean)
+      : (Model, Seq[Seq[Double]]) = {
     // Head-tail triple per user, as ONE partially-aggregated groupBy
     // instead of the former two window passes (each an exchange + full
     // sort of the ratings fact) + a pos⋈neg self-join. The extremes are
@@ -298,15 +397,16 @@ object GradientMF {
         .where(col("p.rating") > col("n.rating"))
         .select(col("user_id"), col("p.item_id").as("pos_item"),
           col("n.item_id").as("neg_item")),
-      rank, lr, reg, epochs, onEpoch)
+      rank, lr, reg, epochs, finalLoss)
   }
 
-  /** The BPR epoch loop over an explicit `(user_id, pos_item, neg_item)`
+  /** The BPR trainer over an explicit `(user_id, pos_item, neg_item)`
     * triple relation — [[bprFit]] (head-tail triples, q87/q106) and
     * [[bprTrainedFactorsAllPos]] (all-positives triples) share it; the
-    * gradient aggregation was already written for arbitrarily many
-    * triples per user (avg over the user's pairs keeps the update join
-    * 1:1 per id).
+    * gradient aggregation is written for arbitrarily many triples per
+    * user (avg over the user's pairs). Returns the trained model and the
+    * per-epoch loss sums `(n, Σ ln(1+e^−d), Σ [round(d, 6) > 0])`, plus
+    * the trained model's own with `finalLoss`.
     *
     * `itemBias` appends Rendle's item-bias term as ONE MORE VECTOR
     * COORDINATE (BPR-MF's standard bias: the user side of that
@@ -321,24 +421,17 @@ object GradientMF {
     * at all (measured: P@20 stuck at init level 0.016 for 16 epochs
     * without it). Off (default) = exactly the q87/q106 oracle algebra. */
   private def bprFitTriples(triples: DataFrame, rank: Int, lr: Double,
-      reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit,
-      itemBias: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val (tr, parts) = cachedFact(triples)
+      reg: Double, epochs: Int, finalLoss: Boolean,
+      itemBias: Boolean = false): (Model, Seq[Seq[Double]]) = {
+    val tr = cachedFact(triples)
     val width = if (itemBias) rank + 1 else rank
 
-    /** Per-pair score rows carrying all three factor vectors, so loss
-      * and both gradients read one checkpointed relation. Factor sides
-      * broadcast — id-dimension-sized vs the triple relation (see
-      * [[predictions]]). */
-    def scores(u: DataFrame, v: DataFrame): DataFrame =
-      tr
-        .join(broadcast(u.select(col("user_id"), col("val").as("uval"))),
-          Seq("user_id"))
-        .join(broadcast(v.select(col("item_id").as("pos_item"),
-          col("val").as("pval"))), Seq("pos_item"))
-        .join(broadcast(v.select(col("item_id").as("neg_item"),
-          col("val").as("nval"))), Seq("neg_item"))
+    /** Per-pair score rows carrying all three factor vectors. */
+    def scores(m: Model): DataFrame =
+      tr.select(col("user_id"), col("pos_item"), col("neg_item"),
+          lookup(col("user_id"), m.users).as("uval"),
+          lookup(col("pos_item"), m.items).as("pval"),
+          lookup(col("neg_item"), m.items).as("nval"))
         .select(col("user_id"), col("pos_item"), col("neg_item"),
           // Σ u[i]·(p[i]−n[i]), statically expanded — the same
           // left-to-right fold (and 0.0 seed) as the former
@@ -347,40 +440,32 @@ object GradientMF {
               col("uval")(i) * (col("pval")(i) - col("nval")(i)))
             .foldLeft(lit(0.0d))(_ + _).as("d"),
           col("uval"), col("pval"), col("nval"))
-
-    def grads(d: DataFrame): (DataFrame, DataFrame) = {
-      val s = d.withColumn("comp", lit(1.0) / (lit(1.0) + exp(col("d"))))
-      // the head-tail derivation yields one (pos, neg) pair per user,
-      // all-positives yields many — aggregate symmetrically with gv so
-      // the update join stays 1:1 per user_id either way
-      val gu = s
-        .select(col("user_id"),
-          zip_with(col("pval"), col("nval"),
-            (p, n) => -col("comp") * (p - n)).as("g"))
-        .groupBy(col("user_id"))
-        .agg(vecAgg(width)(i => avg(col("g")(i))).as("val"))
-      val gv = s.select(col("pos_item").as("item_id"),
-          transform(col("uval"), x => -col("comp") * x).as("c"))
-        .unionAll(s.select(col("neg_item").as("item_id"),
-          transform(col("uval"), x => col("comp") * x).as("c")))
-        .groupBy(col("item_id"))
-        .agg(vecAgg(width)(i => avg(col("c")(i))).as("val"))
-      (gu, gv)
-    }
+    val loss = Seq(log(lit(1.0) + exp(-col("d"))),
+      when(round(col("d"), 6) > 0, 1.0).otherwise(0.0))
 
     // the user bias slot carries the constant 1 (re-pinned after every
     // update: the model says 1); the item bias starts at 0
-    val items = tr.select(col("pos_item").as("item_id"))
-      .unionAll(tr.select(col("neg_item").as("item_id")))
-    val (u, v) = descend(
-        init("u", tr, "user_id", rank, if (itemBias) Some(1.0) else None),
-        init("i", items, "item_id", rank, if (itemBias) Some(0.0) else None),
-        epochs, parts, lr, reg, onEpoch,
-        pinUser = w =>
-          if (itemBias) concat(slice(w, 1, rank), array(lit(1.0))) else w)(
-      scores, grads)
-    onEpoch(epochs, scores(u, v))
-    (u, v)
+    val (m0, _) = init(tr, Seq(UserSide -> col("user_id"),
+        ItemSide -> col("pos_item"), ItemSide -> col("neg_item")),
+      rank, if (itemBias) Some((1.0, 0.0)) else None)
+    val pin = if (itemBias)
+        Some((w: Column) => concat(slice(w, 1, rank), array(lit(1.0))))
+      else None
+    def step(m: Model) = {
+      val s = scores(m).withColumn("comp",
+        lit(1.0) / (lit(1.0) + exp(col("d"))))
+      // the user's contribution, then one per pair item: the pos and
+      // neg items of a pair feed the same per-item mean
+      collectSides(perSide(s, Seq(
+          (UserSide, col("user_id"), array((0 until width).map(i =>
+            -col("comp") * (col("pval")(i) - col("nval")(i))): _*)),
+          (ItemSide, col("pos_item"), scaled(-col("comp"), col("uval"), width)),
+          (ItemSide, col("neg_item"), scaled(col("comp"), col("uval"), width))),
+          loss),
+        width, avgs(width), gdStep(m, width, lr, reg, pin), nLoss = 2)
+    }
+    val (m, losses) = descend(m0, epochs)(step)
+    (m, if (finalLoss) losses :+ step(m)._2 else losses)
   }
 
   /** END-TO-END LightGCN training (He et al. 2020; the ref's actual
@@ -394,37 +479,37 @@ object GradientMF {
     *  - backward: because the propagation is LINEAR, backprop through
     *    it is the SAME edge-weighted aggregation applied to the
     *    gradient tables — `∂L/∂U = (G_U' + Ã G_V')/2` — so "gradients
-    *    flow through the graph" is literally one more join+agg per
-    *    side, and the whole trainer stays relational;
+    *    flow through the graph" is one more edge aggregation;
     *  - update: `val ← val − lr·(grad + λ·val)` on the BASE tables.
     *
-    * The propagation join+agg carries one vector per edge row — rank
-    * never multiplies the edge shuffle. Per-example-mean gradient
-    * normalization and per-epoch checkpointing as [[trainTrajectory]].
+    * The edge aggregation carries one vector per edge row — rank never
+    * multiplies the edge shuffle. Per-example-mean gradient
+    * normalization and the carried model as [[trainTrajectory]].
     * Returns the per-epoch RMSE of the PROPAGATED model — the quantity
     * LightGCN actually trains — and the full run (propagation +
     * backprop + updates) unrolls into SQL, so q88's oracle verifies
     * gradient flow through the graph. */
   def lightgcnTrainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
                               reg: Double, epochs: Int): DataFrame =
-    trajectory(epochLoss)(lightgcnFit(ratings, rank, lr, reg, epochs, _))
+    trajectory(ratings.sparkSession,
+      lightgcnFit(ratings, rank, lr, reg, epochs, finalLoss = true)._2, rmse)
 
   /** Train on `train`, then score the held-out `test` with the final
     * PROPAGATED embeddings — the generalization face of q88's trainer
     * (GdMfSpec anchors it at the ml-100k fixture shape). Pairs whose
     * user or item never appears in training are dropped (the standard
     * known-entity evaluation — ALS `coldStartStrategy="drop"` does the
-    * same). Returns one row `(n_test, baseline_rmse, test_rmse)`, the
-    * baseline predicting the train mean — a trained model must beat it
-    * on data it never saw. */
+    * same): their lookup in the final model is NULL. Returns one row
+    * `(n_test, baseline_rmse, test_rmse)`, the baseline predicting the
+    * train mean — a trained model must beat it on data it never saw. */
   def lightgcnHoldout(train: DataFrame, test: DataFrame, rank: Int,
                       lr: Double, reg: Double, epochs: Int): DataFrame = {
-    val (up, vp, g) = lightgcnFit(train, rank, lr, reg, epochs, (_, _) => ())
-    centred(test, g)
-      .join(broadcast(up.select(col("user_id"), col("val").as("uv"))),
-        Seq("user_id"))
-      .join(broadcast(vp.select(col("item_id"), col("val").as("vv"))),
-        Seq("item_id"))
+    val (mp, _, mu) = lightgcnFit(train, rank, lr, reg, epochs,
+      finalLoss = false)
+    centred(test, mu)
+      .select(col("res"), lookup(col("user_id"), mp.users).as("uv"),
+        lookup(col("item_id"), mp.items).as("vv"))
+      .where(col("uv").isNotNull && col("vv").isNotNull)
       .select(col("res"),
         (dot(col("uv"), col("vv"), rank) - col("res")).as("err"))
       .agg(count(lit(1)).as("n_test"),
@@ -432,50 +517,43 @@ object GradientMF {
         round(sqrt(avg(col("err") * col("err"))), 6).as("test_rmse"))
   }
 
-  /** The LightGCN trainer: [[descend]] with the propagated forward and
-    * the backprop-through-Ã gradients; hands each epoch's checkpointed
-    * per-rating error relation (and the final one, at index `epochs`)
-    * to `onEpoch`, and returns the final propagated embeddings + the
-    * train mean — the artifacts a serving path needs. */
+  /** The LightGCN trainer: per epoch one edge aggregation propagates the
+    * model, one epoch query over the propagated model's per-rating
+    * errors yields the gradients w.r.t. the propagated tables (and the
+    * loss), and one edge aggregation backpropagates them through Ã and
+    * steps the base model. Returns the final PROPAGATED model, the
+    * per-epoch loss sums (plus the final model's with `finalLoss`) and
+    * the train mean — the artifacts a serving path needs. */
   private def lightgcnFit(ratings: DataFrame, rank: Int, lr: Double,
-      reg: Double, epochs: Int, onEpoch: (Int, DataFrame) => Unit)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (res, g, parts) = residuals(ratings)
+      reg: Double, epochs: Int, finalLoss: Boolean)
+      : (Model, Seq[Seq[Double]], Double) = {
+    val (res, m0, mu) = residuals(ratings, rank)
     // ed keeps res's coalesced partitioning through its cache
     val ed = GraphPropagation.edges(res)
 
-    /** (base + Σ_edge w·other)/2 — the forward half-layer; with a
-      * gradient table as `other` it is equally the backward pass. */
-    def mix(base: DataFrame, other: DataFrame, baseId: String,
-            otherId: String): DataFrame =
-      base.join(broadcast(GraphPropagation
-          .spread(ed, other, otherId, baseId, rank).toDF(baseId, "s")),
-          Seq(baseId))
-        .select(col(baseId),
-          zip_with(col("val"), col("s"), (a, b) => (a + b) / 2).as("val"))
+    /** `post((m + Ã·m)/2)` per side, one collected edge aggregation: a
+      * user's Σ_edge w·v(item), an item's Σ_edge w·u(user). With a
+      * gradient model as `m` it is equally the backward pass. */
+    def mix(m: Model)(post: Column => Column): Model =
+      collectSides(perSide(
+          ed.select(col("user_id"), col("item_id"), col("w"),
+            lookup(col("user_id"), m.users).as("uv"),
+            lookup(col("item_id"), m.items).as("vv")),
+          Seq((UserSide, col("user_id"), scaled(col("w"), col("vv"), rank)),
+            (ItemSide, col("item_id"), scaled(col("w"), col("uv"), rank)))),
+        rank, sums(rank), s => post(array((0 until rank).map(i =>
+          (sideVal(m)(i) + s(i)) / 2): _*)))._1
 
-    // each epoch's two cached gradient tables, released once the update
-    // checkpoints that read them have materialized: at the next epoch's
-    // gradient step, or after the last epoch
-    var held = Seq.empty[DataFrame]
-    val (u, v) = descend(init("u", res, "user_id", rank),
-        init("i", res, "item_id", rank), epochs, parts, lr, reg, onEpoch)(
-      // the propagated tables feed ONLY predictions (the gradients read
-      // p's embedded uv/vv columns), so as plain plans they evaluate
-      // exactly once inside p's checkpoint
-      (u, v) => predictions(res, mix(u, v, "user_id", "item_id"),
-        mix(v, u, "item_id", "user_id"), rank),
-      p => {
-        held.foreach(_.unpersist())
-        val gup = meanGrad(p, "user_id", "vv", rank).cache()
-        val gvp = meanGrad(p, "item_id", "uv", rank).cache()
-        held = Seq(gup, gvp)
-        (mix(gup, gvp, "user_id", "item_id"), mix(gvp, gup, "item_id", "user_id"))
-      })
-    held.foreach(_.unpersist())
-    val upF = checkpointLeaf(mix(u, v, "user_id", "item_id"))
-    val vpF = checkpointLeaf(mix(v, u, "item_id", "user_id"))
-    onEpoch(epochs, predictions(res, upF, vpF, rank))
-    (upF, vpF, g)
+    /** The gradients w.r.t. the propagated model `mp`, and its loss. */
+    def grads(mp: Model) =
+      collectSides(errRows(predictions(res, mp, rank), rank), rank,
+        avgs(rank), identity, nLoss = 1)
+
+    val (m, losses) = descend(m0, epochs) { m =>
+      val (gp, s) = grads(mix(m)(identity))
+      (mix(gp)(gdStep(m, rank, lr, reg)), s)
+    }
+    val mp = mix(m)(identity)
+    (mp, if (finalLoss) losses :+ grads(mp)._2 else losses, mu)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Embeddings are `(id, val: array<double>)` tables of a known width —
   * the layout of [[GradientMF]]'s factor tables, whose LightGCN trainer
-  * propagates through the same [[edges]] and [[spread]]. Each layer is
+  * propagates over the same [[edges]]. Each layer is
   * two edge joins + per-id aggregations (item→user, user→item) on the
   * natural FK keys, one vector per edge row, so the width never
   * multiplies the rows; layer outputs are layer-averaged as in the

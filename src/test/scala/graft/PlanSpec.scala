@@ -32,9 +32,10 @@ class PlanSpec extends SparkSpec {
   private val cartesianAllowed = Set("q21_embedding_neardup", "q66_lsh_recall")
 
   /** q37 trains an MLlib ALS model inside `run` (plan exercised by
-    * AlsSpec's planned-serve-path tests); q86 likewise runs its GD
-    * epochs eagerly (checkpointed per round — the returned plan is just
-    * the 4-row loss union, and GdMfSpec covers the training itself). */
+    * AlsSpec's planned-serve-path tests); q86–q88 likewise run their GD
+    * epochs eagerly (each epoch one collected query over the carried
+    * model — the returned plan is just the local 4-row loss relation,
+    * and GdMfSpec covers the training itself). */
   private val skipped = Set("q37_als_recs", "q86_mf_gd_training",
     "q87_bpr_gd_training", "q88_lightgcn_training")
 

@@ -193,4 +193,55 @@ class IoSpec extends SparkSpec {
         s"wrong micro value for $d")
     }
   }
+
+  test("Tables.load memoizes the parquet schema: a rewritten table and a " +
+      "changed parquet setting are seen on the next load") {
+    val dir = Files.createTempDirectory("graft-schema-memo").toString
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("id", "s").coalesce(1).write.mode("overwrite")
+      .parquet(path)
+    assert(graft.Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    Seq((2L, "b", 0.5)).toDF("id", "s", "x").coalesce(1).write
+      .mode("overwrite").parquet(path)
+    val again = graft.Tables.load(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("id", "s", "x"))
+    assert(again.as[(Long, String, Double)].collect().toSeq ==
+      Seq((2L, "b", 0.5)))
+
+    // a parquet setting that changes what is inferred: a real
+    // TIMESTAMP(NANOS) column (written with parquet's example writer —
+    // Spark writes no nanos) reads as bigint under nanosAsLong and is
+    // refused without it, so a memoized load must match a direct read
+    // under each setting, in either order
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(nanos)
+    val tsDir = Files.createTempDirectory("graft-schema-nanos").toString
+    val nanosType = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$tsDir/ts.parquet"))
+      .withType(nanosType).build()
+    w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+      nanosType).newGroup().append("ts", 1700000000123456789L))
+    w.close()
+    def schemaOf(read: => org.apache.spark.sql.DataFrame) =
+      scala.util.Try(read.schema).toOption
+    try {
+      val seen = Seq("true", "false", "true").map { v =>
+        spark.conf.set(nanos, v)
+        val memo = schemaOf(graft.Tables.load(spark, tsDir, "ts"))
+        assert(memo == schemaOf(spark.read.parquet(s"$tsDir/ts.parquet")),
+          s"memoized schema differs from a direct read under $nanos=$v")
+        memo
+      }
+      assert(seen.distinct.size == 2, s"the setting changed nothing: $seen")
+      // events loads the same whatever nanosAsLong was before the call
+      val fixture = "/root/testdata/sf0.001"
+      val rows = Seq("false", "true").map { v =>
+        spark.conf.set(nanos, v)
+        bitLines(graft.Tables.events(spark, fixture))
+      }
+      assert(rows.head.nonEmpty && rows.head == rows(1))
+    } finally before.fold(spark.conf.unset(nanos))(spark.conf.set(nanos, _))
+  }
 }

@@ -358,10 +358,14 @@ class GdMfSpec extends SparkSpec {
   }
 
   test("training run equals a hand-rolled in-memory reference") {
+    // 24 epochs as well: a long run must stay on the reference too
+    Seq(2, 24).foreach(mfMatchesReference)
+  }
+
+  private def mfMatchesReference(epochs: Int): Unit = {
     val rank = 3
     val lr = 0.5
     val reg = 0.1
-    val epochs = 2
     val rows = Seq(
       (1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
       (2L, 10L, 5.0), (2L, 12L, 1.0),
@@ -418,7 +422,80 @@ class GdMfSpec extends SparkSpec {
     val ref = want.result()
     assert(got.length == ref.length)
     got.zip(ref).foreach { case (g, w) =>
-      assert(math.abs(g - w) < 1.1e-6, s"got=${got.toSeq} want=$ref")
+      assert(math.abs(g - w) < 1.1e-6,
+        s"epochs=$epochs got=${got.toSeq} want=$ref")
+    }
+  }
+
+  test("an epoch compiles no new code: it reuses the classes of the epoch before") {
+    // Every epoch runs the plan of the one before over a new model. The
+    // generated code must not depend on the model's identity: when it
+    // did (an identity-hashed factor table ordered the plan's common
+    // subexpressions), each epoch compiled its update stage afresh — a
+    // Janino compile and a cold JIT per epoch, and more entries in
+    // Spark's bounded class cache. After a warm run, a run at 2 and one
+    // at 6 epochs of the same trainer compile nothing.
+    val r = Seq((1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
+      (2L, 10L, 5.0), (2L, 12L, 1.0), (3L, 11L, 4.0), (3L, 12L, 5.0))
+      .toDF("user_id", "item_id", "rating")
+    def compiles(train: Int => org.apache.spark.sql.DataFrame, epochs: Int): Long = {
+      val before = org.apache.spark.graft.CodegenCompiles.count
+      train(epochs).collect()
+      org.apache.spark.graft.CodegenCompiles.count - before
+    }
+    Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      ("MF", GradientMF.trainTrajectory(r, 3, 0.5, 0.1, _)),
+      ("BPR", GradientMF.bprTrainTrajectory(r, 3, 0.5, 0.1, _)),
+      ("LightGCN", GradientMF.lightgcnTrainTrajectory(r, 3, 0.5, 0.1, _)))
+      .foreach { case (name, train) =>
+        compiles(train, 2)
+        val (two, six) = (compiles(train, 2), compiles(train, 6))
+        info(s"$name: $two classes compiled at 2 epochs, $six at 6")
+        assert(two == 0 && six == 0,
+          s"$name compiled $two classes at 2 epochs, $six at 6")
+      }
+  }
+
+  test("an epoch runs at most 2 Spark jobs (MF, BPR) or 6 (LightGCN)") {
+    // Each epoch is one collected query per step over the carried model:
+    // MF and BPR one (shuffle map stage + collect), LightGCN three
+    // (propagate, gradient, backprop + update). Counted as the job
+    // increment from 2 to 6 epochs on the toy ratings, so set-up jobs
+    // (mean, fact cache, init) cancel out; the cache is cleared before
+    // each run, or a fact cached by the first would spare the second its
+    // set-up jobs.
+    val r = Seq((1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
+      (2L, 10L, 5.0), (2L, 12L, 1.0), (3L, 11L, 4.0), (3L, 12L, 5.0))
+      .toDF("user_id", "item_id", "rating")
+    def jobs(train: Int => org.apache.spark.sql.DataFrame, epochs: Int): Int = {
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      spark.catalog.clearCache()
+      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        train(epochs).collect()
+        org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+        started.get
+      } finally sc.removeSparkListener(listener)
+    }
+    val trainers = Seq[(String, Int => org.apache.spark.sql.DataFrame, Int)](
+      ("MF", GradientMF.trainTrajectory(r, 3, 0.5, 0.1, _), 2),
+      ("BPR", GradientMF.bprTrainTrajectory(r, 3, 0.5, 0.1, _), 2),
+      ("LightGCN", GradientMF.lightgcnTrainTrajectory(r, 3, 0.5, 0.1, _), 6))
+    val counted = trainers.map { case (name, train, perEpoch) =>
+      val (two, six) = (jobs(train, 2), jobs(train, 6))
+      info(s"$name: $two jobs at 2 epochs, $six at 6")
+      (name, two, six, perEpoch)
+    }
+    counted.foreach { case (name, two, six, perEpoch) =>
+      assert(six - two <= 4 * perEpoch,
+        s"$name runs ${(six - two) / 4.0} jobs per epoch (2 -> $two, 6 -> $six)")
     }
   }
 }
