@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * This is [[NearestCells]]'s pattern (plan-carried model +
   * JIT-compiled per-row loop inside whole-stage codegen) applied to the
   * PQ ENCODE pass, and it exists for the same §8.12/§8.13 reason: the
-  * relational encoder (`Clustering.assignCellsGrouped`) materializes
+  * relational encoder (`PqIndex.encode`) materializes
   * vectors × s × k joined rows and folds them back through a
   * `first(emb)` + struct-`min_by` aggregate — non-primitive buffers
   * downstream of a fan-out join, i.e. the exact SortAggregate shape

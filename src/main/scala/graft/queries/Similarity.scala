@@ -9,6 +9,7 @@ import org.apache.spark.sql.graft.ExpressionColumn
 
 import graft.{Q, SessionIds, Tables}
 import graft.expr.GraftFunctions
+import graft.rec.{Clustering, IvfIndex, IvfPqIndex, PqIndex}
 
 /** Similarity search over the `embeddings` fixture (vec_id, embedding:
   * array<float> dim 64, label) — the training-data-pipeline ANN surface.
@@ -46,27 +47,51 @@ object Similarity {
   private def bandBuckets(e: Column): Column =
     ExpressionColumn(e)(x => graft.expr.HyperplaneBands(x(0), planes, Bands, RowsPerBand))
 
+  /** The `embeddings` fixture as `(vec_id, emb: array<double>)` — the
+    * relation every ANN path here reads (float→double widening is
+    * exact). */
+  private def vectors(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+
+  /** The default probe relation for the ANN catalog queries: the first
+    * ten vectors of the collection (what every recall oracle assumes).
+    * The index serves take the probe set as an ARGUMENT — any
+    * (vec_id, emb) relation works, exactly as [[graft.rec.IvfIndex]]
+    * and [[graft.rec.PqIndex]] are callable on any probe set. */
+  private def defaultProbes(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < 10)
+
+  /** Every default probe of `e` against every other `(vec_id, emb)`
+    * vector of `cands`: `(probe_id, neighbor_id, pe, ce)`. The probe
+    * side broadcasts and the candidate scan streams once — at cluster
+    * scale a broadcast nested loop over the candidate partitions, the
+    * canonical exact-scoring pattern. */
+  private def probePairs(e: DataFrame, cands: DataFrame): DataFrame =
+    cands.select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
+      .crossJoin(broadcast(defaultProbes(e)
+        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))))
+      .where(col("probe_id") =!= col("neighbor_id"))
+
+  /** One row `(n_exact, n_found, recall)`: how many of the `exact` rows
+    * `found` also holds, matched on `keys`. */
+  private def recall(exact: DataFrame, found: DataFrame,
+                     keys: String*): DataFrame =
+    exact.select(keys.map(col): _*)
+      .join(found.select(keys.map(col) :+ lit(1).as("hit"): _*), keys, "left")
+      .agg(count(lit(1)).as("n_exact"),
+           count(col("hit")).as("n_found"),
+           round(count(col("hit")).cast("double") / count(lit(1)), 6)
+             .as("recall"))
+
   /** Brute-force cosine top-5 neighbors for probes vec_id<10 (SURVEY-brief
-    * ANN baseline). Probe side broadcasts; candidate scan streams once —
-    * at cluster scale this is a broadcast nested-loop over the candidate
-    * partitions, the canonical exact-scoring pattern. */
+    * ANN baseline): every [[probePairs]] pair ranked by exact cosine,
+    * the form of each recall query's exact baseline. */
   val annTopk = Q(
     "q20_ann_topk",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val cands = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("neighbor_id"))
-      cands.crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          GraftFunctions.cosineSimilarity(col("pe"), col("ce")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 5)
-        .select(col("probe_id"), col("neighbor_id"), col("rank"),
-                round(col("score"), 6).as("score"))
+      val e = vectors(s, d)
+      IvfIndex.rankByCosine(probePairs(e, e), 5)
         .orderBy(col("probe_id"), col("rank"))
     },
     Some("""SELECT probe_id, neighbor_id, rank, round(score, 6) AS score FROM (
@@ -201,16 +226,8 @@ object Similarity {
     * (n_exact, n_found, recall). */
   val lshRecall = Q(
     "q66_lsh_recall",
-    (s, d) => {
-      val exact = embeddingNeardup.run(s, d).select(col("a_id"), col("b_id"))
-      val found = lshNeardup.run(s, d)
-        .select(col("a_id"), col("b_id"), lit(1).as("hit"))
-      exact.join(found, Seq("a_id", "b_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-             count(col("hit")).as("n_found"),
-             round(count(col("hit")).cast("double") / count(lit(1)), 6)
-               .as("recall"))
-    },
+    (s, d) => recall(embeddingNeardup.run(s, d), lshNeardup.run(s, d),
+      "a_id", "b_id"),
     Some(s"""WITH sig AS (
               SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
             bk AS (SELECT vec_id, e, $bandColsSql FROM sig),
@@ -243,34 +260,10 @@ object Similarity {
   val ivfAnn = Q(
     "q57_ivf_ann",
     (s, d) => {
-      import graft.rec.Clustering
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          col("embedding").cast("array<double>").as("emb"))
-      val cent = Clustering.lloydKMeans(
-        e.select(col("vec_id"), col("emb")), IvfK, IvfIters).cache()
-      val index = Clustering.assignCells(
-        e.select(col("vec_id"), col("emb")), cent, nprobe = 1)
-        .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .select(col("cid"), col("vec_id").as("neighbor_id"),
-          col("embedding").as("ce"))
-      val probes = Clustering.assignCells(
-        e.where(col("vec_id") < 10).select(col("vec_id"), col("emb")),
-        cent, nprobe = IvfNProbe)
-        .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("cid"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("neighbor_id"))
-      index.join(broadcast(probes), Seq("cid"))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          GraftFunctions.cosineSimilarity(col("pe"), col("ce")))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"), col("rank"),
-          round(col("score"), 6).as("score"))
-        .orderBy(col("probe_id"), col("rank"))
+      val e = vectors(s, d)
+      val cent = Clustering.lloydKMeans(e, IvfK, IvfIters)
+      IvfIndex.serve(IvfIndex.cells(e, cent), cent, defaultProbes(e),
+          IvfNProbe, topK = 3)
         // 30-row result, cached so q67 reuses it (the quantizer
         // underneath is itself cached by lloydKMeans)
         .cache()
@@ -279,12 +272,33 @@ object Similarity {
           SELECT probe_id, neighbor_id, rank, round(score, 6) AS score FROM (
             SELECT p.probe_id, i.vec_id AS neighbor_id,
               list_cosine_similarity(p.pe, i.emb) AS score,
-              row_number() OVER (PARTITION BY p.probe_id ORDER BY
-                list_cosine_similarity(p.pe, i.emb) DESC, i.vec_id) AS rank
-            FROM probe p JOIN idx i
-              ON p.cid = i.cid AND p.probe_id <> i.vec_id) t
+              $ivfRank
           WHERE rank <= 3 ORDER BY probe_id, rank""")
   )
+
+  /** The rank of q57's candidates, from the `probe` and `idx` CTEs of
+    * [[ivfCtes]] (q67 nests it two columns further in, see [[nest]]). */
+  private def ivfRank: String =
+    """row_number() OVER (PARTITION BY p.probe_id ORDER BY
+                list_cosine_similarity(p.pe, i.emb) DESC, i.vec_id) AS rank
+            FROM probe p JOIN idx i
+              ON p.cid = i.cid AND p.probe_id <> i.vec_id) t"""
+
+  /** `sql` two columns further in, as a recall query's CTE list nests
+    * the text of the ANN query it measures: the shared text stays
+    * byte-identical to the oracle it came from. */
+  private def nest(sql: String): String = sql.replace("\n", "\n  ")
+
+  /** The SQL of one Lloyd update step over an `assigned` (vec_id, emb,
+    * cid) relation: per cid, the elementwise mean of its vectors — the
+    * mirror of [[graft.rec.Clustering.lloydKMeans]]'s update, shared by
+    * the IVF and the PQ oracles. */
+  private def lloydUpdateSql(assigned: String): String =
+    s"""SELECT cid, list(va ORDER BY pos) AS c FROM (
+            SELECT cid, pos, avg(v) AS va FROM (
+              SELECT cid, unnest(emb) AS v,
+                generate_subscripts(emb, 1) AS pos FROM $assigned) u
+            GROUP BY cid, pos) g GROUP BY cid"""
 
   /** DuckDB mirror of the IVF build: the same deterministic init, the
     * same unrolled Lloyd rounds (assignment argmin over ROUNDED distance
@@ -299,15 +313,9 @@ object Similarity {
               row_number() OVER (PARTITION BY e.vec_id ORDER BY
                 round(list_distance(e.emb, c.c), 6), c.cid) AS rn
             FROM e CROSS JOIN $cent c $filter) t WHERE rn <= $rn"""
-    def updateSql(assigned: String): String =
-      s"""SELECT cid, list(va ORDER BY pos) AS c FROM (
-            SELECT cid, pos, avg(v) AS va FROM (
-              SELECT cid, unnest(emb) AS v,
-                generate_subscripts(emb, 1) AS pos FROM $assigned) u
-            GROUP BY cid, pos) g GROUP BY cid"""
     val rounds = (0 until IvfIters).map { i =>
       s"""a$i AS (${assignSql(s"c$i", "1", "")}),
-          c${i + 1} AS (${updateSql(s"a$i")})"""
+          c${i + 1} AS (${lloydUpdateSql(s"a$i")})"""
     }.mkString(",\n")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
             FROM embeddings),
@@ -326,26 +334,9 @@ object Similarity {
   val ivfRecall = Q(
     "q67_ivf_recall",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val cands = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("neighbor_id"))
-      val exact = cands.crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          GraftFunctions.cosineSimilarity(col("pe"), col("ce")))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"))
-      val found = ivfAnn.run(s, d)
-        .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
-      exact.join(found, Seq("probe_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-             count(col("hit")).as("n_found"),
-             round(count(col("hit")).cast("double") / count(lit(1)), 6)
-               .as("recall"))
+      val e = vectors(s, d)
+      recall(IvfIndex.rankByCosine(probePairs(e, e), 3), ivfAnn.run(s, d),
+        "probe_id", "neighbor_id")
     },
     Some(s"""$ivfCtes,
             exact AS (SELECT probe_id, neighbor_id FROM (
@@ -356,10 +347,7 @@ object Similarity {
               WHERE a.vec_id < 10) t WHERE rank <= 3),
             ivf AS (SELECT probe_id, neighbor_id, 1 AS hit FROM (
               SELECT p.probe_id, i.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY p.probe_id ORDER BY
-                  list_cosine_similarity(p.pe, i.emb) DESC, i.vec_id) AS rank
-              FROM probe p JOIN idx i
-                ON p.cid = i.cid AND p.probe_id <> i.vec_id) t
+                ${nest(ivfRank)}
               WHERE rank <= 3)
             SELECT count(*) AS n_exact,
                    count(i.hit) AS n_found,
@@ -469,13 +457,9 @@ object Similarity {
   val ivfIndexProbe = Q(
     "q83_ivf_index_probe",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val dir = indexDir(s, d, "ivf")(
-        graft.rec.IvfIndex.build(e, _, IvfK, IvfIters))
-      graft.rec.IvfIndex
-        .probe(s, dir, defaultProbes(e), IvfNProbe, topK = 3)
-        .orderBy(col("probe_id"), col("rank"))
+      val e = vectors(s, d)
+      val dir = indexDir(s, d, "ivf")(IvfIndex.build(e, _, IvfK, IvfIters))
+      IvfIndex.probe(s, dir, defaultProbes(e), IvfNProbe, topK = 3)
     },
     ivfAnn.oracle
   )
@@ -498,19 +482,10 @@ object Similarity {
   val clusterNeardup = Q(
     "q101_cluster_neardup",
     (s, d) => {
-      import graft.rec.Clustering
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          col("embedding").cast("array<double>").as("emb"))
-      val cent = Clustering.lloydKMeans(
-        e.select(col("vec_id"), col("emb")), IvfK, IvfIters).cache()
-      val cells = Clustering.assignCells(
-        e.select(col("vec_id"), col("emb")), cent, nprobe = 1)
-        .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      val a = cells.select(col("cid"), col("vec_id").as("a_id"),
-        col("embedding").as("ea"))
-      val b = cells.select(col("cid"), col("vec_id").as("b_id"),
-        col("embedding").as("eb"))
+      val e = vectors(s, d)
+      val cells = IvfIndex.cells(e, Clustering.lloydKMeans(e, IvfK, IvfIters))
+      val a = cells.select(col("cid"), col("vec_id").as("a_id"), col("emb").as("ea"))
+      val b = cells.select(col("cid"), col("vec_id").as("b_id"), col("emb").as("eb"))
       a.join(b, Seq("cid"))
         .where(col("a_id") < col("b_id"))
         .withColumn("score",
@@ -535,25 +510,6 @@ object Similarity {
   private val PqIters = 2
   private val PqShortlist = 80 // ADC candidates reranked exactly
 
-  /** The default probe relation for the ANN catalog queries: the first
-    * ten vectors of the collection (what every recall oracle assumes).
-    * The PQ/IVF-PQ paths take the probe set as an ARGUMENT — any
-    * (vec_id, emb) relation works, exactly as [[graft.rec.IvfIndex]]
-    * and [[graft.rec.PqIndex]] are callable on any probe set. */
-  private def defaultProbes(e: DataFrame): DataFrame =
-    e.where(col("vec_id") < 10)
-
-  /** Per-subspace codebooks, the encoded index, and the probe ADC
-    * tables: `(enc (neighbor_id, sub, code), ptab (probe_id, sub, code,
-    * pd))` — shared by the flat-PQ (q109) and IVF-PQ (q111) paths; the
-    * math lives in [[graft.rec.PqIndex]] (q114 serves the same from
-    * disk). */
-  private def pqEncode(e: DataFrame, probes: DataFrame): (DataFrame, DataFrame) = {
-    import graft.rec.PqIndex
-    val cbs = PqIndex.trainCodebooks(e, PqS, PqSub, PqK, PqIters)
-    (PqIndex.encode(e, cbs, PqSub), PqIndex.probeTables(probes, cbs, PqSub))
-  }
-
   /** Product-quantized ANN with asymmetric distance computation — the
     * FOURTH ANN path (vs brute q20, LSH q22, IVF q57/q83) and the one
     * that survives when even per-cell raw vectors don't fit: split the
@@ -576,15 +532,10 @@ object Similarity {
   val pqAnn = Q(
     "q109_pq_ann",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val probes = defaultProbes(e)
-      val (enc, ptab) = pqEncode(e, probes)
-      val shortlist = graft.rec.PqIndex.adcTop(
-        enc.join(broadcast(ptab), Seq("sub", "code"))
-          .where(col("probe_id") =!= col("neighbor_id")),
-        PqShortlist)
-      graft.rec.PqIndex.rerankTop(shortlist, e, probes, topK = 3)
+      val e = vectors(s, d)
+      val cbs = PqIndex.trainCodebooks(e, PqS, PqSub, PqK, PqIters)
+      PqIndex.serve(PqIndex.encode(e, cbs), cbs, defaultProbes(e), e,
+          PqShortlist, topK = 3)
         .cache() // q110 reuses the ranked result
     },
     Some(s"""$pqCtes,
@@ -630,18 +581,12 @@ object Similarity {
               row_number() OVER (PARTITION BY e.vec_id ORDER BY
                 round(list_distance(e.emb, c.c), 6), c.cid) AS rn
             FROM $src e CROSS JOIN $cent c) t WHERE rn <= 1"""
-    def updateSql(assigned: String): String =
-      s"""SELECT cid, list(va ORDER BY pos) AS c FROM (
-            SELECT cid, pos, avg(v) AS va FROM (
-              SELECT cid, unnest(emb) AS v,
-                generate_subscripts(emb, 1) AS pos FROM $assigned) u
-            GROUP BY cid, pos) g GROUP BY cid"""
     val subs = (0 until PqS).map { sub =>
       val lo = sub * PqSub + 1
       val hi = (sub + 1) * PqSub
       val rounds = (0 until PqIters).map { i =>
         s"""s${sub}a$i AS (${assignSql(s"s${sub}v", s"s${sub}c$i")}),
-            s${sub}c${i + 1} AS (${updateSql(s"s${sub}a$i")})"""
+            s${sub}c${i + 1} AS (${lloydUpdateSql(s"s${sub}a$i")})"""
       }.mkString(",\n")
       s"""s${sub}v AS (SELECT vec_id, emb[$lo:$hi] AS emb FROM e),
           s${sub}c0 AS (SELECT vec_id AS cid, emb AS c
@@ -678,37 +623,13 @@ object Similarity {
   val pqRecall = Q(
     "q110_pq_recall",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("dist"), col("neighbor_id"))
-      val exact = e.select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
-        .crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dist",
-          round(sqrt(aggregate(zip_with(col("pe"), col("ce"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)), 6))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"))
-      val found = pqAnn.run(s, d)
-        .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
-      exact.join(found, Seq("probe_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-             count(col("hit")).as("n_found"),
-             round(count(col("hit")).cast("double") / count(lit(1)), 6)
-               .as("recall"))
+      val e = vectors(s, d)
+      recall(PqIndex.rankByL2(probePairs(e, e), 3), pqAnn.run(s, d),
+        "probe_id", "neighbor_id")
     },
     Some(s"""$pqCtes,
             $pqTopCtes,
-            exact AS (SELECT probe_id, neighbor_id FROM (
-              SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                  round(list_distance(a.emb, b.emb), 6), b.vec_id) AS rank
-              FROM e a JOIN e b ON a.vec_id <> b.vec_id
-              WHERE a.vec_id < 10) t WHERE rank <= 3),
+            $exactL2Cte,
             pq AS (SELECT probe_id, neighbor_id, 1 AS hit FROM pqtop)
             SELECT count(*) AS n_exact,
                    count(p.hit) AS n_found,
@@ -716,6 +637,17 @@ object Similarity {
             FROM exact x LEFT JOIN pq p
               ON x.probe_id = p.probe_id AND x.neighbor_id = p.neighbor_id""")
   )
+
+  /** The exact Euclidean top-3 of the default probes as the CTE `exact`
+    * (probe_id, neighbor_id) over `e` — the baseline of q110, q112 and
+    * q120. */
+  private def exactL2Cte: String =
+    """exact AS (SELECT probe_id, neighbor_id FROM (
+              SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
+                row_number() OVER (PARTITION BY a.vec_id ORDER BY
+                  round(list_distance(a.emb, b.emb), 6), b.vec_id) AS rank
+              FROM e a JOIN e b ON a.vec_id <> b.vec_id
+              WHERE a.vec_id < 10) t WHERE rank <= 3)"""
 
   /** The persistent-PQ face of q109 (q83's build-once/probe-many idiom
     * applied to the memory-bound regime): build the `codes` +
@@ -733,13 +665,10 @@ object Similarity {
   val pqIndexProbe = Q(
     "q114_pq_index_probe",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d)
       val dir = indexDir(s, d, "pq")(
-        graft.rec.PqIndex.build(e, _, PqS, PqSub, PqK, PqIters))
-      graft.rec.PqIndex
-        .probe(s, dir, defaultProbes(e), e, PqS, PqSub, PqShortlist, topK = 3)
-        .orderBy(col("probe_id"), col("rank"))
+        PqIndex.build(e, _, PqS, PqSub, PqK, PqIters))
+      PqIndex.probe(s, dir, defaultProbes(e), e, PqShortlist, topK = 3)
     },
     pqAnn.oracle
   )
@@ -759,31 +688,28 @@ object Similarity {
   val ivfPqAnn = Q(
     "q111_ivfpq_ann",
     (s, d) => {
-      import graft.rec.Clustering
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val ev = e.select(col("vec_id"), col("emb"))
-      val probes = defaultProbes(e)
-      val cent = Clustering.lloydKMeans(ev, IvfK, IvfIters).cache()
-      val cells = Clustering.assignCells(ev, cent, nprobe = 1)
-        .select(col("vec_id").as("neighbor_id"), col("cid"))
-      val probeCells = Clustering.assignCells(
-        probes, cent, nprobe = IvfNProbe)
-        .select(col("vec_id").as("probe_id"), col("cid"))
-      val cand = cells.join(broadcast(probeCells), Seq("cid"))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"))
-      val (enc, ptab) = pqEncode(e, probes)
-      val shortlist = graft.rec.PqIndex.adcTop(
-        cand.join(enc, Seq("neighbor_id"))
-          .join(broadcast(ptab), Seq("probe_id", "sub", "code")),
-        IvfPqShortlist)
-      graft.rec.PqIndex.rerankTop(shortlist, e, probes, topK = 3)
+      val e = vectors(s, d)
+      val cent = Clustering.lloydKMeans(e, IvfK, IvfIters)
+      val cbs = PqIndex.trainCodebooks(e, PqS, PqSub, PqK, PqIters)
+      IvfPqIndex.serve(IvfPqIndex.cellCodes(e, cent, cbs), cent, cbs,
+          defaultProbes(e), e, IvfNProbe, IvfPqShortlist, topK = 3)
         .cache() // q112 reuses the ranked result
     },
     Some(s"""$ivfCtes,
           $pqSubCtes,
-          cand AS (SELECT p.probe_id, i.vec_id AS neighbor_id
+          $ivfPqSlCtes,
+          top AS (SELECT probe_id, neighbor_id, rank, dist FROM (
+                   SELECT s.probe_id, s.neighbor_id,
+                     round(list_distance(p.emb, n.emb), 6) AS dist,
+                     $ivfPqRerank)
+          SELECT probe_id, neighbor_id, rank, dist
+          FROM top ORDER BY probe_id, rank""")
+  )
+
+  /** q111's candidate cells and ADC shortlist as the CTEs `cand` and
+    * `sl` (q112 nests them, see [[nest]]). */
+  private def ivfPqSlCtes: String =
+    s"""cand AS (SELECT p.probe_id, i.vec_id AS neighbor_id
                    FROM probe p JOIN idx i
                      ON i.cid = p.cid AND i.vec_id <> p.probe_id),
           sl AS (SELECT probe_id, neighbor_id FROM (
@@ -797,19 +723,17 @@ object Similarity {
                          JOIN ptab pt ON pt.probe_id = c.probe_id
                            AND pt.sub = en.sub AND pt.code = en.code
                          GROUP BY 1, 2) a) s
-                 WHERE srank <= $IvfPqShortlist),
-          top AS (SELECT probe_id, neighbor_id, rank, dist FROM (
-                   SELECT s.probe_id, s.neighbor_id,
-                     round(list_distance(p.emb, n.emb), 6) AS dist,
-                     row_number() OVER (PARTITION BY s.probe_id ORDER BY
+                 WHERE srank <= $IvfPqShortlist)"""
+
+  /** The exact rerank of q111's `sl` shortlist to its top-3 (q112 nests
+    * it, see [[nest]]). */
+  private def ivfPqRerank: String =
+    """row_number() OVER (PARTITION BY s.probe_id ORDER BY
                        round(list_distance(p.emb, n.emb), 6),
                        s.neighbor_id) AS rank
                    FROM sl s JOIN e p ON p.vec_id = s.probe_id
                         JOIN e n ON n.vec_id = s.neighbor_id) t
-                 WHERE rank <= 3)
-          SELECT probe_id, neighbor_id, rank, dist
-          FROM top ORDER BY probe_id, rank""")
-  )
+                 WHERE rank <= 3"""
 
   /** Recall@3 of the composed IVF-PQ path (q111) against the exact
     * euclidean top-3 — the acceptance number for BOTH prunings applied
@@ -818,60 +742,17 @@ object Similarity {
   val ivfPqRecall = Q(
     "q112_ivfpq_recall",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("dist"), col("neighbor_id"))
-      val exact = e.select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
-        .crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dist",
-          round(sqrt(aggregate(zip_with(col("pe"), col("ce"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)), 6))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"))
-      val found = ivfPqAnn.run(s, d)
-        .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
-      exact.join(found, Seq("probe_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-             count(col("hit")).as("n_found"),
-             round(count(col("hit")).cast("double") / count(lit(1)), 6)
-               .as("recall"))
+      val e = vectors(s, d)
+      recall(PqIndex.rankByL2(probePairs(e, e), 3), ivfPqAnn.run(s, d),
+        "probe_id", "neighbor_id")
     },
     Some(s"""$ivfCtes,
             $pqSubCtes,
-            cand AS (SELECT p.probe_id, i.vec_id AS neighbor_id
-                     FROM probe p JOIN idx i
-                       ON i.cid = p.cid AND i.vec_id <> p.probe_id),
-            sl AS (SELECT probe_id, neighbor_id FROM (
-                     SELECT a.probe_id, a.neighbor_id,
-                       row_number() OVER (PARTITION BY a.probe_id
-                         ORDER BY a.adist, a.neighbor_id) AS srank
-                     FROM (SELECT c.probe_id, c.neighbor_id,
-                             round(sum(pt.pd), 6) AS adist
-                           FROM cand c
-                           JOIN enc en ON en.neighbor_id = c.neighbor_id
-                           JOIN ptab pt ON pt.probe_id = c.probe_id
-                             AND pt.sub = en.sub AND pt.code = en.code
-                           GROUP BY 1, 2) a) s
-                   WHERE srank <= $IvfPqShortlist),
+            ${nest(ivfPqSlCtes)},
             ivfpq AS (SELECT probe_id, neighbor_id, 1 AS hit FROM (
                      SELECT s.probe_id, s.neighbor_id,
-                       row_number() OVER (PARTITION BY s.probe_id ORDER BY
-                         round(list_distance(p.emb, n.emb), 6),
-                         s.neighbor_id) AS rank
-                     FROM sl s JOIN e p ON p.vec_id = s.probe_id
-                          JOIN e n ON n.vec_id = s.neighbor_id) t
-                   WHERE rank <= 3),
-            exact AS (SELECT probe_id, neighbor_id FROM (
-              SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                  round(list_distance(a.emb, b.emb), 6), b.vec_id) AS rank
-              FROM e a JOIN e b ON a.vec_id <> b.vec_id
-              WHERE a.vec_id < 10) t WHERE rank <= 3)
+                       ${nest(ivfPqRerank)}),
+            $exactL2Cte
             SELECT count(*) AS n_exact,
                    count(p.hit) AS n_found,
                    round(CAST(count(p.hit) AS DOUBLE) / count(*), 6) AS recall
@@ -895,15 +776,11 @@ object Similarity {
   val ivfPqIndexProbe = Q(
     "q116_ivfpq_index_probe",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d)
       val dir = indexDir(s, d, "ivfpq")(
-        graft.rec.IvfPqIndex.build(e, _, IvfK, IvfIters,
-          PqS, PqSub, PqK, PqIters))
-      graft.rec.IvfPqIndex
-        .probe(s, dir, defaultProbes(e), e, IvfNProbe,
-          PqS, PqSub, IvfPqShortlist, topK = 3)
-        .orderBy(col("probe_id"), col("rank"))
+        IvfPqIndex.build(e, _, IvfK, IvfIters, PqS, PqSub, PqK, PqIters))
+      IvfPqIndex.probe(s, dir, defaultProbes(e), e, IvfNProbe,
+        IvfPqShortlist, topK = 3)
     },
     ivfPqAnn.oracle
   )
@@ -926,8 +803,7 @@ object Similarity {
   val sq8Ann = Q(
     "q119_sq8_ann",
     (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val e = vectors(s, d)
       val stats = e
         .select(posexplode(col("emb")).as(Seq("pos", "v")))
         .groupBy(col("pos"))
@@ -946,41 +822,13 @@ object Similarity {
           zip_with(col("emb"), col("mna"), (v, m) => v - m), col("rng"),
           (dv, r) => when(r === 0.0, 0.0)
             .otherwise(floor(dv / r * 255.0 + 0.5).cast("double"))))
-        .withColumn("dq", zip_with(
+        .select(col("vec_id"), zip_with(
           zip_with(col("codes"), col("rng"), (c, r) => c / 255.0 * r),
-          col("mna"), (x, m) => m + x))
-        .select(col("vec_id").as("neighbor_id"), col("dq"))
-      val probes = defaultProbes(e)
-        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("dist"), col("neighbor_id"))
-      coded.crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dist",
-          round(sqrt(aggregate(zip_with(col("pe"), col("dq"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)), 6))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"), col("rank"), col("dist"))
+          col("mna"), (x, m) => m + x).as("emb"))
+      PqIndex.rankByL2(probePairs(e, coded), 3)
         .orderBy(col("probe_id"), col("rank"))
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              FROM embeddings),
-            ex AS (SELECT vec_id, unnest(emb) AS v,
-                     generate_subscripts(emb, 1) AS pos FROM e),
-            st AS (SELECT pos, min(v) AS mn, max(v) AS mx
-                   FROM ex GROUP BY 1),
-            dq AS (SELECT vec_id, pos,
-                     mn + (CASE WHEN mx = mn THEN 0.0
-                       ELSE floor((v - mn) / (mx - mn) * 255.0 + 0.5)
-                       END) / 255.0 * (mx - mn) AS dv
-                   FROM ex JOIN st USING (pos)),
-            d AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-                    round(sqrt(sum((p.v - c.dv) * (p.v - c.dv))), 6) AS dist
-                  FROM ex p JOIN dq c ON p.pos = c.pos
-                    AND p.vec_id <> c.vec_id
-                  WHERE p.vec_id < 10
-                  GROUP BY 1, 2)
+    Some(s"""$sq8Ctes
             SELECT probe_id, neighbor_id, rank, dist FROM (
               SELECT probe_id, neighbor_id, dist,
                 CAST(row_number() OVER (PARTITION BY probe_id
@@ -989,36 +837,11 @@ object Similarity {
             WHERE rank <= 3 ORDER BY probe_id, rank""")
   )
 
-  /** Recall@3 of the SQ8 path (q119) against the exact euclidean top-3
-    * — q110/q112's idiom, closing the compression-recall table: byte
-    * quantization at 4× compression vs PQ's 4 bits/dim at 64×. */
-  val sq8Recall = Q(
-    "q120_sq8_recall",
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("dist"), col("neighbor_id"))
-      val exact = e.select(col("vec_id").as("neighbor_id"), col("emb").as("ce"))
-        .crossJoin(broadcast(probes))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dist",
-          round(sqrt(aggregate(zip_with(col("pe"), col("ce"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x)), 6))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"))
-      val found = sq8Ann.run(s, d)
-        .select(col("probe_id"), col("neighbor_id"), lit(1).as("hit"))
-      exact.join(found, Seq("probe_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-             count(col("hit")).as("n_found"),
-             round(count(col("hit")).cast("double") / count(lit(1)), 6)
-               .as("recall"))
-    },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+  /** q119's quantizer and its dequantized distances as the CTEs `e`,
+    * `ex`, `st`, `dq` and `d` (probe_id, neighbor_id, dist) — q120
+    * measures the same rows. */
+  private def sq8Ctes: String =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
               FROM embeddings),
             ex AS (SELECT vec_id, unnest(emb) AS v,
                      generate_subscripts(emb, 1) AS pos FROM e),
@@ -1034,18 +857,25 @@ object Similarity {
                   FROM ex p JOIN dq c ON p.pos = c.pos
                     AND p.vec_id <> c.vec_id
                   WHERE p.vec_id < 10
-                  GROUP BY 1, 2),
+                  GROUP BY 1, 2)"""
+
+  /** Recall@3 of the SQ8 path (q119) against the exact euclidean top-3
+    * — q110/q112's idiom, closing the compression-recall table: byte
+    * quantization at 4× compression vs PQ's 4 bits/dim at 64×. */
+  val sq8Recall = Q(
+    "q120_sq8_recall",
+    (s, d) => {
+      val e = vectors(s, d)
+      recall(PqIndex.rankByL2(probePairs(e, e), 3), sq8Ann.run(s, d),
+        "probe_id", "neighbor_id")
+    },
+    Some(s"""$sq8Ctes,
             sq AS (SELECT probe_id, neighbor_id, 1 AS hit FROM (
                      SELECT probe_id, neighbor_id,
                        row_number() OVER (PARTITION BY probe_id
                          ORDER BY dist, neighbor_id) AS rank
                      FROM d) t WHERE rank <= 3),
-            exact AS (SELECT probe_id, neighbor_id FROM (
-              SELECT a.vec_id AS probe_id, b.vec_id AS neighbor_id,
-                row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                  round(list_distance(a.emb, b.emb), 6), b.vec_id) AS rank
-              FROM e a JOIN e b ON a.vec_id <> b.vec_id
-              WHERE a.vec_id < 10) t WHERE rank <= 3)
+            $exactL2Cte
             SELECT count(*) AS n_exact,
                    count(s.hit) AS n_found,
                    round(CAST(count(s.hit) AS DOUBLE) / count(*), 6) AS recall
@@ -1077,13 +907,10 @@ object Similarity {
   val clusterBalance = Q(
     "q129_cluster_balance",
     (s, d) => {
-      import graft.rec.Clustering
       val k = 5
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val cent = Clustering.lloydKMeans(e, IvfK, IvfIters).cache()
+      val e = vectors(s, d)
       val topk = graft.expr.TopKPairs.agg(k)
-      Clustering.assignCells(e, cent, nprobe = 1)
+      Clustering.assignCells(e, Clustering.lloydKMeans(e, IvfK, IvfIters))
         .select(col("cid"), col("vec_id"),
           h32(concat(lit("cb"), col("vec_id").cast("string"))).as("hv"))
         .groupBy(col("cid"))
@@ -1137,25 +964,25 @@ object Similarity {
   val adcRerank = Q(
     "q133_adc_rerank",
     (s, d) => {
-      val eraw = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val eraw = vectors(s, d)
       val vhat = eraw.select(col("vec_id"),
         GraftFunctions.l2Normalize(col("emb")).as("emb"))
-      // no extra cache: lloydKMeansGrouped caches its final round, and
-      // each per-subspace view is collect()ed exactly once below — an
-      // added cache would park K-row blocks for the session
-      val cbsDf = graft.rec.PqIndex
-        .trainCodebooks(vhat, PqS, PqSub, PqK, PqIters)
-      val cbSeq: Seq[Seq[Array[Double]]] = cbsDf.map { cb =>
-        val rows = cb.select(col("cid").cast("int"), col("c")).collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-        // NearestCodes emits code = POSITION in the carried codebook;
-        // the SQL mirror emits the trainer's seed cids — equal only for
-        // dense-id corpora (the lloydKMeansGrouped doc's contract)
-        require(rows.map(_._1).toSeq == rows.indices,
-          s"q133 requires dense codebook cids, got ${rows.map(_._1).toSeq}")
-        rows.map(_._2).toSeq
-      }
+      // the codebook table, collected once as the model the native
+      // expressions carry: outer Seq by subspace, inner by cid
+      val cbRows = PqIndex.trainCodebooks(vhat, PqS, PqSub, PqK, PqIters)
+        .select(col("sub").cast("int"), col("cid").cast("int"), col("c"))
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      val cbSeq: Seq[Seq[Array[Double]]] =
+        cbRows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, cb) =>
+          val rows = cb.sortBy(_._2)
+          // NearestCodes emits code = POSITION in the carried codebook;
+          // the SQL mirror emits the trainer's seed cids — equal only
+          // for dense-id corpora (the lowest-id seeding's contract)
+          require(rows.map(_._2).toSeq == rows.indices,
+            s"q133 requires dense codebook cids, got ${rows.map(_._2).toSeq}")
+          rows.map(_._3).toSeq
+        }
       val codes = vhat.withColumn("codes",
         GraftFunctions.nearestCodes(col("emb"), cbSeq))
       val probes = vhat.where(col("vec_id") < 10)
@@ -1169,19 +996,12 @@ object Similarity {
         .withColumn("srank", row_number().over(wsl))
         .where(col("srank") <= PqShortlist)
         .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-      val pr = eraw.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("pre"))
-      val wr = Window.partitionBy(col("probe_id"))
-        .orderBy(col("score").desc, col("neighbor_id"))
-      sl.join(eraw.select(col("vec_id").as("neighbor_id"),
-          col("emb").as("ne")), Seq("neighbor_id"))
-        .join(broadcast(pr), Seq("probe_id"))
-        .withColumn("score",
-          GraftFunctions.cosineSimilarity(col("pre"), col("ne")))
-        .withColumn("rank", row_number().over(wr).cast("long"))
-        .where(col("rank") <= 3)
-        .select(col("probe_id"), col("neighbor_id"), col("rank"),
-          round(col("score"), 6).as("score"))
+      val pr = defaultProbes(eraw)
+        .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
+      IvfIndex.rankByCosine(sl
+          .join(eraw.select(col("vec_id").as("neighbor_id"),
+            col("emb").as("ce")), Seq("neighbor_id"))
+          .join(broadcast(pr), Seq("probe_id")), 3)
         .orderBy(col("probe_id"), col("rank"))
     },
     Some {

@@ -156,31 +156,36 @@ object GradientMF {
   private def scaled(e: Column, v: Column, width: Int): Column =
     array((0 until width).map(i => e * v(i)): _*)
 
-  /** `df` coalesced to its [[Sizing.factParts]] count and cached: every
-    * epoch query scans it, and its map stage runs one task per
-    * partition. */
-  private def cachedFact(df: DataFrame): DataFrame =
-    df.coalesce(Sizing.factParts(df)).cache()
+  /** `body` over `df` coalesced to its [[Sizing.factParts]] count and
+    * cached — every epoch query scans it, and its map stage runs one task
+    * per partition — released when `body` returns: everything a fit
+    * returns is a driver-side model or a local relation, so nothing
+    * outlives the fact. */
+  private def onCachedFact[T](df: DataFrame)(body: DataFrame => T): T = {
+    val fact = df.coalesce(Sizing.factParts(df)).cache()
+    try body(fact) finally fact.unpersist()
+  }
 
   /** `(user_id, item_id, res)`: ratings minus the mean `mu`. */
   private def centred(ratings: DataFrame, mu: Double): DataFrame =
     ratings.select(col("user_id"), col("item_id"),
       (col("rating") - lit(mu)).as("res"))
 
-  /** The residual model's training fact — the ratings cached (see
-    * [[cachedFact]]) and centred on their mean μ in each query that
-    * reads them — with its hash-init model and μ, both from the one
-    * [[init]] query (μ is the sum of the ratings over their count). */
-  private def residuals(ratings: DataFrame, rank: Int)
-      : (DataFrame, Model, Double) = {
-    val fact = cachedFact(
-      ratings.select(col("user_id"), col("item_id"), col("rating")))
-    val (m0, Seq(n, total)) = init(fact,
-      Seq(UserSide -> col("user_id"), ItemSide -> col("item_id")), rank,
-      loss = Seq(col("rating")))
-    val mu = total / n
-    (centred(fact, mu), m0, mu)
-  }
+  /** `body` over the residual model's training fact — the ratings
+    * cached for the call ([[onCachedFact]]) and centred on their mean μ
+    * in each query that reads them — with its hash-init model and μ,
+    * both from the one [[init]] query (μ is the sum of the ratings over
+    * their count). */
+  private def residuals[T](ratings: DataFrame, rank: Int)(
+      body: (DataFrame, Model, Double) => T): T =
+    onCachedFact(ratings.select(col("user_id"), col("item_id"),
+        col("rating"))) { fact =>
+      val (m0, Seq(n, total)) = init(fact,
+        Seq(UserSide -> col("user_id"), ItemSide -> col("item_id")), rank,
+        loss = Seq(col("rating")))
+      val mu = total / n
+      body(centred(fact, mu), m0, mu)
+    }
 
   /** Per-rating error rows `(user_id, item_id, err, uv, vv)` of model
     * `m` over the residual fact `res`, both vectors attached by lookup. */
@@ -291,14 +296,14 @@ object GradientMF {
     * trajectory `(epoch, rmse)` — epochs+1 rows, epoch 0 = the loss at
     * initialization. */
   def trainTrajectory(ratings: DataFrame, rank: Int, lr: Double,
-                      reg: Double, epochs: Int): DataFrame = {
-    val (res, m0, _) = residuals(ratings, rank)
-    def step(m: Model) =
-      collectSides(errRows(predictions(res, m, rank), rank), rank,
-        avgs(rank), gdStep(m, rank, lr, reg), nLoss = 1)
-    val (m, losses) = descend(m0, epochs)(step)
-    trajectory(res.sparkSession, losses :+ step(m)._2, rmse)
-  }
+                      reg: Double, epochs: Int): DataFrame =
+    residuals(ratings, rank) { (res, m0, _) =>
+      def step(m: Model) =
+        collectSides(errRows(predictions(res, m, rank), rank), rank,
+          avgs(rank), gdStep(m, rank, lr, reg), nLoss = 1)
+      val (m, losses) = descend(m0, epochs)(step)
+      trajectory(res.sparkSession, losses :+ step(m)._2, rmse)
+    }
 
   /** Full-batch BPR gradient descent (Rendle et al. 2009 — the ref's
     * top-N training objective, `/root/reference/src/csv/train_topn.py:
@@ -422,51 +427,51 @@ object GradientMF {
     * without it). Off (default) = exactly the q87/q106 oracle algebra. */
   private def bprFitTriples(triples: DataFrame, rank: Int, lr: Double,
       reg: Double, epochs: Int, finalLoss: Boolean,
-      itemBias: Boolean = false): (Model, Seq[Seq[Double]]) = {
-    val tr = cachedFact(triples)
-    val width = if (itemBias) rank + 1 else rank
+      itemBias: Boolean = false): (Model, Seq[Seq[Double]]) =
+    onCachedFact(triples) { tr =>
+      val width = if (itemBias) rank + 1 else rank
 
-    /** Per-pair score rows carrying all three factor vectors. */
-    def scores(m: Model): DataFrame =
-      tr.select(col("user_id"), col("pos_item"), col("neg_item"),
-          lookup(col("user_id"), m.users).as("uval"),
-          lookup(col("pos_item"), m.items).as("pval"),
-          lookup(col("neg_item"), m.items).as("nval"))
-        .select(col("user_id"), col("pos_item"), col("neg_item"),
-          // Σ u[i]·(p[i]−n[i]), statically expanded — the same
-          // left-to-right fold (and 0.0 seed) as the former
-          // dot(uval, zip_with(pval, nval, _-_)) composition
-          (0 until width).map(i =>
-              col("uval")(i) * (col("pval")(i) - col("nval")(i)))
-            .foldLeft(lit(0.0d))(_ + _).as("d"),
-          col("uval"), col("pval"), col("nval"))
-    val loss = Seq(log(lit(1.0) + exp(-col("d"))),
-      when(round(col("d"), 6) > 0, 1.0).otherwise(0.0))
+      /** Per-pair score rows carrying all three factor vectors. */
+      def scores(m: Model): DataFrame =
+        tr.select(col("user_id"), col("pos_item"), col("neg_item"),
+            lookup(col("user_id"), m.users).as("uval"),
+            lookup(col("pos_item"), m.items).as("pval"),
+            lookup(col("neg_item"), m.items).as("nval"))
+          .select(col("user_id"), col("pos_item"), col("neg_item"),
+            // Σ u[i]·(p[i]−n[i]), statically expanded — the same
+            // left-to-right fold (and 0.0 seed) as the former
+            // dot(uval, zip_with(pval, nval, _-_)) composition
+            (0 until width).map(i =>
+                col("uval")(i) * (col("pval")(i) - col("nval")(i)))
+              .foldLeft(lit(0.0d))(_ + _).as("d"),
+            col("uval"), col("pval"), col("nval"))
+      val loss = Seq(log(lit(1.0) + exp(-col("d"))),
+        when(round(col("d"), 6) > 0, 1.0).otherwise(0.0))
 
-    // the user bias slot carries the constant 1 (re-pinned after every
-    // update: the model says 1); the item bias starts at 0
-    val (m0, _) = init(tr, Seq(UserSide -> col("user_id"),
-        ItemSide -> col("pos_item"), ItemSide -> col("neg_item")),
-      rank, if (itemBias) Some((1.0, 0.0)) else None)
-    val pin = if (itemBias)
-        Some((w: Column) => concat(slice(w, 1, rank), array(lit(1.0))))
-      else None
-    def step(m: Model) = {
-      val s = scores(m).withColumn("comp",
-        lit(1.0) / (lit(1.0) + exp(col("d"))))
-      // the user's contribution, then one per pair item: the pos and
-      // neg items of a pair feed the same per-item mean
-      collectSides(perSide(s, Seq(
-          (UserSide, col("user_id"), array((0 until width).map(i =>
-            -col("comp") * (col("pval")(i) - col("nval")(i))): _*)),
-          (ItemSide, col("pos_item"), scaled(-col("comp"), col("uval"), width)),
-          (ItemSide, col("neg_item"), scaled(col("comp"), col("uval"), width))),
-          loss),
-        width, avgs(width), gdStep(m, width, lr, reg, pin), nLoss = 2)
+      // the user bias slot carries the constant 1 (re-pinned after every
+      // update: the model says 1); the item bias starts at 0
+      val (m0, _) = init(tr, Seq(UserSide -> col("user_id"),
+          ItemSide -> col("pos_item"), ItemSide -> col("neg_item")),
+        rank, if (itemBias) Some((1.0, 0.0)) else None)
+      val pin = if (itemBias)
+          Some((w: Column) => concat(slice(w, 1, rank), array(lit(1.0))))
+        else None
+      def step(m: Model) = {
+        val s = scores(m).withColumn("comp",
+          lit(1.0) / (lit(1.0) + exp(col("d"))))
+        // the user's contribution, then one per pair item: the pos and
+        // neg items of a pair feed the same per-item mean
+        collectSides(perSide(s, Seq(
+            (UserSide, col("user_id"), array((0 until width).map(i =>
+              -col("comp") * (col("pval")(i) - col("nval")(i))): _*)),
+            (ItemSide, col("pos_item"), scaled(-col("comp"), col("uval"), width)),
+            (ItemSide, col("neg_item"), scaled(col("comp"), col("uval"), width))),
+            loss),
+          width, avgs(width), gdStep(m, width, lr, reg, pin), nLoss = 2)
+      }
+      val (m, losses) = descend(m0, epochs)(step)
+      (m, if (finalLoss) losses :+ step(m)._2 else losses)
     }
-    val (m, losses) = descend(m0, epochs)(step)
-    (m, if (finalLoss) losses :+ step(m)._2 else losses)
-  }
 
   /** END-TO-END LightGCN training (He et al. 2020; the ref's actual
     * trainer, `/root/reference/src/csv/train_rmse.py:121-141`), K=1
@@ -526,34 +531,36 @@ object GradientMF {
     * the train mean — the artifacts a serving path needs. */
   private def lightgcnFit(ratings: DataFrame, rank: Int, lr: Double,
       reg: Double, epochs: Int, finalLoss: Boolean)
-      : (Model, Seq[Seq[Double]], Double) = {
-    val (res, m0, mu) = residuals(ratings, rank)
-    // ed keeps res's coalesced partitioning through its cache
-    val ed = GraphPropagation.edges(res)
+      : (Model, Seq[Seq[Double]], Double) =
+    residuals(ratings, rank) { (res, m0, mu) =>
+      // ed keeps res's coalesced partitioning through its cache, and is
+      // released with it
+      val ed = GraphPropagation.edges(res)
+      try {
+        /** `post((m + Ã·m)/2)` per side, one collected edge aggregation: a
+          * user's Σ_edge w·v(item), an item's Σ_edge w·u(user). With a
+          * gradient model as `m` it is equally the backward pass. */
+        def mix(m: Model)(post: Column => Column): Model =
+          collectSides(perSide(
+              ed.select(col("user_id"), col("item_id"), col("w"),
+                lookup(col("user_id"), m.users).as("uv"),
+                lookup(col("item_id"), m.items).as("vv")),
+              Seq((UserSide, col("user_id"), scaled(col("w"), col("vv"), rank)),
+                (ItemSide, col("item_id"), scaled(col("w"), col("uv"), rank)))),
+            rank, sums(rank), s => post(array((0 until rank).map(i =>
+              (sideVal(m)(i) + s(i)) / 2): _*)))._1
 
-    /** `post((m + Ã·m)/2)` per side, one collected edge aggregation: a
-      * user's Σ_edge w·v(item), an item's Σ_edge w·u(user). With a
-      * gradient model as `m` it is equally the backward pass. */
-    def mix(m: Model)(post: Column => Column): Model =
-      collectSides(perSide(
-          ed.select(col("user_id"), col("item_id"), col("w"),
-            lookup(col("user_id"), m.users).as("uv"),
-            lookup(col("item_id"), m.items).as("vv")),
-          Seq((UserSide, col("user_id"), scaled(col("w"), col("vv"), rank)),
-            (ItemSide, col("item_id"), scaled(col("w"), col("uv"), rank)))),
-        rank, sums(rank), s => post(array((0 until rank).map(i =>
-          (sideVal(m)(i) + s(i)) / 2): _*)))._1
+        /** The gradients w.r.t. the propagated model `mp`, and its loss. */
+        def grads(mp: Model) =
+          collectSides(errRows(predictions(res, mp, rank), rank), rank,
+            avgs(rank), identity, nLoss = 1)
 
-    /** The gradients w.r.t. the propagated model `mp`, and its loss. */
-    def grads(mp: Model) =
-      collectSides(errRows(predictions(res, mp, rank), rank), rank,
-        avgs(rank), identity, nLoss = 1)
-
-    val (m, losses) = descend(m0, epochs) { m =>
-      val (gp, s) = grads(mix(m)(identity))
-      (mix(gp)(gdStep(m, rank, lr, reg)), s)
+        val (m, losses) = descend(m0, epochs) { m =>
+          val (gp, s) = grads(mix(m)(identity))
+          (mix(gp)(gdStep(m, rank, lr, reg)), s)
+        }
+        val mp = mix(m)(identity)
+        (mp, if (finalLoss) losses :+ grads(mp)._2 else losses, mu)
+      } finally ed.unpersist()
     }
-    val mp = mix(m)(identity)
-    (mp, if (finalLoss) losses :+ grads(mp)._2 else losses, mu)
-  }
 }

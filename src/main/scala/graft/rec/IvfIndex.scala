@@ -26,17 +26,24 @@ import graft.expr.GraftFunctions
   */
 object IvfIndex {
 
-  /** Build: fit the relational Lloyd's quantizer, assign every vector to
-    * its cell, write cells partitioned by cid (+ centroids alongside).
-    * At 100 TB the quantizer fits on a sample (Clustering.lloydKMeans
-    * doc); the assignment pass is one broadcast-scored scan. */
+  /** `(vec_id, emb, cid)`: `vectors` filed in their nearest cell under
+    * the Euclidean `centroids` — the rows of the `cells` table, cid as
+    * INT. */
+  def cells(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    Clustering.assignCells(vectors, centroids)
+      .withColumn("cid", col("cid").cast("int"))
+
+  /** Build: fit the relational Lloyd's quantizer, write every vector's
+    * [[cells]] row partitioned by cid (+ centroids alongside). At 100 TB
+    * the quantizer fits on a sample (Clustering.lloydKMeans doc); the
+    * assignment pass is one broadcast-scored scan. */
   def build(vectors: DataFrame, dir: String, k: Int = 16,
             iters: Int = 3): Unit = {
     val cent = Clustering.lloydKMeans(vectors, k, iters)
-    Clustering.assignCells(vectors, cent, nprobe = 1)
-      .withColumn("cid", col("cid").cast("int"))
+    cells(vectors, cent)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/cells")
     cent.write.mode("overwrite").parquet(s"$dir/centroids")
+    cent.unpersist()
   }
 
   /** Training-set cap of every sampled quantizer ([[buildLarge]],
@@ -186,12 +193,9 @@ object IvfIndex {
     * same cell geometry, so probe-after-append equals probing one index
     * built from the union under that quantizer (IvfIndexSpec asserts
     * exactly this). */
-  def append(spark: SparkSession, vectors: DataFrame, dir: String): Unit = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    Clustering.assignCells(vectors, cent, nprobe = 1)
-      .withColumn("cid", col("cid").cast("int"))
+  def append(spark: SparkSession, vectors: DataFrame, dir: String): Unit =
+    cells(vectors, spark.read.parquet(s"$dir/centroids"))
       .write.mode("append").partitionBy("cid").parquet(s"$dir/cells")
-  }
 
   /** [[append]] for a [[buildLarge]] (COSINE-metric) index: same frozen
     * quantizer, same append-only file contract, but assignment is the
@@ -308,26 +312,43 @@ object IvfIndex {
               maxFilesPerCell: Int = 8): CompactStats =
     IndexMaintenance.compactCells(spark, s"$dir/cells", maxFilesPerCell)
 
-  /** Probe: assign each probe to its `nprobe` nearest cells, then join
-    * the (broadcast) probe set against the partitioned cells table — the
-    * partition-column equi-join is what triggers dynamic partition
-    * pruning — and rank candidates by exact cosine. */
-  def probe(spark: SparkSession, dir: String, probes: DataFrame,
-            nprobe: Int = 2, topK: Int = 3): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val pc = Clustering.assignCells(probes, cent, nprobe)
-      .select(col("vec_id").as("probe_id"), col("emb").as("pe"),
-        col("cid").cast("int").as("cid"))
-    val cells = spark.read.parquet(s"$dir/cells")
+  /** The `topK` most similar of each probe's `(probe_id, neighbor_id,
+    * pe, ce)` candidate pairs by exact cosine (neighbor_id breaks ties):
+    * `(probe_id, neighbor_id, rank, score)`, score rounded to 6 dp. The
+    * IVF serve and the catalog's exact cosine baselines both rank
+    * through it. */
+  def rankByCosine(pairs: DataFrame, topK: Int): DataFrame = {
     val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    cells.join(broadcast(pc), Seq("cid"))
-      .where(col("probe_id") =!= col("vec_id"))
-      .withColumn("score", GraftFunctions.cosineSimilarity(col("pe"), col("emb")))
+      .orderBy(col("score").desc, col("neighbor_id"))
+    pairs.withColumn("score", GraftFunctions.cosineSimilarity(col("pe"), col("ce")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= topK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), round(col("score"), 6).as("score"))
+      .select(col("probe_id"), col("neighbor_id"), col("rank"),
+        round(col("score"), 6).as("score"))
+  }
+
+  /** The IVF serve: route each `(vec_id, emb)` probe to its `nprobe`
+    * nearest cells under the Euclidean `centroids`, join it against the
+    * `(vec_id, emb, cid)` [[cells]] of those cells and rank the
+    * candidates by exact cosine. q57 calls it on tables built in memory,
+    * [[probe]] on the stored ones, where the broadcast probe side's join
+    * on the partition column is dynamic partition pruning. */
+  def serve(cells: DataFrame, centroids: DataFrame, probes: DataFrame,
+            nprobe: Int, topK: Int): DataFrame = {
+    val pc = Clustering.assignCells(probes, centroids, nprobe)
+      .select(col("vec_id").as("probe_id"), col("emb").as("pe"),
+        col("cid").cast("int").as("cid"))
+    rankByCosine(cells.join(broadcast(pc), Seq("cid"))
+        .where(col("probe_id") =!= col("vec_id"))
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          col("pe"), col("emb").as("ce")), topK)
       .orderBy(col("probe_id"), col("rank"))
   }
+
+  /** Probe from disk: [[serve]] over the stored centroids and
+    * cid-partitioned cells. */
+  def probe(spark: SparkSession, dir: String, probes: DataFrame,
+            nprobe: Int = 2, topK: Int = 3): DataFrame =
+    serve(spark.read.parquet(s"$dir/cells"),
+      spark.read.parquet(s"$dir/centroids"), probes, nprobe, topK)
 }

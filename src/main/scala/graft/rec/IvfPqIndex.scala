@@ -36,52 +36,46 @@ import org.apache.spark.sql.functions._
   */
 object IvfPqIndex {
 
+  /** `(neighbor_id, sub, code, cid)`: `vectors` PQ-encoded with
+    * `codebooks` and filed in their nearest coarse cell under
+    * `centroids` — the rows of the `codes` table. cid is INT
+    * ([[IvfIndex]]'s rule): parquet reads partition-directory values as
+    * int, and a type-promotion cast on the partition column would
+    * defeat dynamic partition pruning. */
+  def cellCodes(vectors: DataFrame, centroids: DataFrame,
+                codebooks: DataFrame): DataFrame =
+    PqIndex.encode(vectors, codebooks).join(
+      Clustering.assignCells(vectors, centroids)
+        .select(col("vec_id").as("neighbor_id"), col("cid").cast("int").as("cid")),
+      Seq("neighbor_id"))
+
   /** Build: fit the coarse quantizer and the per-subspace codebooks,
-    * assign every vector to its cell, encode it to PQ codes, and write
-    * the codes PARTITIONED BY cell id — paid once per corpus version.
-    * cid is stored as INT ([[IvfIndex]]'s rule): parquet reads
-    * partition-directory values as int, and a type-promotion cast on
-    * the partition column would defeat dynamic partition pruning. */
+    * and write the [[cellCodes]] PARTITIONED BY cell id — paid once per
+    * corpus version. */
   def build(vectors: DataFrame, dir: String, ivfK: Int = 16,
             ivfIters: Int = 3, s: Int = 4, subDim: Int = 16,
             k: Int = 16, iters: Int = 2): Unit = {
-    val cent = Clustering.lloydKMeans(vectors, ivfK, ivfIters).cache()
-    cent.write.mode("overwrite").parquet(s"$dir/centroids")
-    val cells = Clustering.assignCells(vectors, cent, nprobe = 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid").cast("int").as("cid"))
+    val cent = Clustering.lloydKMeans(vectors, ivfK, ivfIters)
     val cbs = PqIndex.trainCodebooks(vectors, s, subDim, k, iters)
-      .map(_.cache())
-    PqIndex.encode(vectors, cbs, subDim)
-      .join(cells, Seq("neighbor_id"))
+    cent.write.mode("overwrite").parquet(s"$dir/centroids")
+    cbs.write.mode("overwrite").parquet(s"$dir/codebooks")
+    cellCodes(vectors, cent, cbs)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/codes")
-    cbs.zipWithIndex.map { case (cb, sub) =>
-      cb.select(lit(sub).as("sub"), col("cid"), col("c"))
-    }.reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
-    cbs.foreach(_.unpersist())
+    cbs.unpersist()
     cent.unpersist()
   }
 
   /** Append NEW vectors with BOTH stored quantizers kept frozen
     * ([[IvfIndex.append]]'s maintenance regime, applied to the composed
-    * index): the increment is cell-assigned with the stored coarse
-    * centroids, PQ-encoded with the stored codebooks, and appended
-    * inside the cell partition directories — no retraining, no rewrite
-    * of existing files. Probe-after-append equals probing one index
-    * built from the union under the same quantizers (IvfPqIndexSpec
-    * asserts it). */
-  def append(spark: SparkSession, vectors: DataFrame, dir: String,
-             s: Int = 4, subDim: Int = 16): Unit = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val cbAll = spark.read.parquet(s"$dir/codebooks")
-    val cbs = (0 until s).map(sub =>
-      cbAll.where(col("sub") === sub).select(col("cid"), col("c")))
-    val cells = Clustering.assignCells(vectors, cent, nprobe = 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid").cast("int").as("cid"))
-    PqIndex.encode(vectors, cbs, subDim)
-      .join(cells, Seq("neighbor_id"))
+    * index): the increment's [[cellCodes]] under the stored centroids
+    * and codebooks are appended inside the cell partition directories —
+    * no retraining, no rewrite of existing files. Probe-after-append
+    * equals probing one index built from the union under the same
+    * quantizers (IvfPqIndexSpec asserts it). */
+  def append(spark: SparkSession, vectors: DataFrame, dir: String): Unit =
+    cellCodes(vectors, spark.read.parquet(s"$dir/centroids"),
+        spark.read.parquet(s"$dir/codebooks"))
       .write.mode("append").partitionBy("cid").parquet(s"$dir/codes")
-  }
 
   /** Compact code partitions that [[append]] increments have fragmented
     * past `maxFilesPerCell` data files ([[IvfIndex.compact]]'s twin —
@@ -93,28 +87,35 @@ object IvfPqIndex {
               maxFilesPerCell: Int = 8): CompactStats =
     IndexMaintenance.compactCells(spark, s"$dir/codes", maxFilesPerCell)
 
-  /** Probe from disk: assign each probe to its `nprobe` nearest cells
-    * (broadcast), join the partitioned codes table on the partition
-    * column — dynamic partition pruning reads only the probed cells'
-    * files — ADC against the stored codes, then exact rerank fetches
-    * raw vectors from `collection` only for the shortlist. */
-  def probe(spark: SparkSession, dir: String, probes: DataFrame,
-            collection: DataFrame, nprobe: Int = 2, s: Int = 4,
-            subDim: Int = 16, shortlist: Int = 40,
-            topK: Int = 3): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val cbAll = spark.read.parquet(s"$dir/codebooks")
-    val cbs = (0 until s).map(sub =>
-      cbAll.where(col("sub") === sub).select(col("cid"), col("c")))
-    val probeCells = Clustering.assignCells(probes, cent, nprobe)
+  /** The IVF-PQ serve: route each probe to its `nprobe` nearest cells
+    * under `centroids`, ADC the `(neighbor_id, sub, code, cid)` codes
+    * of those cells against its [[PqIndex.probeTables]] over
+    * `codebooks`, and rerank the `shortlist` best exactly against the
+    * raw `collection`. q111 calls it on tables built in memory,
+    * [[probe]] on the stored ones, where the join on the partition
+    * column is dynamic partition pruning: only the probed cells' files
+    * are read. */
+  def serve(codes: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+            probes: DataFrame, collection: DataFrame, nprobe: Int,
+            shortlist: Int, topK: Int): DataFrame = {
+    val probeCells = Clustering.assignCells(probes, centroids, nprobe)
       .select(col("vec_id").as("probe_id"), col("cid").cast("int").as("cid"))
-    val ptab = PqIndex.probeTables(probes, cbs, subDim)
-    val codes = spark.read.parquet(s"$dir/codes")
     val sl = PqIndex.adcTop(
       codes.join(broadcast(probeCells), Seq("cid"))
         .where(col("probe_id") =!= col("neighbor_id"))
-        .join(broadcast(ptab), Seq("probe_id", "sub", "code")),
+        .join(broadcast(PqIndex.probeTables(probes, codebooks)),
+          Seq("probe_id", "sub", "code")),
       shortlist)
     PqIndex.rerankTop(sl, collection, probes, topK)
   }
+
+  /** Probe from disk: [[serve]] over the stored centroids, codebooks and
+    * cid-partitioned codes. */
+  def probe(spark: SparkSession, dir: String, probes: DataFrame,
+            collection: DataFrame, nprobe: Int = 2, shortlist: Int = 40,
+            topK: Int = 3): DataFrame =
+    serve(spark.read.parquet(s"$dir/codes"),
+      spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/codebooks"), probes, collection, nprobe,
+      shortlist, topK)
 }

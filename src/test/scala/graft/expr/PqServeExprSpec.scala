@@ -176,15 +176,15 @@ class PqServeExprSpec extends SparkSpec {
     val s = 2; val subDim = 4; val k = 4
     val e = unitCorpus(60)
     val cbsDf = graft.rec.PqIndex.trainCodebooks(e, s, subDim, k, iters = 2)
-      .map(_.cache())
     // collect positionally by cid (dense ids -> cids are exactly 0..k-1)
-    val cbSeq: Seq[Seq[Array[Double]]] = cbsDf.map { cb =>
-      val rows = cb.select(col("cid").cast("int"), col("c")).collect()
+    val cbSeq: Seq[Seq[Array[Double]]] = (0 until s).map { sub =>
+      val rows = cbsDf.where(col("sub") === sub)
+        .select(col("cid").cast("int"), col("c")).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
       assert(rows.map(_._1).toSeq == (0 until k), s"non-dense cids: ${rows.map(_._1).toSeq}")
       rows.map(_._2).toSeq
     }
-    val relational = graft.rec.PqIndex.encode(e, cbsDf, subDim)
+    val relational = graft.rec.PqIndex.encode(e, cbsDf)
       .groupBy(col("neighbor_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
         x => x.getField("code")).as("codes"))
@@ -201,7 +201,7 @@ class PqServeExprSpec extends SparkSpec {
       val bad = r.keys.filter(id => r(id) != nv(id)).take(5)
       s"encoders disagree on ${bad.map(id => s"$id: ${r(id)} vs ${nv(id)}").mkString("; ")}"
     })
-    cbsDf.foreach(_.unpersist())
+    cbsDf.unpersist()
   }
 
   test("AdcCosine ranking == PqIndex ADC ranking on the same codes") {
@@ -209,16 +209,16 @@ class PqServeExprSpec extends SparkSpec {
     val s = 2; val subDim = 4; val k = 4
     val e = unitCorpus(60)
     val cbsDf = graft.rec.PqIndex.trainCodebooks(e, s, subDim, k, iters = 2)
-      .map(_.cache())
-    val cbSeq: Seq[Seq[Array[Double]]] = cbsDf.map(
-      _.select(col("cid").cast("int"), col("c")).collect()
+    val cbSeq: Seq[Seq[Array[Double]]] = (0 until s).map(sub =>
+      cbsDf.where(col("sub") === sub)
+        .select(col("cid").cast("int"), col("c")).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1).map(_._2).toSeq)
     val probes = e.where(col("vec_id") < 5)
     // relational ADC order: adist asc, neighbor asc (PqIndex.adcTop's
     // contract, re-derived here WITH the rank kept)
-    val enc = graft.rec.PqIndex.encode(e, cbsDf, subDim)
-    val ptab = graft.rec.PqIndex.probeTables(probes, cbsDf, subDim)
+    val enc = graft.rec.PqIndex.encode(e, cbsDf)
+    val ptab = graft.rec.PqIndex.probeTables(probes, cbsDf)
     val wr = org.apache.spark.sql.expressions.Window.partitionBy(col("probe_id"))
       .orderBy(col("adist"), col("neighbor_id"))
     val relTop = enc.join(broadcast(ptab), Seq("sub", "code"))
@@ -245,7 +245,7 @@ class PqServeExprSpec extends SparkSpec {
       val nv = natTop.orderBy("probe_id", "rank").collect().toSeq
       s"ADC rankings disagree:\nrelational: $r\nnative:     $nv"
     })
-    cbsDf.foreach(_.unpersist())
+    cbsDf.unpersist()
   }
 
   test("encodePqLarge round-trips: layout mirrored, codes pinned, ADC recovers exact top-k") {

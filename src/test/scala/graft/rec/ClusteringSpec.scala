@@ -33,7 +33,7 @@ class ClusteringSpec extends SparkSpec {
     assert(cent.toSeq == again.toSeq)
   }
 
-  test("lloydKMeansGrouped equals per-group sequential lloydKMeans") {
+  test("grouped lloydKMeans equals the single-problem lloydKMeans per group") {
     // the PQ build fuses s per-subspace trainings into one grouped plan;
     // per group the result must equal running lloydKMeans on that
     // group's slice alone — same init, same rounds, same argmin
@@ -41,7 +41,7 @@ class ClusteringSpec extends SparkSpec {
         blobs.select(lit(g).as("grp"), $"vec_id",
           transform($"emb", v => v + g * 100.0).as("emb")))
       .reduce(_ unionAll _)
-    val got = Clustering.lloydKMeansGrouped(grouped, k = 2, iters = 3)
+    val got = Clustering.lloydKMeans(grouped, k = 2, iters = 3, by = Seq("grp"))
       .orderBy($"grp", $"cid")
       .as[(Int, Long, Seq[Double])].collect().toSeq
     val want = (0 until 3).flatMap { g =>
@@ -72,8 +72,9 @@ class ClusteringSpec extends SparkSpec {
     val xs = cent.map(_._2.head).sorted
     assert(math.abs(xs(0) - 0.02) < 0.1 && math.abs(xs(1) - 10.02) < 0.1)
     // grouped form, same property per group
-    val g = Clustering.lloydKMeansGrouped(
-      shifted.select(lit(0).as("grp"), $"vec_id", $"emb"), k = 2, iters = 3)
+    val g = Clustering.lloydKMeans(
+      shifted.select(lit(0).as("grp"), $"vec_id", $"emb"), k = 2, iters = 3,
+      by = Seq("grp"))
     assert(g.count() == 2)
   }
 

@@ -73,6 +73,31 @@ class GdMfSpec extends SparkSpec {
     assert(six == two, s"cached relations grow with epochs: 2 -> $two, 6 -> $six")
   }
 
+  test("a fit leaves no persisted RDD behind: MF, all-positives BPR, LightGCN holdout") {
+    // each fit caches its training fact (LightGCN also its edge table)
+    // and returns a driver-side model or a local relation, so whatever
+    // it persisted must be released by the time it returns. Counted as
+    // the ids that are persisted after the fit and were not before.
+    val r = Seq((1L, 10L, 4.0), (1L, 11L, 2.0), (1L, 12L, 3.0),
+      (2L, 10L, 5.0), (2L, 12L, 1.0), (3L, 11L, 4.0), (3L, 12L, 5.0))
+      .toDF("user_id", "item_id", "rating")
+    val sc = spark.sparkContext
+    def leftBy(fit: => Unit): Set[Int] = {
+      spark.catalog.clearCache()
+      val before = sc.getPersistentRDDs.keySet
+      fit
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    val mf = leftBy(GradientMF.trainTrajectory(r, rank = 3, lr = 0.5,
+      reg = 0.1, epochs = 2).collect())
+    val bpr = leftBy(GradientMF.bprTrainedFactorsAllPos(r, rank = 3,
+      lr = 0.5, reg = 0.1, epochs = 2)._1.collect())
+    val gcn = leftBy(GradientMF.lightgcnHoldout(r, r, rank = 3, lr = 0.5,
+      reg = 0.1, epochs = 2).collect())
+    assert(mf.isEmpty && bpr.isEmpty && gcn.isEmpty,
+      s"persisted RDDs left behind: MF $mf, BPR $bpr, LightGCN $gcn")
+  }
+
   test("LightGCN training GENERALIZES at the ml-100k fixture shape") {
     // The quality face of q88's trainer, anchored to the reference's
     // PUBLISHED LightGCN quality: test RMSE 0.9097 on ml-100k at dim

@@ -163,6 +163,17 @@ class IvfIndexSpec extends SparkSpec {
     assert(after.nonEmpty && after == before)
   }
 
+  test("catalog q83 equals q57, row for row") {
+    // q83 shares q57's oracle verbatim: serving the persisted index must
+    // give the in-memory query's rows exactly
+    val fromDisk = graft.SparkEntry.queries("q83_ivf_index_probe")(spark, sfDir)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    val inMemory = graft.SparkEntry.queries("q57_ivf_ann")(spark, sfDir)
+      .orderBy($"probe_id", $"rank")
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(fromDisk.nonEmpty && fromDisk == inMemory)
+  }
+
   test("catalog q83 probes its persisted index through dynamic partition pruning") {
     // the catalog-path twin of the assertion below: the ORACLE row proves
     // q83's results; this proves the layout property on the exact plan the

@@ -26,7 +26,7 @@ class IvfPqIndexSpec extends SparkSpec {
 
     val probes = vectors.where($"vec_id" < 5)
     val got = IvfPqIndex.probe(spark, dir, probes, vectors, nprobe = 2,
-      s = 4, subDim = 16, shortlist = 40, topK = 3)
+      shortlist = 40, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     // in-memory reference: same coarse quantizer, same codebooks, same
@@ -40,9 +40,9 @@ class IvfPqIndexSpec extends SparkSpec {
       .where($"probe_id" =!= $"neighbor_id")
       .select($"probe_id", $"neighbor_id")
     val cbs = PqIndex.trainCodebooks(vectors, s = 4, subDim = 16,
-      k = 8, iters = 2).map(_.cache())
-    val enc = PqIndex.encode(vectors, cbs, subDim = 16)
-    val ptab = PqIndex.probeTables(probes, cbs, subDim = 16)
+      k = 8, iters = 2)
+    val enc = PqIndex.encode(vectors, cbs)
+    val ptab = PqIndex.probeTables(probes, cbs)
     val sl = PqIndex.adcTop(
       cand.join(enc, Seq("neighbor_id"))
         .join(broadcast(ptab), Seq("probe_id", "sub", "code")),
@@ -50,6 +50,26 @@ class IvfPqIndexSpec extends SparkSpec {
     val expected = PqIndex.rerankTop(sl, vectors, probes, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
 
+    assert(got.nonEmpty && got == expected)
+  }
+
+  test("a probe reads the index's shape from its codebooks (s = 2, subDim = 32)") {
+    // neither probe nor append takes a subspace count or width: a shape
+    // other than the defaults must still score every dimension
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-shape").toString
+    IvfPqIndex.build(vectors.where($"vec_id" % 2 === 0), dir, ivfK = 8,
+      ivfIters = 2, s = 2, subDim = 32, k = 8, iters = 2)
+    IvfPqIndex.append(spark, vectors.where($"vec_id" % 2 === 1), dir)
+    val probes = vectors.where($"vec_id" < 5)
+    val got = IvfPqIndex.probe(spark, dir, probes, vectors)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+
+    // the index's in-memory serve: its stored quantizers over all vectors
+    val cent = spark.read.parquet(s"$dir/centroids")
+    val cbs = spark.read.parquet(s"$dir/codebooks")
+    val expected = IvfPqIndex.serve(IvfPqIndex.cellCodes(vectors, cent, cbs),
+        cent, cbs, probes, vectors, nprobe = 2, shortlist = 40, topK = 3)
+      .as[(Long, Long, Long, Double)].collect().toSeq
     assert(got.nonEmpty && got == expected)
   }
 
@@ -66,20 +86,17 @@ class IvfPqIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString
     IvfPqIndex.build(vectors.where($"vec_id" % 2 === 0), dir, ivfK = 8,
       ivfIters = 2, s = 4, subDim = 16, k = 8, iters = 2)
-    IvfPqIndex.append(spark, vectors.where($"vec_id" % 2 === 1), dir,
-      s = 4, subDim = 16)
+    IvfPqIndex.append(spark, vectors.where($"vec_id" % 2 === 1), dir)
 
     val probes = vectors.where($"vec_id" < 5)
     val got = IvfPqIndex.probe(spark, dir, probes, vectors, nprobe = 2,
-      s = 4, subDim = 16, shortlist = 40, topK = 3)
+      shortlist = 40, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     // reference: BOTH stored (half-trained, frozen) quantizers applied
     // to ALL vectors in memory — append must be invisible to the probe
     val cent = spark.read.parquet(s"$dir/centroids").cache()
-    val cbAll = spark.read.parquet(s"$dir/codebooks").cache()
-    val cbs = (0 until 4).map(sub =>
-      cbAll.where($"sub" === sub).select($"cid", $"c"))
+    val cbs = spark.read.parquet(s"$dir/codebooks").cache()
     val cells = Clustering.assignCells(vectors, cent, nprobe = 1)
       .select($"vec_id".as("neighbor_id"), $"cid")
     val probeCells = Clustering.assignCells(probes, cent, nprobe = 2)
@@ -87,8 +104,8 @@ class IvfPqIndexSpec extends SparkSpec {
     val cand = cells.join(broadcast(probeCells), Seq("cid"))
       .where($"probe_id" =!= $"neighbor_id")
       .select($"probe_id", $"neighbor_id")
-    val enc = PqIndex.encode(vectors, cbs, subDim = 16)
-    val ptab = PqIndex.probeTables(probes, cbs, subDim = 16)
+    val enc = PqIndex.encode(vectors, cbs)
+    val ptab = PqIndex.probeTables(probes, cbs)
     val sl = PqIndex.adcTop(
       cand.join(enc, Seq("neighbor_id"))
         .join(broadcast(ptab), Seq("probe_id", "sub", "code")),
@@ -103,10 +120,8 @@ class IvfPqIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-cmp").toString
     IvfPqIndex.build(vectors.where($"vec_id" % 3 === 0), dir, ivfK = 8,
       ivfIters = 2, s = 4, subDim = 16, k = 8, iters = 2)
-    IvfPqIndex.append(spark, vectors.where($"vec_id" % 3 === 1), dir,
-      s = 4, subDim = 16)
-    IvfPqIndex.append(spark, vectors.where($"vec_id" % 3 === 2), dir,
-      s = 4, subDim = 16)
+    IvfPqIndex.append(spark, vectors.where($"vec_id" % 3 === 1), dir)
+    IvfPqIndex.append(spark, vectors.where($"vec_id" % 3 === 2), dir)
 
     def fileCounts(): Map[String, Int] = {
       val codes = new java.io.File(s"$dir/codes")
@@ -118,7 +133,7 @@ class IvfPqIndexSpec extends SparkSpec {
     }
     val probes = vectors.where($"vec_id" < 5)
     val before = IvfPqIndex.probe(spark, dir, probes, vectors, nprobe = 2,
-      s = 4, subDim = 16, shortlist = 40, topK = 3)
+      shortlist = 40, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
     val countsBefore = fileCounts()
     assert(countsBefore.values.exists(_ > 1),
@@ -129,7 +144,7 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(stats.files_after < stats.files_before)
     assert(fileCounts().values.forall(_ <= 1))
     val after = IvfPqIndex.probe(spark, dir, probes, vectors, nprobe = 2,
-      s = 4, subDim = 16, shortlist = 40, topK = 3)
+      shortlist = 40, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(after.nonEmpty && after == before)
   }
@@ -139,7 +154,7 @@ class IvfPqIndexSpec extends SparkSpec {
     IvfPqIndex.build(vectors, dir, ivfK = 8, ivfIters = 2,
       s = 4, subDim = 16, k = 8, iters = 2)
     val df = IvfPqIndex.probe(spark, dir, vectors.where($"vec_id" < 3),
-      vectors, nprobe = 1, s = 4, subDim = 16, shortlist = 40, topK = 3)
+      vectors, nprobe = 1, shortlist = 40, topK = 3)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),

@@ -25,15 +25,15 @@ class PqIndexSpec extends SparkSpec {
 
     val probes = vectors.where($"vec_id" < 5)
     val got = PqIndex.probe(spark, dir, probes, vectors,
-      s = 4, subDim = 16, shortlist = 40, topK = 3)
+      shortlist = 40, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
 
     // in-memory reference: same codebooks, same ADC shortlist + rerank,
     // no persistence
     val cbs = PqIndex.trainCodebooks(vectors, s = 4, subDim = 16,
-      k = 8, iters = 2).map(_.cache())
-    val enc = PqIndex.encode(vectors, cbs, subDim = 16)
-    val ptab = PqIndex.probeTables(probes, cbs, subDim = 16)
+      k = 8, iters = 2)
+    val enc = PqIndex.encode(vectors, cbs)
+    val ptab = PqIndex.probeTables(probes, cbs)
     val sl = PqIndex.adcTop(
       enc.join(broadcast(ptab), Seq("sub", "code"))
         .where($"probe_id" =!= $"neighbor_id"),
@@ -41,6 +41,23 @@ class PqIndexSpec extends SparkSpec {
     val expected = PqIndex.rerankTop(sl, vectors, probes, topK = 3)
       .as[(Long, Long, Long, Double)].collect().toSeq
 
+    assert(got.nonEmpty && got == expected)
+  }
+
+  test("a probe reads the index's shape from its codebooks (s = 2, subDim = 32)") {
+    // the probe takes no subspace count or width: a shape other than
+    // the defaults must still score every dimension of each vector
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq-shape").toString
+    PqIndex.build(vectors, dir, s = 2, subDim = 32, k = 8, iters = 2)
+    val probes = vectors.where($"vec_id" < 5)
+    val got = PqIndex.probe(spark, dir, probes, vectors)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+
+    val cbs = PqIndex.trainCodebooks(vectors, s = 2, subDim = 32,
+      k = 8, iters = 2)
+    val expected = PqIndex.serve(PqIndex.encode(vectors, cbs), cbs, probes,
+        vectors, shortlist = 80, topK = 3)
+      .as[(Long, Long, Long, Double)].collect().toSeq
     assert(got.nonEmpty && got == expected)
   }
 
