@@ -31,9 +31,10 @@ import org.apache.spark.sql.functions._
   *    silently mis-join every copy i>0) — and o_custkey by i×(max+1);
   *    l_partkey is UNCHANGED. The ratings fact (user=o_custkey,
   *    item=l_partkey) then has N× rows and N× users over the same
-  *    items — per-user degree (the q32 skew bound) is preserved,
-  *    per-item degree grows N× (the axis the item-keyed aggregations
-  *    must absorb).
+  *    items — per-user degree (the length of q32's item tails) is
+  *    preserved, per-item degree grows N× (the axis the item-keyed
+  *    aggregations must absorb, and the bound on q32's heaviest group:
+  *    a lead item sums raters(i) tails).
   *  - documents: doc_id offset by i×(max+1), and copy i's text is
   *    alphabet-ROTATED by i (a-z and A-Z each rotated i places;
   *    digits/punct/CJK untouched). Identical copies would make every

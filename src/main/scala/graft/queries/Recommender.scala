@@ -6,46 +6,47 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.expr.RmseAggregator
-import graft.rec.{AlsPipeline, Ratings}
+import graft.rec.{AlsPipeline, ItemPairs, Ratings}
 
 /** Recommender-core catalog (SURVEY §2.10, §3.1–3.3) over the synthesized
   * ratings view (user = customer, item = part, rating ∈ {1..5}).
   *
   * q32 item-CF is the batch form of the reference's real-time item-based
   * recommender (`/root/reference/src/streaming/streaming_rec.py:106-114`):
-  * item-item cosine over the user-item matrix, computed as a per-user
-  * self-join — the shuffle key is user_id, so the quadratic term is
-  * bounded by per-user degree, never by catalog size; this is the shape
-  * that survives 100 TB. Power users are degree-capped ([[Ratings.capped]],
-  * cap=64 ≈ p95 of the fixture's degree distribution): each user
-  * contributes at most cap² pairs, so one user who rated 100k items costs
-  * 64²=4096 pairs, not 10¹⁰ — the oracle SQL applies the identical
-  * deterministic cap, and ItemCfSpec proves cap-equality on uniform data.
+  * item-item cosine over the user-item matrix, computed as a row-wise
+  * sparse product ([[ItemPairs.coRatings]]): each user's item-sorted
+  * ratings become one tail row per lead item, the tails are shuffled by
+  * lead item, and each lead item sums its partners in a small map — no
+  * stage is keyed by the near-unique (i, j) pair, and the quadratic term
+  * is bounded by per-user degree, never by catalog size. Power users are
+  * degree-capped ([[Ratings.capped]], cap=64 ≈ p95 of the fixture's degree
+  * distribution): each user contributes at most cap(cap−1)/2 tail
+  * entries, so one user who rated 100k items costs 2016, not 5·10⁹ — the
+  * oracle SQL applies the identical deterministic cap, and ItemCfSpec
+  * proves cap-equality on uniform data.
   */
 object Recommender {
 
   private def rview = Ratings.viewSql
 
-  /** Per-user degree cap for the item-CF self-join (see object doc). */
-  private[queries] val DegreeCap = 64
+  /** Per-user degree cap for item-CF (see object doc). */
+  private[graft] val DegreeCap = 64
 
-  /** Item-item cosine similarity top-50 (co-rated by ≥3 users), over the
-    * degree-capped ratings view. Norms are computed over the same capped
-    * view so cos stays a true cosine of the capped vectors. */
+  /** Item-CF keeps a pair only if at least this many users co-rated it. */
+  private[graft] val MinCommon = 3
+
+  /** Item-item cosine similarity top-50 (co-rated by ≥ [[MinCommon]]
+    * users), over the degree-capped ratings view. Norms are computed over
+    * the same capped view so cos stays a true cosine of the capped
+    * vectors. */
   val itemCf = Q(
     "q32_item_cf",
     (s, d) => {
       val r = Ratings.capped(Ratings.view(s, d), DegreeCap).cache()
       val norms = r.groupBy(col("item_id"))
         .agg(sqrt(sum(col("rating") * col("rating"))).as("nrm"))
-      val co = r.select(col("user_id"), col("item_id").as("i"), col("rating").as("ri"))
-        .join(r.select(col("user_id"), col("item_id").as("j"), col("rating").as("rj")),
-          Seq("user_id"))
-        .where(col("i") < col("j"))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(col("ri") * col("rj")).as("dot"), count(lit(1)).as("n_common"))
-        .where(col("n_common") >= 3)
-      co.join(broadcast(norms.select(col("item_id").as("i"), col("nrm").as("ni"))), Seq("i"))
+      ItemPairs.coRatings(r, MinCommon)
+        .join(broadcast(norms.select(col("item_id").as("i"), col("nrm").as("ni"))), Seq("i"))
         .join(broadcast(norms.select(col("item_id").as("j"), col("nrm").as("nj"))), Seq("j"))
         .select(col("i"), col("j"), col("n_common"),
           round(col("dot") / (col("ni") * col("nj")), 6).as("cos"))
@@ -57,7 +58,7 @@ object Recommender {
             co AS (SELECT a.item_id AS i, b.item_id AS j,
                      sum(a.rating*b.rating) AS dot, count(*) AS n_common
                    FROM r a JOIN r b ON a.user_id = b.user_id AND a.item_id < b.item_id
-                   GROUP BY 1, 2 HAVING count(*) >= 3)
+                   GROUP BY 1, 2 HAVING count(*) >= $MinCommon)
             SELECT i, j, n_common, round(dot / (ni.nrm * nj.nrm), 6) AS cos
             FROM co JOIN n ni ON ni.item_id = i JOIN n nj ON nj.item_id = j
             ORDER BY cos DESC, i, j LIMIT 50""")

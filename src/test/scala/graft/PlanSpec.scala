@@ -219,6 +219,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q32 item-CF shuffles by lead item, never by the (i, j) pair") {
+    // The row-wise sparse product keys its one pair-sized exchange by the
+    // lead item i and sums each lead's partners in a map; an exchange on
+    // (i, j) would mean the near-unique pair hash aggregation is back.
+    val p = plan("q32_item_cf")
+    assert(p.contains("hashpartitioning(i#"),
+      s"q32 no longer shuffles by lead item:\n$p")
+    assert("""hashpartitioning\(i#\d+L?, j#\d+L?""".r.findFirstIn(p).isEmpty,
+      s"q32 shuffles by the (i, j) pair:\n$p")
+  }
+
   test("q130 deterministic Cypher LIMIT is a top-k, not a global sort") {
     // The engine's LIMIT-without-ORDER-BY determinism (CypherCompat's
     // RETURN executor) is implemented as sort+limit; Catalyst must fuse

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *    source rows, and copies' key ranges are disjoint (so joins on the
   *    offset keys match only within a copy);
   *  - the derived ratings fact grows exactly N× with per-user degree
-  *    PRESERVED (the q32 skew bound must not move under tiling);
+  *    PRESERVED (q32's per-user tail length must not move under tiling);
   *  - document rotation is a char bijection: rotating copy i's text
   *    back yields the source text exactly (so each copy's within-corpus
   *    similarity structure is the source's), while copy i≥1 text

@@ -26,6 +26,26 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the listener is added and before it is read, so jobs of
+    * earlier work are not counted and jobs of `body` are not missed. */
+  protected def jobsWhile(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Rows as sorted text lines, doubles as their raw bits: equal lines
     * mean bit-identical rows. */
   protected def bitLines(df: DataFrame): Seq[String] = {

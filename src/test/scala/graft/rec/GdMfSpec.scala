@@ -493,21 +493,8 @@ class GdMfSpec extends SparkSpec {
       (2L, 10L, 5.0), (2L, 12L, 1.0), (3L, 11L, 4.0), (3L, 12L, 5.0))
       .toDF("user_id", "item_id", "rating")
     def jobs(train: Int => org.apache.spark.sql.DataFrame, epochs: Int): Int = {
-      val sc = spark.sparkContext
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          started.incrementAndGet()
-      }
       spark.catalog.clearCache()
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
-      sc.addSparkListener(listener)
-      try {
-        train(epochs).collect()
-        org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
-        started.get
-      } finally sc.removeSparkListener(listener)
+      jobsWhile(train(epochs).collect())
     }
     val trainers = Seq[(String, Int => org.apache.spark.sql.DataFrame, Int)](
       ("MF", GradientMF.trainTrajectory(r, 3, 0.5, 0.1, _), 2),

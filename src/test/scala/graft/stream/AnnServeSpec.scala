@@ -160,22 +160,6 @@ class AnnServeSpec extends SparkSpec {
     val (pCent, pCells) = StreamOps.buildServeIndexPartitioned(items, dir, k = 8)
     val (pqCells, cbs) = StreamOps.encodeServeIndexPq(spark, dir,
       s = 4, subDim = 4, k = 32, iters = 5)
-    def jobsWhile(body: => Any): Int = {
-      val sc = spark.sparkContext
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          started.incrementAndGet()
-      }
-      org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
-      sc.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.graft.ListenerDrain.waitUntilEmpty(sc)
-        started.get
-      } finally sc.removeSparkListener(listener)
-    }
     val raw = jobsWhile(StreamOps.topNForUsersAnn(interests, cent, cells, n))
     val pq = jobsWhile(StreamOps.topNForUsersAnnPartitionedPq(interests, pCent,
       pqCells, cbs, pCells, n, shortlist = 0))
