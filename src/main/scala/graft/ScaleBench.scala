@@ -221,17 +221,11 @@ object ScaleBench {
     d
   }
 
-  /** Used heap after releasing everything the bench itself pins. A
-    * single advisory GC left ~1 GB of run-to-run spread at the 10×
-    * point across the r15 same-code runs (412/885/1171 MB on identical
-    * code+data): the q72 label memo still held that scale's
-    * localCheckpoint blocks — residue proportional to DATA, exactly
-    * what the gate must not confuse with driver-side state — and one
+  /** Used heap after releasing everything the bench itself pins
+    * (callers already clearCache()d): three GC passes, because one
     * System.gc() pass collects the block-manager graph
-    * nondeterministically. Clear the memo first (callers already
-    * clearCache()d), then three GC passes. */
+    * nondeterministically. */
   private def usedHeapMb(): Long = {
-    _root_.graft.queries.TextOps.clearLabelMemo()
     (1 to 3).foreach { _ => System.gc(); Thread.sleep(200) }
     val rt = Runtime.getRuntime
     (rt.totalMemory - rt.freeMemory) / 1048576

@@ -2,13 +2,13 @@ package graft
 
 /** Fresh-JVM re-measure for one scale-set query (VERDICT r14 item 3):
   * ScaleBench's IN-BENCH cpu attribution for sub-second queries carries
-  * 2–4× session-state inflation (late-pass JIT/code-cache state, q72's
-  * pinned checkpoint blocks — the r14 diagnosis), so its
+  * 2–4× session-state inflation (late-pass JIT/code-cache state, and
+  * in r14 the checkpoint blocks q72's former label memo pinned), so its
   * `superlinear_flagged` list cries wolf and OUTPUT rows had to
   * adjudicate. This main is the clean instrument: ONE query against ONE
   * dataset dir in a brand-new JVM/session, warmed exactly as ScaleBench
-  * warms it ([[Harness.warmSignatures]]; q72's label memo is cleared
-  * so the BUILD is timed), run `passes` times, min cpu reported. ScaleBench spawns one
+  * warms it ([[Harness.warmSignatures]]), run `passes` times, min cpu
+  * reported. ScaleBench spawns one
   * of these per flagged query per scale and publishes `cpu_clean_{s}x`
   * beside the in-bench numbers, re-adjudicating the flag from clean cpu.
   *

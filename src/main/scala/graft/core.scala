@@ -13,8 +13,8 @@ final case class Q(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None)
 
-/** Stable per-session ids for session-scoped memo keys (q72 labels,
-  * q83 index dirs). `System.identityHashCode` is NOT stable enough — it
+/** Stable per-session ids for session-scoped memo keys (the MinHash
+  * signatures of q28/q29/q72/q131, q83 index dirs). `System.identityHashCode` is NOT stable enough — it
   * can alias after a session is garbage-collected, serving a dead
   * session's artifact to a new one. A [[java.util.WeakHashMap]] keyed by
   * the live session object hands out one UUID per session and lets the
@@ -83,9 +83,11 @@ object Lineage {
 
   /** Eager localCheckpoint re-rooted as a FRESH LogicalRDD leaf — the
     * table swap of the Cypher store (`cypher.CypherCompat`), whose every
-    * write re-roots the table it rewrote. (The gradient-descent trainers
-    * used it once per epoch until they carried their factor tables as a
-    * driver-side model; the measurements below are theirs.)
+    * write re-roots the table it rewrote, and the engine's one
+    * `localCheckpoint`. (The gradient-descent trainers used it once per
+    * epoch until they carried their factor tables as a driver-side
+    * model, as q72 now carries its labels; the measurements below are
+    * the trainers'.)
     *
     * Spark 4's `localCheckpoint` rewrites the origin plan's statistics
     * onto the checkpoint leaf (`LogicalRDD.rewriteStatsAndConstraints`),

@@ -126,7 +126,7 @@ object CypherCompat {
   private val knownUnsupported: Seq[(String, scala.util.matching.Regex)] = Seq(
     "OPTIONAL MATCH (rewrite: left/left_anti join in the DataFrame API)" ->
       "(?i)\\bOPTIONAL\\s+MATCH\\b".r,
-    "variable-length relationship pattern [*…] (rewrite: iterative joins — see rec.GraphPropagation)" ->
+    "variable-length relationship pattern [*…] (rewrite: one collected edge pass per hop over driver-carried state — see rec.GraphPropagation.step)" ->
       "\\[[^\\]]*\\*[^\\]]*\\]".r,
     "collect() aggregation (rewrite: collect_list / collect_set)" ->
       "(?i)\\bCOLLECT\\s*\\(".r,

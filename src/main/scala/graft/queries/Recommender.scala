@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.expr.RmseAggregator
-import graft.rec.{AlsPipeline, ItemPairs, Ratings}
+import graft.rec.{AlsPipeline, GraphPropagation, ItemPairs, Ratings}
 
 /** Recommender-core catalog (SURVEY §2.10, §3.1–3.3) over the synthesized
   * ratings view (user = customer, item = part, rating ∈ {1..5}).
@@ -141,24 +141,31 @@ object Recommender {
             FROM pu LEFT JOIN hits USING (user_id)""")
   )
 
+  /** q36/q65's deterministic 2-dim item embedding `(item_id, val =
+    * [avg rating, degree])` over the ratings view, propagated by
+    * `layers` (given the view, cached for the call, and the embedding)
+    * and rounded to `(item_id, f1, f2)`. */
+  private def propagated(s: SparkSession, d: String)(
+      layers: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val r = Ratings.view(s, d).cache()
+    try layers(r, r.groupBy(col("item_id")).agg(array(
+        avg(col("rating")), count(lit(1)).cast("double")).as("val")))
+      .select(col("item_id"), round(col("val")(0), 6).as("f1"),
+        round(col("val")(1), 6).as("f2"))
+      .orderBy(col("item_id"))
+    finally r.unpersist()
+  }
+
   /** M4 capability — LightGCN-style 1-layer graph propagation (He et al.
     * 2020, SIGIR; ref `/root/reference/src/csv/train_rmse.py:121`) of a
     * deterministic item embedding (avg rating, degree) through the
-    * user-item bipartite graph with 1/sqrt(d_u·d_i) normalization,
-    * expressed purely as joins + aggregations — semantics, not gradient
-    * descent (SURVEY §7.4). */
+    * user-item bipartite graph with 1/sqrt(d_u·d_i) normalization:
+    * item→user→item, two [[GraphPropagation.step]]s over the carried
+    * tables — semantics, not gradient descent (SURVEY §7.4). */
   val graphPropagation = Q(
     "q36_graph_propagation",
-    (s, d) => {
-      val r = Ratings.view(s, d).cache()
-      val e0 = r.groupBy(col("item_id")).agg(array(
-        avg(col("rating")), count(lit(1)).cast("double")).as("val"))
-      graft.rec.GraphPropagation
-        .layer(graft.rec.GraphPropagation.edges(r), e0, width = 2)
-        .select(col("item_id"), round(col("val")(0), 6).as("f1"),
-          round(col("val")(1), 6).as("f2"))
-        .orderBy(col("item_id"))
-    },
+    (s, d) => propagated(s, d)((r, e0) =>
+      GraphPropagation.itemLayers(r, e0, width = 2, layers = 1)(_.last)),
     Some(s"""WITH r AS ($rview),
             du AS (SELECT user_id, count(*) AS du FROM r GROUP BY 1),
             di AS (SELECT item_id, count(*) AS di FROM r GROUP BY 1),
@@ -184,15 +191,8 @@ object Recommender {
     * (q36 covers only the 1-layer face). */
   val graphPropagationK2 = Q(
     "q65_graph_prop_k2",
-    (s, d) => {
-      val r = Ratings.view(s, d).cache()
-      val e0 = r.groupBy(col("item_id")).agg(array(
-        avg(col("rating")), count(lit(1)).cast("double")).as("val"))
-      graft.rec.GraphPropagation.propagate(r, e0, width = 2, layers = 2)
-        .select(col("item_id"), round(col("val")(0), 6).as("f1"),
-          round(col("val")(1), 6).as("f2"))
-        .orderBy(col("item_id"))
-    },
+    (s, d) => propagated(s, d)(
+      GraphPropagation.propagate(_, _, width = 2, layers = 2)),
     Some(s"""WITH r AS ($rview),
             du AS (SELECT user_id, count(*) AS du FROM r GROUP BY 1),
             di AS (SELECT item_id, count(*) AS di FROM r GROUP BY 1),

@@ -358,8 +358,7 @@ object Similarity {
 
   /** Built persistent-index dirs memoized per (session, dataset) — the
     * index is the artifact an ANN service materializes once per corpus
-    * version and probes forever after (same semantics as q72's label
-    * memo). Keyed on a stable per-session UUID ([[graft.SessionIds]] —
+    * version and probes forever after. Keyed on a stable per-session UUID ([[graft.SessionIds]] —
     * (stable for the session's lifetime — an identity hash can alias
     * after GC and serve another session's index); every created dir is
     * registered for recursive deletion at JVM shutdown so per-session

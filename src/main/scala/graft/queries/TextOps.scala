@@ -8,7 +8,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExpressionColumn
 
-import graft.{Q, SessionIds, Tables}
+import graft.{Q, Tables}
+import graft.expr.{FactorTable, GraftFunctions}
 
 /** Text analysis + deduplication over the `documents` fixture (doc_id,
   * text, lang, source, n_chars) — the training-data-pipeline text surface
@@ -61,7 +62,7 @@ object TextOps {
     * via the char_shingles expression). */
   private def rawShingles(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"),
-      explode(graft.expr.GraftFunctions.charShingles(col("text"), 4)).as("s"))
+      explode(GraftFunctions.charShingles(col("text"), 4)).as("s"))
   }
 
   private def shingles(docs: DataFrame): DataFrame =
@@ -275,8 +276,8 @@ object TextOps {
     * intermittently missed each other, re-deriving the signature table
     * inside a consumer's timing (SCALEBENCH r14 a–c attribution
     * artifact). Handing every consumer the SAME DataFrame object makes
-    * reuse an identity, not a plan-matching question — the labelCache
-    * pattern. Keyed on the stable session id; evicted with the session. */
+    * reuse an identity, not a plan-matching question. Keyed on the
+    * stable session id; evicted with the session. */
   private val sigCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   graft.SessionIds.registerEvictor(sid =>
@@ -562,31 +563,24 @@ object TextOps {
     * DedupComponentsSpec asserts actual convergence (one more round is a
     * fixpoint) plus equality with a union-find ground truth. Rounds scale
     * as log(diameter), and the round count — not per-round data — is the
-    * local cost driver (each round is one action over the |nodes|-row
-    * label table), which is why two jumps per round beats twice the
-    * rounds. */
+    * local cost driver (each round is one collected query over the edge
+    * list), which is why two jumps per round beats twice the rounds. */
   private val CcRounds = 8
 
-  /** Converged keeper labels memoized per (session, dataset): unlike
-    * `.cache()`d plans, localCheckpoint results are NOT deduped by the
-    * plan cache, so without this q78 (and a bench re-pass) re-executes
-    * all propagation rounds. Deterministic per corpus version — exactly
-    * the artifact a dedup pipeline materializes once and reuses. Keyed
-    * on the session's stable `sessionUUID` — an identity hash can alias
-    * after GC and serve a dead session's labels. */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  // drop a stopped session's labels — the cached DataFrames strongly
-  // reference the session, so unevicted entries pin dead sessions
-  graft.SessionIds.registerEvictor(sid =>
-    labelCache.filterInPlace((k, _) => k._1 != sid))
+  /** q72's labels as a width-1 table: `labels(r)` is the keeper of
+    * `ids(r)`. A label rides as a double, exact only below 2^53 in
+    * magnitude, so every doc_id must be (labels are doc_ids). */
+  private[graft] def labelTable(ids: Array[Long], labels: Array[Long]): FactorTable = {
+    require(ids.forall(id => -(1L << 53) < id && id < (1L << 53)),
+      "q72_dedup_components carries its labels as doubles: every doc_id " +
+        "must lie strictly between -2^53 and 2^53")
+    FactorTable(ids, labels.map(l => Array(l.toDouble)), 1)
+  }
 
-  /** Drop memoized component labels so the next q72 invocation rebuilds
-    * the propagation — used by the bench to time the real build instead
-    * of the memo hit (a propagation regression must stay visible). */
-  def clearLabelMemo(): Unit = labelCache.clear()
-
-  private[graft] def labelMemoEntries: Int = labelCache.size
+  /** Does nothing: q72 keeps nothing between calls. Kept because the
+    * benchmark's round loop (`perfbench/src/perfbench/Main.scala`)
+    * calls it. */
+  def clearLabelMemo(): Unit = ()
 
   /** Near-dup GROUPING (the step after candidate generation in a dedup
     * pipeline): connected components over the MinHash-LSH candidate graph
@@ -597,69 +591,50 @@ object TextOps {
     * (the MapReduce connected-components family — Rastogi et al. 2013
     * "hash-to-min", Kiveris et al. 2014): per round, label(d) =
     * min(label(n) for n ∈ N(d) ∪ {d}) followed by label(d) =
-    * label(label(d)). Every step is an equi-join + min-agg on doc_id —
-    * bounded keys, no driver iteration, per-round results cached — so at
-    * 100 TB it is log(diameter) bounded-key shuffles over the candidate
-    * edge list, never the corpus. The oracle SQL mirrors the identical
-    * unrolled rounds, so the propagation itself is oracle-checked. */
+    * label(label(d)), twice. The labels are carried on the driver: a
+    * round is ONE collected `groupBy(dst).min(label(src))` over the
+    * cached candidate-edge list, reading each source's label through the
+    * carried table (round 1 needs none: label₀(src) = src), and the two
+    * pointer jumps run on the collected arrays. Every label is
+    * non-increasing, so a round that changes none is the fixpoint; the
+    * loop stops there, capped at the CcRounds the oracle SQL unrolls, so
+    * a graph that has not converged still gets the oracle's exact labels
+    * and the propagation itself is oracle-checked.
+    *
+    * Scale ceiling: the labels cost |nodes| × 16 bytes (an id and a
+    * label) on the driver and, inside each round's plan, in every task;
+    * the candidate-edge list stays distributed. */
   val dedupComponents = Q(
     "q72_dedup_components",
     (s, d) => {
-      val pairs = minhashPairs.run(s, d)
+      // symmetric adjacency + self-loops, in one pass over the pairs: a
+      // node's own label joins in on the same path as its neighbors'
+      // (one self-loop per pair it is in; a min ignores the repeats)
+      val withSelf = minhashPairs.run(s, d)
         .where(col("est_jaccard") >= 0.5)
-        .select(col("a_id"), col("b_id"))
-      // symmetric adjacency + self-loops: a node's own label joins in on
-      // the same path as its neighbors'
-      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      val nodes = edges.select(col("src")).distinct()
-      val withSelf = edges
-        .unionAll(nodes.select(col("src"), col("src").as("dst"))).cache()
-      val init = nodes.select(col("src").as("doc_id"), col("src").as("keeper"))
-      // label(d) := label(label(d)) — references its input twice, so each
-      // intermediate is cached to keep execution linear
-      def jump(l: DataFrame): DataFrame = l.cache()
-        .join(l.select(col("doc_id").as("keeper"), col("keeper").as("k2")),
-          Seq("keeper"))
-        .select(col("doc_id"), col("k2").as("keeper"))
-      val labels = labelCache.getOrElseUpdate((SessionIds.of(s), d), {
-        // Adaptive rounds: every node's label is non-increasing (min over
-        // neighbors ∪ self; jump maps through labels ≤ their keys), so
-        // the label-sum strictly decreases until the fixpoint and an
-        // unchanged sum IS convergence — stop there instead of always
-        // running the worst-case round count (at 100 TB, rounds are the
-        // dominant cost and real diameters are usually far below the
-        // bound). Capped at the same CcRounds the oracle unrolls, so a
-        // non-converged pathological graph still gets the oracle's exact
-        // labels; a converged one is a fixpoint the oracle's extra
-        // rounds cannot move. The sum rides as decimal(38,0) so
-        // billion-scale doc_ids cannot overflow the check.
-        var lab = init
-        var prevSum: java.math.BigDecimal = null
-        var round = 0
-        var converged = false
-        while (round < CcRounds && !converged) {
-          val stepped = withSelf
-            .join(lab.select(col("doc_id").as("src"), col("keeper")), Seq("src"))
-            .groupBy(col("dst").as("doc_id"))
-            .agg(min(col("keeper")).as("keeper"))
-          // each jump references its input twice, so without lineage
-          // truncation the logical plan grows 4× per round (4^rounds nodes
-          // — Catalyst analysis, not execution, becomes the bottleneck).
-          // Eagerly checkpointing the |nodes|-row label table per round is
-          // the standard iterative-graph pattern (GraphX Pregel does the
-          // same): one tiny distributed job per round, constant-size plans.
-          lab = jump(jump(stepped)).localCheckpoint(true)
-          val s0 = lab.agg(sum(col("keeper").cast("decimal(38,0)")))
-            .head().getDecimal(0)
-          if (prevSum != null && s0.compareTo(prevSum) == 0) converged = true
-          else prevSum = s0
-          round += 1
-        }
-        lab
-      })
-      labels.select(col("doc_id"), col("keeper").as("keeper_id"))
-        .orderBy(col("doc_id"))
+        .select(inline(array(Seq("a_id" -> "b_id", "b_id" -> "a_id",
+          "a_id" -> "a_id", "b_id" -> "b_id").map { case (x, y) =>
+            struct(col(x).as("src"), col(y).as("dst")) }: _*)))
+        .cache()
+      /** label(d) := min of `label` over d's in-edges, ids ascending. */
+      def neighborMin(label: Column): (Array[Long], Array[Long]) =
+        withSelf.groupBy(col("dst")).agg(min(label).cast("long")).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).unzip
+      import s.implicits._
+      try {
+        val (ids, first) = neighborMin(col("src"))
+        // label(d) := label(label(d)), every d against the same labels
+        def jump(l: Array[Long]): Array[Long] =
+          l.map(k => l(java.util.Arrays.binarySearch(ids, k)))
+        // `lab` is round `round`'s labels, `prev` round `round` − 1's
+        @scala.annotation.tailrec
+        def rounds(lab: Array[Long], prev: Array[Long], round: Int): Array[Long] =
+          if (round == CcRounds || java.util.Arrays.equals(lab, prev)) lab
+          else rounds(jump(jump(neighborMin(GraftFunctions.factorLookup(
+            col("src"), labelTable(ids, lab))(0))._2)), lab, round + 1)
+        ids.zip(rounds(jump(jump(first)), ids, 1)).toSeq
+          .toDF("doc_id", "keeper_id").orderBy(col("doc_id"))
+      } finally withSelf.unpersist()
     },
     Some {
       val anyBand = (0 until Bands).map { b =>
@@ -669,9 +644,8 @@ object TextOps {
       val est = (0 until K).map(k =>
         s"(CASE WHEN a.mh$k = b.mh$k THEN 1.0 ELSE 0.0 END)").mkString(" + ")
       // AS MATERIALIZED: each jump references its input twice and ed is
-      // referenced every round — inlined CTEs would blow up exponentially,
-      // the SQL twin of the lineage truncation the Spark side gets from
-      // localCheckpoint.
+      // referenced every round — inlined CTEs would blow up exponentially
+      // (the Spark side carries each round's labels on the driver).
       val rounds = (1 to CcRounds).map { i =>
         s"""s$i AS MATERIALIZED (SELECT e.dst AS doc_id, min(l.keeper) AS keeper
                   FROM ed e JOIN l${i - 1} l ON e.src = l.doc_id GROUP BY 1),

@@ -69,10 +69,10 @@ object GradientMF {
 
   /** Both factor tables of a model: user vectors (side 0) and item
     * vectors (side 1). */
-  private final case class Model(users: FactorTable, items: FactorTable)
+  final case class Model(users: FactorTable, items: FactorTable)
 
-  private val UserSide = 0
-  private val ItemSide = 1
+  private[rec] val UserSide = 0
+  private[rec] val ItemSide = 1
 
   private def h32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
@@ -116,7 +116,7 @@ object GradientMF {
   }
 
   /** `id`'s vector in `t` (NULL if `t` lacks it). */
-  private def lookup(id: Column, t: FactorTable): Column =
+  private[rec] def lookup(id: Column, t: FactorTable): Column =
     GraftFunctions.factorLookup(id, t)
 
   /** The vector in `m` of the current row's `id` on its `side`. */
@@ -125,7 +125,7 @@ object GradientMF {
       .otherwise(lookup(col("id"), m.items))
 
   /** A side's table as a local relation `(idCol, val)`, ids ascending. */
-  private def relation(spark: SparkSession, t: FactorTable,
+  private[rec] def relation(spark: SparkSession, t: FactorTable,
                        idCol: String): DataFrame =
     spark.createDataFrame(
       (0 until t.size).map(r => Row(t.ids(r), t.vector(r).toSeq)).asJava,
@@ -153,7 +153,7 @@ object GradientMF {
   /** `e · v[i]` for i < width, as one array column (statically
     * expanded, so it is codegen'd rather than an interpreted
     * `transform`). */
-  private def scaled(e: Column, v: Column, width: Int): Column =
+  private[rec] def scaled(e: Column, v: Column, width: Int): Column =
     array((0 until width).map(i => e * v(i)): _*)
 
   /** `body` over `df` coalesced to its [[Sizing.factParts]] count and
@@ -213,7 +213,7 @@ object GradientMF {
     * structs of `sides`, so each fact row's forward is evaluated once.
     * The loss terms ride the first side's rows as `l0, l1, …` (once per
     * fact row) and are NULL on the others. */
-  private def perSide(df: DataFrame, sides: Seq[(Int, Column, Column)],
+  private[rec] def perSide(df: DataFrame, sides: Seq[(Int, Column, Column)],
                       loss: Seq[Column] = Nil): DataFrame =
     df.select(inline(array(sides.zipWithIndex.map { case ((s, id, c), k) =>
       struct(Seq(lit(s).as("side"), id.cast("long").as("id"), c.as("c")) ++
@@ -225,7 +225,7 @@ object GradientMF {
   private def avgs(width: Int): Column = vecAgg(width)(i => avg(col("c")(i)))
 
   /** `c`'s elementwise sum over a [[perSide]] group, as one vector. */
-  private def sums(width: Int): Column = vecAgg(width)(i => sum(col("c")(i)))
+  private[rec] def sums(width: Int): Column = vecAgg(width)(i => sum(col("c")(i)))
 
   /** The ONE query shape of every trainer here: the [[perSide]] rows go
     * through one `groupBy(side, id)` that folds them with `fold` (e.g.
@@ -233,7 +233,7 @@ object GradientMF {
     * `post` maps the folded value (`col("agg")`, with `side` and `id` in
     * scope) to the id's next vector of `width`. Collected: the next
     * model, and the loss sums `(n, Σl0, Σl1, …)` over the fact rows. */
-  private def collectSides(rows: DataFrame, width: Int, fold: Column,
+  private[rec] def collectSides(rows: DataFrame, width: Int, fold: Column,
       post: Column => Column, nLoss: Int = 0): (Model, Seq[Double]) = {
     val loss = if (nLoss == 0) Nil
       else count(col("l0")).cast("double") +:
@@ -479,17 +479,18 @@ object GradientMF {
     *
     *  - forward: propagated embeddings `U' = (U + ÃV)/2`,
     *    `V' = (V + ÃᵀU)/2` over the 1/√(d_u·d_i)-normalized bipartite
-    *    edges ([[GraphPropagation.edges]], q36's propagation),
-    *    prediction `u'·v'` on mean-centered ratings;
+    *    edges ([[GraphPropagation.edges]]), one [[GraphPropagation.step]]
+    *    — the edge pass q36/q65 propagate with — then prediction `u'·v'`
+    *    on mean-centered ratings;
     *  - backward: because the propagation is LINEAR, backprop through
-    *    it is the SAME edge-weighted aggregation applied to the
-    *    gradient tables — `∂L/∂U = (G_U' + Ã G_V')/2` — so "gradients
-    *    flow through the graph" is one more edge aggregation;
+    *    it is the SAME step applied to the gradient tables —
+    *    `∂L/∂U = (G_U' + Ã G_V')/2` — so "gradients flow through the
+    *    graph" is one more edge pass;
     *  - update: `val ← val − lr·(grad + λ·val)` on the BASE tables.
     *
-    * The edge aggregation carries one vector per edge row — rank never
-    * multiplies the edge shuffle. Per-example-mean gradient
-    * normalization and the carried model as [[trainTrajectory]].
+    * The step carries one vector per edge row — rank never multiplies
+    * the edge shuffle. Per-example-mean gradient normalization and the
+    * carried model as [[trainTrajectory]].
     * Returns the per-epoch RMSE of the PROPAGATED model — the quantity
     * LightGCN actually trains — and the full run (propagation +
     * backprop + updates) unrolls into SQL, so q88's oracle verifies
@@ -522,10 +523,10 @@ object GradientMF {
         round(sqrt(avg(col("err") * col("err"))), 6).as("test_rmse"))
   }
 
-  /** The LightGCN trainer: per epoch one edge aggregation propagates the
+  /** The LightGCN trainer: per epoch one edge pass propagates the
     * model, one epoch query over the propagated model's per-rating
     * errors yields the gradients w.r.t. the propagated tables (and the
-    * loss), and one edge aggregation backpropagates them through Ã and
+    * loss), and one edge pass backpropagates them through Ã and
     * steps the base model. Returns the final PROPAGATED model, the
     * per-epoch loss sums (plus the final model's with `finalLoss`) and
     * the train mean — the artifacts a serving path needs. */
@@ -537,18 +538,11 @@ object GradientMF {
       // released with it
       val ed = GraphPropagation.edges(res)
       try {
-        /** `post((m + Ã·m)/2)` per side, one collected edge aggregation: a
-          * user's Σ_edge w·v(item), an item's Σ_edge w·u(user). With a
-          * gradient model as `m` it is equally the backward pass. */
+        /** `post((m + Ã·m)/2)` per side, one [[GraphPropagation.step]].
+          * With a gradient model as `m` it is equally the backward pass. */
         def mix(m: Model)(post: Column => Column): Model =
-          collectSides(perSide(
-              ed.select(col("user_id"), col("item_id"), col("w"),
-                lookup(col("user_id"), m.users).as("uv"),
-                lookup(col("item_id"), m.items).as("vv")),
-              Seq((UserSide, col("user_id"), scaled(col("w"), col("vv"), rank)),
-                (ItemSide, col("item_id"), scaled(col("w"), col("uv"), rank)))),
-            rank, sums(rank), s => post(array((0 until rank).map(i =>
-              (sideVal(m)(i) + s(i)) / 2): _*)))._1
+          GraphPropagation.step(ed, m, rank, s => post(array(
+            (0 until rank).map(i => (sideVal(m)(i) + s(i)) / 2): _*)))
 
         /** The gradients w.r.t. the propagated model `mp`, and its loss. */
         def grads(mp: Model) =
